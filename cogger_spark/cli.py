@@ -42,8 +42,10 @@ def main(argv=None) -> int:
     c.add_argument("--ckpt", default=None)
     c.add_argument("--compression", default="deflate")
     c.add_argument("--split-threshold-px", type=int, default=None,
-                   help="images above this pixel count take the bounded "
-                        "strip+parts path (default: 64 Mpx)")
+                   help="parts-parquet mode: images above this pixel "
+                        "count take the bounded strip+parts path (default: "
+                        "64 Mpx); ignored with --files, which streams every "
+                        "image through one bounded-memory kernel")
     c.add_argument("--files", action="store_true",
                    help="write <out>/<image_id>.tif files directly "
                         "(non-checkpointed) instead of parts parquet")

@@ -27,7 +27,6 @@ import numpy as np
 RAW = "raw"
 DEFLATE = "deflate"
 QUANT6 = "quant6"  # lossy: 6-bit uniform quantization + deflate (~47 dB PSNR)
-_LOSSLESS = {RAW, DEFLATE}
 
 # zlib level for engine-produced tiles: level 1 trades a few % of ratio for
 # ~4x encode throughput — the right point for a pipeline whose reference
@@ -67,7 +66,9 @@ def encode_image(px: np.ndarray, fmt: str) -> bytes:
     if fmt == RAW:
         return np.ascontiguousarray(px, dtype=np.uint8).tobytes()
     if fmt == DEFLATE:
-        return zlib.compress(np.ascontiguousarray(px, dtype=np.uint8).tobytes(),
+        # zlib reads the contiguous buffer directly: same bytes as
+        # .tobytes() without the copy
+        return zlib.compress(np.ascontiguousarray(px, dtype=np.uint8),
                              DEFLATE_LEVEL)
     if fmt == QUANT6:
         # the engine's lossy path: drop the 2 LSBs (uniform step-4 quantizer,
@@ -102,8 +103,10 @@ def downsample2x(px: np.ndarray) -> np.ndarray:
     # reshape(…, 2, …, 2) two-axis reduction, bit-identical output
     rows = np.add(px[0::2], px[1::2], dtype=np.uint16)
     total = rows[:, 0::2] + rows[:, 1::2]
+    del rows  # in-place from here: peak stays ~1.5x the uint16 output
     total += 2
-    return (total >> 2).astype(np.uint8)
+    total >>= 2
+    return total.astype(np.uint8)
 
 
 def build_pyramid(px: np.ndarray, tile: int, min_overview_size: int = 2) -> list:
@@ -152,7 +155,3 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
     if mse == 0.0:
         return float("inf")
     return 10.0 * np.log10(255.0 * 255.0 / mse)
-
-
-def is_lossless(fmt: str) -> bool:
-    return fmt in _LOSSLESS

@@ -46,11 +46,6 @@ def _apply_merge(s: list, a: str, b: str) -> list:
     return res
 
 
-def merge_pair_udf(a: str, b: str):
-    """Merge every left-to-right non-overlapping adjacent (a, b) into a+b."""
-    return merge_pairs_udf([(a, b)])
-
-
 def merge_pairs_udf(pairs: list):
     """Apply an ordered list of merges in one vocab pass — per word,
     sequentially in merge order, so the result is identical to applying them

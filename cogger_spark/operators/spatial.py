@@ -409,9 +409,11 @@ def distance_join(points: DataFrame, radius_deg: float,
     keyed on cells, AQE skew-split for hot cells, candidate count linear in
     sum-of-neighborhood sizes."""
     if not (0.0 < float(radius_deg) <= 90.0):
-        # > 90 has no covering lat cell (the coarsest lat cell spans 90
-        # degrees) so the 1-ring guarantee breaks at EVERY res; <= 0 (or
-        # NaN) would silently return no pairs at the finest grid.
+        # The (0, 90] cap is a deliberate API restriction, not a
+        # correctness need: above 90 planar degrees only res 0 (one cell)
+        # covers the radius, and the join degenerates to all-pairs + exact
+        # refine. <= 0 (or NaN) would silently return no pairs at the
+        # finest grid.
         raise ValueError(
             f"radius_deg must be in (0, 90]: got {radius_deg}")
     if res is None:

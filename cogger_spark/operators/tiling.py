@@ -12,9 +12,15 @@ The Spark re-expression of the reference dataflow (SURVEY.md §3.3):
 Scale notes (100 TB design point):
 * decode/cut is embarrassingly parallel — no shuffle; Arrow batch size is
   bounded (session.py) so worker memory is O(batch × image).
-* the only shuffle is the per-image group for assembly, keyed by image_id —
-  uniformly distributed, no hot keys; oversized images would take the strip
-  path (planner/) instead of a single group.
+* the file sink (convert_images → tile_assemble_write) is one narrow
+  mapInPandas stage for EVERY image size: a streaming pyramid kernel cuts
+  and encodes tile-row blocks level by level, spills the payloads to a
+  per-image dotfile and writes the COG from byte counts, so a task holds
+  the decoded image plus O(tile rows × width) of working set — no route
+  probe, no per-image grouping, no checkpoint.
+* the blob/parts sinks group tiles per image for assembly, keyed by
+  image_id — uniformly distributed, no hot keys; oversized images take the
+  strip path (operators/strips.py) instead of a single group.
 * tile metadata queries never touch `payload`/`bytes` (column pruning pushes
   a 2-column read into the parquet scan).
 
@@ -36,6 +42,8 @@ the W1 key above.
 
 from __future__ import annotations
 
+import os
+import zlib
 from typing import Iterator
 
 import numpy as np
@@ -45,12 +53,13 @@ from pyspark.sql import DataFrame, Window
 
 from ..functions.geo import PIXEL_DEG, anchor, img_index
 from ..functions.imagecodecs import (
-    build_pyramid,
     cut_tiles,
     decode_image,
+    downsample2x,
     encode_image,
 )
-from ..tiff.codec import IFD, Config
+from ..planner.pyramid import overview_count, overview_dims
+from ..tiff.codec import IFD, Config, _all_ifds
 
 TILE_SCHEMA = (
     "image_id string, level int, plane int, ty int, tx int, "
@@ -97,8 +106,8 @@ def ensure_fanout(df, parallelism: int | None = None, factor: int = 2,
 def infer_planes(nbytes: int, w: int, h: int) -> tuple[int, bool]:
     """Plane count from the decoded buffer size; 2 or 5 planes means the last
     plane is a mask (fixture convention documented in fixtures.py)."""
-    if nbytes % (w * h) != 0:
-        raise ValueError(f"buffer {nbytes} not a multiple of {w}x{h}")
+    if nbytes == 0 or nbytes % (w * h) != 0:
+        raise ValueError(f"buffer {nbytes} not a positive multiple of {w}x{h}")
     k = nbytes // (w * h)
     if k in (2, 5):
         return k - 1, True
@@ -111,7 +120,8 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     mask); png/jpeg decode through the pure-Python codecs (no mask plane —
     those containers carry alpha as a band instead). The single ingest
     decode shared by every pixel kernel (tiling, strips, stats, fused)."""
-    import zlib
+    if data is None:
+        raise ValueError("null image blob")
     if fmt == "png":
         from ..functions.png import png_decode
         px = png_decode(data)
@@ -130,15 +140,26 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     return px, nplanes, mask
 
 
-def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
-                    compression: str, min_overview_size: int = 2,
-                    planar: bool = False):
-    """Decode one image, build its pyramid, cut + compress every tile.
-    Returns (nplanes, has_mask, n_levels, level_dims, payloads) with
-    payloads keyed (level, plane, ty, tx) — the single source of pixel
-    semantics shared by the tile-relation kernel (tile_images) and the fused
-    single-pass kernel (tile_and_assemble), so both are byte-identical by
-    construction.
+def _pyramid_dims(w: int, h: int, tile: int,
+                  min_overview_size: int = 2) -> list:
+    """[(w, h)] per pyramid level — the level count of build_pyramid
+    (overview-count rule of stripper.go:265-275), without any pixels."""
+    return overview_dims(w, h, overview_count(w, h, tile, tile,
+                                              min_overview_size))
+
+
+def _pyramid_tiles(px: np.ndarray, nplanes: int, mask: bool, tile: int,
+                   compression: str, dims: list, planar: bool = False):
+    """Stream every tile of px's pyramid as (level, plane, ty, tx, payload).
+
+    Level 0 is fed in blocks of `tile` rows; each block is cut + encoded,
+    then 2x-downsampled into the next level's block buffer, which is cut
+    and downsampled in turn once it fills — the last partial block of every
+    level is flushed at the end. downsample2x is row-pair local and every
+    block starts on an even row (odd tiles use 2-tile blocks), so the tiles
+    are byte-identical to build_pyramid + cut_tiles while the working set is
+    one block per level (O(tile × width)), not a second copy of the image.
+    Levels interleave in the output; callers key by (level, plane, ty, tx).
 
     planar=False (default): pixel-interleaved tiles — plane 0 holds all
     bands, plane 1 is the optional mask (PlanarConfiguration=1).
@@ -146,37 +167,80 @@ def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
     band p, plane nplanes is the mask (PlanarConfiguration=2,
     cog.go:125-179; the mask's plane index is SamplesPerPixel per
     cog.go:1132-1137)."""
+    n_levels = len(dims)
+    bands = px.shape[2]
+    bh = tile if tile % 2 == 0 else 2 * tile
+    if planar:
+        planes = [(p, slice(p, p + 1)) for p in range(nplanes)]
+        mask_plane = nplanes
+    else:
+        planes = [(0, slice(0, nplanes))]
+        mask_plane = 1
+    if mask:
+        planes.append((mask_plane, slice(nplanes, bands)))
+    bufs = [None] * n_levels
+    fill = [0] * n_levels
+    top = [0] * n_levels
+
+    def emit(lvl, block, y0):
+        ty0 = y0 // tile
+        for tx, ty, t in cut_tiles(block, tile):
+            for plane, sl in planes:
+                yield lvl, plane, ty0 + ty, tx, encode_image(t[:, :, sl],
+                                                             compression)
+        if lvl + 1 < n_levels:
+            yield from push(lvl + 1, downsample2x(block))
+
+    def push(lvl, rows):
+        if bufs[lvl] is None:
+            bufs[lvl] = np.empty((bh, dims[lvl][0], bands), np.uint8)
+        buf, i = bufs[lvl], 0
+        while i < len(rows):
+            k = min(bh - fill[lvl], len(rows) - i)
+            buf[fill[lvl]:fill[lvl] + k] = rows[i:i + k]
+            fill[lvl] += k
+            i += k
+            if fill[lvl] == bh:
+                yield from emit(lvl, buf, top[lvl])
+                top[lvl] += bh
+                fill[lvl] = 0
+
+    for y0 in range(0, px.shape[0], bh):
+        yield from emit(0, px[y0:y0 + bh], y0)
+    for lvl in range(1, n_levels):
+        if fill[lvl]:
+            yield from emit(lvl, bufs[lvl][:fill[lvl]], top[lvl])
+
+
+def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
+                    compression: str, min_overview_size: int = 2,
+                    planar: bool = False):
+    """Decode one image and collect every encoded tile of its pyramid.
+    Returns (nplanes, has_mask, n_levels, level_dims, payloads) with
+    payloads keyed (level, plane, ty, tx) and inserted in (level, ty, tx,
+    plane) order — a collector over _pyramid_tiles, the single source of
+    pixel semantics shared by the tile-relation kernel (tile_images), the
+    fused blob/parts kernels and the streaming file kernel, so all are
+    byte-identical by construction."""
     px, nplanes, mask = decode_any(data, w, h, fmt)
-    levels = build_pyramid(px, tile, min_overview_size)
-    level_dims = {}
-    payloads = {}
-    for lvl, lpx in enumerate(levels):
-        lh, lw = lpx.shape[0], lpx.shape[1]
-        level_dims[lvl] = (lw, lh)
-        for tx, ty, block in cut_tiles(lpx, tile):
-            if planar:
-                for p in range(nplanes):
-                    payloads[(lvl, p, ty, tx)] = encode_image(
-                        block[:, :, p:p + 1], compression)
-                if mask:
-                    payloads[(lvl, nplanes, ty, tx)] = encode_image(
-                        block[:, :, nplanes:], compression)
-            else:
-                payloads[(lvl, 0, ty, tx)] = encode_image(
-                    block[:, :, :nplanes], compression)
-                if mask:
-                    payloads[(lvl, 1, ty, tx)] = encode_image(
-                        block[:, :, nplanes:], compression)
-    return nplanes, mask, len(levels), level_dims, payloads
+    dims = _pyramid_dims(w, h, tile, min_overview_size)
+    tiles = sorted(_pyramid_tiles(px, nplanes, mask, tile, compression, dims,
+                                  planar=planar),
+                   key=lambda t: (t[0], t[2], t[3], t[1]))
+    payloads = {(lvl, plane, ty, tx): p for lvl, plane, ty, tx, p in tiles}
+    return nplanes, mask, len(dims), dict(enumerate(dims)), payloads
 
 
 def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
-               level_dims: dict, payloads: dict, tile: int, comp_tag: int,
+               level_dims, counts: dict, load, tile: int, comp_tag: int,
                ghost: bool, planar: bool = False,
-               planar_interleaving: list | None = None) -> tuple[bytes, bytes, int]:
-    """Assemble one image's COG from in-memory tile payloads via the
-    byte-exact codec. Returns (header, data, header_bytes) — shared by the
-    grouped assembly kernel and the fused kernel.
+               planar_interleaving: list | None = None):
+    """The IFD tree (main + overviews + masks) of one image's COG from tile
+    BYTE COUNTS alone, keyed (level, plane, ty, tx); `load(key)` returns a
+    tile's payload when the writer streams the data section (None for a
+    header-only writer). Returns the byte-exact codec's _Writer: header()
+    is computed from counts only (the two-pass plan of cog.go:522-597),
+    tile_data() then streams the payloads (cog.go:722-750).
 
     planar=True emits PlanarConfiguration=2: one imagery IFD per level with
     plane-major tile indexing (TIFF6 / codec tile_idx), the mask still its
@@ -192,15 +256,12 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
         lw, lh = level_dims[level]
         ntx = -(-lw // tile)
         nty = -(-lh // tile)
-        tbc, blobs = [], []
         is_mask = plane == mask_plane and has_mask
         img_planes = range(nplanes) if (planar and not is_mask) else [plane]
-        for p in img_planes:  # plane-major tile index layout (tile_idx)
-            for y in range(nty):
-                for x in range(ntx):
-                    b = payloads[(level, p, y, x)]
-                    tbc.append(len(b))
-                    blobs.append(b)
+        # plane-major tile index layout (tile_idx)
+        keys = [(level, p, y, x) for p in img_planes
+                for y in range(nty) for x in range(ntx)]
+        tbc = tuple(counts[k] for k in keys)
         bands = nplanes if not is_mask else 1
         ifd = IFD(
             image_width=lw, image_height=lh,
@@ -210,7 +271,7 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
             samples_per_pixel=bands,
             planar_configuration=(2 if planar and not is_mask else 1),
             tile_width=tile, tile_height=tile,
-            tile_byte_counts=tuple(tbc),
+            tile_byte_counts=tbc,
             tile_offsets=tuple([0] * len(tbc)),
             software="cogger_spark",
         )
@@ -221,7 +282,8 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
             # these stripped by add_overview/add_mask (cog.go:186-193)
             ifd.model_pixel_scale = (PIXEL_DEG, PIXEL_DEG, 0.0)
             ifd.model_tie_point = (0.0, 0.0, 0.0, lon0, lat0, 0.0)
-        ifd.load_tile = lambda idx, _b=blobs: _b[idx]
+        if load is not None:
+            ifd.load_tile = lambda idx, _k=keys: load(_k[idx])
         return ifd
 
     main = make_ifd(0, 0)
@@ -233,14 +295,28 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
     if has_mask:
         main.add_mask(make_ifd(0, mask_plane))
 
-    writer = _Writer(main, Config(with_gdal_ghost=ghost,
-                                  planar_interleaving=planar_interleaving))
+    return _Writer(main, Config(with_gdal_ghost=ghost,
+                                planar_interleaving=planar_interleaving))
+
+
+def _cog_blob(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
+              level_dims, payloads: dict, tile: int, comp_tag: int,
+              ghost: bool, planar: bool = False,
+              planar_interleaving: list | None = None
+              ) -> tuple[bytes, bytes, int]:
+    """One image's COG from in-memory payloads: (header, data,
+    header_bytes) — shared by the grouped assembly and the fused blob and
+    parts kernels."""
+    writer = _build_cog(image_id, nplanes, has_mask, n_levels, level_dims,
+                        {k: len(v) for k, v in payloads.items()},
+                        payloads.__getitem__, tile, comp_tag, ghost,
+                        planar=planar,
+                        planar_interleaving=planar_interleaving)
     header = writer.header()
     data = b"".join(writer.tile_data())
     # default covers the fully-sparse image (every byte_count 0): no tile
     # occupies bytes, so the data section is empty and the header is all
-    header_end = min((o for f in [main] + ([main.mask] if main.mask else [])
-                      + main.overviews + [o.mask for o in main.overviews if o.mask]
+    header_end = min((o for f in _all_ifds(writer.ifd)
                       for o in f.new_tile_offsets if o > 0),
                      default=len(header))
     header_bytes = int(header_end) - (4 if writer.ghost else 0)
@@ -394,7 +470,7 @@ def assemble_cogs(tiles: DataFrame, tile: int = 512,
         for r in pdf.itertuples(index=False):
             payloads[(r.level, r.plane, r.ty, r.tx)] = r.payload
             level_dims[r.level] = (int(r.level_w), int(r.level_h))
-        header, data, header_bytes = _build_cog(
+        header, data, header_bytes = _cog_blob(
             image_id, nplanes, has_mask, n_levels, level_dims, payloads,
             tile, comp_tag, ghost, planar=planar,
             planar_interleaving=planar_interleaving)
@@ -421,7 +497,7 @@ def tile_and_assemble(images: DataFrame, tile: int = 512,
     by image_id is a shuffle the plan never needed when the product is the
     blob — fusing removes the full pixel-byte exchange AND two JVM↔Python
     Arrow round-trips from the conversion path. Byte-identical to
-    assemble_cogs(tile_images(...)) (same _decode_and_cut + _build_cog
+    assemble_cogs(tile_images(...)) (same _decode_and_cut + _cog_blob
     kernels; asserted in tests). Use the unfused pair when the tiles
     relation itself is the product (spatial joins, offset queries).
 
@@ -437,7 +513,7 @@ def tile_and_assemble(images: DataFrame, tile: int = 512,
                 nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
                     row.bytes, int(row.w), int(row.h), row.fmt, tile,
                     compression, min_overview_size)
-                header, data, header_bytes = _build_cog(
+                header, data, header_bytes = _cog_blob(
                     row.image_id, nplanes, mask, n_levels, level_dims,
                     payloads, tile, comp_tag, ghost)
                 # one row per yield: blobs are the unit of memory here
@@ -454,7 +530,8 @@ def tile_and_assemble(images: DataFrame, tile: int = 512,
     return images.select(*cols).mapInPandas(kernel, schema=ASSEMBLY_SCHEMA)
 
 
-# Images above this pixel count route to the strip pipeline: the direct path
+# Blob/parts sinks route images above this pixel count to the strip pipeline
+# (convert_images streams every size and ignores it): the direct path
 # holds one whole decoded image per kernel call (w*h*planes bytes), so at
 # 64 Mpx an RGB image is ~192 MB of task memory — past that, strips keep
 # every stage bounded by strip size, not image size (stripper.go:261-350 /
@@ -625,7 +702,7 @@ def tile_and_assemble_parts(images: DataFrame, tile: int = 512,
                 nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
                     row.bytes, int(row.w), int(row.h), row.fmt, tile,
                     compression, min_overview_size)
-                header, data, _hb = _build_cog(
+                header, data, _hb = _cog_blob(
                     row.image_id, nplanes, mask, n_levels, level_dims,
                     payloads, tile, comp_tag, ghost)
                 keys = sorted(payloads, key=lambda k: (-k[0], k[2], k[3], k[1]))
@@ -694,18 +771,72 @@ CONVERT_STATS_SCHEMA = ("image_id string, n_tiles long, n_levels int, "
                         "total_bytes long")
 
 
+def _write_cog_file(image_id: str, data: bytes, w: int, h: int, fmt: str,
+                    out_dir: str, tile: int, compression: str, ghost: bool,
+                    min_overview_size: int = 2) -> tuple[int, int, int]:
+    """Decode one image and stream its COG to <out_dir>/<image_id>.tif;
+    returns (n_tiles, n_levels, total_bytes).
+
+    The pyramid streams through _pyramid_tiles and every payload is
+    appended to a spill dotfile as it is encoded, so only the byte counts
+    stay in memory. The header then comes from byte counts alone and the
+    data section is streamed in COG order with os.pread from the spill
+    (cog.go:522-597, 722-750) — no mmap, so the spill's pages never count
+    toward worker RSS. Atomic via tmp+rename; the spill is always deleted,
+    and a failure removes the tmp too. Undecodable input (corrupt or
+    truncated deflate, a null or empty blob, a buffer that is not
+    w×h×planes) raises ValueError naming the image."""
+    final = os.path.join(out_dir, f"{image_id}.tif")
+    tmp = os.path.join(out_dir, f".{image_id}.tmp")
+    spill_path = os.path.join(out_dir, f".{image_id}.spill")
+    try:
+        try:
+            px, nplanes, mask = decode_any(data, w, h, fmt)
+        except (ValueError, zlib.error) as exc:
+            raise ValueError(f"image {image_id!r}: {exc}") from exc
+        dims = _pyramid_dims(w, h, tile, min_overview_size)
+        counts, offsets, pos = {}, {}, 0
+        with open(spill_path, "w+b") as spill:
+            for lvl, plane, ty, tx, payload in _pyramid_tiles(
+                    px, nplanes, mask, tile, compression, dims):
+                spill.write(payload)
+                counts[(lvl, plane, ty, tx)] = len(payload)
+                offsets[(lvl, plane, ty, tx)] = pos
+                pos += len(payload)
+            del px
+            spill.flush()
+            fd = spill.fileno()
+            writer = _build_cog(
+                image_id, nplanes, mask, len(dims), dims, counts,
+                lambda k: os.pread(fd, counts[k], offsets[k]), tile,
+                1 if compression == "raw" else 8, ghost)
+            with open(tmp, "wb") as f:
+                total = f.write(writer.header())
+                for chunk in writer.tile_data():
+                    total += f.write(chunk)
+        os.replace(tmp, final)
+    finally:
+        # after a successful replace only the spill is left to remove
+        for path in (tmp, spill_path):
+            if os.path.exists(path):
+                os.remove(path)
+    return len(counts), len(dims), total
+
+
 def tile_assemble_write(images: DataFrame, out_dir: str, tile: int = 512,
                         compression: str = "deflate", ghost: bool = True,
                         min_overview_size: int = 2) -> DataFrame:
-    """FUSED decode→pyramid→cut→assemble→WRITE for small images: the COG
-    file is written by the same Python worker that decoded the pixels, so
-    the blob never crosses the JVM↔Python socket at all (the sink analogue
-    of tile_and_assemble; same bytes — both call _decode_and_cut/_build_cog;
-    atomic via tmp+rename). Returns stats rows only."""
-    import os
-
+    """FUSED decode→pyramid→cut→assemble→WRITE for images of ANY size: the
+    COG file is written by the same Python worker that decoded the pixels,
+    so no tile or blob ever crosses the JVM↔Python socket. Each image goes
+    through the streaming pyramid kernel (_write_cog_file): task memory is
+    the decoded image plus one tile-row block per level, whatever the image
+    size, so one narrow mapInPandas stage serves small and oversized images
+    alike — no size route, no checkpoint, and no shuffle unless
+    ensure_fanout must fan out a scan with fewer splits than slots.
+    Byte-identical to assemble_cogs(tile_images(...)). Returns stats rows
+    only."""
     images = ensure_fanout(images)
-    comp_tag = 1 if compression == "raw" else 8
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         os.makedirs(out_dir, exist_ok=True)
@@ -713,21 +844,13 @@ def tile_assemble_write(images: DataFrame, out_dir: str, tile: int = 512,
             out = {k: [] for k in ("image_id", "n_tiles", "n_levels",
                                    "total_bytes")}
             for row in pdf.itertuples(index=False):
-                nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
-                    row.bytes, int(row.w), int(row.h), row.fmt, tile,
-                    compression, min_overview_size)
-                header, data, _hb = _build_cog(
-                    row.image_id, nplanes, mask, n_levels, level_dims,
-                    payloads, tile, comp_tag, ghost)
-                tmp = os.path.join(out_dir, f".{row.image_id}.tmp")
-                with open(tmp, "wb") as f:
-                    f.write(header)
-                    f.write(data)
-                os.replace(tmp, os.path.join(out_dir, f"{row.image_id}.tif"))
+                n_tiles, n_levels, total = _write_cog_file(
+                    row.image_id, row.bytes, int(row.w), int(row.h), row.fmt,
+                    out_dir, tile, compression, ghost, min_overview_size)
                 out["image_id"].append(row.image_id)
-                out["n_tiles"].append(len(payloads))
+                out["n_tiles"].append(n_tiles)
                 out["n_levels"].append(n_levels)
-                out["total_bytes"].append(len(header) + len(data))
+                out["total_bytes"].append(total)
             yield pd.DataFrame(out)
 
     cols = ["image_id", "bytes", "w", "h", "fmt"]
@@ -741,27 +864,19 @@ def convert_images(images: DataFrame, out_dir: str, tile: int = 512,
                    tiles_per_part: int = 256,
                    probe: tuple | None = None) -> None:
     """The user-facing convert sink: images → <out_dir>/<image_id>.tif, one
-    COG per image, auto-routed by size, constant memory per task and per
-    output file regardless of image size. Small images take the fully FUSED
-    decode→…→write kernel (no COG bytes ever cross the JVM↔Python socket);
-    oversized images take the strip pipeline into the bounded parts writer."""
-    from .strips import tile_images_strips
+    COG per image, bounded memory per task and per output file. Every row,
+    small or oversized, takes the streaming tile_assemble_write kernel: one
+    mapInPandas stage run by a no-op write (no result rows are collected)
+    — ONE Spark job when the scan has at least one split per slot.
+    A scan with fewer splits is first fanned out by ensure_fanout, whose
+    shuffle runs as one extra job under AQE.
 
-    px = _px_expr()
-    has_small, has_big, max_dims = probe or route_probe(images,
-                                                        split_threshold_px)
-    if has_small or not has_big:
-        small = images.filter(px <= split_threshold_px) if has_big else images
-        tile_assemble_write(small, out_dir, tile=tile,
-                            compression=compression, ghost=ghost).count()
-    if has_big:
-        strip_tiles = tile_images_strips(
-            images.filter(px > split_threshold_px), tile=tile,
-            compression=compression, target_px=target_px, max_dims=max_dims)
-        parts = assemble_cog_parts(strip_tiles, tile=tile,
-                                   compression=compression, ghost=ghost,
-                                   tiles_per_part=tiles_per_part)
-        write_cog_parts(parts, out_dir)
+    `split_threshold_px`, `target_px`, `tiles_per_part` and `probe` stay in
+    the signature so existing callers still run; they no longer change the
+    route or the bytes."""
+    (tile_assemble_write(images, out_dir, tile=tile, compression=compression,
+                         ghost=ghost)
+     .write.format("noop").mode("overwrite").save())
 
 
 def write_cogs(cogs: DataFrame, out_dir: str) -> None:
@@ -769,8 +884,6 @@ def write_cogs(cogs: DataFrame, out_dir: str) -> None:
     `io.Writer` sink (SURVEY.md §1.4): foreachPartition keeps the write on
     the executors (no driver collect); each task writes its partition's
     images independently, so the sink scales with the cluster."""
-    import os
-
     def write_partition(rows):
         os.makedirs(out_dir, exist_ok=True)
         for r in rows:
@@ -793,7 +906,8 @@ def _binaryfile_path_route(tiffs: DataFrame) -> bool:
     `tiffs.path` on the local filesystem — i.e. the optimized plan is a
     Project/Filter chain over ONE binaryFile relation in which `bytes`
     alias-chains to the scan's `content` attribute and `path` to its
-    `path` attribute, and every input file is file:-scheme. Only then may
+    `path` attribute, and every input file is a file:-scheme URI free of
+    '%'. Only then may
     a kernel read the path directly (shipping paths, not bytes, across
     the JVM↔Python boundary); ANY doubt — derived bytes, other sources,
     remote schemes — returns False and keeps the bytes-crossing route."""
@@ -839,8 +953,11 @@ def _binaryfile_path_route(tiffs: DataFrame) -> bool:
             return False
         if want["bytes"] != "content" or want["path"] != "path":
             return False
+        # a '%' makes percent-decoding the path column ambiguous (a file
+        # literally named 'a%20b.tif' vs 'a b.tif'): keep the bytes route
         files = tiffs.inputFiles()
-        return bool(files) and all(f.startswith("file:") for f in files)
+        return bool(files) and all(f.startswith("file:") and "%" not in f
+                                   for f in files)
     except Exception:
         return False
 
@@ -936,8 +1053,6 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
     ships it to a second Python stage (two extra multi-GB transfers). Only
     (image_id, sizes, path) rows return. Atomic per-file via tmp+rename;
     this is the reference CLI's own job shape (read .tif, write .tif)."""
-    import os
-
     from ..tiff.codec import Config, rewrite
 
     use_paths = _binaryfile_path_route(tiffs)  # see rewrite_tiffs
@@ -1026,48 +1141,16 @@ def assemble_cog_parts(tiles: DataFrame, tile: int = 512,
         # rebuild the IFD tree with byte counts only; the codec computes the
         # full header incl. offsets without touching payloads (two-pass plan
         # of cog.go:568-596 — the dry run needs lengths, not bytes)
-        from ..tiff.codec import _Writer
         image_id = pdf["image_id"].iloc[0]
-        nplanes = int(pdf["planes"].iloc[0])
-        has_mask = bool(pdf["has_mask"].iloc[0])
-        n_levels = int(pdf["n_levels"].iloc[0])
-        lon0, lat0 = anchor(img_index(image_id))
         counts = {}
         level_dims = {}
         for r in pdf.itertuples(index=False):
             counts[(r.level, r.plane, r.ty, r.tx)] = int(r.byte_count)
             level_dims[r.level] = (int(r.level_w), int(r.level_h))
-
-        def make_ifd(level: int, plane: int) -> IFD:
-            lw, lh = level_dims[level]
-            ntx, nty = -(-lw // tile), -(-lh // tile)
-            tbc = [counts[(level, plane, y, x)]
-                   for y in range(nty) for x in range(ntx)]
-            bands = nplanes if plane == 0 else 1
-            ifd = IFD(image_width=lw, image_height=lh,
-                      bits_per_sample=(8,) * bands, compression=comp_tag,
-                      photometric=(4 if plane == 1 else (2 if bands >= 3 else 1)),
-                      samples_per_pixel=bands, planar_configuration=1,
-                      tile_width=tile, tile_height=tile,
-                      tile_byte_counts=tuple(tbc),
-                      tile_offsets=tuple([0] * len(tbc)),
-                      software="cogger_spark")
-            if plane == 0 and bands == 4:
-                ifd.extra_samples = (0,)
-            if level == 0 and plane == 0:
-                ifd.model_pixel_scale = (PIXEL_DEG, PIXEL_DEG, 0.0)
-                ifd.model_tie_point = (0.0, 0.0, 0.0, lon0, lat0, 0.0)
-            return ifd
-
-        main = make_ifd(0, 0)
-        for lvl in range(1, n_levels):
-            ovr = make_ifd(lvl, 0)
-            if has_mask:
-                ovr.add_mask(make_ifd(lvl, 1))
-            main.add_overview(ovr)
-        if has_mask:
-            main.add_mask(make_ifd(0, 1))
-        header = _Writer(main, Config(with_gdal_ghost=ghost)).header()
+        header = _build_cog(
+            image_id, int(pdf["planes"].iloc[0]),
+            bool(pdf["has_mask"].iloc[0]), int(pdf["n_levels"].iloc[0]),
+            level_dims, counts, None, tile, comp_tag, ghost).header()
         return pd.DataFrame({"image_id": [image_id], "part_idx": [0],
                              "part": [header]})
 
@@ -1106,8 +1189,6 @@ def _write_parts_rows(rows, out_dir: str) -> None:
     only after its last part — a task killed mid-write leaves at worst a
     `.tmp` dotfile, never a truncated `<image_id>.tif` under the final name
     (VERDICT r3 what's-wrong #3). Task retries simply overwrite the tmp."""
-    import os
-
     os.makedirs(out_dir, exist_ok=True)
     cur_id, f = None, None
 

@@ -77,11 +77,12 @@ def stream_cog(spark: SparkSession, in_dir: str, out_dir: str,
 def stream_cog_files(spark: SparkSession, in_dir: str, out_dir: str,
                      checkpoint_dir: str, tile: int = 512,
                      tiles_per_part: int = 256) -> None:
-    """Incremental image arrival → COG FILES: each micro-batch runs the
-    size-routed bounded conversion (fused kernel for small images, strips +
-    parts for oversized) and appends <out_dir>/<image_id>.tif — the
-    streaming face of convert_images, exactly-once per source file via the
-    stream checkpoint."""
+    """Incremental image arrival → COG FILES: each micro-batch runs
+    convert_images (one streaming-pyramid job for every image size, bounded
+    task memory) and appends <out_dir>/<image_id>.tif — the streaming face
+    of convert_images, exactly-once per source file via the stream
+    checkpoint. `tiles_per_part` is passed through but no longer changes
+    the output."""
     from ..operators.tiling import convert_images
 
     stream = (spark.readStream.schema(IMAGE_SCHEMA)
@@ -192,7 +193,10 @@ def stream_upsert_table(spark: SparkSession, in_dir: str, table_path: str,
         # spanning two files would depend on Spark's split packing, not
         # on which file is later (r6 ADVICE). Within one file the id
         # keeps row order (single-split files; the shape every CDC feed
-        # here produces).
+        # here produces). Without version_col the cross-file winner is
+        # decided by PATH order, which can differ from the source's
+        # mtime arrival order within one batch — pass a version_col for
+        # true latest-writer-wins CDC.
         order = ([F.col(version_col).desc()] if version_col else [])
         order += [F.col("_src_file").desc(), F.col("_src_order").desc()]
         w = Window.partitionBy(key).orderBy(*order)

@@ -8,6 +8,8 @@
    files in one micro-batch by source FILE, not by split packing.
 4. distance_join validates radius_deg in (0, 90] with a clear error.
 5. asof_join rejects reserved left columns _side/_pay loudly.
+6. rewrite_tiffs_to_dir keeps a file literally named 'a%20b.tif' apart
+   from 'a b.tif' (the path-read route is refused when a URI holds '%').
 """
 import datetime
 import os
@@ -114,3 +116,33 @@ def test_asof_join_rejects_reserved_left_columns(spark):
                 .withColumn(bad, F.lit(0)))
         with pytest.raises(ValueError, match=bad):
             asof_join(left, right, payload=("event_id", "value"))
+
+
+def test_rewrite_to_dir_percent_named_files_keep_their_own_tiles(
+        spark, tmp_path):
+    """'a%20b.tif' and 'a b.tif' side by side: percent-decoding the first
+    path would read the second file. Each output must be the rewrite of
+    its OWN input."""
+    from cogger_spark.fixtures import make_images_table
+    from cogger_spark.operators.tiling import (
+        _binaryfile_path_route, convert_images, rewrite_tiffs_to_dir)
+    from cogger_spark.sources.tiffdir import read_tiff_dir
+    from cogger_spark.tiff.codec import Config, rewrite
+    import pyarrow.parquet as pq
+    src = tmp_path / "images.parquet"
+    pq.write_table(make_images_table(2, dims=[600, 300]), src)
+    cogs = tmp_path / "cogs"
+    convert_images(spark.read.parquet(str(src)), str(cogs), tile=256)
+    a, b = sorted(cogs.glob("*.tif"))
+    indir = tmp_path / "in"
+    indir.mkdir()
+    shutil.copy(a, indir / "a%20b.tif")
+    shutil.copy(b, indir / "a b.tif")
+    tiffs = read_tiff_dir(spark, str(indir))
+    assert _binaryfile_path_route(tiffs) is False
+    out = tmp_path / "out"
+    rewrite_tiffs_to_dir(tiffs, str(out)).count()
+    cfg = Config(with_gdal_ghost=True)
+    assert (out / "a%20b.tif").read_bytes() == rewrite(a.read_bytes(), cfg=cfg)
+    assert (out / "a b.tif").read_bytes() == rewrite(b.read_bytes(), cfg=cfg)
+    assert a.read_bytes() != b.read_bytes()
