@@ -971,6 +971,17 @@ def _read_local_file(path: str) -> bytes:
         return f.read()
 
 
+def _rewrite_named(image_id: str, fn, data: bytes, cfg):
+    """`fn(data, cfg=cfg)` with a malformed-input ValueError re-raised
+    naming the image."""
+    if data is None:
+        raise ValueError(f"image {image_id!r}: null TIFF blob")
+    try:
+        return fn(data, cfg=cfg)
+    except ValueError as exc:
+        raise ValueError(f"image {image_id!r}: {exc}") from exc
+
+
 def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
                   split: bool = False) -> DataFrame:
     """The reference's own job as a Spark operator: reshuffle already-tiled
@@ -982,7 +993,8 @@ def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
     split=True emits header and tile data as separate binary columns — the
     RewriteSplitted surface (loader.go:67, cog.go:765-780) for sinks that
     route metadata and payload bytes to different destinations;
-    header || data equals the split=False blob byte-for-byte (tested)."""
+    header || data equals the split=False blob byte-for-byte (tested).
+    A malformed TIFF fails the job with a ValueError naming the image."""
     from ..tiff.codec import Config, rewrite, rewrite_split
 
     # Output blobs flushed by size. Small batches pipeline better: the JVM
@@ -1015,12 +1027,13 @@ def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
             for r in pdf.itertuples(index=False):
                 data = _read_local_file(r.path) if use_paths else r.bytes
                 if split:
-                    header, dat = rewrite_split(data, cfg=cfg)
+                    header, dat = _rewrite_named(
+                        r.image_id, rewrite_split, data, cfg)
                     out["header"].append(header)
                     out["data"].append(dat)
                     out["out_bytes"].append(len(header) + len(dat))
                 else:
-                    cog = rewrite(data, cfg=cfg)
+                    cog = _rewrite_named(r.image_id, rewrite, data, cfg)
                     out["cog"].append(cog)
                     out["out_bytes"].append(len(cog))
                 out["image_id"].append(r.image_id)
@@ -1052,7 +1065,9 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
     rewrite_tiffs + write_tiff_dir, which returns every blob to the JVM and
     ships it to a second Python stage (two extra multi-GB transfers). Only
     (image_id, sizes, path) rows return. Atomic per-file via tmp+rename;
-    this is the reference CLI's own job shape (read .tif, write .tif)."""
+    this is the reference CLI's own job shape (read .tif, write .tif).
+    A malformed TIFF fails the job with a ValueError naming the image, and
+    a failed write leaves no `.tmp` behind."""
     from ..tiff.codec import Config, rewrite
 
     use_paths = _binaryfile_path_route(tiffs)  # see rewrite_tiffs
@@ -1065,12 +1080,17 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
                    "out_path": []}
             for r in pdf.itertuples(index=False):
                 data = _read_local_file(r.path) if use_paths else r.bytes
-                cog = rewrite(data, cfg=cfg)
+                cog = _rewrite_named(r.image_id, rewrite, data, cfg)
                 dst = os.path.join(out_dir, f"{r.image_id}.tif")
                 tmp = os.path.join(out_dir, f".{r.image_id}.tmp")
-                with open(tmp, "wb") as f:
-                    f.write(cog)
-                os.replace(tmp, dst)
+                try:
+                    with open(tmp, "wb") as f:
+                        f.write(cog)
+                    os.replace(tmp, dst)
+                finally:
+                    # after a successful replace there is no tmp left
+                    if os.path.exists(tmp):
+                        os.remove(tmp)
                 out["image_id"].append(r.image_id)
                 out["in_bytes"].append(len(data))
                 out["out_bytes"].append(len(cog))

@@ -35,8 +35,9 @@ def get_spark(app_name: str = "cogger-spark", cores: int | None = None,
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
     if shuffle_partitions is None:
         shuffle_partitions = cores
-    # make the engine importable by python workers, so the preloading daemon
-    # (daemon_preload.py) can warm numpy/pandas/pyarrow before forking
+    # make the engine importable by python workers: the worker daemon
+    # (daemon_preload.py) preloads numpy/pandas/pyarrow and stops each task
+    # from re-reading pyspark.zip's directory, before it forks the workers
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(":"):

@@ -296,7 +296,9 @@ def parse_tiff(data: bytes) -> TiffFile:
 
     Plays the role of `tiff.Parse` + `UnmarshalIFD` (loader.go:11-53):
     unknown tags are ignored; each tiled IFD gets a `load_tile` slicer over
-    the source bytes (loader.go:45-51).
+    the source bytes (loader.go:45-51). Malformed input fails closed: a
+    truncated header, IFD or tag value, or an IFD chain that loops, raises
+    ValueError naming the offset.
     """
     if data[:2] == b"II":
         bo = "<"
@@ -304,37 +306,57 @@ def parse_tiff(data: bytes) -> TiffFile:
         bo = ">"
     else:
         raise ValueError("not a TIFF: bad byte-order mark")
-    version = struct.unpack(bo + "H", data[2:4])[0]
+    n = len(data)
+
+    def unpack(fmt: str, at: int, what: str) -> tuple:
+        try:
+            return struct.unpack_from(bo + fmt, data, at)
+        except struct.error:
+            raise ValueError(f"truncated TIFF: {what} at offset {at} "
+                             f"runs past the end ({n} bytes)") from None
+
+    version = unpack("H", 2, "header")[0]
     if version == 42:
         big = False
-        off = struct.unpack(bo + "I", data[4:8])[0]
+        off = unpack("I", 4, "header")[0]
     elif version == 43:
         big = True
-        bytesize, zero = struct.unpack(bo + "HH", data[4:8])
+        bytesize, zero = unpack("HH", 4, "header")
         if bytesize != 8 or zero != 0:
             raise ValueError("bad bigtiff header")
-        off = struct.unpack(bo + "Q", data[8:16])[0]
+        off = unpack("Q", 8, "header")[0]
     else:
         raise ValueError(f"bad TIFF version {version}")
 
     ifds: List[IFD] = []
+    seen = set()
     while off != 0:
+        if off in seen:
+            raise ValueError(f"bad TIFF: IFD chain loops at offset {off}")
+        seen.add(off)
         ifd = IFD()
         if big:
-            ntags = struct.unpack(bo + "Q", data[off:off + 8])[0]
-            entry_off, entry_len = off + 8, 20
+            ntags = unpack("Q", off, "IFD")[0]
+            entry_off, entry_len, next_len = off + 8, 20, 8
         else:
-            ntags = struct.unpack(bo + "H", data[off:off + 2])[0]
-            entry_off, entry_len = off + 2, 12
+            ntags = unpack("H", off, "IFD")[0]
+            entry_off, entry_len, next_len = off + 2, 12, 4
+        after = entry_off + ntags * entry_len
+        if after + next_len > n:
+            raise ValueError(f"truncated TIFF: IFD at offset {off} with "
+                             f"{ntags} entries runs past the end ({n} bytes)")
         for i in range(ntags):
             e = entry_off + i * entry_len
-            tag, typ = struct.unpack(bo + "HH", data[e:e + 4])
+            tag, typ = struct.unpack_from(bo + "HH", data, e)
+            spec = _TAG_MAP.get(tag)
+            if spec is None:
+                continue
             if big:
-                count = struct.unpack(bo + "Q", data[e + 4:e + 12])[0]
+                count = struct.unpack_from(bo + "Q", data, e + 4)[0]
                 inline = data[e + 12:e + 20]
                 inline_cap = 8
             else:
-                count = struct.unpack(bo + "I", data[e + 4:e + 8])[0]
+                count = struct.unpack_from(bo + "I", data, e + 4)[0]
                 inline = data[e + 8:e + 12]
                 inline_cap = 4
             size = _TYPE_SIZES.get(typ, 0) * count
@@ -345,15 +367,19 @@ def parse_tiff(data: bytes) -> TiffFile:
                     voff = struct.unpack(bo + "Q", inline)[0]
                 else:
                     voff = struct.unpack(bo + "I", inline[:4])[0]
+                if voff + size > n:
+                    raise ValueError(
+                        f"truncated TIFF: tag {tag} values at offset {voff} "
+                        f"({size} bytes) run past the end ({n} bytes)")
                 raw = data[voff:voff + size]
-            spec = _TAG_MAP.get(tag)
-            if spec is None:
-                continue
             attr, kind = spec
             vals = _decode_values(data, bo, typ, count, raw)
             if vals is None:
                 continue
             if kind == "scalar":
+                if not vals:
+                    raise ValueError(f"bad TIFF: tag {tag} at offset {e} "
+                                     "has no value")
                 setattr(ifd, attr, int(vals[0]))
             elif kind == "ints":
                 setattr(ifd, attr, tuple(int(v) for v in vals))
@@ -363,11 +389,7 @@ def parse_tiff(data: bytes) -> TiffFile:
                 setattr(ifd, attr, vals)
             elif kind == "bytes":
                 setattr(ifd, attr, bytes(vals))
-        after = entry_off + ntags * entry_len
-        if big:
-            off = struct.unpack(bo + "Q", data[after:after + 8])[0]
-        else:
-            off = struct.unpack(bo + "I", data[after:after + 4])[0]
+        off = struct.unpack_from(bo + ("Q" if big else "I"), data, after)[0]
 
         # bind the lazy tile reader (loader.go:45-51)
         offsets, counts = ifd.tile_offsets, ifd.tile_byte_counts
