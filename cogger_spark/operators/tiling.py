@@ -42,6 +42,8 @@ the W1 key above.
 
 from __future__ import annotations
 
+import functools
+import itertools
 import os
 import zlib
 from typing import Iterator
@@ -59,7 +61,17 @@ from ..functions.imagecodecs import (
     encode_image,
 )
 from ..planner.pyramid import overview_count, overview_dims
-from ..tiff.codec import IFD, Config, _all_ifds
+from ..sources.tiffdir import write_tif, write_tiff_dir
+from ..tiff.codec import (
+    IFD,
+    Config,
+    _all_ifds,
+    _Writer,
+    rewrite,
+    rewrite_pieces,
+    rewrite_split,
+    write_pieces,
+)
 
 TILE_SCHEMA = (
     "image_id string, level int, plane int, ty int, tx int, "
@@ -240,14 +252,14 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
     tile's payload when the writer streams the data section (None for a
     header-only writer). Returns the byte-exact codec's _Writer: header()
     is computed from counts only (the two-pass plan of cog.go:522-597),
-    tile_data() then streams the payloads (cog.go:722-750).
+    pieces() then emits the header and the payloads as they load
+    (cog.go:722-750).
 
     planar=True emits PlanarConfiguration=2: one imagery IFD per level with
     plane-major tile indexing (TIFF6 / codec tile_idx), the mask still its
     own 1-band IFD; `planar_interleaving` customizes the data-section order
     of band/mask tiles within each level (cog.go:19-45, must include index
     nplanes for the mask when present)."""
-    from ..tiff.codec import _Writer
     lon0, lat0 = anchor(img_index(image_id))
     mask_plane = (nplanes if planar else 1)
 
@@ -312,8 +324,9 @@ def _cog_blob(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
                         payloads.__getitem__, tile, comp_tag, ghost,
                         planar=planar,
                         planar_interleaving=planar_interleaving)
-    header = writer.header()
-    data = b"".join(writer.tile_data())
+    pieces = writer.pieces()
+    header = next(pieces)
+    data = b"".join(pieces)
     # default covers the fully-sparse image (every byte_count 0): no tile
     # occupies bytes, so the data section is empty and the header is all
     header_end = min((o for f in _all_ifds(writer.ifd)
@@ -779,15 +792,15 @@ def _write_cog_file(image_id: str, data: bytes, w: int, h: int, fmt: str,
 
     The pyramid streams through _pyramid_tiles and every payload is
     appended to a spill dotfile as it is encoded, so only the byte counts
-    stay in memory. The header then comes from byte counts alone and the
-    data section is streamed in COG order with os.pread from the spill
-    (cog.go:522-597, 722-750) — no mmap, so the spill's pages never count
-    toward worker RSS. Atomic via tmp+rename; the spill is always deleted,
-    and a failure removes the tmp too. Undecodable input (corrupt or
-    truncated deflate, a null or empty blob, a buffer that is not
-    w×h×planes) raises ValueError naming the image."""
-    final = os.path.join(out_dir, f"{image_id}.tif")
-    tmp = os.path.join(out_dir, f".{image_id}.tmp")
+    stay in memory. The header then comes from byte counts alone, and the
+    codec's piece emitter loads each payload in COG order with os.pread
+    from the spill (cog.go:522-597, 722-750); write_pieces writes them with
+    batched os.writev, flushing by 4 MB of loaded payload, so at most ~4 MB
+    of tiles is held at once — no mmap, so the spill's pages never count
+    toward worker RSS. Atomic via write_tif (tmp+rename); the spill is
+    always deleted, and a failure removes the tmp too. Undecodable input
+    (corrupt or truncated deflate, a null or empty blob, a buffer that is
+    not w×h×planes) raises ValueError naming the image."""
     spill_path = os.path.join(out_dir, f".{image_id}.spill")
     try:
         try:
@@ -805,21 +818,16 @@ def _write_cog_file(image_id: str, data: bytes, w: int, h: int, fmt: str,
                 pos += len(payload)
             del px
             spill.flush()
-            fd = spill.fileno()
+            spill_fd = spill.fileno()
             writer = _build_cog(
                 image_id, nplanes, mask, len(dims), dims, counts,
-                lambda k: os.pread(fd, counts[k], offsets[k]), tile,
+                lambda k: os.pread(spill_fd, counts[k], offsets[k]), tile,
                 1 if compression == "raw" else 8, ghost)
-            with open(tmp, "wb") as f:
-                total = f.write(writer.header())
-                for chunk in writer.tile_data():
-                    total += f.write(chunk)
-        os.replace(tmp, final)
+            total = write_tif(out_dir, image_id,
+                              lambda fd: write_pieces(fd, writer.pieces()))
     finally:
-        # after a successful replace only the spill is left to remove
-        for path in (tmp, spill_path):
-            if os.path.exists(path):
-                os.remove(path)
+        if os.path.exists(spill_path):
+            os.remove(spill_path)
     return len(counts), len(dims), total
 
 
@@ -883,16 +891,9 @@ def write_cogs(cogs: DataFrame, out_dir: str) -> None:
     """Stream the per-image COG blobs to one .tif file each — the engine's
     `io.Writer` sink (SURVEY.md §1.4): foreachPartition keeps the write on
     the executors (no driver collect); each task writes its partition's
-    images independently, so the sink scales with the cluster."""
-    def write_partition(rows):
-        os.makedirs(out_dir, exist_ok=True)
-        for r in rows:
-            tmp = os.path.join(out_dir, f".{r.image_id}.tmp")
-            with open(tmp, "wb") as f:
-                f.write(bytes(r.cog))
-            os.replace(tmp, os.path.join(out_dir, f"{r.image_id}.tif"))
-
-    cogs.select("image_id", "cog").foreachPartition(write_partition)
+    images independently, so the sink scales with the cluster. Same
+    writer as sources.tiffdir.write_tiff_dir (atomic per file)."""
+    write_tiff_dir(cogs, out_dir)
 
 
 REWRITE_SCHEMA = "image_id string, cog binary, in_bytes long, out_bytes long"
@@ -971,15 +972,27 @@ def _read_local_file(path: str) -> bytes:
         return f.read()
 
 
-def _rewrite_named(image_id: str, fn, data: bytes, cfg):
-    """`fn(data, cfg=cfg)` with a malformed-input ValueError re-raised
-    naming the image."""
-    if data is None:
+def _rewrite_named(image_id: str, fn, *blobs):
+    """`fn(*blobs)` with a null blob rejected and a malformed-input
+    ValueError re-raised naming the image."""
+    if any(b is None for b in blobs):
         raise ValueError(f"image {image_id!r}: null TIFF blob")
     try:
-        return fn(data, cfg=cfg)
+        return fn(*blobs)
     except ValueError as exc:
         raise ValueError(f"image {image_id!r}: {exc}") from exc
+
+
+def _rewrite_file(image_id: str, data: bytes, out_dir: str, cfg) -> int:
+    """Rewrite one TIFF to <out_dir>/<image_id>.tif without materializing
+    the COG: the codec's pieces (header, then views of `data`) go straight
+    to the tmp file through write_pieces. Returns the bytes written."""
+    def emit(d: bytes) -> int:
+        return write_tif(
+            out_dir, image_id,
+            lambda fd: write_pieces(fd, rewrite_pieces(d, cfg=cfg)))
+
+    return _rewrite_named(image_id, emit, data)
 
 
 def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
@@ -995,14 +1008,14 @@ def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
     route metadata and payload bytes to different destinations;
     header || data equals the split=False blob byte-for-byte (tested).
     A malformed TIFF fails the job with a ValueError naming the image."""
-    from ..tiff.codec import Config, rewrite, rewrite_split
-
-    # Output blobs flushed by size. Small batches pipeline better: the JVM
-    # consumes a yielded Arrow batch while the worker rewrites the next
-    # image, overlapping the (memcpy-bound) return transfer with kernel
-    # compute — r6 A/B on the 2.3 GB bench corpus: 64m 3.21s, 16m 2.58s,
-    # 4m 2.36s; below 4m the per-batch overhead starts to show on
-    # many-small-image tables.
+    # Output blobs flushed by size. Each blob is one join of the codec's
+    # pieces (one copy of the data section); a batch holds ~FLUSH_BYTES of
+    # them plus the one input being rewritten. Small batches pipeline
+    # better: the JVM consumes a yielded Arrow batch while the worker
+    # rewrites the next image, overlapping the (memcpy-bound) return
+    # transfer with kernel compute — r6 A/B on the 2.3 GB bench corpus:
+    # 64m 3.21s, 16m 2.58s, 4m 2.36s; below 4m the per-batch overhead
+    # starts to show on many-small-image tables.
     FLUSH_BYTES = 4 * 1024 * 1024
 
     def _new_out():
@@ -1021,21 +1034,21 @@ def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cfg = Config(with_gdal_ghost=ghost)
+        emit = functools.partial(rewrite_split if split else rewrite, cfg=cfg)
         out = _new_out()
         acc = 0
         for pdf in batches:
             for r in pdf.itertuples(index=False):
                 data = _read_local_file(r.path) if use_paths else r.bytes
+                res = _rewrite_named(r.image_id, emit, data)
                 if split:
-                    header, dat = _rewrite_named(
-                        r.image_id, rewrite_split, data, cfg)
+                    header, dat = res
                     out["header"].append(header)
                     out["data"].append(dat)
                     out["out_bytes"].append(len(header) + len(dat))
                 else:
-                    cog = _rewrite_named(r.image_id, rewrite, data, cfg)
-                    out["cog"].append(cog)
-                    out["out_bytes"].append(len(cog))
+                    out["cog"].append(res)
+                    out["out_bytes"].append(len(res))
                 out["image_id"].append(r.image_id)
                 out["in_bytes"].append(len(data))
                 acc += out["out_bytes"][-1]
@@ -1064,12 +1077,14 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
     blob never crosses the JVM↔Python socket after the input read — vs
     rewrite_tiffs + write_tiff_dir, which returns every blob to the JVM and
     ships it to a second Python stage (two extra multi-GB transfers). Only
-    (image_id, sizes, path) rows return. Atomic per-file via tmp+rename;
-    this is the reference CLI's own job shape (read .tif, write .tif).
-    A malformed TIFF fails the job with a ValueError naming the image, and
-    a failed write leaves no `.tmp` behind."""
-    from ..tiff.codec import Config, rewrite
-
+    (image_id, sizes, path) rows return. Each input is held once (the file
+    read on the path route, the Arrow blob on the bytes route) and the COG
+    is never materialized: _rewrite_file writes the header and views of
+    the input's tiles into the tmp with batched os.writev. Atomic per-file
+    via write_tif (tmp+rename); this is the reference CLI's own job shape
+    (read .tif, write .tif). A malformed TIFF fails the job with a
+    ValueError naming the image, and a failed write leaves no `.tmp`
+    behind."""
     use_paths = _binaryfile_path_route(tiffs)  # see rewrite_tiffs
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -1080,21 +1095,12 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
                    "out_path": []}
             for r in pdf.itertuples(index=False):
                 data = _read_local_file(r.path) if use_paths else r.bytes
-                cog = _rewrite_named(r.image_id, rewrite, data, cfg)
-                dst = os.path.join(out_dir, f"{r.image_id}.tif")
-                tmp = os.path.join(out_dir, f".{r.image_id}.tmp")
-                try:
-                    with open(tmp, "wb") as f:
-                        f.write(cog)
-                    os.replace(tmp, dst)
-                finally:
-                    # after a successful replace there is no tmp left
-                    if os.path.exists(tmp):
-                        os.remove(tmp)
+                n = _rewrite_file(r.image_id, data, out_dir, cfg)
                 out["image_id"].append(r.image_id)
                 out["in_bytes"].append(len(data))
-                out["out_bytes"].append(len(cog))
-                out["out_path"].append(dst)
+                out["out_bytes"].append(n)
+                out["out_path"].append(os.path.join(out_dir,
+                                                    f"{r.image_id}.tif"))
             yield pd.DataFrame(out)
 
     tiffs = ensure_fanout(tiffs)
@@ -1107,13 +1113,15 @@ def rewrite_tiff_sets(parts: DataFrame, ghost: bool = True) -> DataFrame:
     """Multi-file rewrite (loader.go:63-106 / cogger_test.go TestMultiFiles):
     an image's TIFF arrives as several files (main + external .ovr overview
     files); rows (image_id, part_id, bytes) group per image, parts ordered by
-    part_id, and the codec folds all IFDs into one COG."""
-    from ..tiff.codec import Config, rewrite
+    part_id, and the codec folds all IFDs into one COG. A null part or a
+    malformed TIFF in any part fails the job with a ValueError naming the
+    image."""
+    emit = functools.partial(rewrite, cfg=Config(with_gdal_ghost=ghost))
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("part_id")
-        blobs = [bytes(b) for b in pdf["bytes"]]
-        cog = rewrite(*blobs, cfg=Config(with_gdal_ghost=ghost))
+        blobs = list(pdf["bytes"])
+        cog = _rewrite_named(pdf["image_id"].iloc[0], emit, *blobs)
         return pd.DataFrame({
             "image_id": [pdf["image_id"].iloc[0]],
             "cog": [cog],
@@ -1205,26 +1213,15 @@ def assemble_cog_parts(tiles: DataFrame, tile: int = 512,
 def _write_parts_rows(rows, out_dir: str) -> None:
     """Crash-atomic per-partition parts writer: rows MUST arrive sorted by
     (image_id, part_idx), so all parts of one image are contiguous. Each
-    image streams into a dot-tmpfile and is os.replace'd to its final name
-    only after its last part — a task killed mid-write leaves at worst a
-    `.tmp` dotfile, never a truncated `<image_id>.tif` under the final name
-    (VERDICT r3 what's-wrong #3). Task retries simply overwrite the tmp."""
+    image's parts stream through write_tif into a dot-tmpfile that is
+    os.replace'd to its final name only after its last part — a task killed
+    mid-write leaves at worst a `.tmp` dotfile, never a truncated
+    `<image_id>.tif` under the final name (VERDICT r3 what's-wrong #3), and
+    a failed write removes the tmp. Task retries simply overwrite the tmp."""
     os.makedirs(out_dir, exist_ok=True)
-    cur_id, f = None, None
-
-    def _finish():
-        if f is not None:
-            f.close()
-            os.replace(os.path.join(out_dir, f".{cur_id}.tif.tmp"),
-                       os.path.join(out_dir, f"{cur_id}.tif"))
-
-    for r in rows:
-        if r.image_id != cur_id:
-            _finish()
-            cur_id = r.image_id
-            f = open(os.path.join(out_dir, f".{cur_id}.tif.tmp"), "wb")
-        f.write(bytes(r.part))
-    _finish()
+    for image_id, group in itertools.groupby(rows, key=lambda r: r.image_id):
+        write_tif(out_dir, image_id,
+                  lambda fd: write_pieces(fd, (r.part for r in group)))
 
 
 def write_cog_parts(parts: DataFrame, out_dir: str) -> None:

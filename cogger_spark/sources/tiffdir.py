@@ -11,6 +11,9 @@ driver-side listing loop. Column pruning applies: plans that only need
 
 from __future__ import annotations
 
+import os
+from typing import Callable
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
@@ -56,18 +59,37 @@ def read_tiff_sets_dir(spark: SparkSession, path: str) -> DataFrame:
             .select("image_id", "part_id", "bytes"))
 
 
+def write_tif(out_dir: str, image_id: str, write: Callable[[int], int]) -> int:
+    """Atomically create <out_dir>/<image_id>.tif: `write(fd)` fills the
+    dotfile <out_dir>/.<image_id>.tmp and returns its byte count, then the
+    tmp is renamed to the final name. The one tmp+rename writer behind
+    every .tif sink: a failed write or rename removes the tmp, so a
+    reader sees either the whole file or none."""
+    tmp = os.path.join(out_dir, f".{image_id}.tmp")
+    try:
+        fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o666)
+        try:
+            n = write(fd)
+        finally:
+            os.close(fd)
+        os.replace(tmp, os.path.join(out_dir, f"{image_id}.tif"))
+    finally:
+        # after a successful replace there is no tmp left
+        if os.path.exists(tmp):
+            os.remove(tmp)
+    return n
+
+
 def write_tiff_dir(df: DataFrame, out_dir: str, col: str = "cog") -> None:
     """(image_id, <col>: binary) → <out_dir>/<image_id>.tif, written on the
     executors (foreachPartition — no driver collect, scales with the
-    cluster); atomic per-file via tmp+rename."""
-    import os
+    cluster); atomic per-file via write_tif."""
+    from ..tiff.codec import write_pieces
 
     def write_partition(rows):
         os.makedirs(out_dir, exist_ok=True)
         for r in rows:
-            tmp = os.path.join(out_dir, f".{r.image_id}.tmp")
-            with open(tmp, "wb") as f:
-                f.write(bytes(r[col]))
-            os.replace(tmp, os.path.join(out_dir, f"{r.image_id}.tif"))
+            write_tif(out_dir, r.image_id,
+                      lambda fd, _b=r[col]: write_pieces(fd, (_b,)))
 
     df.select("image_id", col).foreachPartition(write_partition)

@@ -12,7 +12,7 @@ Semantics derived from the reference Go implementation (read-only snapshot at
 * deterministic global tile order .................. cog.go:1106-1168
 * tile-data streaming with ghost framing ........... cog.go:722-750
 
-This module is dependency-free (stdlib `struct` only) so it can run both
+This module is dependency-free (stdlib `struct`, `os` only) so it can run both
 driver-side and inside Arrow-batched Spark kernels.  It is NOT a port of the
 Go code: it is a re-derivation of the wire format the golden files pin down
 (tests assert byte-identical md5 against /root/reference/testdata/cog_*.tif).
@@ -20,9 +20,14 @@ Go code: it is a re-derivation of the wire format the golden files pin down
 
 from __future__ import annotations
 
+import os
 import struct
 from dataclasses import dataclass, field as dc_field
-from typing import Callable, Iterator, List, Optional, Sequence, Tuple
+from typing import (Callable, Iterable, Iterator, List, Optional, Sequence,
+                    Tuple, Union)
+
+# a piece of an emitted COG: loaded bytes, or a view over a source buffer
+Piece = Union[bytes, memoryview]
 
 # --- subfile types (cog.go:12-17) -------------------------------------------
 SUBFILE_NONE = 0
@@ -107,7 +112,7 @@ class IFD:
     lerc_params: Tuple[int, ...] = ()           # tag 50674
     rpcs: Tuple[float, ...] = ()                # tag 50844
 
-    load_tile: Optional[Callable[[int], bytes]] = None  # cog.go:81
+    load_tile: Optional[Callable[[int], Piece]] = None  # cog.go:81
 
     mask: Optional["IFD"] = None          # cog.go:83
     overviews: List["IFD"] = dc_field(default_factory=list)  # largest→smallest
@@ -295,10 +300,10 @@ def parse_tiff(data: bytes) -> TiffFile:
     """Parse a (Big)TIFF byte string into its flat IFD chain.
 
     Plays the role of `tiff.Parse` + `UnmarshalIFD` (loader.go:11-53):
-    unknown tags are ignored; each tiled IFD gets a `load_tile` slicer over
-    the source bytes (loader.go:45-51). Malformed input fails closed: a
-    truncated header, IFD or tag value, or an IFD chain that loops, raises
-    ValueError naming the offset.
+    unknown tags are ignored; each tiled IFD gets a `load_tile` that returns
+    a zero-copy memoryview slice of the source bytes (loader.go:45-51).
+    Malformed input fails closed: a truncated header, IFD or tag value, or
+    an IFD chain that loops, raises ValueError naming the offset.
     """
     if data[:2] == b"II":
         bo = "<"
@@ -328,6 +333,7 @@ def parse_tiff(data: bytes) -> TiffFile:
     else:
         raise ValueError(f"bad TIFF version {version}")
 
+    view = memoryview(data)
     ifds: List[IFD] = []
     seen = set()
     while off != 0:
@@ -394,7 +400,7 @@ def parse_tiff(data: bytes) -> TiffFile:
         # bind the lazy tile reader (loader.go:45-51)
         offsets, counts = ifd.tile_offsets, ifd.tile_byte_counts
 
-        def load_tile(idx: int, _o=offsets, _c=counts, _d=data) -> bytes:
+        def load_tile(idx: int, _o=offsets, _c=counts, _d=view) -> memoryview:
             return _d[_o[idx]:_o[idx] + _c[idx]]
 
         ifd.load_tile = load_tile
@@ -611,6 +617,16 @@ class Config:
 
 
 class _Writer:
+    """Serializes one IFD tree as a COG (cog.go:599-750).
+
+    header() plans every offset from the tile byte counts alone; pieces()
+    then emits the file as a stream of pieces: the header, and for each
+    tile in COG order its 4-byte leader, its payload exactly as
+    `load_tile` returned it (for a parsed TIFF a zero-copy view of the
+    source) and its 4-byte trailer. Nothing concatenates payloads here: a
+    caller joins the pieces once (rewrite) or hands them to write_pieces,
+    which writes them to a file descriptor with batched os.writev."""
+
     def __init__(self, main: IFD, cfg: Config):
         self.ifd = main
         self.enc = "<" if cfg.little_endian else ">"
@@ -827,8 +843,10 @@ class _Writer:
         out += strile.data
         return bytes(out)
 
-    # --- tile data (cog.go:722-750) ------------------------------------------
-    def tile_data(self) -> Iterator[bytes]:
+    # --- the whole file as pieces (cog.go:722-750) ---------------------------
+    def pieces(self) -> Iterator[Piece]:
+        yield self.header()
+        ghost = self.ghost  # header() turns it off for planar files
         for ifd, x, y, p in tile_order(self.ifd):
             idx = ifd.tile_idx(x, y, p)
             bc = ifd.tile_byte_counts[idx]
@@ -837,12 +855,14 @@ class _Writer:
             payload = ifd.load_tile(idx)
             if len(payload) != bc:
                 raise ValueError(f"tile {idx}: got {len(payload)} bytes, want {bc}")
-            if self.ghost:
+            if ghost:
                 # leader: size as LE uint32; trailer: last 4 bytes repeated
-                # (cog.go:733-743 — always little-endian)
+                # (cog.go:733-743 — always little-endian). A tile shorter
+                # than 4 bytes repeats part of its own leader.
                 lead = struct.pack("<I", bc)
-                tail = (lead + payload)[-4:]
-                yield lead + payload + tail
+                yield lead
+                yield payload
+                yield payload[-4:] if bc >= 4 else (lead + bytes(payload))[-4:]
             else:
                 yield payload
 
@@ -861,13 +881,52 @@ class _TagArea:
         self.data += b
 
 
+# os.writev takes at most IOV_MAX buffers per call
+_IOV_MAX = os.sysconf("SC_IOV_MAX")
+# bytes pieces (not views) a write batch may hold, e.g. payloads os.pread
+# from a spill file, before it is flushed
+_BATCH_LOADED_BYTES = 4 * 1024 * 1024
+
+
+def _writev_all(fd: int, batch: List[Piece]) -> int:
+    """os.writev the whole batch, resuming after short writes."""
+    total = left = sum(map(len, batch))
+    while True:
+        n = os.writev(fd, batch)
+        if n <= 0:
+            raise OSError(f"writev wrote {n} of {left} bytes")
+        left -= n
+        if not left:
+            return total
+        i = 0
+        while n >= len(batch[i]):  # drop the pieces written whole
+            n -= len(batch[i])
+            i += 1
+        batch = [memoryview(batch[i])[n:]] + batch[i + 1:]
+
+
+def write_pieces(fd: int, pieces: Iterable[Piece]) -> int:
+    """Write `pieces` in order to file descriptor `fd`; returns the byte
+    count. Pieces go out in batched os.writev calls, so views are never
+    copied in user space. A batch is flushed at IOV_MAX pieces or once its
+    bytes pieces (loaded data, not views) reach 4 MB, whichever comes
+    first: that bounds what a loader such as os.pread can queue."""
+    total, batch, loaded = 0, [], 0
+    for piece in pieces:
+        batch.append(piece)
+        if not isinstance(piece, memoryview):
+            loaded += len(piece)
+        if len(batch) >= _IOV_MAX or loaded >= _BATCH_LOADED_BYTES:
+            total += _writev_all(fd, batch)
+            batch, loaded = [], 0
+    if batch:
+        total += _writev_all(fd, batch)
+    return total
+
+
 def rewrite_ifd_tree(main: IFD, cfg: Optional[Config] = None) -> bytes:
     """RewriteIFDTree (cog.go:782-784): header + tile data, one byte string."""
-    w = _Writer(main, cfg or Config())
-    out = bytearray(w.header())
-    for chunk in w.tile_data():
-        out += chunk
-    return bytes(out)
+    return b"".join(_Writer(main, cfg or Config()).pieces())
 
 
 def _assemble_sources(*sources: bytes) -> IFD:
@@ -890,6 +949,15 @@ def _assemble_sources(*sources: bytes) -> IFD:
     return assemble_ifd_tree(flat)
 
 
+def rewrite_pieces(*sources: bytes,
+                   cfg: Optional[Config] = None) -> Iterator[Piece]:
+    """Parse N TIFFs and assemble their IFD tree now; return the COG as a
+    piece stream (_Writer.pieces): the header first, then the data section
+    as views of `sources`. Feed it to write_pieces to write a file without
+    materializing the COG."""
+    return _Writer(_assemble_sources(*sources), cfg or Config()).pieces()
+
+
 def rewrite(*sources: bytes, cfg: Optional[Config] = None) -> bytes:
     """cogger.Rewrite (loader.go:59-106): parse N TIFFs, assemble, re-emit COG."""
     return rewrite_ifd_tree(_assemble_sources(*sources), cfg)
@@ -901,5 +969,5 @@ def rewrite_split(*sources: bytes,
     cog.go:765-780): header and tile data emitted as separate buffers so a
     sink can route metadata and payload bytes to different destinations;
     header + data concatenated equals rewrite() byte-for-byte."""
-    w = _Writer(_assemble_sources(*sources), cfg or Config())
-    return w.header(), b"".join(w.tile_data())
+    pieces = rewrite_pieces(*sources, cfg=cfg)
+    return next(pieces), b"".join(pieces)

@@ -74,10 +74,13 @@ def undo_horizontal_predictor(buf: bytes, width: int, height: int,
     return a.tobytes()
 
 
-def decode_tile(payload: bytes, compression: int, predictor: int,
+def decode_tile(payload: bytes | memoryview, compression: int, predictor: int,
                 tile_w: int, tile_h: int, samples: int) -> bytes:
-    """Decode one TIFF tile payload to raw bytes (compressions 1/5/8/50000)."""
+    """Decode one TIFF tile payload to raw bytes (compressions 1/5/8/50000).
+    `payload` may be any bytes-like object, e.g. a parsed TIFF's
+    memoryview `load_tile` slice."""
     import zlib
+    payload = bytes(payload)
     n = tile_w * tile_h * samples
     if compression == 1:
         raw = payload
