@@ -41,11 +41,6 @@ def main(argv=None) -> int:
     c.add_argument("--buckets", type=int, default=64)
     c.add_argument("--ckpt", default=None)
     c.add_argument("--compression", default="deflate")
-    c.add_argument("--split-threshold-px", type=int, default=None,
-                   help="parts-parquet mode: images above this pixel "
-                        "count take the bounded strip+parts path (default: "
-                        "64 Mpx); ignored with --files, which streams every "
-                        "image through one bounded-memory kernel")
     c.add_argument("--files", action="store_true",
                    help="write <out>/<image_id>.tif files directly "
                         "(non-checkpointed) instead of parts parquet")
@@ -97,13 +92,11 @@ def main(argv=None) -> int:
 
     if args.cmd == "convert":
         from cogger_spark.operators.tiling import (
-            SPLIT_THRESHOLD_PX, cog_pipeline_parts, convert_images)
+            cog_pipeline_parts, convert_images)
         images = spark.read.parquet(args.images)
-        thresh = args.split_threshold_px or SPLIT_THRESHOLD_PX
         if args.files:
             convert_images(images, args.out, tile=args.tile,
-                           compression=args.compression,
-                           split_threshold_px=thresh)
+                           compression=args.compression)
             print(f"convert: wrote .tif files under {args.out}")
         else:
             # checkpointed parts parquet: every output row is a bounded COG
@@ -115,8 +108,7 @@ def main(argv=None) -> int:
             recs = run_checkpointed(
                 spark, images, args.out, ckpt, n_buckets=args.buckets,
                 job=lambda df: cog_pipeline_parts(
-                    df, tile=args.tile, compression=args.compression,
-                    split_threshold_px=thresh))
+                    df, tile=args.tile, compression=args.compression))
             metrics_table(spark, ckpt).show(truncate=False)
             print(f"convert: {len(recs)} buckets processed this run")
     elif args.cmd == "rewrite":

@@ -522,9 +522,9 @@ def tile_pixel_stats(images: DataFrame, tile: int = 512,
     plane excluded). Emits no payloads (stats only), so the shuffle to any
     downstream join moves a few longs per tile.
 
-    Size-routed like cog_pipeline: images at or below `split_threshold_px`
-    take one narrow whole-image mapInPandas stage; oversized images route
-    through the level-0 strip relation (strips_level0 — bounded task memory,
+    Size-routed: images at or below `split_threshold_px` take one narrow
+    whole-image mapInPandas stage; oversized images route through the
+    level-0 strip relation (strips_level0 — bounded task memory,
     tile-aligned strip tops) and compute the same stats per strip, so a
     gigapixel raster never materializes whole in a task. Both paths produce
     identical rows (strip tops are tile-aligned, so every tile lives in

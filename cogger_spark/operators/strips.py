@@ -1,24 +1,16 @@
-"""Distributed strip pipeline — the oversized-image scale path.
+"""Level-0 strip relation — the oversized-image path of tile_pixel_stats.
 
-The direct path (tiling.py) holds one whole image per kernel call; fine for
-images up to ~10^8 px, not for multi-gigapixel rasters. This pipeline is the
-Spark re-expression of the reference's parallel decomposition
-(cmd/pcogger/parallel-cogger.go, stripper.go): the image becomes full-width
-strip rows early, and every later stage — overview construction, tile
-cutting, assembly — is bounded by strip size, not image size.
+tile_pixel_stats' direct kernel holds one whole decoded image per call;
+fine up to ~10^8 px, not for multi-gigapixel rasters. Oversized images
+instead become full-width strip rows of the full-resolution level, sliced
+by the planner (the reference's parallel decomposition,
+cmd/pcogger/parallel-cogger.go, stripper.go). Strip tops are tile-aligned
+(stripper.go:309-313), so every level-0 tile lives in exactly one strip and
+per-strip statistics equal the whole-image ones (asserted in tests).
 
-    level-0 strips  (mapInPandas: decode once, slice by the planner)
-      → level k strips from level k-1 strips (groupBy child strip:
-        parents shuffled to the child, exact 2x downsample) — the DAG of
-        stripper.go:223-259 as an equi-join on (image_id, level, child_id)
-      → strips → tiles (narrow; strip tops are tile-aligned by the planner,
-        stripper.go:309-313)
-      → assemble_cogs (identical to the direct path)
-
-Downsampling uses the exact integer mapping child row r ← parent rows
-{2r, 2r+1 clipped}, so the strip path produces byte-identical tiles to the
-direct path (asserted in tests) — the distributed equivalent of the
-reference's requirement that strip boundaries not change pixel results.
+The COG sinks do not use strips: they stream every image size through one
+per-image kernel (tiling._streamed_cog), whose working set is one tile-row
+block per pyramid level.
 """
 
 from __future__ import annotations
@@ -28,12 +20,9 @@ from typing import Iterator, List, Tuple
 
 import numpy as np
 import pandas as pd
-import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from ..functions.imagecodecs import cut_tiles, downsample2x, encode_image
 from ..planner import Stripper
-from .tiling import TILE_SCHEMA
 
 STRIP_SCHEMA = (
     "image_id string, level int, strip_id int, top_row int, strip_h int, "
@@ -182,306 +171,14 @@ def strips_level0(images: DataFrame, tile: int = 512,
                  .mapInPandas(kernel, schema=STRIP_SCHEMA)
 
 
-def with_child_strips(parents: DataFrame, tile: int,
-                      target_px: int) -> DataFrame:
-    """Annotate parent strip rows with (child_id, child_top, child_h) —
-    one row per child strip of the NEXT level whose source window
-    [2*c_top, min(2*(c_top+c_h), parent_h)) overlaps the parent strip —
-    entirely as CLOSED-FORM column expressions mirroring `_plan_for_dims`
-    (Stripper/_stripping: uniform tile-aligned strip height, trailing runt
-    merged into the previous strip; equivalence pinned by a property test
-    over random dims).
-
-    Routing in the JVM keeps the parent payload OUT of Python: the old
-    mapInPandas route pass shipped every strip's bytes JVM->py->JVM just to
-    annotate rows with child ids (guide 2.3: route with keys and metadata,
-    never payloads)."""
-    pw = F.col("level_w").cast("long")
-    ph = F.col("level_h").cast("long")
-    t = F.lit(tile).cast("long")
-    cw = F.floor((pw + F.lit(1)) / F.lit(2)).cast("long")   # ceil(pw/2)
-    ch = F.floor((ph + F.lit(1)) / F.lit(2)).cast("long")
-    num0 = F.greatest(F.lit(1).cast("long"),
-                      F.floor(cw * ch / F.lit(target_px)).cast("long"))
-    s0 = F.floor(ch / num0).cast("long")
-    s = F.when(s0 <= t, t).otherwise(
-        F.when(s0 % t != 0, (F.floor(s0 / t).cast("long") + 1) * t)
-         .otherwise(s0))
-    d = parents.withColumn("_ch", ch).withColumn("_s", s)
-    ch, s = F.col("_ch"), F.col("_s")
-    n_raw = F.ceil(ch / s).cast("long")
-    last_h = ch - (n_raw - 1) * s
-    n = F.when((n_raw > 1) & (last_h < t), n_raw - 1).otherwise(n_raw)
-    d = d.withColumn("_n", n)
-    n = F.col("_n")
-    p_top = F.col("top_row").cast("long")
-    p_h = F.col("strip_h").cast("long")
-    cid_lo = F.least(n - 1, F.floor(p_top / (2 * s)).cast("long"))
-    cid_hi = F.least(n - 1, F.floor((p_top + p_h - 1) / (2 * s)).cast("long"))
-    d = d.withColumn("_cid", F.explode(F.sequence(cid_lo, cid_hi)))
-    c = F.col("_cid")
-    return (d.withColumn("child_id", c.cast("int"))
-            .withColumn("child_top", (c * s).cast("int"))
-            .withColumn("child_h", F.when(c < n - 1, s)
-                        .otherwise(ch - c * s).cast("int"))
-            .drop("_ch", "_s", "_n", "_cid"))
-
-
-def next_level_strips(strips: DataFrame, level: int, tile: int = 512,
-                      target_px: int = 1024 * 1024,
-                      num_partitions: int | None = None) -> DataFrame:
-    """Level `level` strips from level-1 strips.
-
-    1. a JVM-side explode routes each parent strip to the child strips whose
-       source window [2*c_top, 2*(c_top+c_h)) it overlaps (the DAG edges) —
-       pure column arithmetic, so parent payloads never cross into Python
-       for routing;
-    2. groupBy (image_id, child strip) + applyInPandas stacks the parents,
-       slices the exact source rows, and 2x-average downsamples. The group
-       shuffle width is EXPLICIT and level-adaptive: AQE's byte-based
-       partition coalescing would squeeze the (compressed, byte-light but
-       CPU-heavy) combine stage onto a fraction of the slots, while a fixed
-       wide fanout pays the per-task cost of a Python stage for mostly-empty
-       partitions at the shrinking upper levels (r6: a trivial mapInPandas
-       costs ~7-10 ms PER TASK on the driver path, so a 128-wide stage for
-       4 strips is pure overhead). Default: 2x parallelism for level 1,
-       shrinking 4x per level with the pixel count, floor 4.
-    """
-    parents = strips.filter(F.col("level") == level - 1)
-    slots = strips.sparkSession.sparkContext.defaultParallelism
-    if num_partitions is None:
-        num_partitions = max(4, (2 * slots) >> (2 * (level - 1)))
-    routed = (with_child_strips(parents, tile, target_px)
-              .repartition(num_partitions, "image_id", "child_id"))
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("top_row")
-        r0 = pdf.iloc[0]
-        pw, ph = int(r0.level_w), int(r0.level_h)
-        cw, ch_ = -(-pw // 2), -(-ph // 2)
-        nplanes_total = int(r0.planes) + (1 if bool(r0.has_mask) else 0)
-        slabs = [np.frombuffer(zlib.decompress(p), dtype=np.uint8)
-                 .reshape(int(sh), pw, nplanes_total)
-                 for p, sh in zip(pdf["payload"], pdf["strip_h"])]
-        stack = np.concatenate(slabs, axis=0)
-        base = int(pdf["top_row"].iloc[0])
-        c_top, c_h = int(r0.child_top), int(r0.child_h)
-        src0, src1 = 2 * c_top, min(2 * (c_top + c_h), ph)
-        window = stack[src0 - base: src1 - base]
-        down = downsample2x(window)
-        return pd.DataFrame({
-            "image_id": [r0.image_id], "level": [level],
-            "strip_id": [int(r0.child_id)], "top_row": [c_top],
-            "strip_h": [c_h], "level_w": [cw], "level_h": [ch_],
-            "n_levels": [int(r0.n_levels)], "planes": [int(r0.planes)],
-            "has_mask": [bool(r0.has_mask)],
-            "payload": [zlib.compress(down.tobytes(), 1)],
-        })
-
-    return (routed.groupBy("image_id", "child_id")
-            .applyInPandas(combine, schema=STRIP_SCHEMA))
-
-
-def _plan_for_dims(w: int, h: int, tile: int, target_px: int):
-    """Strip bounds for one level of the given dims (planner stripping rule)."""
-    s = Stripper(w, h, tile_width=tile, tile_height=tile,
-                 target_pixel_count=target_px, overview_count=0)
-    bounds, top = [], 0
-    for st in s.pyramid()[0].strips:
-        bounds.append((top, st.height))
-        top += st.height
-    return bounds
-
-
-def pyramid_tail_strips(parents: DataFrame, first_level: int,
-                        tile: int = 512,
-                        target_px: int = 1024 * 1024) -> DataFrame:
-    """ALL remaining pyramid levels (first_level..n_levels-1) from the
-    level first_level-1 strips in ONE grouped kernel: stack the parent
-    level whole, then iterate exact 2x downsamples in-task, emitting each
-    level's strips per the planner's bounds.
-
-    Valid only when the parent level fits the direct path's whole-image
-    memory contract (caller gates on level pixels <= SPLIT_THRESHOLD_PX) —
-    at that size the per-level shuffle+job of next_level_strips buys
-    nothing but overhead (r6: each eager level materialization costs a
-    full job launch plus a Python stage; the tail levels' pixels shrink
-    4x per level and are a fraction of one task's budget). Byte-identical
-    to the per-level pipeline: a single-stack downsample equals the
-    per-strip combine (same exact row mapping), and the emitted strips
-    slice the same planner bounds with the same zlib level (tested)."""
-
-    def combine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("top_row")
-        r0 = pdf.iloc[0]
-        pw, ph = int(r0.level_w), int(r0.level_h)
-        n_levels = int(r0.n_levels)
-        nplanes_total = int(r0.planes) + (1 if bool(r0.has_mask) else 0)
-        out = {k: [] for k in ("image_id", "level", "strip_id", "top_row",
-                               "strip_h", "level_w", "level_h", "n_levels",
-                               "planes", "has_mask", "payload")}
-        if n_levels <= first_level:
-            return pd.DataFrame(out)
-        slabs = [np.frombuffer(zlib.decompress(p), dtype=np.uint8)
-                 .reshape(int(sh), pw, nplanes_total)
-                 for p, sh in zip(pdf["payload"], pdf["strip_h"])]
-        px = np.concatenate(slabs, axis=0) if len(slabs) > 1 else slabs[0]
-        for lvl in range(first_level, n_levels):
-            px = downsample2x(px)
-            lh, lw = px.shape[0], px.shape[1]
-            for sid, (top, sh) in enumerate(
-                    _plan_for_dims(lw, lh, tile, target_px)):
-                out["image_id"].append(r0.image_id)
-                out["level"].append(lvl)
-                out["strip_id"].append(sid)
-                out["top_row"].append(top)
-                out["strip_h"].append(sh)
-                out["level_w"].append(lw)
-                out["level_h"].append(lh)
-                out["n_levels"].append(n_levels)
-                out["planes"].append(int(r0.planes))
-                out["has_mask"].append(bool(r0.has_mask))
-                out["payload"].append(
-                    zlib.compress(px[top:top + sh].tobytes(), 1))
-        return pd.DataFrame(out)
-
-    return parents.groupBy("image_id").applyInPandas(combine, STRIP_SCHEMA)
-
-
-def strips_to_tiles(strips: DataFrame, tile: int = 512,
-                    compression: str = "deflate") -> DataFrame:
-    """Cut every strip into tiles; strip tops are tile-aligned (planner) so
-    global ty = top_row//tile + local ty. Narrow stage, no shuffle."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "level", "plane", "ty", "tx",
-                                   "level_w", "level_h", "n_levels", "planes",
-                                   "has_mask", "byte_count", "payload")}
-            for r in pdf.itertuples(index=False):
-                nplanes = int(r.planes)
-                mask = bool(r.has_mask)
-                total = nplanes + (1 if mask else 0)
-                px = np.frombuffer(zlib.decompress(r.payload), dtype=np.uint8) \
-                    .reshape(int(r.strip_h), int(r.level_w), total)
-                ty0 = int(r.top_row) // tile
-                for tx, lty, block in cut_tiles(px, tile):
-                    for plane, sl in (((0, slice(0, nplanes)),)
-                                      + (((1, slice(nplanes, total)),) if mask else ())):
-                        payload = encode_image(block[:, :, sl], compression)
-                        out["image_id"].append(r.image_id)
-                        out["level"].append(int(r.level))
-                        out["plane"].append(plane)
-                        out["ty"].append(ty0 + lty)
-                        out["tx"].append(tx)
-                        out["level_w"].append(int(r.level_w))
-                        out["level_h"].append(int(r.level_h))
-                        out["n_levels"].append(int(r.n_levels))
-                        out["planes"].append(nplanes)
-                        out["has_mask"].append(mask)
-                        out["byte_count"].append(len(payload))
-                        out["payload"].append(payload)
-            yield pd.DataFrame(out)
-
-    return strips.mapInPandas(kernel, schema=TILE_SCHEMA)
-
-
 def tile_images_strips(images: DataFrame, tile: int = 512,
                        compression: str = "deflate",
                        target_px: int = 1024 * 1024,
                        max_levels: int = 16,
                        max_dims: tuple[int, int] | None = None,
                        tail_threshold_px: int | None = None) -> DataFrame:
-    """images → tiles via the strip pipeline. Level k is an iterative
-    DataFrame pass over level k-1 (the VRT barrier of pcogger:60-77 becomes a
-    shuffle). n_levels is data-dependent, so the loop depth comes from a
-    cheap driver-side max(w), max(h) scan (parquet footer stats): the deepest
-    possible pyramid is the halvings-until-one-tile closed form on the
-    largest dims — per-image n_levels can only be smaller (the min with the
-    min-size rule), and each frame filters `level < n_levels`. This avoids
-    unioning max_levels-1 mostly-empty shuffle stages for shallow inputs;
-    max_levels stays as a hard cap."""
-    import math
-    if max_dims is None:  # caller may pass probed dims to skip this job
-        row = images.agg(F.max("w").alias("w"), F.max("h").alias("h")).first()
-        max_dims = (row["w"], row["h"])
-    if max_dims[0] is None:  # empty input: one (empty) level-0 frame suffices
-        depth = 1
-    else:
-        k_tile = max(0,
-                     math.ceil(math.log2(max(int(max_dims[0]), 1) / tile)),
-                     math.ceil(math.log2(max(int(max_dims[1]), 1) / tile)))
-        depth = min(max_levels, k_tile + 1)
-    # Two structural rules keep the gigapixel path at full width and at
-    # exactly-once compute (event-log verified — without them the decode
-    # scan ran once PER PYRAMID BRANCH and the kernel stage had a 4x skew
-    # straggler):
-    #
-    # 1. FAN OUT level-0 strips from their decode partitions. The decode is
-    #    one task per scan split (one per IMAGE — a sequential blob can't be
-    #    split), and without the repartition every downstream narrow stage —
-    #    level-0 tile cutting + encode, the dominant kernel, and the level-1
-    #    route's payload decompress — stays at image-level parallelism,
-    #    serializing a 0.5-gigapixel image behind one core. 4x parallelism
-    #    partitions keep the expected strips-per-task near 1 so the hash-
-    #    placement Poisson tail can't create a multi-strip straggler.
-    # 2. CHECKPOINT each level once. Every level feeds TWO consumers (its
-    #    tiles-union branch and the next level's route); Catalyst's exchange
-    #    reuse does not survive the branches' differing column pruning, so
-    #    without a materialization boundary each level — including the
-    #    whole-image decode — computes once per branch. The stored bytes are
-    #    the zlib-packed strips (≈ input-sized), the standard price of a
-    #    multi-consumer pyramid; blocks are ContextCleaner-released when the
-    #    frames are garbage collected.
-    # PYRAMID TAIL FUSION (r6): once a level's pixel count fits the direct
-    # path's whole-image task budget, iterating eager per-level jobs buys
-    # only overhead — every remaining level collapses into ONE grouped
-    # kernel (pyramid_tail_strips) whose input is the last still-oversized
-    # level's strips. tail_start = first level whose PARENT level fits the
-    # budget, so the stacked parent obeys the same memory contract as the
-    # direct path. tail_threshold_px=0 disables the fusion (A/B + tests).
-    from .tiling import SPLIT_THRESHOLD_PX
-    if tail_threshold_px is None:
-        tail_threshold_px = SPLIT_THRESHOLD_PX
-    if max_dims[0] is None:
-        level_px = [0] * depth
-    else:
-        level_px, (w_, h_) = [], (int(max_dims[0]), int(max_dims[1]))
-        for _ in range(depth):
-            level_px.append(w_ * h_)
-            w_, h_ = -(-w_ // 2), -(-h_ // 2)
-    tail_start = depth
-    for lvl in range(1, depth):
-        if tail_threshold_px and level_px[lvl - 1] <= tail_threshold_px:
-            tail_start = lvl
-            break
-
-    slots = images.sparkSession.sparkContext.defaultParallelism
-    level0 = (strips_level0(images, tile=tile, target_px=target_px)
-              .repartition(4 * slots, "image_id", "strip_id")
-              .localCheckpoint(eager=True))
-    frames = [level0]
-    current = level0
-    for lvl in range(1, tail_start):
-        nxt = next_level_strips(current, lvl, tile=tile, target_px=target_px)
-        nxt = (nxt.filter(F.col("level") < F.col("n_levels"))
-               .localCheckpoint(eager=True))
-        frames.append(nxt)
-        current = nxt
-    if tail_start < depth:
-        # single consumer (the union) -> lazy, no checkpoint needed
-        frames.append(pyramid_tail_strips(
-            current.filter(F.col("level") == tail_start - 1),
-            tail_start, tile=tile, target_px=target_px))
-    all_strips = frames[0]
-    for f in frames[1:]:
-        all_strips = all_strips.unionByName(f)
-    # The union carries every level's partitions (level-0 fanout + each
-    # level's combine width); the tile-cutting kernel over it would pay the
-    # per-task Python-stage cost once per partition. A zero-shuffle coalesce
-    # to 2x parallelism keeps ~2 level-0 strips per task (bounded straggler)
-    # while cutting the stage's task count ~4x — and every downstream
-    # consumer of the tiles (checkpoint, header/chunk assembly branches)
-    # inherits the tighter partitioning.
-    all_strips = all_strips.coalesce(2 * slots)
-    return strips_to_tiles(all_strips, tile=tile, compression=compression)
+    """images → tiles: the tile relation of tile_images (same rows and
+    bytes). `target_px`, `max_levels`, `max_dims` and `tail_threshold_px`
+    are ignored; they stay so that existing callers still run."""
+    from .tiling import tile_images
+    return tile_images(images, tile=tile, compression=compression)

@@ -12,15 +12,18 @@ The Spark re-expression of the reference dataflow (SURVEY.md §3.3):
 Scale notes (100 TB design point):
 * decode/cut is embarrassingly parallel — no shuffle; Arrow batch size is
   bounded (session.py) so worker memory is O(batch × image).
-* the file sink (convert_images → tile_assemble_write) is one narrow
-  mapInPandas stage for EVERY image size: a streaming pyramid kernel cuts
-  and encodes tile-row blocks level by level, spills the payloads to a
-  per-image dotfile and writes the COG from byte counts, so a task holds
-  the decoded image plus O(tile rows × width) of working set — no route
-  probe, no per-image grouping, no checkpoint.
-* the blob/parts sinks group tiles per image for assembly, keyed by
-  image_id — uniformly distributed, no hot keys; oversized images take the
-  strip path (operators/strips.py) instead of a single group.
+* every COG sink — files (convert_images → tile_assemble_write), blobs
+  (cog_pipeline) and ordered parts (cog_pipeline_parts) — is one narrow
+  mapInPandas stage over one per-image core (_streamed_cog) for EVERY image
+  size: it cuts and encodes tile-row blocks level by level, spills the
+  payloads to an unnamed temp file and plans the COG from byte counts, so
+  a task holds the decoded image plus O(tile rows × width) of working set,
+  plus whatever the sink keeps (nothing for files, one part for parts, the
+  blob for blobs) — no route probe, no shuffle, no checkpoint.
+* the tile relation (tile_images) is the product only when the tiles
+  themselves are queried (spatial joins, offsets); assemble_cogs /
+  assemble_cog_parts group it per image, keyed by image_id — uniformly
+  distributed, no hot keys.
 * tile metadata queries never touch `payload`/`bytes` (column pruning pushes
   a 2-column read into the parquet scan).
 
@@ -42,9 +45,11 @@ the W1 key above.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import itertools
 import os
+import tempfile
 import zlib
 from typing import Iterator
 
@@ -131,7 +136,7 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     raw/deflate use the buffer-size plane convention (2/5 planes = trailing
     mask); png/jpeg decode through the pure-Python codecs (no mask plane —
     those containers carry alpha as a band instead). The single ingest
-    decode shared by every pixel kernel (tiling, strips, stats, fused)."""
+    decode shared by every pixel kernel (tiling, strips, stats)."""
     if data is None:
         raise ValueError("null image blob")
     if fmt == "png":
@@ -231,9 +236,9 @@ def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
     Returns (nplanes, has_mask, n_levels, level_dims, payloads) with
     payloads keyed (level, plane, ty, tx) and inserted in (level, ty, tx,
     plane) order — a collector over _pyramid_tiles, the single source of
-    pixel semantics shared by the tile-relation kernel (tile_images), the
-    fused blob/parts kernels and the streaming file kernel, so all are
-    byte-identical by construction."""
+    pixel semantics shared by the tile-relation kernel (tile_images) and
+    the streaming COG core (_streamed_cog), so both are byte-identical by
+    construction."""
     px, nplanes, mask = decode_any(data, w, h, fmt)
     dims = _pyramid_dims(w, h, tile, min_overview_size)
     tiles = sorted(_pyramid_tiles(px, nplanes, mask, tile, compression, dims,
@@ -316,14 +321,20 @@ def _cog_blob(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
               ghost: bool, planar: bool = False,
               planar_interleaving: list | None = None
               ) -> tuple[bytes, bytes, int]:
-    """One image's COG from in-memory payloads: (header, data,
-    header_bytes) — shared by the grouped assembly and the fused blob and
-    parts kernels."""
-    writer = _build_cog(image_id, nplanes, has_mask, n_levels, level_dims,
-                        {k: len(v) for k, v in payloads.items()},
-                        payloads.__getitem__, tile, comp_tag, ghost,
-                        planar=planar,
-                        planar_interleaving=planar_interleaving)
+    """One image's COG from in-memory payloads (the grouped assembly):
+    (header, data, header_bytes), as _join_cog."""
+    return _join_cog(_build_cog(image_id, nplanes, has_mask, n_levels,
+                                level_dims,
+                                {k: len(v) for k, v in payloads.items()},
+                                payloads.__getitem__, tile, comp_tag, ghost,
+                                planar=planar,
+                                planar_interleaving=planar_interleaving))
+
+
+def _join_cog(writer: _Writer) -> tuple[bytes, bytes, int]:
+    """(header, data, header_bytes) of a _build_cog writer: its pieces
+    joined once, and the header's extent — the offset of the first
+    occupied tile byte, less that tile's 4-byte ghost leader."""
     pieces = writer.pieces()
     header = next(pieces)
     data = b"".join(pieces)
@@ -502,87 +513,13 @@ def assemble_cogs(tiles: DataFrame, tile: int = 512,
     return tiles.groupBy("image_id").applyInPandas(kernel, schema=schema)
 
 
-def tile_and_assemble(images: DataFrame, tile: int = 512,
-                      compression: str = "deflate", ghost: bool = True,
-                      min_overview_size: int = 2) -> DataFrame:
-    """FUSED decode→pyramid→cut→assemble: one narrow mapInPandas stage, zero
-    shuffle. A COG's tiles come from exactly one image, so grouping them back
-    by image_id is a shuffle the plan never needed when the product is the
-    blob — fusing removes the full pixel-byte exchange AND two JVM↔Python
-    Arrow round-trips from the conversion path. Byte-identical to
-    assemble_cogs(tile_images(...)) (same _decode_and_cut + _cog_blob
-    kernels; asserted in tests). Use the unfused pair when the tiles
-    relation itself is the product (spatial joins, offset queries).
-
-    Memory per task is one image's decoded pixels + its blob — the same
-    whole-image contract as the direct path, so the size router still sends
-    oversized images to the strip pipeline instead."""
-    images = ensure_fanout(images)
-    comp_tag = 1 if compression == "raw" else 8
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
-                    row.bytes, int(row.w), int(row.h), row.fmt, tile,
-                    compression, min_overview_size)
-                header, data, header_bytes = _cog_blob(
-                    row.image_id, nplanes, mask, n_levels, level_dims,
-                    payloads, tile, comp_tag, ghost)
-                # one row per yield: blobs are the unit of memory here
-                yield pd.DataFrame({
-                    "image_id": [row.image_id],
-                    "cog": [header + data],
-                    "n_tiles": [len(payloads)],
-                    "n_levels": [n_levels],
-                    "header_bytes": [header_bytes],
-                    "total_bytes": [len(header) + len(data)],
-                })
-
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    return images.select(*cols).mapInPandas(kernel, schema=ASSEMBLY_SCHEMA)
-
-
-# Blob/parts sinks route images above this pixel count to the strip pipeline
-# (convert_images streams every size and ignores it): the direct path
-# holds one whole decoded image per kernel call (w*h*planes bytes), so at
-# 64 Mpx an RGB image is ~192 MB of task memory — past that, strips keep
-# every stage bounded by strip size, not image size (stripper.go:261-350 /
-# pcogger's reason to exist).
+# tile_pixel_stats sends images above this pixel count through the level-0
+# strip relation (operators/strips.py): its direct kernel holds one whole
+# decoded image (w*h*planes bytes), so at 64 Mpx an RGB image is ~192 MB of
+# task memory — past that, the stats run over level-0 strips, one strip per
+# row (stripper.go:261-350 / pcogger's reason to exist). The COG sinks
+# stream every size through _streamed_cog and take no route.
 SPLIT_THRESHOLD_PX = 64 * 1024 * 1024
-
-
-def _tiles_routed(images: DataFrame, tile: int, compression: str,
-                  split_threshold_px: int, target_px: int,
-                  probe: tuple | None = None) -> DataFrame:
-    """Size-routed tile stage: images at or below the threshold take the
-    direct whole-image decode (one narrow stage); oversized images take the
-    strip pipeline (bounded task memory). Both produce byte-identical tiles
-    (asserted in tests), so the union is transparent to assembly.
-
-    The routing probe is ONE aggregate over (w, h) only — no pixel bytes, a
-    column-pruned sub-second metadata job even on a petabyte table — whose
-    max dims are also reused as the strip pipeline's pyramid-depth bound
-    (saving its own probe). All-small tables take the direct path with no
-    extra plan nodes at all. NOTE the probe runs at plan-construction time:
-    on a DERIVED (non-file-scan) input it recomputes the upstream lineage —
-    such callers should localCheckpoint/cache first, or run route_probe()
-    once themselves and pass its result via `probe=`."""
-    from .strips import tile_images_strips
-
-    px = _px_expr()
-    has_small, has_big, max_dims = probe or route_probe(images,
-                                                        split_threshold_px)
-    if not has_big:
-        return tile_images(images, tile=tile, compression=compression)
-    strips = tile_images_strips(images.filter(px > split_threshold_px),
-                                tile=tile, compression=compression,
-                                target_px=target_px, max_dims=max_dims)
-    if not has_small:
-        return strips
-    direct = tile_images(images.filter(px <= split_threshold_px),
-                         tile=tile, compression=compression)
-    return direct.unionByName(strips)
 
 
 def _px_expr():
@@ -635,14 +572,13 @@ def _probe_from_footers(images: DataFrame, split_threshold_px: int):
 
 def route_probe(images: DataFrame,
                 split_threshold_px: int = SPLIT_THRESHOLD_PX) -> tuple:
-    """One column-pruned metadata probe deciding the pipeline shape:
-    (has_small, has_big, max_dims). On a bare parquet relation this reads
-    the file FOOTERS driver-side — no Spark job at all (r6: the aggregate
-    probe cost a 0.3-0.7 s job per cog_pipeline/_parts/tile_pixel_stats
-    invocation). Derived frames fall back to one aggregate job — which
-    recomputes upstream lineage, so such callers should localCheckpoint
-    first, or run route_probe() once themselves and pass its result via
-    `probe=`."""
+    """One column-pruned metadata probe deciding tile_pixel_stats' plan
+    shape: (has_small, has_big, max_dims). On a bare parquet relation this
+    reads the file FOOTERS driver-side — no Spark job at all (r6: the
+    aggregate probe cost a 0.3-0.7 s job per invocation). Derived frames
+    fall back to one aggregate job — which recomputes upstream lineage, so
+    such callers should localCheckpoint first, or run route_probe() once
+    themselves and pass its result via `probe=`."""
     footer = _probe_from_footers(images, split_threshold_px)
     if footer is not None:
         return footer
@@ -655,180 +591,163 @@ def route_probe(images: DataFrame,
     return has_small, has_big, max_dims
 
 
-def cog_pipeline(images: DataFrame, tile: int = 512,
-                 compression: str = "deflate", ghost: bool = True,
-                 split_threshold_px: int = SPLIT_THRESHOLD_PX,
-                 target_px: int = 1024 * 1024, fused: bool = True,
-                 probe: tuple | None = None) -> DataFrame:
-    """images → COG blobs, end-to-end (the flagship dataflow).
+@contextlib.contextmanager
+def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
+                  tile: int, compression: str, ghost: bool,
+                  min_overview_size: int = 2):
+    """The per-image COG core behind every sink (file, blob, parts), the
+    reference's one write path (cog.go:522-597, 722-750): decode, stream
+    the pyramid's tiles into a spill, plan the COG from byte counts.
 
-    Small images take the FUSED zero-shuffle kernel (tile_and_assemble);
-    oversized images route through the strip pipeline (bounded stages) and
-    the grouped assembly. The OUTPUT is still one blob row per image —
-    unbounded for gigapixel inputs; sinks should prefer
-    cog_pipeline_parts/convert_images, which keep the assembly bounded too.
-    fused=False forces the tiles-relation path for all sizes (same bytes,
-    one extra pixel shuffle — useful when the tile relation is reused).
-    `probe` accepts a precomputed route_probe() result (pass it when
-    `images` is a derived frame, to avoid re-running its lineage)."""
-    if not fused:
-        tiles = _tiles_routed(images, tile, compression, split_threshold_px,
-                              target_px, probe=probe)
-        return assemble_cogs(tiles, tile=tile, compression=compression,
-                             ghost=ghost)
-    from .strips import tile_images_strips
+    Yields (writer, counts, n_levels) while the spill is open: `counts` is
+    the byte count per (level, plane, ty, tx), and `writer` the codec
+    _Writer whose pieces() emits the header and then each payload in COG
+    order, loaded from the spill with os.pread — no mmap, so the spill's
+    pages never count toward worker RSS. Only the byte counts stay in
+    memory: a task holds the decoded image plus one tile-row block per
+    level (_pyramid_tiles) while cutting, and what its sink keeps after.
 
-    px = _px_expr()
-    has_small, has_big, max_dims = probe or route_probe(images,
-                                                        split_threshold_px)
-    if not has_big:
-        return tile_and_assemble(images, tile=tile, compression=compression,
-                                 ghost=ghost)
-    strip_tiles = tile_images_strips(images.filter(px > split_threshold_px),
-                                     tile=tile, compression=compression,
-                                     target_px=target_px, max_dims=max_dims)
-    big = assemble_cogs(strip_tiles, tile=tile, compression=compression,
-                        ghost=ghost)
-    if not has_small:
-        return big
-    small = tile_and_assemble(images.filter(px <= split_threshold_px),
-                              tile=tile, compression=compression, ghost=ghost)
-    return small.unionByName(big)
-
-
-def tile_and_assemble_parts(images: DataFrame, tile: int = 512,
-                            compression: str = "deflate", ghost: bool = True,
-                            tiles_per_part: int = 256,
-                            min_overview_size: int = 2) -> DataFrame:
-    """Fused parts emission for small images: header + data chunks produced
-    in the same task that decoded the image — zero shuffle. The data section
-    is sliced at the same ranked-tile boundaries assemble_cog_parts groups
-    on (tile order W1, ghost framing included in the codec's data stream),
-    so the parts are byte-identical to the grouped path (tested)."""
-    images = ensure_fanout(images)
-    comp_tag = 1 if compression == "raw" else 8
-    overhead = GHOST_OVERHEAD if ghost else 0
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
-                    row.bytes, int(row.w), int(row.h), row.fmt, tile,
-                    compression, min_overview_size)
-                header, data, _hb = _cog_blob(
-                    row.image_id, nplanes, mask, n_levels, level_dims,
-                    payloads, tile, comp_tag, ghost)
-                keys = sorted(payloads, key=lambda k: (-k[0], k[2], k[3], k[1]))
-                ids, idxs, parts = [row.image_id], [0], [header]
-                off = 0
-                for c0 in range(0, len(keys), tiles_per_part):
-                    size = sum(len(payloads[k]) + overhead
-                               for k in keys[c0:c0 + tiles_per_part]
-                               if payloads[k])
-                    ids.append(row.image_id)
-                    idxs.append(c0 // tiles_per_part + 1)
-                    parts.append(data[off:off + size])
-                    off += size
-                assert off == len(data)
-                yield pd.DataFrame({"image_id": ids, "part_idx": idxs,
-                                    "part": parts})
-
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    return images.select(*cols).mapInPandas(kernel, schema=PARTS_SCHEMA)
-
-
-def cog_pipeline_parts(images: DataFrame, tile: int = 512,
-                       compression: str = "deflate", ghost: bool = True,
-                       split_threshold_px: int = SPLIT_THRESHOLD_PX,
-                       target_px: int = 1024 * 1024,
-                       tiles_per_part: int = 256,
-                       fused: bool = True,
-                       probe: tuple | None = None) -> DataFrame:
-    """images → ordered COG parts with bounded memory end-to-end. Small
-    images take the fused zero-shuffle parts kernel; oversized images route
-    through the strip pipeline into the streaming parts assembly (header
-    from metadata only; ghost-framed data chunks of <= tiles_per_part
-    tiles). Concatenating an image's parts in part_idx order is
-    byte-identical to the assemble_cogs blob (tested) — this is the
-    sink-safe default for any table that may contain oversized images.
-    `probe` accepts a precomputed route_probe() result (pass it when
-    `images` is a derived frame, to avoid re-running its lineage)."""
-    if not fused:
-        tiles = _tiles_routed(images, tile, compression, split_threshold_px,
-                              target_px, probe=probe)
-        return assemble_cog_parts(tiles, tile=tile, compression=compression,
-                                  ghost=ghost, tiles_per_part=tiles_per_part)
-    from .strips import tile_images_strips
-
-    px = _px_expr()
-    has_small, has_big, max_dims = probe or route_probe(images,
-                                                        split_threshold_px)
-    if not has_big:
-        return tile_and_assemble_parts(images, tile=tile,
-                                       compression=compression, ghost=ghost,
-                                       tiles_per_part=tiles_per_part)
-    strip_tiles = tile_images_strips(images.filter(px > split_threshold_px),
-                                     tile=tile, compression=compression,
-                                     target_px=target_px, max_dims=max_dims)
-    big = assemble_cog_parts(strip_tiles, tile=tile, compression=compression,
-                             ghost=ghost, tiles_per_part=tiles_per_part)
-    if not has_small:
-        return big
-    small = tile_and_assemble_parts(images.filter(px <= split_threshold_px),
-                                    tile=tile, compression=compression,
-                                    ghost=ghost, tiles_per_part=tiles_per_part)
-    return small.unionByName(big)
-
-
-CONVERT_STATS_SCHEMA = ("image_id string, n_tiles long, n_levels int, "
-                        "total_bytes long")
+    The spill is an unnamed tempfile.TemporaryFile, so no sink names or
+    removes one: the file goes with its descriptor when the block exits,
+    whatever happens. Undecodable input (corrupt or truncated deflate, a
+    null or empty blob, a buffer that is not w×h×planes) raises ValueError
+    naming the image."""
+    try:
+        px, nplanes, mask = decode_any(data, w, h, fmt)
+    except (ValueError, zlib.error) as exc:
+        raise ValueError(f"image {image_id!r}: {exc}") from exc
+    dims = _pyramid_dims(w, h, tile, min_overview_size)
+    counts, offsets, pos = {}, {}, 0
+    with tempfile.TemporaryFile() as spill:
+        for lvl, plane, ty, tx, payload in _pyramid_tiles(
+                px, nplanes, mask, tile, compression, dims):
+            spill.write(payload)
+            counts[(lvl, plane, ty, tx)] = len(payload)
+            offsets[(lvl, plane, ty, tx)] = pos
+            pos += len(payload)
+        del px
+        spill.flush()
+        fd = spill.fileno()
+        yield (_build_cog(image_id, nplanes, mask, len(dims), dims, counts,
+                          lambda k: os.pread(fd, counts[k], offsets[k]),
+                          tile, 1 if compression == "raw" else 8, ghost),
+               counts, len(dims))
 
 
 def _write_cog_file(image_id: str, data: bytes, w: int, h: int, fmt: str,
                     out_dir: str, tile: int, compression: str, ghost: bool,
                     min_overview_size: int = 2) -> tuple[int, int, int]:
-    """Decode one image and stream its COG to <out_dir>/<image_id>.tif;
-    returns (n_tiles, n_levels, total_bytes).
+    """File sink: stream one image's COG to <out_dir>/<image_id>.tif and
+    return (n_tiles, n_levels, total_bytes). write_pieces writes the
+    pieces with batched os.writev, flushing by 4 MB of loaded payload, so
+    at most ~4 MB of tiles is held at once. Atomic via write_tif
+    (tmp+rename); a failure leaves no file behind."""
+    with _streamed_cog(image_id, data, w, h, fmt, tile, compression, ghost,
+                       min_overview_size) as (writer, counts, n_levels):
+        total = write_tif(out_dir, image_id,
+                          lambda fd: write_pieces(fd, writer.pieces()))
+    return len(counts), n_levels, total
 
-    The pyramid streams through _pyramid_tiles and every payload is
-    appended to a spill dotfile as it is encoded, so only the byte counts
-    stay in memory. The header then comes from byte counts alone, and the
-    codec's piece emitter loads each payload in COG order with os.pread
-    from the spill (cog.go:522-597, 722-750); write_pieces writes them with
-    batched os.writev, flushing by 4 MB of loaded payload, so at most ~4 MB
-    of tiles is held at once — no mmap, so the spill's pages never count
-    toward worker RSS. Atomic via write_tif (tmp+rename); the spill is
-    always deleted, and a failure removes the tmp too. Undecodable input
-    (corrupt or truncated deflate, a null or empty blob, a buffer that is
-    not w×h×planes) raises ValueError naming the image."""
-    spill_path = os.path.join(out_dir, f".{image_id}.spill")
-    try:
-        try:
-            px, nplanes, mask = decode_any(data, w, h, fmt)
-        except (ValueError, zlib.error) as exc:
-            raise ValueError(f"image {image_id!r}: {exc}") from exc
-        dims = _pyramid_dims(w, h, tile, min_overview_size)
-        counts, offsets, pos = {}, {}, 0
-        with open(spill_path, "w+b") as spill:
-            for lvl, plane, ty, tx, payload in _pyramid_tiles(
-                    px, nplanes, mask, tile, compression, dims):
-                spill.write(payload)
-                counts[(lvl, plane, ty, tx)] = len(payload)
-                offsets[(lvl, plane, ty, tx)] = pos
-                pos += len(payload)
-            del px
-            spill.flush()
-            spill_fd = spill.fileno()
-            writer = _build_cog(
-                image_id, nplanes, mask, len(dims), dims, counts,
-                lambda k: os.pread(spill_fd, counts[k], offsets[k]), tile,
-                1 if compression == "raw" else 8, ghost)
-            total = write_tif(out_dir, image_id,
-                              lambda fd: write_pieces(fd, writer.pieces()))
-    finally:
-        if os.path.exists(spill_path):
-            os.remove(spill_path)
-    return len(counts), len(dims), total
+
+def _cog_blob_row(image_id: str, data: bytes, w: int, h: int, fmt: str,
+                  tile: int, compression: str, ghost: bool) -> tuple:
+    """Blob sink: one ASSEMBLY_SCHEMA row (image_id, cog, n_tiles,
+    n_levels, header_bytes, total_bytes)."""
+    with _streamed_cog(image_id, data, w, h, fmt, tile, compression,
+                       ghost) as (writer, counts, n_levels):
+        header, body, header_bytes = _join_cog(writer)
+    return (image_id, header + body, len(counts), n_levels, header_bytes,
+            len(header) + len(body))
+
+
+def _cog_part_rows(image_id: str, data: bytes, w: int, h: int, fmt: str,
+                   tile: int, compression: str, ghost: bool,
+                   tiles_per_part: int) -> Iterator[tuple]:
+    """Parts sink: PARTS_SCHEMA rows (image_id, part_idx, part). Part 0 is
+    the header; part k holds the data bytes of the tiles ranked
+    [(k-1)·tiles_per_part, k·tiles_per_part) in the W1 order (level DESC,
+    ty, tx, plane), ghost framing included — the boundaries
+    assemble_cog_parts groups on, so the parts are the same bytes. One part
+    is held at a time."""
+    with _streamed_cog(image_id, data, w, h, fmt, tile, compression,
+                       ghost) as (writer, counts, _):
+        pieces = writer.pieces()
+        yield image_id, 0, next(pieces)
+        overhead = GHOST_OVERHEAD if ghost else 0
+        ranked = sorted(counts, key=lambda k: (-k[0], k[2], k[3], k[1]))
+        for c0 in range(0, len(ranked), tiles_per_part):
+            # chunk boundaries fall between tiles, so no piece straddles one
+            size = sum(counts[k] + overhead
+                       for k in ranked[c0:c0 + tiles_per_part] if counts[k])
+            part = []
+            while size > 0:
+                part.append(next(pieces))
+                size -= len(part[-1])
+            yield image_id, c0 // tiles_per_part + 1, b"".join(part)
+
+
+def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
+    """One ensure_fanout + mapInPandas stage over a COG sink: `rows(image_id,
+    data, w, h, fmt)` yields the sink's output tuples, in `schema` order,
+    for one input image. Output is flushed at the end of every input batch
+    and whenever its binary columns reach 4 MB, so a task holds at most one
+    blob or part beyond that bound."""
+    images = ensure_fanout(images)
+    names = [c.split()[0] for c in schema.split(",")]
+    FLUSH_BYTES = 4 * 1024 * 1024
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out, acc = [], 0
+            for r in pdf.itertuples(index=False):
+                for rec in rows(r.image_id, r.bytes, int(r.w), int(r.h),
+                                r.fmt):
+                    out.append(rec)
+                    acc += sum(len(v) for v in rec if isinstance(v, bytes))
+                    if acc >= FLUSH_BYTES:
+                        yield pd.DataFrame(out, columns=names)
+                        out, acc = [], 0
+            if out:
+                yield pd.DataFrame(out, columns=names)
+
+    cols = ["image_id", "bytes", "w", "h", "fmt"]
+    return images.select(*cols).mapInPandas(kernel, schema=schema)
+
+
+def cog_pipeline(images: DataFrame, tile: int = 512,
+                 compression: str = "deflate", ghost: bool = True
+                 ) -> DataFrame:
+    """images → one COG blob row per image (ASSEMBLY_SCHEMA), end to end
+    (the flagship dataflow): one narrow stage of the streaming core
+    (_streamed_cog) for every image size, byte-identical to
+    assemble_cogs(tile_images(...)) (tested). The OUTPUT is still one blob
+    per image — unbounded for gigapixel inputs; sinks should prefer
+    cog_pipeline_parts/convert_images, which bound the output too."""
+    def rows(image_id, data, w, h, fmt):
+        yield _cog_blob_row(image_id, data, w, h, fmt, tile, compression,
+                            ghost)
+
+    return _cog_stage(images, rows, ASSEMBLY_SCHEMA)
+
+
+def cog_pipeline_parts(images: DataFrame, tile: int = 512,
+                       compression: str = "deflate", ghost: bool = True,
+                       tiles_per_part: int = 256) -> DataFrame:
+    """images → ordered COG parts (PARTS_SCHEMA) with bounded memory end to
+    end: one narrow stage of the streaming core (_streamed_cog) for every
+    image size. Part 0 is the header, parts 1..k the ghost-framed data of
+    <= tiles_per_part tiles each; concatenating an image's parts in
+    part_idx order is byte-identical to the assemble_cogs blob, and the
+    parts equal assemble_cog_parts(tile_images(...)) (tested) — the
+    sink-safe default for any table that may contain oversized images."""
+    rows = functools.partial(_cog_part_rows, tile=tile,
+                             compression=compression, ghost=ghost,
+                             tiles_per_part=tiles_per_part)
+    return _cog_stage(images, rows, PARTS_SCHEMA)
+
+
+CONVERT_STATS_SCHEMA = ("image_id string, n_tiles long, n_levels int, "
+                        "total_bytes long")
 
 
 def tile_assemble_write(images: DataFrame, out_dir: str, tile: int = 512,
@@ -836,33 +755,18 @@ def tile_assemble_write(images: DataFrame, out_dir: str, tile: int = 512,
                         min_overview_size: int = 2) -> DataFrame:
     """FUSED decode→pyramid→cut→assemble→WRITE for images of ANY size: the
     COG file is written by the same Python worker that decoded the pixels,
-    so no tile or blob ever crosses the JVM↔Python socket. Each image goes
-    through the streaming pyramid kernel (_write_cog_file): task memory is
-    the decoded image plus one tile-row block per level, whatever the image
-    size, so one narrow mapInPandas stage serves small and oversized images
-    alike — no size route, no checkpoint, and no shuffle unless
-    ensure_fanout must fan out a scan with fewer splits than slots.
-    Byte-identical to assemble_cogs(tile_images(...)). Returns stats rows
-    only."""
-    images = ensure_fanout(images)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    so no tile or blob ever crosses the JVM↔Python socket. One narrow
+    stage of the streaming core (_write_cog_file) — no size route, no
+    checkpoint, and no shuffle unless ensure_fanout must fan out a scan
+    with fewer splits than slots. Byte-identical to
+    assemble_cogs(tile_images(...)). Returns stats rows only."""
+    def rows(image_id, data, w, h, fmt):
         os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "n_tiles", "n_levels",
-                                   "total_bytes")}
-            for row in pdf.itertuples(index=False):
-                n_tiles, n_levels, total = _write_cog_file(
-                    row.image_id, row.bytes, int(row.w), int(row.h), row.fmt,
-                    out_dir, tile, compression, ghost, min_overview_size)
-                out["image_id"].append(row.image_id)
-                out["n_tiles"].append(n_tiles)
-                out["n_levels"].append(n_levels)
-                out["total_bytes"].append(total)
-            yield pd.DataFrame(out)
+        yield (image_id, *_write_cog_file(image_id, data, w, h, fmt, out_dir,
+                                          tile, compression, ghost,
+                                          min_overview_size))
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    return images.select(*cols).mapInPandas(kernel, CONVERT_STATS_SCHEMA)
+    return _cog_stage(images, rows, CONVERT_STATS_SCHEMA)
 
 
 def convert_images(images: DataFrame, out_dir: str, tile: int = 512,
@@ -1138,10 +1042,11 @@ PARTS_SCHEMA = "image_id string, part_idx int, part binary"
 def assemble_cog_parts(tiles: DataFrame, tile: int = 512,
                        compression: str = "deflate", ghost: bool = True,
                        tiles_per_part: int = 256) -> DataFrame:
-    """Streaming assembly for oversized images: instead of one blob per
-    image, emit ordered parts — part 0 is the full header (built from tile
+    """Parts assembly of a tile relation: instead of one blob per image,
+    emit ordered parts — part 0 is the full header (built from tile
     METADATA only, no payloads), parts 1..k are ghost-framed tile-data chunks
-    of <= tiles_per_part tiles each.
+    of <= tiles_per_part tiles each. cog_pipeline_parts emits the same parts
+    straight from images, without the tile relation or its shuffles.
 
     Memory per task is bounded by the chunk, not the image: a 10-gigapixel
     image assembles as ~160 independent 256-tile parts. A sink appends parts

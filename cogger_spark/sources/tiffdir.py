@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import os
 from typing import Callable
+from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,12 +25,37 @@ def _stem(col):
     return F.regexp_replace(base, r"\.[Tt][Ii][Ff][Ff]?$", "")
 
 
+def _file_size(spark: SparkSession, uri: str) -> int:
+    """Size of a listed file: os.stat for a file: URI (percent-decoded —
+    the listing encodes a literal '%' as %25), the Hadoop FileSystem for
+    any other scheme."""
+    if uri.startswith("file:"):
+        return os.path.getsize(unquote(urlparse(uri).path))
+    path = spark._jvm.org.apache.hadoop.fs.Path(uri)
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.getFileStatus(path).getLen()
+
+
+def _binary_files(spark: SparkSession, path: str, pattern: str) -> DataFrame:
+    """binaryFile scan of `path` that refuses 0-byte files: Spark reads a
+    file as byte-range splits and an empty file has none, so its row would
+    vanish from the table without a trace (and a missing .ovr part would
+    silently drop an overview). Raises ValueError naming the first empty
+    file of the driver-side listing."""
+    files = (spark.read.format("binaryFile")
+             .option("pathGlobFilter", pattern)
+             .load(path))
+    for uri in files.inputFiles():
+        if _file_size(spark, uri) == 0:
+            raise ValueError(f"empty TIFF file: {uri}")
+    return files
+
+
 def read_tiff_dir(spark: SparkSession, path: str,
                   pattern: str = "*.tif") -> DataFrame:
-    """Directory of TIFF files → (image_id, bytes, n_bytes, path)."""
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", pattern)
-            .load(path)
+    """Directory of TIFF files → (image_id, bytes, n_bytes, path). A 0-byte
+    file raises ValueError naming it."""
+    return (_binary_files(spark, path, pattern)
             .select(_stem(F.col("path")).alias("image_id"),
                     F.col("content").alias("bytes"),
                     F.col("length").alias("n_bytes"),
@@ -41,10 +67,9 @@ def read_tiff_sets_dir(spark: SparkSession, path: str) -> DataFrame:
     external overview files (.tif.ovr, .tif.2, .tif.4 …, loader.go:63-106 /
     TestMultiFiles) — grouped as (image_id, part_id, bytes): the main file is
     part 0, suffixed parts follow in lexicographic suffix order, matching the
-    reader-argument order of the reference CLI. Feed to rewrite_tiff_sets."""
-    files = (spark.read.format("binaryFile")
-             .option("pathGlobFilter", "*.tif*")
-             .load(path)
+    reader-argument order of the reference CLI. Feed to rewrite_tiff_sets.
+    A 0-byte file (main or overview part) raises ValueError naming it."""
+    files = (_binary_files(spark, path, "*.tif*")
              .select(F.element_at(F.split("path", "/"), -1).alias("fname"),
                      F.col("content").alias("bytes")))
     image_id = _stem(F.regexp_replace("fname", r"(\.tif)(\..*)?$", r"$1"))

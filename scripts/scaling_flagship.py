@@ -120,10 +120,8 @@ def main() -> None:
 
     images = spark.read.parquet(args.images)
     n_images = images.count()
-    # warm JVM + python workers with a precomputed route (limit(8) still
-    # plans a full-scan route_probe otherwise)
-    cog_pipeline(images.limit(8), tile=512,
-                 probe=(True, False, (2048, 2048))).count()
+    # warm JVM + python workers
+    cog_pipeline(images.limit(8), tile=512).count()
 
     def jvm_gc_millis() -> int:
         beans = (spark.sparkContext._jvm.java.lang.management

@@ -245,9 +245,9 @@ def test_file_sink_fails_closed(tmp_path, kind, match, route):
 
 
 def test_rewrite_to_dir_empty_blob_fails_closed(spark, tmp_path):
-    """A 0-byte blob through the Spark kernel. (A 0-byte file read through
-    read_tiff_dir never reaches a kernel: Spark's binaryFile scan yields no
-    row for it. The path route's own read of a 0-byte file is covered by
+    """A 0-byte blob through the Spark kernel. (read_tiff_dir refuses a
+    directory holding a 0-byte file, see test_rewrite_fail_closed; the path
+    route's own read of a 0-byte file is covered by
     test_file_sink_fails_closed.)"""
     tiffs = spark.createDataFrame([("img_00000042", b"")],
                                   "image_id string, bytes binary")

@@ -3,21 +3,15 @@
 Pins the plan/behavior contracts of the r6 performance changes:
 
 * ensure_fanout's coalesce arm (one-row-per-task scans merged zero-shuffle);
-* the JVM-side strip routing (with_child_strips == the Python planner's
-  _plan_for_dims, property-tested over random dims; no Python route pass in
-  next_level_strips' plan);
 * knn_join_adaptive's collapsed ladder (identical rows to the per-rung
   ladder semantics, already oracle-pinned — here: single wide explode only
   for unresolved points);
 * cosine norm precomputation (bit-identical scores to the inline form).
 """
 
-import random
-
 import numpy as np
 import pyspark.sql.functions as F
 
-from cogger_spark.operators.strips import _plan_for_dims, with_child_strips
 from cogger_spark.operators.tiling import ensure_fanout
 
 
@@ -41,56 +35,6 @@ def test_ensure_fanout_leaves_wellformed_input_alone(spark):
     slots = spark.sparkContext.defaultParallelism
     df = spark.range(1000).repartition(2 * slots)
     assert ensure_fanout(df) is df
-
-
-def test_child_strip_exprs_match_python_planner(spark):
-    """Randomized differential: the closed-form JVM routing must reproduce
-    _plan_for_dims' child bounds AND the overlap set for every parent strip
-    (incl. runt-merged last strips and tiny dims)."""
-    random.seed(606)
-    rows = []
-    dims = [(random.randint(2, 70000), random.randint(2, 70000))
-            for _ in range(60)]
-    dims += [(2, 2), (3, 5), (513, 513), (512, 1025), (1024, 1023),
-             (2, 70000), (70000, 2), (1, 2049), (2049, 1)]
-    for pw, ph in dims:
-        plan = _plan_for_dims(pw, ph, 512, 1024 * 1024)
-        for i in {0, len(plan) - 1, random.randrange(len(plan))}:
-            top, h = plan[i]
-            rows.append((f"img_{pw}x{ph}_{top}", pw, ph, top, h))
-    df = spark.createDataFrame(
-        rows, "image_id string, level_w int, level_h int, top_row int, "
-              "strip_h int")
-    got = {}
-    for r in with_child_strips(df, 512, 1024 * 1024).collect():
-        got.setdefault(r.image_id, []).append(
-            (r.child_id, r.child_top, r.child_h))
-    ref = {}
-    for (iid, pw, ph, p_top, p_h) in rows:
-        cw, ch = -(-pw // 2), -(-ph // 2)
-        plan = _plan_for_dims(cw, ch, 512, 1024 * 1024)
-        for cid, (c_top, c_h) in enumerate(plan):
-            src0, src1 = 2 * c_top, min(2 * (c_top + c_h), ph)
-            if src0 < p_top + p_h and src1 > p_top:
-                ref.setdefault(iid, []).append((cid, c_top, c_h))
-    assert set(ref) == set(got)
-    for k in ref:
-        assert sorted(ref[k]) == sorted(got[k]), k
-
-
-def test_next_level_strips_routes_in_jvm(spark, fixture_dir):
-    """The route must be pure column arithmetic: exactly ONE Python stage in
-    the level plan (the combine applyInPandas) and no mapInPandas route —
-    the old route pass shipped every strip payload JVM->py->JVM."""
-    from cogger_spark.operators.strips import next_level_strips, strips_level0
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    ensure_test_fixtures()
-    images = (spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-              .limit(2))
-    l0 = strips_level0(images, tile=256, target_px=64 * 1024).localCheckpoint()
-    plan = _plan(next_level_strips(l0, 1, tile=256, target_px=64 * 1024))
-    assert "MapInPandas" not in plan, plan
-    assert plan.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_ring_cells_dist_matches_plain_ring(spark):
@@ -142,25 +86,6 @@ def test_cosine_pre_bit_identical(spark):
         assert r.inline == r.pre  # exact double equality, no tolerance
 
 
-def test_pyramid_tail_fusion_byte_identical(spark, fixture_dir):
-    """tile_images_strips with the fused tail must emit byte-identical
-    tiles to the per-level pipeline (tail disabled via threshold 0)."""
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    from cogger_spark.operators.strips import tile_images_strips
-    ensure_test_fixtures()
-    images = (spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-              .filter(F.col("fmt") != "png").limit(6))
-    kw = dict(tile=256, target_px=64 * 1024)
-    fused = tile_images_strips(images, tail_threshold_px=512 * 512, **kw)
-    plain = tile_images_strips(images, tail_threshold_px=0, **kw)
-
-    def key(rows):
-        return {(r.image_id, r.level, r.plane, r.ty, r.tx):
-                bytes(r.payload) for r in rows}
-    a, b = key(fused.collect()), key(plain.collect())
-    assert a == b
-
-
 def test_route_probe_footer_matches_aggregate(spark, fixture_dir):
     """The footer-statistics probe must agree with the aggregate probe on
     bare parquet relations (exactly here — fixture dims carry no
@@ -179,40 +104,6 @@ def test_route_probe_footer_matches_aggregate(spark, fixture_dir):
     assert _probe_from_footers(derived, 1) is None
     hs, hb, dims = route_probe(derived, 1)
     assert dims[0] is not None
-
-
-def test_child_strip_exprs_other_tile_targets(spark):
-    """Routing equivalence across (tile, target_px) combinations beyond the
-    defaults — the closed form must track the planner everywhere."""
-    from cogger_spark.operators.strips import _plan_for_dims, with_child_strips
-    random.seed(77)
-    for tile, target in ((256, 64 * 1024), (512, 4 * 1024 * 1024),
-                         (256, 256 * 512)):
-        rows = []
-        for _ in range(25):
-            pw = random.randint(2, 40000)
-            ph = random.randint(2, 40000)
-            plan = _plan_for_dims(pw, ph, tile, target)
-            for i in {0, len(plan) - 1}:
-                top, h = plan[i]
-                rows.append((f"i_{pw}x{ph}_{top}", pw, ph, top, h))
-        df = spark.createDataFrame(
-            rows, "image_id string, level_w int, level_h int, top_row int, "
-                  "strip_h int")
-        got = {}
-        for r in with_child_strips(df, tile, target).collect():
-            got.setdefault(r.image_id, []).append(
-                (r.child_id, r.child_top, r.child_h))
-        for (iid, pw, ph, p_top, p_h) in rows:
-            cw, ch = -(-pw // 2), -(-ph // 2)
-            ref = []
-            for cid, (c_top, c_h) in enumerate(
-                    _plan_for_dims(cw, ch, tile, target)):
-                src0 = 2 * c_top
-                src1 = min(2 * (c_top + c_h), ph)
-                if src0 < p_top + p_h and src1 > p_top:
-                    ref.append((cid, c_top, c_h))
-            assert sorted(ref) == sorted(got[iid]), (tile, target, iid)
 
 
 def test_knn_adaptive_single_rung(spark, fixture_dir):

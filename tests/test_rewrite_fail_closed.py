@@ -117,3 +117,28 @@ def test_rewrite_to_dir_failed_write_removes_tmp(spark, tmp_path, cog):
         rewrite_tiffs_to_dir(tiffs, str(out)).collect()
     assert sorted(os.listdir(out)) == ["img_00000042.tif"]
     assert os.listdir(out / "img_00000042.tif") == ["blocker"]
+
+
+def test_read_tiff_dir_rejects_zero_byte_file(spark, tmp_path, cog):
+    """Spark's binaryFile scan yields no row for a 0-byte file, so the
+    reader refuses the directory instead of dropping the file."""
+    import pyspark.sql.functions as F
+    from cogger_spark.sources.tiffdir import read_tiff_dir
+    (tmp_path / "a.tif").write_bytes(cog)
+    (tmp_path / "b.tif").write_bytes(b"")
+    scan = spark.read.format("binaryFile").load(str(tmp_path))
+    assert len(scan.inputFiles()) == 2
+    assert scan.select(F.col("path")).count() == 1  # the silent drop
+    with pytest.raises(ValueError, match=r"empty TIFF file: file:.*/b\.tif$"):
+        read_tiff_dir(spark, str(tmp_path))
+
+
+def test_read_tiff_sets_dir_rejects_zero_byte_overview(spark, tmp_path, cog):
+    """An empty .ovr part would otherwise vanish and the image's COG lose
+    its overview without an error."""
+    from cogger_spark.sources.tiffdir import read_tiff_sets_dir
+    (tmp_path / "img_00000042.tif").write_bytes(cog)
+    (tmp_path / "img_00000042.tif.ovr").write_bytes(b"")
+    with pytest.raises(ValueError,
+                       match=r"empty TIFF file: file:.*/img_00000042\.tif\.ovr$"):
+        read_tiff_sets_dir(spark, str(tmp_path))

@@ -1,7 +1,8 @@
-"""The streaming pyramid kernel behind convert_images / tile_assemble_write:
+"""The streaming COG core behind the file, blob and parts sinks
+(convert_images / tile_assemble_write, cog_pipeline, cog_pipeline_parts):
 tiles byte-identical to the whole-image pyramid, working set bounded by a
-tile-row block per level, fail-closed on bad input, one Spark job per
-conversion of a scan with a split per slot."""
+tile-row block per level, fail-closed on bad input in every sink, one
+Spark job per sink over a scan with a split per slot."""
 
 import os
 import zlib
@@ -13,8 +14,8 @@ from hypothesis import given, settings, strategies as st
 from cogger_spark.functions.imagecodecs import (
     build_pyramid, cut_tiles, encode_image)
 from cogger_spark.operators.tiling import (
-    _cog_blob, _decode_and_cut, _pyramid_dims, _pyramid_tiles,
-    _write_cog_file)
+    _cog_blob, _cog_blob_row, _cog_part_rows, _decode_and_cut,
+    _pyramid_dims, _pyramid_tiles, _write_cog_file)
 
 
 def _reference_tiles(px, nplanes, mask, tile, compression, min_overview_size,
@@ -114,6 +115,29 @@ def test_streaming_write_fails_closed(tmp_path, case):
     assert os.listdir(tmp_path) == []
 
 
+IN_MEMORY_SINKS = {
+    "blob": lambda data, fmt: _cog_blob_row("img_00000042", data, W, H, fmt,
+                                            16, "deflate", True),
+    "parts": lambda data, fmt: list(_cog_part_rows(
+        "img_00000042", data, W, H, fmt, 16, "deflate", True, 7)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(BAD_INPUTS))
+@pytest.mark.parametrize("sink", sorted(IN_MEMORY_SINKS))
+def test_blob_and_parts_sinks_fail_closed(tmp_path, monkeypatch, sink, case):
+    """The blob and parts sinks go through the same core: ValueError naming
+    the image, no file left in the temp dir and no descriptor left open."""
+    import tempfile
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    fds = len(os.listdir("/proc/self/fd"))
+    data, fmt = BAD_INPUTS[case]
+    with pytest.raises(ValueError, match="img_00000042"):
+        IN_MEMORY_SINKS[sink](data, fmt)
+    assert os.listdir(tmp_path) == []
+    assert len(os.listdir("/proc/self/fd")) == fds
+
+
 def test_convert_images_fails_closed_in_spark(spark, tmp_path):
     """Through Spark: the job fails naming the image, and the output
     directory holds no final, tmp or spill file for it."""
@@ -128,14 +152,68 @@ def test_convert_images_fails_closed_in_spark(spark, tmp_path):
     assert not out.exists() or os.listdir(out) == []
 
 
-def test_convert_images_one_job_mixed_table(spark, tmp_path):
-    """convert_images over small and oversized images (relative to the
-    split threshold its callers still pass) is ONE Spark job, and every
-    file equals the grouped whole-blob assembly byte for byte."""
+@pytest.mark.parametrize("pipeline", ["cog_pipeline", "cog_pipeline_parts"])
+def test_pipelines_fail_closed_in_spark(spark, pipeline):
+    """Through Spark, the blob and parts sinks fail the job naming the image
+    (not with a bare zlib.error)."""
+    from cogger_spark.operators import tiling
+    data, fmt = BAD_INPUTS["truncated_deflate"]
+    df = spark.createDataFrame(
+        [("img_00000042", data, W, H, fmt)],
+        "image_id string, bytes binary, w int, h int, fmt string")
+    with pytest.raises(Exception, match="ValueError: image 'img_00000042'"):
+        getattr(tiling, pipeline)(df, tile=16).collect()
+
+
+def _convert(images, tmp_path):
+    from cogger_spark.operators.tiling import convert_images
+    out = tmp_path / "out"
+    convert_images(images, str(out), tile=256, split_threshold_px=600 * 600,
+                   target_px=256 * 512, tiles_per_part=7)
+    # every file in the directory: no tmp or spill may be left beside them
+    return {name: (out / name).read_bytes() for name in os.listdir(out)}
+
+
+def _blob(images, tmp_path):
+    from cogger_spark.operators.tiling import cog_pipeline
+    return {r.image_id: (bytes(r.cog), r.n_tiles, r.n_levels, r.header_bytes,
+                         r.total_bytes)
+            for r in cog_pipeline(images, tile=256).collect()}
+
+
+def _parts(images, tmp_path):
+    from cogger_spark.operators.tiling import cog_pipeline_parts
+    return {(r.image_id, r.part_idx): bytes(r.part)
+            for r in cog_pipeline_parts(images, tile=256,
+                                        tiles_per_part=7).collect()}
+
+
+def _grouped(sink, images):
+    """The grouped assembly of the tile relation, in the sink's row shape."""
+    from cogger_spark.operators.tiling import (
+        assemble_cog_parts, assemble_cogs, tile_images)
+    tiles = tile_images(images, tile=256)
+    if sink == "parts":
+        return {(r.image_id, r.part_idx): bytes(r.part)
+                for r in assemble_cog_parts(tiles, tile=256,
+                                            tiles_per_part=7).collect()}
+    rows = assemble_cogs(tiles, tile=256).collect()
+    if sink == "file":
+        return {f"{r.image_id}.tif": bytes(r.cog) for r in rows}
+    return {r.image_id: (bytes(r.cog), r.n_tiles, r.n_levels, r.header_bytes,
+                         r.total_bytes) for r in rows}
+
+
+SINKS = {"file": _convert, "blob": _blob, "parts": _parts}
+
+
+@pytest.mark.parametrize("sink", sorted(SINKS))
+def test_one_job_mixed_table(spark, tmp_path, sink):
+    """Each sink over small and oversized images (relative to the split
+    threshold convert_images' callers still pass) is ONE Spark job, and its
+    rows equal the grouped assembly of the tile relation byte for byte."""
     import pyarrow.parquet as pq
     from cogger_spark.fixtures import make_images_table
-    from cogger_spark.operators.tiling import (
-        assemble_cogs, convert_images, tile_images)
     table = make_images_table(12, dims=[1024, 700, 513, 1])
     path = tmp_path / "images.parquet"
     # one row group per image, as the benchmark inputs are written
@@ -152,22 +230,15 @@ def test_convert_images_one_job_mixed_table(spark, tmp_path):
         # precondition: enough scan splits that ensure_fanout does not
         # repartition (a shuffle would be a second job under AQE)
         assert images.rdd.getNumPartitions() >= sc.defaultParallelism
-        out = tmp_path / "out"
-        group = "convert-one-job"
-        sc.setJobGroup(group, "convert_images job count")
+        group = f"one-job-{sink}"
+        sc.setJobGroup(group, f"{sink} sink job count")
         try:
-            convert_images(images, str(out), tile=256,
-                           split_threshold_px=600 * 600,
-                           target_px=256 * 512, tiles_per_part=7)
+            got = SINKS[sink](images, tmp_path)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-        whole = {r.image_id: bytes(r.cog)
-                 for r in assemble_cogs(tile_images(images, tile=256),
-                                        tile=256).collect()}
+        want = _grouped(sink, images)
     finally:
         for k, v in old.items():
             spark.conf.set(k, v)
-    files = {f.stem: f.read_bytes() for f in out.glob("*.tif")}
-    assert files == whole
-    assert sorted(os.listdir(out)) == sorted(f"{k}.tif" for k in whole)
+    assert got == want

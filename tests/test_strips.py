@@ -1,19 +1,23 @@
-"""Strip pipeline ≡ direct pipeline: byte-identical tiles (the distributed
-decomposition must not change pixel results — the engine's analogue of the
-reference requirement that strip boundaries are invisible in the output)."""
+"""The COG sinks equal the grouped assembly of the tile relation: the
+streaming blob and parts pipelines give the same rows as
+assemble_cogs / assemble_cog_parts over tile_images, on a mixed-size table
+and on an oversized RGB+mask image; the parts writer is crash-atomic; and
+tile_pixel_stats' level-0 strip route equals its whole-image kernel."""
 
 import pyspark.sql.functions as F
 import pytest
 
-from cogger_spark.operators.strips import tile_images_strips
-from cogger_spark.operators.tiling import assemble_cogs, cog_pipeline, tile_images
+from cogger_spark.operators.tiling import (
+    assemble_cog_parts, assemble_cogs, cog_pipeline, cog_pipeline_parts,
+    tile_images)
 
 
 @pytest.fixture(scope="module")
 def big_images(spark, tmp_path_factory):
     import pyarrow.parquet as pq
     from cogger_spark.fixtures import make_images_table
-    # dims incl. 1024 so a small target_px forces multiple strips + levels
+    # dims incl. 1024 so a small target_px forces multiple strips + levels,
+    # and a 1x1 image
     path = tmp_path_factory.mktemp("strips") / "images.parquet"
     pq.write_table(make_images_table(12, dims=[1024, 700, 513, 1]), path)
     return spark.read.parquet(str(path))
@@ -23,62 +27,20 @@ TILE = 256  # small tile → strips at 256-multiples, several per 1024px image
 TARGET = 256 * 512  # forces ~2-4 full-res strips on the 1024px images
 
 
-def _key(r):
-    return (r.image_id, r.level, r.plane, r.ty, r.tx)
+def _blob_rows(cogs):
+    return {r.image_id: (bytes(r.cog), r.n_tiles, r.n_levels,
+                         r.header_bytes, r.total_bytes)
+            for r in cogs.collect()}
 
 
-def test_strip_tiles_equal_direct_tiles(spark, big_images):
-    direct = tile_images(big_images, tile=TILE).collect()
-    strip = tile_images_strips(big_images, tile=TILE, target_px=TARGET).collect()
-    d = {_key(r): bytes(r.payload) for r in direct}
-    s = {_key(r): bytes(r.payload) for r in strip}
-    assert set(d) == set(s), (
-        f"tile sets differ: only-direct={list(set(d) - set(s))[:5]} "
-        f"only-strip={list(set(s) - set(d))[:5]}")
-    mism = [k for k in d if d[k] != s[k]]
-    assert not mism, f"payload mismatch at {mism[:5]}"
-
-
-def test_strip_pipeline_assembles_same_cogs(spark, big_images):
-    import hashlib
-    direct = {r.image_id: hashlib.md5(bytes(r.cog)).hexdigest()
-              for r in cog_pipeline(big_images, tile=TILE).collect()}
-    strip_tiles = tile_images_strips(big_images, tile=TILE, target_px=TARGET)
-    strip = {r.image_id: hashlib.md5(bytes(r.cog)).hexdigest()
-             for r in assemble_cogs(strip_tiles, tile=TILE).collect()}
-    assert direct == strip
-
-
-@pytest.mark.slow
-def test_oversized_image_through_strip_path(spark):
-    """32-MPix image (8192x4096): multiple full-res strips at a 4-MPix
-    target, 5 pyramid levels, per-strip memory bounded — and byte-identical
-    to the direct path."""
-    import numpy as np
-    import zlib
-    from cogger_spark.fixtures import make_pixels
-    px = make_pixels(0, 8192, 4096, 1, False)
-    df = spark.createDataFrame(
-        [("img_00000000", zlib.compress(px.tobytes(), 1), 8192, 4096, "deflate")],
-        "image_id string, bytes binary, w int, h int, fmt string")
-    strip_tiles = tile_images_strips(df, tile=512, target_px=4 * 1024 * 1024)
-    direct = tile_images(df, tile=512)
-    s = {(r.level, r.plane, r.ty, r.tx): bytes(r.payload)
-         for r in strip_tiles.collect()}
-    d = {(r.level, r.plane, r.ty, r.tx): bytes(r.payload)
-         for r in direct.collect()}
-    assert set(s) == set(d)
-    assert all(s[k] == d[k] for k in d)
-    # 8192/512=16, 4096/512=8 → 128 base tiles + pyramid to 512px
-    assert len([k for k in d if k[0] == 0]) == 128
+def _part_rows(parts):
+    return {(r.image_id, r.part_idx): bytes(r.part) for r in parts.collect()}
 
 
 def test_assemble_parts_equals_whole_blob(spark, big_images):
     """Streaming parts assembly ≡ single-blob assembly: concatenating parts
     in order reproduces assemble_cogs byte-for-byte, with chunk memory
     bounded by tiles_per_part."""
-    from cogger_spark.operators.tiling import (
-        assemble_cog_parts, assemble_cogs, tile_images)
     tiles = tile_images(big_images, tile=TILE)
     whole = {r.image_id: bytes(r.cog)
              for r in assemble_cogs(tile_images(big_images, tile=TILE),
@@ -95,8 +57,7 @@ def test_assemble_parts_equals_whole_blob(spark, big_images):
 
 def test_write_cog_parts_files(spark, big_images, tmp_path):
     import pathlib
-    from cogger_spark.operators.tiling import (
-        assemble_cog_parts, assemble_cogs, tile_images, write_cog_parts)
+    from cogger_spark.operators.tiling import write_cog_parts
     from cogger_spark.tiff import parse_tiff
     parts = assemble_cog_parts(tile_images(big_images, tile=TILE), tile=TILE)
     out = tmp_path / "parts_out"
@@ -112,18 +73,23 @@ def test_write_cog_parts_files(spark, big_images, tmp_path):
         assert parse_tiff(data).ifds
 
 
-def test_cog_pipeline_routing_transparent(spark, big_images):
-    """cog_pipeline with a threshold that splits the table (1024²/700² above,
-    513²/1 below) must produce blobs byte-identical to the all-direct path —
-    the size routing is invisible in the output."""
-    direct = {r.image_id: bytes(r.cog)
-              for r in assemble_cogs(tile_images(big_images, tile=TILE),
-                                     tile=TILE).collect()}
-    auto = {r.image_id: bytes(r.cog)
-            for r in cog_pipeline(big_images, tile=TILE,
-                                  split_threshold_px=600 * 600,
-                                  target_px=TARGET).collect()}
-    assert auto == direct
+def test_fused_assemble_equals_grouped(spark, big_images):
+    """The fused (one-stage, zero-shuffle) blob sink gives the grouped
+    assembly's rows: the same cog bytes, n_tiles, n_levels, header_bytes
+    and total_bytes per image."""
+    grouped = assemble_cogs(tile_images(big_images, tile=TILE), tile=TILE)
+    assert (_blob_rows(cog_pipeline(big_images, tile=TILE))
+            == _blob_rows(grouped))
+
+
+def test_fused_parts_equal_grouped_parts(spark, big_images):
+    """The fused parts sink gives the grouped parts assembly's rows,
+    (image_id, part_idx) by (image_id, part_idx)."""
+    grouped = assemble_cog_parts(tile_images(big_images, tile=TILE),
+                                 tile=TILE, tiles_per_part=7)
+    assert (_part_rows(cog_pipeline_parts(big_images, tile=TILE,
+                                          tiles_per_part=7))
+            == _part_rows(grouped))
 
 
 def test_convert_images_autoroutes_mixed_table(spark, big_images, tmp_path):
@@ -144,22 +110,19 @@ def test_convert_images_autoroutes_mixed_table(spark, big_images, tmp_path):
 
 @pytest.mark.slow
 def test_oversized_e2e_bounded_parts(spark):
-    """The oversized e2e: a 32-MPix image through cog_pipeline_parts above
-    the routing threshold — strips bound the pixel stages, parts bound the
-    assembly, and the ordered concat equals the direct whole blob exactly.
-    No task ever holds the whole image: the largest emitted row is checked
-    against the tiles_per_part bound."""
+    """The oversized e2e: a 32-MPix image through cog_pipeline_parts — the
+    streaming core bounds the pixel stages, parts bound the output, and the
+    ordered concat equals the grouped whole blob exactly. No emitted row
+    holds the whole image: every data part is checked against the
+    tiles_per_part bound."""
     import zlib
     from cogger_spark.fixtures import make_pixels
-    from cogger_spark.operators.tiling import cog_pipeline_parts
     W, H, TPP = 8192, 4096, 16
     px = make_pixels(0, W, H, 1, False)
     df = spark.createDataFrame(
         [("img_00000000", zlib.compress(px.tobytes(), 1), W, H, "deflate")],
         "image_id string, bytes binary, w int, h int, fmt string")
-    parts = cog_pipeline_parts(df, tile=512, split_threshold_px=10**6,
-                               target_px=4 * 1024 * 1024,
-                               tiles_per_part=TPP).collect()
+    parts = cog_pipeline_parts(df, tile=512, tiles_per_part=TPP).collect()
     blob = b"".join(bytes(r.part) for r in sorted(parts, key=lambda r: r.part_idx))
     whole = assemble_cogs(tile_images(df, tile=512), tile=512).collect()[0]
     assert blob == bytes(whole.cog)
@@ -168,45 +131,6 @@ def test_oversized_e2e_bounded_parts(spark):
     for r in parts:
         if r.part_idx > 0:
             assert len(bytes(r.part)) <= data_bound
-
-
-def test_fused_assemble_equals_grouped(spark, big_images):
-    """tile_and_assemble (zero-shuffle fused kernel) must produce blobs
-    byte-identical to assemble_cogs(tile_images(...)) — same decode/cut and
-    codec helpers, one plan shape fewer."""
-    from cogger_spark.operators.tiling import tile_and_assemble
-    grouped = {r.image_id: (bytes(r.cog), r.n_tiles, r.n_levels,
-                            r.header_bytes, r.total_bytes)
-               for r in assemble_cogs(tile_images(big_images, tile=TILE),
-                                      tile=TILE).collect()}
-    fused = {r.image_id: (bytes(r.cog), r.n_tiles, r.n_levels,
-                          r.header_bytes, r.total_bytes)
-             for r in tile_and_assemble(big_images, tile=TILE).collect()}
-    assert fused == grouped
-
-
-def test_fused_parts_equal_grouped_parts(spark, big_images):
-    from cogger_spark.operators.tiling import (
-        assemble_cog_parts, tile_and_assemble_parts)
-    grouped = {(r.image_id, r.part_idx): bytes(r.part)
-               for r in assemble_cog_parts(tile_images(big_images, tile=TILE),
-                                           tile=TILE, tiles_per_part=7).collect()}
-    fused = {(r.image_id, r.part_idx): bytes(r.part)
-             for r in tile_and_assemble_parts(big_images, tile=TILE,
-                                              tiles_per_part=7).collect()}
-    assert fused == grouped
-
-
-def test_cog_pipeline_fused_equals_unfused_mixed(spark, big_images):
-    fused = {r.image_id: bytes(r.cog)
-             for r in cog_pipeline(big_images, tile=TILE,
-                                   split_threshold_px=600 * 600,
-                                   target_px=TARGET).collect()}
-    unfused = {r.image_id: bytes(r.cog)
-               for r in cog_pipeline(big_images, tile=TILE,
-                                     split_threshold_px=600 * 600,
-                                     target_px=TARGET, fused=False).collect()}
-    assert fused == unfused
 
 
 def test_tile_pixel_stats_routed_equals_direct(spark, big_images):
@@ -268,23 +192,19 @@ def test_write_parts_crash_leaves_no_truncated_final_file(tmp_path):
 
 @pytest.mark.slow
 def test_oversized_rgb_mask_through_parts(spark):
-    """Oversized RGB+mask (4 planes incl. mask, 4096x4096) through
-    cog_pipeline_parts: the strip relation carries planes/has_mask through
-    every level and the ordered part concat equals the direct whole-blob
-    assembly byte-for-byte — the mask-plane interleave survives the strip
-    decomposition."""
+    """Oversized RGB+mask (4 planes incl. mask, 4096x4096): the blob and
+    parts sinks give the grouped assembly's rows — the mask-plane
+    interleave and the part boundaries survive the streaming core."""
     import zlib
     from cogger_spark.fixtures import make_pixels
-    from cogger_spark.operators.tiling import cog_pipeline_parts
     W, H = 4096, 4096
     px = make_pixels(3, W, H, 3, True)  # RGB + mask plane
     df = spark.createDataFrame(
         [("img_00000003", zlib.compress(px.tobytes(), 1), W, H, "deflate")],
         "image_id string, bytes binary, w int, h int, fmt string")
-    parts = cog_pipeline_parts(df, tile=512, split_threshold_px=10**6,
-                               target_px=4 * 1024 * 1024,
-                               tiles_per_part=16).collect()
-    blob = b"".join(bytes(r.part)
-                    for r in sorted(parts, key=lambda r: r.part_idx))
-    whole = assemble_cogs(tile_images(df, tile=512), tile=512).collect()[0]
-    assert blob == bytes(whole.cog)
+    tiles = tile_images(df, tile=512)
+    assert (_blob_rows(cog_pipeline(df, tile=512))
+            == _blob_rows(assemble_cogs(tiles, tile=512)))
+    assert (_part_rows(cog_pipeline_parts(df, tile=512, tiles_per_part=7))
+            == _part_rows(assemble_cog_parts(tiles, tile=512,
+                                             tiles_per_part=7)))
