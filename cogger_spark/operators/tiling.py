@@ -15,11 +15,16 @@ Scale notes (100 TB design point):
 * every COG sink — files (convert_images → tile_assemble_write), blobs
   (cog_pipeline) and ordered parts (cog_pipeline_parts) — is one narrow
   mapInPandas stage over one per-image core (_streamed_cog) for EVERY image
-  size: it cuts and encodes tile-row blocks level by level, spills the
-  payloads to an unnamed temp file and plans the COG from byte counts, so
-  a task holds the decoded image plus O(tile rows × width) of working set,
-  plus whatever the sink keeps (nothing for files, one part for parts, the
-  blob for blobs) — no route probe, no shuffle, no checkpoint.
+  size: it decodes level 0 as tile-row blocks (_level0_blocks), cuts,
+  encodes and downsamples the level-0 blocks in parallel on a per-worker
+  thread pool and the upper levels block by block, spills the payloads to
+  an unnamed temp file and plans the COG from byte counts. A task holds
+  one block per pyramid level plus at most one level-0 block per pool
+  thread (and at most an eighth of level 0) in flight — never the decoded
+  image, except for png/jpeg, whose decoders are whole-image — plus
+  whatever the sink keeps (nothing for files, one part for parts, the blob
+  for blobs): no route probe, no shuffle, no checkpoint. Each Arrow batch
+  runs its largest images first.
 * the tile relation (tile_images) is the product only when the tiles
   themselves are queried (spatial joins, offsets); assemble_cogs /
   assemble_cog_parts group it per image, keyed by image_id — uniformly
@@ -45,12 +50,14 @@ the W1 key above.
 
 from __future__ import annotations
 
+import collections
 import contextlib
 import functools
 import itertools
 import os
 import tempfile
 import zlib
+from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
@@ -135,8 +142,9 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     """Decode ANY supported input format into (px, nplanes, has_mask):
     raw/deflate use the buffer-size plane convention (2/5 planes = trailing
     mask); png/jpeg decode through the pure-Python codecs (no mask plane —
-    those containers carry alpha as a band instead). The single ingest
-    decode shared by every pixel kernel (tiling, strips, stats)."""
+    those containers carry alpha as a band instead). The whole-image decode
+    of the stats kernels (tile_pixel_stats, strips_level0); the COG kernels
+    stream level 0 through _level0_blocks instead."""
     if data is None:
         raise ValueError("null image blob")
     if fmt == "png":
@@ -157,6 +165,113 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     return px, nplanes, mask
 
 
+# input bytes handed to zlib per call, and the most output taken per call,
+# by _inflate: the transient memory of an inflate is a few pieces
+_INFLATE_IN = 64 * 1024
+_INFLATE_PIECE = 256 * 1024
+
+
+def _inflate(data: bytes):
+    """Yield the output of the zlib stream `data` in pieces of at most
+    _INFLATE_PIECE bytes, feeding zlib _INFLATE_IN input bytes per call.
+    Bytes after the end of the stream are ignored, as zlib.decompress
+    ignores them; a truncated or corrupt stream raises zlib.error."""
+    d = zlib.decompressobj()
+    src = memoryview(data)
+    chunks = (src[i:i + _INFLATE_IN] for i in range(0, len(src), _INFLATE_IN))
+    while not d.eof:
+        chunk = d.unconsumed_tail or next(chunks, b"")
+        piece = d.decompress(chunk, _INFLATE_PIECE)
+        if not piece and not chunk:
+            raise zlib.error("incomplete or truncated stream")
+        yield piece
+
+
+def _block_rows(tile: int) -> int:
+    """Level-0 block height of _pyramid_tiles: one tile row, two for odd
+    tiles, so every block starts on an even row."""
+    return tile if tile % 2 == 0 else 2 * tile
+
+
+def _level0_blocks(data: bytes, w: int, h: int, fmt: str, bh: int):
+    """Decode one image as level-0 row blocks: returns (nplanes, has_mask,
+    blocks), where blocks yields (y0, rows) top to bottom and rows is a
+    (min(bh, h - y0), w, bands) uint8 array. Planes follow decode_any.
+
+    * raw: zero-copy views of `data`.
+    * deflate: inflated into one block at a time, after a length pass
+      that discards its output, because infer_planes needs the decoded
+      size and a zlib stream tells it only at its end (0.06 s against
+      0.16 s for the whole inflate of a 67 Mpx gray image).
+    * png/jpeg: decoded whole (their decoders are whole-image), then views.
+
+    Bad input raises here (ValueError, or zlib.error for a stream that
+    does not inflate), before any block is yielded."""
+    if fmt != "deflate" or data is None:
+        px, nplanes, mask = decode_any(data, w, h, fmt)
+        return nplanes, mask, ((y0, px[y0:y0 + bh])
+                               for y0 in range(0, h, bh))
+    nplanes, mask = infer_planes(sum(map(len, _inflate(data))), w, h)
+    bands = nplanes + mask
+
+    def blocks():
+        pieces, rest = _inflate(data), b""
+        for y0 in range(0, h, bh):
+            rows = np.empty((min(bh, h - y0), w, bands), np.uint8)
+            flat, i = rows.reshape(-1), 0
+            while i < flat.size:
+                rest = rest or memoryview(next(pieces))
+                k = min(len(rest), flat.size - i)
+                flat[i:i + k] = np.frombuffer(rest[:k], np.uint8)
+                rest, i = rest[k:], i + k
+            yield y0, rows
+
+    return nplanes, mask, blocks()
+
+
+_POOL = (None, None, 1)  # (pid, executor, threads) of this process
+
+# _pyramid_tiles keeps at most one level-0 block per pool thread, and at
+# most 1/_INFLIGHT_SHARE of level 0, in flight: however many cores a box
+# has, the blocks in flight stay a small share of the image (NOTES #36)
+_INFLIGHT_SHARE = 8
+
+
+def _pool():
+    """(executor, threads): this process's level-0 block pool, one thread
+    per core it may run on. Created on first use and again in a forked
+    child (threads do not survive os.fork), so a daemon that forks workers
+    never holds one."""
+    global _POOL
+    if _POOL[0] != os.getpid():
+        n = len(os.sched_getaffinity(0))
+        _POOL = (os.getpid(), ThreadPoolExecutor(n), n)
+    return _POOL[1], _POOL[2]
+
+
+def _imap_bounded(ex, fn, items, inflight: int):
+    """In-order map through a thread pool with a bounded in-flight window
+    (ex=None → plain serial map). Order and results are identical to the
+    serial path; at most `inflight` items are submitted or being drawn
+    from `items` at once. Jobs not yet started are cancelled if the
+    consumer stops early."""
+    if ex is None:
+        yield from map(fn, items)
+        return
+    q = collections.deque()
+    try:
+        for it in items:
+            q.append(ex.submit(fn, it))
+            del it  # the job holds it; drop it before drawing the next
+            if len(q) >= inflight:
+                yield q.popleft().result()
+        while q:
+            yield q.popleft().result()
+    finally:
+        for f in q:
+            f.cancel()
+
+
 def _pyramid_dims(w: int, h: int, tile: int,
                   min_overview_size: int = 2) -> list:
     """[(w, h)] per pyramid level — the level count of build_pyramid
@@ -165,18 +280,25 @@ def _pyramid_dims(w: int, h: int, tile: int,
                                               min_overview_size))
 
 
-def _pyramid_tiles(px: np.ndarray, nplanes: int, mask: bool, tile: int,
+def _pyramid_tiles(px, nplanes: int, mask: bool, tile: int,
                    compression: str, dims: list, planar: bool = False):
-    """Stream every tile of px's pyramid as (level, plane, ty, tx, payload).
+    """Stream every tile of an image's pyramid as (level, plane, ty, tx,
+    payload). `px` is the whole image as an ndarray, or level 0 as the
+    (y0, rows) blocks of _level0_blocks at _block_rows(tile) rows.
 
-    Level 0 is fed in blocks of `tile` rows; each block is cut + encoded,
-    then 2x-downsampled into the next level's block buffer, which is cut
-    and downsampled in turn once it fills — the last partial block of every
-    level is flushed at the end. downsample2x is row-pair local and every
-    block starts on an even row (odd tiles use 2-tile blocks), so the tiles
-    are byte-identical to build_pyramid + cut_tiles while the working set is
-    one block per level (O(tile × width)), not a second copy of the image.
-    Levels interleave in the output; callers key by (level, plane, ty, tx).
+    Each level-0 block is one job on the process's thread pool (_pool):
+    cut + encode its tiles and 2x-downsample it. zlib and numpy release the
+    GIL, so the jobs run in parallel; at most one job per pool thread, and
+    at most 1/_INFLIGHT_SHARE of level 0's blocks, are in flight (drawing
+    the next block counts), and results are consumed in order. An image
+    with fewer blocks than 2·_INFLIGHT_SHARE runs inline. The caller feeds
+    each downsampled block into the next level's block buffer, which is cut
+    and downsampled in turn, serially, once it fills; the last partial
+    block of every level is flushed at the end. downsample2x is row-pair local and every block starts on an even
+    row, so the tiles are byte-identical to build_pyramid + cut_tiles while
+    the working set is one block per level plus the blocks in flight
+    (O(tile × width)), not a second copy of the image. Levels interleave in
+    the output; callers key by (level, plane, ty, tx).
 
     planar=False (default): pixel-interleaved tiles — plane 0 holds all
     bands, plane 1 is the optional mask (PlanarConfiguration=1).
@@ -185,8 +307,11 @@ def _pyramid_tiles(px: np.ndarray, nplanes: int, mask: bool, tile: int,
     cog.go:125-179; the mask's plane index is SamplesPerPixel per
     cog.go:1132-1137)."""
     n_levels = len(dims)
-    bands = px.shape[2]
-    bh = tile if tile % 2 == 0 else 2 * tile
+    bands = nplanes + mask
+    bh = _block_rows(tile)
+    blocks = px
+    if isinstance(px, np.ndarray):
+        blocks = ((y0, px[y0:y0 + bh]) for y0 in range(0, px.shape[0], bh))
     if planar:
         planes = [(p, slice(p, p + 1)) for p in range(nplanes)]
         mask_plane = nplanes
@@ -199,12 +324,20 @@ def _pyramid_tiles(px: np.ndarray, nplanes: int, mask: bool, tile: int,
     fill = [0] * n_levels
     top = [0] * n_levels
 
-    def emit(lvl, block, y0):
+    def cut(lvl, block, y0):
         ty0 = y0 // tile
-        for tx, ty, t in cut_tiles(block, tile):
-            for plane, sl in planes:
-                yield lvl, plane, ty0 + ty, tx, encode_image(t[:, :, sl],
-                                                             compression)
+        return [(lvl, plane, ty0 + ty, tx, encode_image(t[:, :, sl],
+                                                        compression))
+                for tx, ty, t in cut_tiles(block, tile)
+                for plane, sl in planes]
+
+    def level0(item):
+        y0, rows = item
+        return cut(0, rows, y0), (downsample2x(rows) if n_levels > 1
+                                  else None)
+
+    def emit(lvl, block, y0):
+        yield from cut(lvl, block, y0)
         if lvl + 1 < n_levels:
             yield from push(lvl + 1, downsample2x(block))
 
@@ -222,8 +355,14 @@ def _pyramid_tiles(px: np.ndarray, nplanes: int, mask: bool, tile: int,
                 top[lvl] += bh
                 fill[lvl] = 0
 
-    for y0 in range(0, px.shape[0], bh):
-        yield from emit(0, px[y0:y0 + bh], y0)
+    ex, threads = _pool()
+    inflight = min(threads, -(-dims[0][1] // bh) // _INFLIGHT_SHARE)
+    for tiles, down in _imap_bounded(ex if inflight > 1 else None, level0,
+                                     blocks, inflight):
+        yield from tiles
+        if down is not None:
+            yield from push(1, down)
+        del tiles, down  # before the next block is drawn
     for lvl in range(1, n_levels):
         if fill[lvl]:
             yield from emit(lvl, bufs[lvl][:fill[lvl]], top[lvl])
@@ -239,10 +378,10 @@ def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
     pixel semantics shared by the tile-relation kernel (tile_images) and
     the streaming COG core (_streamed_cog), so both are byte-identical by
     construction."""
-    px, nplanes, mask = decode_any(data, w, h, fmt)
+    nplanes, mask, blocks = _level0_blocks(data, w, h, fmt, _block_rows(tile))
     dims = _pyramid_dims(w, h, tile, min_overview_size)
-    tiles = sorted(_pyramid_tiles(px, nplanes, mask, tile, compression, dims,
-                                  planar=planar),
+    tiles = sorted(_pyramid_tiles(blocks, nplanes, mask, tile, compression,
+                                  dims, planar=planar),
                    key=lambda t: (t[0], t[2], t[3], t[1]))
     payloads = {(lvl, plane, ty, tx): p for lvl, plane, ty, tx, p in tiles}
     return nplanes, mask, len(dims), dict(enumerate(dims)), payloads
@@ -392,7 +531,7 @@ def tile_images(images: DataFrame, tile: int = 512, compression: str = "deflate"
                     out["payload"].append(payload)
                     acc += len(payload)
                 # flush between images: worker memory is bounded by
-                # FLUSH_BYTES + one decoded image, independent of the Arrow
+                # FLUSH_BYTES + one image's tiles, independent of the Arrow
                 # input batch size (large batches amortize socket overhead
                 # without accumulating their whole output)
                 if acc >= FLUSH_BYTES:
@@ -596,36 +735,38 @@ def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
                   tile: int, compression: str, ghost: bool,
                   min_overview_size: int = 2):
     """The per-image COG core behind every sink (file, blob, parts), the
-    reference's one write path (cog.go:522-597, 722-750): decode, stream
-    the pyramid's tiles into a spill, plan the COG from byte counts.
+    reference's one write path (cog.go:522-597, 722-750): decode level 0
+    block by block (_level0_blocks), stream the pyramid's tiles
+    (_pyramid_tiles) into a spill, plan the COG from byte counts.
 
     Yields (writer, counts, n_levels) while the spill is open: `counts` is
     the byte count per (level, plane, ty, tx), and `writer` the codec
     _Writer whose pieces() emits the header and then each payload in COG
     order, loaded from the spill with os.pread — no mmap, so the spill's
     pages never count toward worker RSS. Only the byte counts stay in
-    memory: a task holds the decoded image plus one tile-row block per
-    level (_pyramid_tiles) while cutting, and what its sink keeps after.
+    memory: while cutting, a task holds one block per pyramid level plus
+    at most one level-0 block per pool thread (raw input is read in place;
+    png/jpeg are decoded whole), and what its sink keeps after.
 
     The spill is an unnamed tempfile.TemporaryFile, so no sink names or
     removes one: the file goes with its descriptor when the block exits,
     whatever happens. Undecodable input (corrupt or truncated deflate, a
     null or empty blob, a buffer that is not w×h×planes) raises ValueError
     naming the image."""
-    try:
-        px, nplanes, mask = decode_any(data, w, h, fmt)
-    except (ValueError, zlib.error) as exc:
-        raise ValueError(f"image {image_id!r}: {exc}") from exc
     dims = _pyramid_dims(w, h, tile, min_overview_size)
     counts, offsets, pos = {}, {}, 0
     with tempfile.TemporaryFile() as spill:
-        for lvl, plane, ty, tx, payload in _pyramid_tiles(
-                px, nplanes, mask, tile, compression, dims):
-            spill.write(payload)
-            counts[(lvl, plane, ty, tx)] = len(payload)
-            offsets[(lvl, plane, ty, tx)] = pos
-            pos += len(payload)
-        del px
+        try:
+            nplanes, mask, blocks = _level0_blocks(data, w, h, fmt,
+                                                   _block_rows(tile))
+            for lvl, plane, ty, tx, payload in _pyramid_tiles(
+                    blocks, nplanes, mask, tile, compression, dims):
+                spill.write(payload)
+                counts[(lvl, plane, ty, tx)] = len(payload)
+                offsets[(lvl, plane, ty, tx)] = pos
+                pos += len(payload)
+        except (ValueError, zlib.error) as exc:
+            raise ValueError(f"image {image_id!r}: {exc}") from exc
         spill.flush()
         fd = spill.fileno()
         yield (_build_cog(image_id, nplanes, mask, len(dims), dims, counts,
@@ -689,7 +830,9 @@ def _cog_part_rows(image_id: str, data: bytes, w: int, h: int, fmt: str,
 def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
     """One ensure_fanout + mapInPandas stage over a COG sink: `rows(image_id,
     data, w, h, fmt)` yields the sink's output tuples, in `schema` order,
-    for one input image. Output is flushed at the end of every input batch
+    for one input image. Each input batch runs its images in decreasing
+    w·h, ties in input order (a stable sort); an image's own rows keep
+    their order. Output is flushed at the end of every input batch
     and whenever its binary columns reach 4 MB, so a task holds at most one
     blob or part beyond that bound."""
     images = ensure_fanout(images)
@@ -699,6 +842,11 @@ def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out, acc = [], 0
+            # largest image first: its level-0 blocks fan out over the
+            # pool while other tasks still run, and small images fill the
+            # task's tail
+            px = pdf["w"].to_numpy(np.int64) * pdf["h"].to_numpy(np.int64)
+            pdf = pdf.iloc[np.argsort(-px, kind="stable")]
             for r in pdf.itertuples(index=False):
                 for rec in rows(r.image_id, r.bytes, int(r.w), int(r.h),
                                 r.fmt):

@@ -302,8 +302,9 @@ def parse_tiff(data: bytes) -> TiffFile:
     Plays the role of `tiff.Parse` + `UnmarshalIFD` (loader.go:11-53):
     unknown tags are ignored; each tiled IFD gets a `load_tile` that returns
     a zero-copy memoryview slice of the source bytes (loader.go:45-51).
-    Malformed input fails closed: a truncated header, IFD or tag value, or
-    an IFD chain that loops, raises ValueError naming the offset.
+    Malformed input fails closed: a truncated header, IFD or tag value, an
+    IFD chain that loops, or a tiled IFD with a zero tile width or length,
+    raises ValueError naming the offset.
     """
     if data[:2] == b"II":
         bo = "<"
@@ -395,6 +396,10 @@ def parse_tiff(data: bytes) -> TiffFile:
                 setattr(ifd, attr, vals)
             elif kind == "bytes":
                 setattr(ifd, attr, bytes(vals))
+        if ifd.tile_offsets and not (ifd.tile_width and ifd.tile_height):
+            raise ValueError(f"bad TIFF: tiled IFD at offset {off} has a "
+                             f"zero tile size {ifd.tile_width}x"
+                             f"{ifd.tile_height}")
         off = struct.unpack_from(bo + ("Q" if big else "I"), data, after)[0]
 
         # bind the lazy tile reader (loader.go:45-51)

@@ -50,6 +50,22 @@ def test_downsample_odd_edges():
     assert out[0, 1, 0] == 30  # single edge pixel
 
 
+@pytest.mark.parametrize("chunk", [1, 700, 256 * 1024])
+@pytest.mark.parametrize("shape", [(1, 1, 1), (7, 5, 3), (64, 33, 2),
+                                   (129, 96, 5)])
+def test_downsample_chunks_equal_closed_form(monkeypatch, chunk, shape):
+    """downsample2x runs in row-pair chunks: any chunk size gives the
+    closed form — edge-replicate to even dims, round-half-up 2x2 mean."""
+    from cogger_spark.functions import imagecodecs
+    monkeypatch.setattr(imagecodecs, "DOWNSAMPLE_CHUNK_BYTES", chunk)
+    h, w, b = shape
+    px = np.random.default_rng(h * w).integers(0, 256, shape, dtype=np.uint8)
+    even = np.pad(px, ((0, h & 1), (0, w & 1), (0, 0)), mode="edge")
+    quads = even.astype(np.uint32).reshape(
+        (h + 1) // 2, 2, (w + 1) // 2, 2, b).sum(axis=(1, 3))
+    assert np.array_equal(downsample2x(px), ((quads + 2) // 4).astype(np.uint8))
+
+
 def test_pyramid_depth_matches_reference_rule():
     # ceil-halving until fits one tile (stripper.go:265-275)
     levels = build_pyramid(np.zeros((301, 301, 1), np.uint8), tile=300,

@@ -1,6 +1,7 @@
-"""Malformed TIFFs fail the rewrite closed: `parse_tiff` raises ValueError
-naming the offset, the rewrite kernels re-raise it naming the image on both
-input routes, and `rewrite_tiffs_to_dir` leaves no file behind."""
+"""Malformed TIFFs (truncated, looped, or tiled with a zero tile size)
+fail the rewrite closed: `parse_tiff` raises ValueError naming the offset,
+the rewrite kernels re-raise it naming the image on both input routes, and
+`rewrite_tiffs_to_dir` leaves no file behind."""
 
 import os
 import random
@@ -23,12 +24,25 @@ def cog(tmp_path_factory) -> bytes:
     return (d / "img_00000001.tif").read_bytes()
 
 
+def _zero_tag(cog: bytes, ifd0: int, ntags: int, tag: int) -> bytes:
+    """`cog` with the inline value of IFD0's `tag` entry set to 0."""
+    out = bytearray(cog)
+    for e in range(ifd0 + 2, ifd0 + 2 + ntags * 12, 12):
+        if struct.unpack_from("<H", out, e)[0] == tag:
+            out[e + 8:e + 12] = bytes(4)
+            return bytes(out)
+    raise AssertionError(f"no tag {tag}")
+
+
 def _bad_inputs(cog: bytes) -> dict:
     ifd0 = struct.unpack("<I", cog[4:8])[0]
     ntags = struct.unpack("<H", cog[ifd0:ifd0 + 2])[0]
     looped = bytearray(cog)
     struct.pack_into("<I", looped, ifd0 + 2 + ntags * 12, ifd0)
+    zero_tile = f"IFD at offset {ifd0} has a zero tile size"
     return {
+        "zero_tile_width": (_zero_tag(cog, ifd0, ntags, 322), zero_tile),
+        "zero_tile_length": (_zero_tag(cog, ifd0, ntags, 323), zero_tile),
         "truncated_header": (cog[:6], "at offset 4"),
         "truncated_ifd": (cog[:ifd0 + 2 + 5 * 12], f"IFD at offset {ifd0}"),
         "garbage_after_magic": (b"II*\x00" + bytes(range(7, 67)),
@@ -39,7 +53,8 @@ def _bad_inputs(cog: bytes) -> dict:
 
 
 CASES = ["truncated_header", "truncated_ifd", "garbage_after_magic",
-         "ifd_loop", "truncated_tile_data"]
+         "ifd_loop", "truncated_tile_data", "zero_tile_width",
+         "zero_tile_length"]
 
 
 @pytest.mark.parametrize("case", CASES)

@@ -1,8 +1,10 @@
 """The streaming COG core behind the file, blob and parts sinks
 (convert_images / tile_assemble_write, cog_pipeline, cog_pipeline_parts):
-tiles byte-identical to the whole-image pyramid, working set bounded by a
-tile-row block per level, fail-closed on bad input in every sink, one
-Spark job per sink over a scan with a split per slot."""
+level 0 streamed as row blocks from raw or deflate input, tiles
+byte-identical to the whole-image pyramid (also when level-0 blocks run on
+the thread pool, and in a forked child), working set bounded by a tile-row
+block per level plus the blocks in flight, fail-closed on bad input in
+every sink, one Spark job per sink over a scan with a split per slot."""
 
 import os
 import zlib
@@ -13,9 +15,11 @@ from hypothesis import given, settings, strategies as st
 
 from cogger_spark.functions.imagecodecs import (
     build_pyramid, cut_tiles, encode_image)
+from cogger_spark.operators import tiling
 from cogger_spark.operators.tiling import (
-    _cog_blob, _cog_blob_row, _cog_part_rows, _decode_and_cut,
-    _pyramid_dims, _pyramid_tiles, _write_cog_file)
+    _block_rows, _cog_blob, _cog_blob_row, _cog_part_rows, _decode_and_cut,
+    _level0_blocks, _pyramid_dims, _pyramid_tiles, _write_cog_file,
+    infer_planes)
 
 
 def _reference_tiles(px, nplanes, mask, tile, compression, min_overview_size,
@@ -68,6 +72,78 @@ def test_streamed_tiles_equal_whole_pyramid(w, h, bands, mask, planar, tile,
     assert len(dims) == len(build_pyramid(px, tile, min_overview_size))
 
 
+@given(w=sizes, h=st.one_of(sizes, st.integers(150, 400)),
+       k=st.integers(1, 5), planar=st.booleans(),
+       tile=st.sampled_from([4, 5, 10, TILE]),
+       fmt=st.sampled_from(["raw", "deflate"]),
+       seed=st.integers(0, 2 ** 16))
+@settings(max_examples=120, deadline=None)
+def test_level0_blocks_equal_whole_image(w, h, k, planar, tile, fmt, seed):
+    """Level 0 streamed as _level0_blocks, from raw or deflate input, gives
+    the tiles of the whole-image _pyramid_tiles in the same order, and both
+    equal build_pyramid + cut_tiles. k planes cover 1-5 bands, a 2- or
+    5-plane buffer ending in a mask; tiles as small as 4 px make images of
+    16+ blocks, which run on the block pool."""
+    px = np.random.default_rng(seed).integers(0, 256, (h, w, k),
+                                              dtype=np.uint8)
+    data = px.tobytes() if fmt == "raw" else zlib.compress(px.tobytes(), 1)
+    bh = _block_rows(tile)
+    nplanes, mask, blocks = _level0_blocks(data, w, h, fmt, bh)
+    assert (nplanes, mask) == infer_planes(px.size, w, h)
+    blocks = list(blocks)
+    assert [y0 for y0, _ in blocks] == list(range(0, h, bh))
+    assert np.array_equal(np.concatenate([b for _, b in blocks]), px)
+    dims = _pyramid_dims(w, h, tile)
+    got = list(_pyramid_tiles(iter(blocks), nplanes, mask, tile, "deflate",
+                              dims, planar=planar))
+    assert got == list(_pyramid_tiles(px, nplanes, mask, tile, "deflate",
+                                      dims, planar=planar))
+    assert {t[:4]: t[4] for t in got} == _reference_tiles(
+        px, nplanes, mask, tile, "deflate", 2, planar)
+
+
+def _pyramid_digest(px, tile):
+    import hashlib
+    dims = _pyramid_dims(px.shape[1], px.shape[0], tile)
+    d = hashlib.sha256()
+    for t in _pyramid_tiles(px, 3, False, tile, "deflate", dims):
+        d.update(repr(t[:4]).encode() + t[4])
+    return d.hexdigest()
+
+
+def test_block_pool_recreated_in_fork_child():
+    """A forked child inherits the parent's pool object but none of its
+    threads: _pyramid_tiles there makes a new pool and gives the same
+    tiles. The child reports through a pipe and is killed if it hangs."""
+    import select
+    import signal
+    px = np.random.default_rng(5).integers(0, 256, (40 * 8, 37, 3),
+                                           dtype=np.uint8)
+    want = _pyramid_digest(px, 8)  # 40 blocks of 8 rows: the pool path
+    parent_pool = tiling._POOL
+    assert parent_pool[0] == os.getpid()
+    r, w = os.pipe()
+    pid = os.fork()
+    if pid == 0:
+        try:
+            got = _pyramid_digest(px, 8)
+            fresh = (tiling._POOL[0] == os.getpid()
+                     and tiling._POOL[1] is not parent_pool[1])
+            os.write(w, f"{got} {fresh}".encode())
+        finally:
+            os._exit(0)
+    os.close(w)
+    try:
+        ready, _, _ = select.select([r], [], [], 60)
+        if not ready:
+            os.kill(pid, signal.SIGKILL)
+        reply = os.read(r, 200).decode() if ready else "timeout"
+    finally:
+        os.close(r)
+        os.waitpid(pid, 0)
+    assert reply == f"{want} True"
+
+
 def test_streaming_write_memory_bounded(tmp_path):
     """A 4096×4104 gray image: the write kernel's peak allocation beyond the
     decoded image stays under half the image (the whole-image pyramid plus
@@ -94,7 +170,34 @@ def test_streaming_write_memory_bounded(tmp_path):
     assert sorted(os.listdir(tmp_path)) == ["img_00000000.tif"]
 
 
+def test_streaming_write_memory_bounded_deflate(tmp_path):
+    """The same 4096×4104 gray image as deflate input, under the same
+    bound: level 0 is inflated block by block and never held whole (the
+    whole-image decode alone would be twice the bound)."""
+    import tracemalloc
+    from cogger_spark.fixtures import make_pixels
+    w, h = 4096, 4104
+    raw = make_pixels(0, w, h, 1, False).tobytes()
+    data = zlib.compress(raw, 1)
+    tracemalloc.start()
+    try:
+        _write_cog_file("img_00000000", data, w, h, "deflate", str(tmp_path),
+                        512, "deflate", True)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < len(raw) / 2, (peak, len(raw))
+    nplanes, mask, n_levels, dims, payloads = _decode_and_cut(
+        raw, w, h, "raw", 512, "deflate")
+    header, body, _ = _cog_blob("img_00000000", nplanes, mask, n_levels, dims,
+                                payloads, 512, 8, True)
+    assert (tmp_path / "img_00000000.tif").read_bytes() == header + body
+
+
 W, H = 40, 30
+# a stream longer than one _inflate input chunk, corrupted in its middle
+_LONG = zlib.compress(np.random.default_rng(3).integers(
+    0, 256, W * H * 300, dtype=np.uint8).tobytes(), 1)
 BAD_INPUTS = {
     "truncated_deflate": (zlib.compress(bytes(W * H * 3), 1)[:-9], "deflate"),
     "corrupt_deflate": (b"\x78\x01" + bytes(range(200)), "deflate"),
@@ -103,6 +206,9 @@ BAD_INPUTS = {
     "zero_byte_deflate": (b"", "deflate"),
     "length_mismatch": (bytes(W * H * 3 + 1), "raw"),
     "length_mismatch_deflate": (zlib.compress(bytes(W * H - 7)), "deflate"),
+    "corrupt_deflate_midstream": (
+        _LONG[:len(_LONG) // 2] + bytes(64) + _LONG[len(_LONG) // 2 + 64:],
+        "deflate"),
 }
 
 
@@ -136,6 +242,42 @@ def test_blob_and_parts_sinks_fail_closed(tmp_path, monkeypatch, sink, case):
         IN_MEMORY_SINKS[sink](data, fmt)
     assert os.listdir(tmp_path) == []
     assert len(os.listdir("/proc/self/fd")) == fds
+
+
+@pytest.mark.parametrize("sink", ["file", "blob", "parts"])
+def test_block_pass_zlib_error_names_the_image(tmp_path, monkeypatch, sink):
+    """A zlib error while level 0 is inflated block by block (after the
+    length pass accepted the stream) is wrapped like a decode error."""
+    calls = []
+    inflate = tiling._inflate
+
+    def flaky(data):
+        calls.append(1)
+        if len(calls) > 1:
+            raise zlib.error("Error -3 while decompressing data")
+        return inflate(data)
+
+    monkeypatch.setattr(tiling, "_inflate", flaky)
+    data = zlib.compress(bytes(W * H * 3), 1)
+    with pytest.raises(ValueError, match="image 'img_00000042'.*Error -3"):
+        if sink == "file":
+            _write_cog_file("img_00000042", data, W, H, "deflate",
+                            str(tmp_path), 16, "deflate", True)
+        else:
+            IN_MEMORY_SINKS[sink](data, "deflate")
+    assert len(calls) == 2
+    assert os.listdir(tmp_path) == []
+
+
+def test_deflate_trailing_bytes_accepted():
+    """zlib.decompress ignores bytes after the end of the stream, and so
+    does the streamed inflate: such a blob gives the clean stream's COG."""
+    px = np.random.default_rng(9).integers(0, 256, (H, W, 3), dtype=np.uint8)
+    clean = zlib.compress(px.tobytes(), 1)
+    trailing = clean + b"trailing garbage"
+    assert zlib.decompress(trailing) == px.tobytes()
+    for sink in IN_MEMORY_SINKS.values():
+        assert sink(trailing, "deflate") == sink(clean, "deflate")
 
 
 def test_convert_images_fails_closed_in_spark(spark, tmp_path):
@@ -207,14 +349,12 @@ def _grouped(sink, images):
 SINKS = {"file": _convert, "blob": _blob, "parts": _parts}
 
 
-@pytest.mark.parametrize("sink", sorted(SINKS))
-def test_one_job_mixed_table(spark, tmp_path, sink):
-    """Each sink over small and oversized images (relative to the split
-    threshold convert_images' callers still pass) is ONE Spark job, and its
-    rows equal the grouped assembly of the tile relation byte for byte."""
+def _one_job(spark, tmp_path, sink, n, dims):
+    """Run `sink` over a fixture table of n images written one row group per
+    image: assert it is ONE Spark job and equals the grouped assembly."""
     import pyarrow.parquet as pq
     from cogger_spark.fixtures import make_images_table
-    table = make_images_table(12, dims=[1024, 700, 513, 1])
+    table = make_images_table(n, dims=dims)
     path = tmp_path / "images.parquet"
     # one row group per image, as the benchmark inputs are written
     with pq.ParquetWriter(path, table.schema) as wr:
@@ -230,7 +370,7 @@ def test_one_job_mixed_table(spark, tmp_path, sink):
         # precondition: enough scan splits that ensure_fanout does not
         # repartition (a shuffle would be a second job under AQE)
         assert images.rdd.getNumPartitions() >= sc.defaultParallelism
-        group = f"one-job-{sink}"
+        group = f"one-job-{sink}-{tmp_path.name}"
         sc.setJobGroup(group, f"{sink} sink job count")
         try:
             got = SINKS[sink](images, tmp_path)
@@ -242,3 +382,19 @@ def test_one_job_mixed_table(spark, tmp_path, sink):
         for k, v in old.items():
             spark.conf.set(k, v)
     assert got == want
+
+
+@pytest.mark.parametrize("sink", sorted(SINKS))
+def test_one_job_mixed_table(spark, tmp_path, sink):
+    """Each sink over small and oversized images (relative to the split
+    threshold convert_images' callers still pass) is ONE Spark job, and its
+    rows equal the grouped assembly of the tile relation byte for byte."""
+    _one_job(spark, tmp_path, sink, 12, [1024, 700, 513, 1])
+
+
+@pytest.mark.parametrize("sink", sorted(SINKS))
+def test_one_job_block_pool(spark, tmp_path, sink):
+    """Images of 16+ level-0 blocks (4100 rows at tile 256), whose blocks
+    run on each Python worker's thread pool: still ONE Spark job per sink,
+    and the same bytes as the grouped assembly."""
+    _one_job(spark, tmp_path, sink, 8, [300, 4100, 513, 1])
