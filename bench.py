@@ -223,10 +223,9 @@ def main() -> None:
 
     # 2c. gigapixel images (VERDICT r4 #4): 4 × 0.5-gigapixel images
     # through cog_pipeline_parts — one streaming mapInPandas stage; a task
-    # holds one tile-row block per pyramid level plus the level-0 blocks
-    # in flight on its thread pool (never the decoded image), and each
-    # output row is one part of <= 256 tiles. Gated to sf >= 0.1
-    # (the fixture is ~2.1 GB of pixels) — override with
+    # holds one tile-row block per pyramid level (never the decoded
+    # image), and each output row is one part of <= 256 tiles. Gated to
+    # sf >= 0.1 (the fixture is ~2.1 GB of pixels) — override with
     # SPARK_GRAFT_BENCH_GIGA=1/0.
     giga_px_mb = 0.0
     run_giga = os.environ.get("SPARK_GRAFT_BENCH_GIGA",

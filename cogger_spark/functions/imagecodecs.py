@@ -81,8 +81,8 @@ def encode_image(px: np.ndarray, fmt: str) -> bytes:
 
 
 # source bytes per downsample2x chunk: a chunk's uint16 sums stay a few
-# hundred KB (cache-resident), so several threads downsampling level-0
-# blocks at once add little to a task's peak memory
+# hundred KB (cache-resident), so a downsample adds little beyond its
+# output to a task's peak memory
 DOWNSAMPLE_CHUNK_BYTES = 256 * 1024
 
 

@@ -10,8 +10,7 @@ per-strip statistics equal the whole-image ones (asserted in tests).
 
 The COG sinks do not use strips: they stream every image size through one
 per-image kernel (tiling._streamed_cog), whose working set is one tile-row
-block per pyramid level plus the level-0 blocks in flight on its thread
-pool.
+block per pyramid level.
 """
 
 from __future__ import annotations
@@ -24,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..planner import Stripper
-from .tiling import _imap_bounded
 
 STRIP_SCHEMA = (
     "image_id string, level int, strip_id int, top_row int, strip_h int, "
@@ -71,6 +69,24 @@ def _scan_rows_upper(df: DataFrame) -> int | None:
         return total
     except Exception:
         return None
+
+
+def _imap_bounded(ex, fn, items, inflight: int):
+    """In-order map through a thread pool with a bounded in-flight window
+    (ex=None → plain serial map). Order and results are identical to the
+    serial path; the window caps compressed-but-unconsumed outputs."""
+    if ex is None:
+        for it in items:
+            yield fn(it)
+        return
+    from collections import deque
+    q: "deque" = deque()
+    for it in items:
+        q.append(ex.submit(fn, it))
+        if len(q) >= inflight:
+            yield q.popleft().result()
+    while q:
+        yield q.popleft().result()
 
 
 def strips_level0(images: DataFrame, tile: int = 512,

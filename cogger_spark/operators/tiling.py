@@ -16,15 +16,12 @@ Scale notes (100 TB design point):
   (cog_pipeline) and ordered parts (cog_pipeline_parts) — is one narrow
   mapInPandas stage over one per-image core (_streamed_cog) for EVERY image
   size: it decodes level 0 as tile-row blocks (_level0_blocks), cuts,
-  encodes and downsamples the level-0 blocks in parallel on a per-worker
-  thread pool and the upper levels block by block, spills the payloads to
-  an unnamed temp file and plans the COG from byte counts. A task holds
-  one block per pyramid level plus at most one level-0 block per pool
-  thread (and at most an eighth of level 0) in flight — never the decoded
-  image, except for png/jpeg, whose decoders are whole-image — plus
-  whatever the sink keeps (nothing for files, one part for parts, the blob
-  for blobs): no route probe, no shuffle, no checkpoint. Each Arrow batch
-  runs its largest images first.
+  encodes and downsamples every level block by block, spills the payloads
+  to an unnamed temp file and plans the COG from byte counts. A task holds
+  one block per pyramid level — never the decoded image, except for
+  png/jpeg, whose decoders are whole-image — plus whatever the sink keeps
+  (nothing for files, one part for parts, the blob for blobs): no route
+  probe, no shuffle, no checkpoint.
 * the tile relation (tile_images) is the product only when the tiles
   themselves are queried (spatial joins, offsets); assemble_cogs /
   assemble_cog_parts group it per image, keyed by image_id — uniformly
@@ -50,14 +47,12 @@ the W1 key above.
 
 from __future__ import annotations
 
-import collections
 import contextlib
 import functools
 import itertools
 import os
 import tempfile
 import zlib
-from concurrent.futures import ThreadPoolExecutor
 from typing import Iterator
 
 import numpy as np
@@ -229,49 +224,6 @@ def _level0_blocks(data: bytes, w: int, h: int, fmt: str, bh: int):
     return nplanes, mask, blocks()
 
 
-_POOL = (None, None, 1)  # (pid, executor, threads) of this process
-
-# _pyramid_tiles keeps at most one level-0 block per pool thread, and at
-# most 1/_INFLIGHT_SHARE of level 0, in flight: however many cores a box
-# has, the blocks in flight stay a small share of the image (NOTES #36)
-_INFLIGHT_SHARE = 8
-
-
-def _pool():
-    """(executor, threads): this process's level-0 block pool, one thread
-    per core it may run on. Created on first use and again in a forked
-    child (threads do not survive os.fork), so a daemon that forks workers
-    never holds one."""
-    global _POOL
-    if _POOL[0] != os.getpid():
-        n = len(os.sched_getaffinity(0))
-        _POOL = (os.getpid(), ThreadPoolExecutor(n), n)
-    return _POOL[1], _POOL[2]
-
-
-def _imap_bounded(ex, fn, items, inflight: int):
-    """In-order map through a thread pool with a bounded in-flight window
-    (ex=None → plain serial map). Order and results are identical to the
-    serial path; at most `inflight` items are submitted or being drawn
-    from `items` at once. Jobs not yet started are cancelled if the
-    consumer stops early."""
-    if ex is None:
-        yield from map(fn, items)
-        return
-    q = collections.deque()
-    try:
-        for it in items:
-            q.append(ex.submit(fn, it))
-            del it  # the job holds it; drop it before drawing the next
-            if len(q) >= inflight:
-                yield q.popleft().result()
-        while q:
-            yield q.popleft().result()
-    finally:
-        for f in q:
-            f.cancel()
-
-
 def _pyramid_dims(w: int, h: int, tile: int,
                   min_overview_size: int = 2) -> list:
     """[(w, h)] per pyramid level — the level count of build_pyramid
@@ -280,25 +232,20 @@ def _pyramid_dims(w: int, h: int, tile: int,
                                               min_overview_size))
 
 
-def _pyramid_tiles(px, nplanes: int, mask: bool, tile: int,
+def _pyramid_tiles(blocks, nplanes: int, mask: bool, tile: int,
                    compression: str, dims: list, planar: bool = False):
     """Stream every tile of an image's pyramid as (level, plane, ty, tx,
-    payload). `px` is the whole image as an ndarray, or level 0 as the
-    (y0, rows) blocks of _level0_blocks at _block_rows(tile) rows.
+    payload). `blocks` is level 0 as the (y0, rows) blocks of
+    _level0_blocks at _block_rows(tile) rows.
 
-    Each level-0 block is one job on the process's thread pool (_pool):
-    cut + encode its tiles and 2x-downsample it. zlib and numpy release the
-    GIL, so the jobs run in parallel; at most one job per pool thread, and
-    at most 1/_INFLIGHT_SHARE of level 0's blocks, are in flight (drawing
-    the next block counts), and results are consumed in order. An image
-    with fewer blocks than 2·_INFLIGHT_SHARE runs inline. The caller feeds
-    each downsampled block into the next level's block buffer, which is cut
-    and downsampled in turn, serially, once it fills; the last partial
-    block of every level is flushed at the end. downsample2x is row-pair local and every block starts on an even
-    row, so the tiles are byte-identical to build_pyramid + cut_tiles while
-    the working set is one block per level plus the blocks in flight
-    (O(tile × width)), not a second copy of the image. Levels interleave in
-    the output; callers key by (level, plane, ty, tx).
+    Each level-0 block is cut + encoded, then 2x-downsampled into the next
+    level's block buffer, which is cut and downsampled in turn once it
+    fills — the last partial block of every level is flushed at the end.
+    downsample2x is row-pair local and every block starts on an even row
+    (odd tiles use 2-tile blocks), so the tiles are byte-identical to
+    build_pyramid + cut_tiles while the working set is one block per level
+    (O(tile × width)), not a copy of the image. Levels interleave in the
+    output; callers key by (level, plane, ty, tx).
 
     planar=False (default): pixel-interleaved tiles — plane 0 holds all
     bands, plane 1 is the optional mask (PlanarConfiguration=1).
@@ -309,9 +256,6 @@ def _pyramid_tiles(px, nplanes: int, mask: bool, tile: int,
     n_levels = len(dims)
     bands = nplanes + mask
     bh = _block_rows(tile)
-    blocks = px
-    if isinstance(px, np.ndarray):
-        blocks = ((y0, px[y0:y0 + bh]) for y0 in range(0, px.shape[0], bh))
     if planar:
         planes = [(p, slice(p, p + 1)) for p in range(nplanes)]
         mask_plane = nplanes
@@ -324,20 +268,12 @@ def _pyramid_tiles(px, nplanes: int, mask: bool, tile: int,
     fill = [0] * n_levels
     top = [0] * n_levels
 
-    def cut(lvl, block, y0):
-        ty0 = y0 // tile
-        return [(lvl, plane, ty0 + ty, tx, encode_image(t[:, :, sl],
-                                                        compression))
-                for tx, ty, t in cut_tiles(block, tile)
-                for plane, sl in planes]
-
-    def level0(item):
-        y0, rows = item
-        return cut(0, rows, y0), (downsample2x(rows) if n_levels > 1
-                                  else None)
-
     def emit(lvl, block, y0):
-        yield from cut(lvl, block, y0)
+        ty0 = y0 // tile
+        for tx, ty, t in cut_tiles(block, tile):
+            for plane, sl in planes:
+                yield lvl, plane, ty0 + ty, tx, encode_image(t[:, :, sl],
+                                                             compression)
         if lvl + 1 < n_levels:
             yield from push(lvl + 1, downsample2x(block))
 
@@ -355,14 +291,9 @@ def _pyramid_tiles(px, nplanes: int, mask: bool, tile: int,
                 top[lvl] += bh
                 fill[lvl] = 0
 
-    ex, threads = _pool()
-    inflight = min(threads, -(-dims[0][1] // bh) // _INFLIGHT_SHARE)
-    for tiles, down in _imap_bounded(ex if inflight > 1 else None, level0,
-                                     blocks, inflight):
-        yield from tiles
-        if down is not None:
-            yield from push(1, down)
-        del tiles, down  # before the next block is drawn
+    for y0, rows in blocks:
+        yield from emit(0, rows, y0)
+        del rows  # before the next block is drawn
     for lvl in range(1, n_levels):
         if fill[lvl]:
             yield from emit(lvl, bufs[lvl][:fill[lvl]], top[lvl])
@@ -744,9 +675,9 @@ def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
     _Writer whose pieces() emits the header and then each payload in COG
     order, loaded from the spill with os.pread — no mmap, so the spill's
     pages never count toward worker RSS. Only the byte counts stay in
-    memory: while cutting, a task holds one block per pyramid level plus
-    at most one level-0 block per pool thread (raw input is read in place;
-    png/jpeg are decoded whole), and what its sink keeps after.
+    memory: while cutting, a task holds one block per pyramid level (raw
+    input is read in place; png/jpeg are decoded whole), and what its sink
+    keeps after.
 
     The spill is an unnamed tempfile.TemporaryFile, so no sink names or
     removes one: the file goes with its descriptor when the block exits,
@@ -830,9 +761,7 @@ def _cog_part_rows(image_id: str, data: bytes, w: int, h: int, fmt: str,
 def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
     """One ensure_fanout + mapInPandas stage over a COG sink: `rows(image_id,
     data, w, h, fmt)` yields the sink's output tuples, in `schema` order,
-    for one input image. Each input batch runs its images in decreasing
-    w·h, ties in input order (a stable sort); an image's own rows keep
-    their order. Output is flushed at the end of every input batch
+    for one input image. Output is flushed at the end of every input batch
     and whenever its binary columns reach 4 MB, so a task holds at most one
     blob or part beyond that bound."""
     images = ensure_fanout(images)
@@ -842,11 +771,6 @@ def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out, acc = [], 0
-            # largest image first: its level-0 blocks fan out over the
-            # pool while other tasks still run, and small images fill the
-            # task's tail
-            px = pdf["w"].to_numpy(np.int64) * pdf["h"].to_numpy(np.int64)
-            pdf = pdf.iloc[np.argsort(-px, kind="stable")]
             for r in pdf.itertuples(index=False):
                 for rec in rows(r.image_id, r.bytes, int(r.w), int(r.h),
                                 r.fmt):

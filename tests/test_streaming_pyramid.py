@@ -1,10 +1,9 @@
 """The streaming COG core behind the file, blob and parts sinks
 (convert_images / tile_assemble_write, cog_pipeline, cog_pipeline_parts):
 level 0 streamed as row blocks from raw or deflate input, tiles
-byte-identical to the whole-image pyramid (also when level-0 blocks run on
-the thread pool, and in a forked child), working set bounded by a tile-row
-block per level plus the blocks in flight, fail-closed on bad input in
-every sink, one Spark job per sink over a scan with a split per slot."""
+byte-identical to the whole-image pyramid, working set bounded by a
+tile-row block per level, fail-closed on bad input in every sink, one
+Spark job per sink over a scan with a split per slot."""
 
 import os
 import zlib
@@ -20,6 +19,12 @@ from cogger_spark.operators.tiling import (
     _block_rows, _cog_blob, _cog_blob_row, _cog_part_rows, _decode_and_cut,
     _level0_blocks, _pyramid_dims, _pyramid_tiles, _write_cog_file,
     infer_planes)
+
+
+def _views(px, tile):
+    """The whole image px as _pyramid_tiles' level-0 (y0, rows) blocks."""
+    bh = _block_rows(tile)
+    return ((y0, px[y0:y0 + bh]) for y0 in range(0, px.shape[0], bh))
 
 
 def _reference_tiles(px, nplanes, mask, tile, compression, min_overview_size,
@@ -63,7 +68,8 @@ def test_streamed_tiles_equal_whole_pyramid(w, h, bands, mask, planar, tile,
     dims = _pyramid_dims(w, h, tile, min_overview_size)
     got = {}
     for lvl, plane, ty, tx, payload in _pyramid_tiles(
-            px, bands, mask, tile, "deflate", dims, planar=planar):
+            _views(px, tile), bands, mask, tile, "deflate", dims,
+            planar=planar):
         assert (lvl, plane, ty, tx) not in got
         got[(lvl, plane, ty, tx)] = payload
     want = _reference_tiles(px, bands, mask, tile, "deflate",
@@ -80,10 +86,10 @@ def test_streamed_tiles_equal_whole_pyramid(w, h, bands, mask, planar, tile,
 @settings(max_examples=120, deadline=None)
 def test_level0_blocks_equal_whole_image(w, h, k, planar, tile, fmt, seed):
     """Level 0 streamed as _level0_blocks, from raw or deflate input, gives
-    the tiles of the whole-image _pyramid_tiles in the same order, and both
-    equal build_pyramid + cut_tiles. k planes cover 1-5 bands, a 2- or
-    5-plane buffer ending in a mask; tiles as small as 4 px make images of
-    16+ blocks, which run on the block pool."""
+    the tiles of _pyramid_tiles over views of the whole image in the same
+    order, and both equal build_pyramid + cut_tiles. k planes cover 1-5
+    bands, a 2- or 5-plane buffer ending in a mask; heights up to 400 rows
+    at tiles down to 4 px make images of up to 100 blocks."""
     px = np.random.default_rng(seed).integers(0, 256, (h, w, k),
                                               dtype=np.uint8)
     data = px.tobytes() if fmt == "raw" else zlib.compress(px.tobytes(), 1)
@@ -96,52 +102,10 @@ def test_level0_blocks_equal_whole_image(w, h, k, planar, tile, fmt, seed):
     dims = _pyramid_dims(w, h, tile)
     got = list(_pyramid_tiles(iter(blocks), nplanes, mask, tile, "deflate",
                               dims, planar=planar))
-    assert got == list(_pyramid_tiles(px, nplanes, mask, tile, "deflate",
-                                      dims, planar=planar))
+    assert got == list(_pyramid_tiles(_views(px, tile), nplanes, mask, tile,
+                                      "deflate", dims, planar=planar))
     assert {t[:4]: t[4] for t in got} == _reference_tiles(
         px, nplanes, mask, tile, "deflate", 2, planar)
-
-
-def _pyramid_digest(px, tile):
-    import hashlib
-    dims = _pyramid_dims(px.shape[1], px.shape[0], tile)
-    d = hashlib.sha256()
-    for t in _pyramid_tiles(px, 3, False, tile, "deflate", dims):
-        d.update(repr(t[:4]).encode() + t[4])
-    return d.hexdigest()
-
-
-def test_block_pool_recreated_in_fork_child():
-    """A forked child inherits the parent's pool object but none of its
-    threads: _pyramid_tiles there makes a new pool and gives the same
-    tiles. The child reports through a pipe and is killed if it hangs."""
-    import select
-    import signal
-    px = np.random.default_rng(5).integers(0, 256, (40 * 8, 37, 3),
-                                           dtype=np.uint8)
-    want = _pyramid_digest(px, 8)  # 40 blocks of 8 rows: the pool path
-    parent_pool = tiling._POOL
-    assert parent_pool[0] == os.getpid()
-    r, w = os.pipe()
-    pid = os.fork()
-    if pid == 0:
-        try:
-            got = _pyramid_digest(px, 8)
-            fresh = (tiling._POOL[0] == os.getpid()
-                     and tiling._POOL[1] is not parent_pool[1])
-            os.write(w, f"{got} {fresh}".encode())
-        finally:
-            os._exit(0)
-    os.close(w)
-    try:
-        ready, _, _ = select.select([r], [], [], 60)
-        if not ready:
-            os.kill(pid, signal.SIGKILL)
-        reply = os.read(r, 200).decode() if ready else "timeout"
-    finally:
-        os.close(r)
-        os.waitpid(pid, 0)
-    assert reply == f"{want} True"
 
 
 def test_streaming_write_memory_bounded(tmp_path):
@@ -349,12 +313,14 @@ def _grouped(sink, images):
 SINKS = {"file": _convert, "blob": _blob, "parts": _parts}
 
 
-def _one_job(spark, tmp_path, sink, n, dims):
-    """Run `sink` over a fixture table of n images written one row group per
-    image: assert it is ONE Spark job and equals the grouped assembly."""
+@pytest.mark.parametrize("sink", sorted(SINKS))
+def test_one_job_mixed_table(spark, tmp_path, sink):
+    """Each sink over small and oversized images (relative to the split
+    threshold convert_images' callers still pass) is ONE Spark job, and its
+    rows equal the grouped assembly of the tile relation byte for byte."""
     import pyarrow.parquet as pq
     from cogger_spark.fixtures import make_images_table
-    table = make_images_table(n, dims=dims)
+    table = make_images_table(12, dims=[1024, 700, 513, 1])
     path = tmp_path / "images.parquet"
     # one row group per image, as the benchmark inputs are written
     with pq.ParquetWriter(path, table.schema) as wr:
@@ -370,7 +336,7 @@ def _one_job(spark, tmp_path, sink, n, dims):
         # precondition: enough scan splits that ensure_fanout does not
         # repartition (a shuffle would be a second job under AQE)
         assert images.rdd.getNumPartitions() >= sc.defaultParallelism
-        group = f"one-job-{sink}-{tmp_path.name}"
+        group = f"one-job-{sink}"
         sc.setJobGroup(group, f"{sink} sink job count")
         try:
             got = SINKS[sink](images, tmp_path)
@@ -382,19 +348,3 @@ def _one_job(spark, tmp_path, sink, n, dims):
         for k, v in old.items():
             spark.conf.set(k, v)
     assert got == want
-
-
-@pytest.mark.parametrize("sink", sorted(SINKS))
-def test_one_job_mixed_table(spark, tmp_path, sink):
-    """Each sink over small and oversized images (relative to the split
-    threshold convert_images' callers still pass) is ONE Spark job, and its
-    rows equal the grouped assembly of the tile relation byte for byte."""
-    _one_job(spark, tmp_path, sink, 12, [1024, 700, 513, 1])
-
-
-@pytest.mark.parametrize("sink", sorted(SINKS))
-def test_one_job_block_pool(spark, tmp_path, sink):
-    """Images of 16+ level-0 blocks (4100 rows at tile 256), whose blocks
-    run on each Python worker's thread pool: still ONE Spark job per sink,
-    and the same bytes as the grouped assembly."""
-    _one_job(spark, tmp_path, sink, 8, [300, 4100, 513, 1])
