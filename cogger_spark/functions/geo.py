@@ -19,6 +19,8 @@ antimeridian/poles so no wrap handling is needed.)
 
 from __future__ import annotations
 
+import re
+
 PIXEL_DEG = 0.001
 LON_MULT = 7919
 LAT_MULT = 104729
@@ -33,7 +35,12 @@ DEFAULT_RES = 10
 
 
 def img_index(image_id: str) -> int:
-    return int(image_id[4:])
+    """The numeric part of an 'img_<digits>' id; any other id raises a
+    ValueError naming it, since it has no place in the geo frame."""
+    m = re.fullmatch(r"img_(\d+)", image_id or "", re.ASCII)
+    if m is None:
+        raise ValueError(f"image id {image_id!r} is not img_<digits>")
+    return int(m.group(1))
 
 
 def anchor(img_idx: int):

@@ -39,6 +39,7 @@ from ..functions.geo import (
     LON_MULT,
     PIXEL_DEG,
 )
+from .tiling import _level0_blocks, ensure_fanout
 
 # ---------------------------------------------------------------------------
 # tile extents — JVM-only column math
@@ -498,14 +499,19 @@ _PIXEL_STATS_SCHEMA = ("image_id string, ty int, tx int, px_count long, "
                        "px_sum long, px_min int, px_max int")
 
 
-def _block_stats_rows(out: dict, image_id: str, px, tile: int, ty0: int) -> None:
-    """Append per-tile stats of one pixel slab (rows tile-aligned at ty0)."""
-    h, w = px.shape[0], px.shape[1]
-    for ty in range(-(-h // tile)):
+def _image_stats_rows(out: dict, image_id: str, data: bytes, w: int, h: int,
+                      fmt: str, tile: int) -> None:
+    """Append the per-tile stats of one image. Level 0 streams as one-tile-row
+    blocks (_level0_blocks), so every tile lies inside one block and the
+    kernel holds one block, never the decoded image (png/jpeg excepted:
+    their decoders are whole-image)."""
+    nplanes, _mask, blocks = _level0_blocks(data, w, h, fmt, tile)
+    for y0, rows in blocks:
+        px = rows[:, :, :nplanes]
         for tx in range(-(-w // tile)):
-            block = px[ty * tile:(ty + 1) * tile, tx * tile:(tx + 1) * tile]
+            block = px[:, tx * tile:(tx + 1) * tile]
             out["image_id"].append(image_id)
-            out["ty"].append(ty0 + ty)
+            out["ty"].append(y0 // tile)
             out["tx"].append(tx)
             out["px_count"].append(int(block.size))
             out["px_sum"].append(int(block.sum(dtype=np.int64)))
@@ -513,72 +519,27 @@ def _block_stats_rows(out: dict, image_id: str, px, tile: int, ty0: int) -> None
             out["px_max"].append(int(block.max()))
 
 
-def tile_pixel_stats(images: DataFrame, tile: int = 512,
-                     split_threshold_px: int | None = None,
-                     target_px: int = 1024 * 1024,
-                     probe: tuple | None = None) -> DataFrame:
+def tile_pixel_stats(images: DataFrame, tile: int = 512) -> DataFrame:
     """Level-0 tiles with real pixel statistics over the VALID region (edge
     padding excluded): sum/min/max/count per tile, all bands pooled (mask
     plane excluded). Emits no payloads (stats only), so the shuffle to any
     downstream join moves a few longs per tile.
 
-    Size-routed: images at or below `split_threshold_px` take one narrow
-    whole-image mapInPandas stage; oversized images route through the
-    level-0 strip relation (strips_level0 — bounded task memory,
-    tile-aligned strip tops) and compute the same stats per strip, so a
-    gigapixel raster never materializes whole in a task. Both paths produce
-    identical rows (strip tops are tile-aligned, so every tile lives in
-    exactly one strip; asserted in tests). `probe` accepts a precomputed
-    route_probe() result for derived input frames."""
-    from .tiling import (SPLIT_THRESHOLD_PX, _px_expr, decode_any,
-                         ensure_fanout, route_probe)
-
-    if split_threshold_px is None:
-        split_threshold_px = SPLIT_THRESHOLD_PX
+    One ensure_fanout + mapInPandas stage for every image size: each image
+    streams through _image_stats_rows one tile row at a time, so a task's
+    pixel memory is one block (tile × width × planes), not the image."""
 
     def kernel(batches):
         for pdf in batches:
             out = {k: [] for k in ("image_id", "ty", "tx", "px_count",
                                    "px_sum", "px_min", "px_max")}
             for r in pdf.itertuples(index=False):
-                w, h = int(r.w), int(r.h)
-                full, nplanes, mask = decode_any(r.bytes, w, h, r.fmt)
-                _block_stats_rows(out, r.image_id, full[:, :, :nplanes],
-                                  tile, 0)
+                _image_stats_rows(out, r.image_id, r.bytes, int(r.w),
+                                  int(r.h), r.fmt, tile)
             yield pd.DataFrame(out)
 
-    def direct(df: DataFrame) -> DataFrame:
-        df = ensure_fanout(df)
-        return df.select("image_id", "bytes", "w", "h", "fmt") \
-                 .mapInPandas(kernel, schema=_PIXEL_STATS_SCHEMA)
-
-    px = _px_expr()
-    has_small, has_big, _dims = probe or route_probe(images,
-                                                     split_threshold_px)
-    if not has_big:
-        return direct(images)
-
-    def strip_kernel(batches):
-        import zlib
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "ty", "tx", "px_count",
-                                   "px_sum", "px_min", "px_max")}
-            for r in pdf.itertuples(index=False):
-                nplanes = int(r.planes)
-                total = nplanes + (1 if bool(r.has_mask) else 0)
-                slab = np.frombuffer(zlib.decompress(r.payload), dtype=np.uint8) \
-                    .reshape(int(r.strip_h), int(r.level_w), total)
-                _block_stats_rows(out, r.image_id, slab[:, :, :nplanes],
-                                  tile, int(r.top_row) // tile)
-            yield pd.DataFrame(out)
-
-    from .strips import strips_level0
-    big = strips_level0(images.filter(px > split_threshold_px),
-                        tile=tile, target_px=target_px) \
-        .mapInPandas(strip_kernel, schema=_PIXEL_STATS_SCHEMA)
-    if not has_small:
-        return big
-    return direct(images.filter(px <= split_threshold_px)).unionByName(big)
+    return ensure_fanout(images).select("image_id", "bytes", "w", "h", "fmt") \
+        .mapInPandas(kernel, schema=_PIXEL_STATS_SCHEMA)
 
 
 def zonal_pixel_stats(zones: DataFrame, images: DataFrame,

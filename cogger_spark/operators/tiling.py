@@ -138,8 +138,9 @@ def decode_any(data: bytes, w: int, h: int, fmt: str):
     raw/deflate use the buffer-size plane convention (2/5 planes = trailing
     mask); png/jpeg decode through the pure-Python codecs (no mask plane —
     those containers carry alpha as a band instead). The whole-image decode
-    of the stats kernels (tile_pixel_stats, strips_level0); the COG kernels
-    stream level 0 through _level0_blocks instead."""
+    behind _level0_blocks' png/jpeg/raw blocks and perfbench's serial
+    kernel probe; every pixel kernel streams level 0 through
+    _level0_blocks."""
     if data is None:
         raise ValueError("null image blob")
     if fmt == "png":
@@ -583,82 +584,26 @@ def assemble_cogs(tiles: DataFrame, tile: int = 512,
     return tiles.groupBy("image_id").applyInPandas(kernel, schema=schema)
 
 
-# tile_pixel_stats sends images above this pixel count through the level-0
-# strip relation (operators/strips.py): its direct kernel holds one whole
-# decoded image (w*h*planes bytes), so at 64 Mpx an RGB image is ~192 MB of
-# task memory — past that, the stats run over level-0 strips, one strip per
-# row (stripper.go:261-350 / pcogger's reason to exist). The COG sinks
-# stream every size through _streamed_cog and take no route.
+# The size split of perfbench's traced tile_convert job (route_probe) and
+# the default of convert_images' ignored `split_threshold_px`. No operator
+# routes on it; it stays only for perfbench, and goes with the next change
+# to perfbench (ROADMAP direction 5).
 SPLIT_THRESHOLD_PX = 64 * 1024 * 1024
-
-
-def _px_expr():
-    return F.col("w").cast("long") * F.col("h")
-
-
-def _probe_from_footers(images: DataFrame, split_threshold_px: int):
-    """Answer route_probe from parquet FOOTER statistics without running a
-    Spark job, when (and only when) `images` is a bare parquet relation
-    (no filters/projections that could invalidate the file-level stats).
-
-    Bounds are conservative: min(w)*min(h) <= true min(px) and
-    max(w)*max(h) >= true max(px), so a spurious has_small/has_big can only
-    add an EMPTY branch to the routed plan (rows unchanged — every branch
-    filters on the exact per-row predicate); max_dims is exact per column,
-    which is all the pyramid-depth bound needs (it must only be >= the true
-    dims). Returns None to fall back to the aggregate probe whenever
-    anything is off (non-scan input, many files, missing stats)."""
-    try:
-        if images._jdf.queryExecution().optimizedPlan().getClass() \
-                .getSimpleName() != "LogicalRelation":
-            return None
-        files = images.inputFiles()
-        if not files or len(files) > 64:
-            return None
-        import pyarrow.parquet as pq
-        lo = {"w": None, "h": None}
-        hi = {"w": None, "h": None}
-        for uri in files:
-            path = uri[7:] if uri.startswith("file://") else uri
-            md = pq.ParquetFile(path).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            if "w" not in idx or "h" not in idx:
-                return None
-            for rg in range(md.num_row_groups):
-                for name in ("w", "h"):
-                    st = md.row_group(rg).column(idx[name]).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    lo[name] = st.min if lo[name] is None else min(lo[name], st.min)
-                    hi[name] = st.max if hi[name] is None else max(hi[name], st.max)
-        if lo["w"] is None:
-            return False, False, (None, None)   # empty table
-        has_small = lo["w"] * lo["h"] <= split_threshold_px
-        has_big = hi["w"] * hi["h"] > split_threshold_px
-        return has_small, has_big, (hi["w"], hi["h"])
-    except Exception:
-        return None
 
 
 def route_probe(images: DataFrame,
                 split_threshold_px: int = SPLIT_THRESHOLD_PX) -> tuple:
-    """One column-pruned metadata probe deciding tile_pixel_stats' plan
-    shape: (has_small, has_big, max_dims). On a bare parquet relation this
-    reads the file FOOTERS driver-side — no Spark job at all (r6: the
-    aggregate probe cost a 0.3-0.7 s job per invocation). Derived frames
-    fall back to one aggregate job — which recomputes upstream lineage, so
-    such callers should localCheckpoint first, or run route_probe() once
-    themselves and pass its result via `probe=`."""
-    footer = _probe_from_footers(images, split_threshold_px)
-    if footer is not None:
-        return footer
-    stats = images.agg(F.min(_px_expr()).alias("mn"),
-                       F.max(_px_expr()).alias("mx"),
+    """(has_small, has_big, max_dims) of `images` against
+    `split_threshold_px`, from one aggregate Spark job. No operator uses
+    it: it stays only for perfbench's traced tile_convert job, its one
+    caller, and goes with the next change to perfbench (ROADMAP
+    direction 5)."""
+    px = F.col("w").cast("long") * F.col("h")
+    stats = images.agg(F.min(px).alias("mn"), F.max(px).alias("mx"),
                        F.max("w").alias("w"), F.max("h").alias("h")).first()
     has_small = stats["mn"] is not None and stats["mn"] <= split_threshold_px
     has_big = stats["mx"] is not None and stats["mx"] > split_threshold_px
-    max_dims = (stats["w"], stats["h"])
-    return has_small, has_big, max_dims
+    return has_small, has_big, (stats["w"], stats["h"])
 
 
 @contextlib.contextmanager

@@ -1,10 +1,13 @@
 """Strip / overview-pyramid / DAG planner.
 
 Reproduces the reference Stripper's planning semantics (stripper.go:130-350,
-223-259) as pure functions: deterministic metadata-only computation, cheap
-enough to run driver-side or inside an Arrow kernel per image.  In the Spark
-engine this replaces the goroutine-pool scheduler: each strip/level becomes a
-row in a plan DataFrame; levels are iterative DataFrame passes.
+223-259) as pure functions: deterministic metadata-only computation.
+overview_count/overview_dims size every pyramid the engine writes. Stripper,
+pyramid_dag and tile_strip_idx stay as the tested reproduction of
+stripper.go's planner (test_planner, test_property pin them), but no runtime
+path uses them: the reference strips an image only to bound a worker's
+memory, and every pixel kernel here streams level 0 as tile-row blocks
+(operators/tiling._level0_blocks) instead.
 """
 
 from __future__ import annotations

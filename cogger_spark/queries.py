@@ -159,12 +159,13 @@ def q_tile_offsets_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_tile_pixel_sums_strips(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME per-tile pixel statistics, forced through the oversized-image
-    STRIP route (split_threshold_px=1): the level-0 strip relation must
-    reproduce the whole-image kernel's numbers exactly, checked against the
-    same closed-form oracle as tile_pixel_sums."""
-    stats = spatial.tile_pixel_stats(_images(spark), tile=512,
-                                     split_threshold_px=1)
+    """The SAME per-tile pixel statistics, registered under the name of the
+    retired strip route. tile_pixel_stats now streams every image through
+    one-tile-row level-0 blocks, so this runs the block kernel that
+    tile_pixel_sums runs and pins the block-boundary stats against the same
+    closed-form oracle; the name and registry entry stay for the query
+    contract."""
+    stats = spatial.tile_pixel_stats(_images(spark), tile=512)
     out = stats.select("image_id", "ty", "tx", "px_count", "px_sum")
     return _longs(out, "ty", "tx", "px_count", "px_sum")
 

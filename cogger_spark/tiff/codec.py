@@ -303,8 +303,9 @@ def parse_tiff(data: bytes) -> TiffFile:
     unknown tags are ignored; each tiled IFD gets a `load_tile` that returns
     a zero-copy memoryview slice of the source bytes (loader.go:45-51).
     Malformed input fails closed: a truncated header, IFD or tag value, an
-    IFD chain that loops, or a tiled IFD with a zero tile width or length,
-    raises ValueError naming the offset.
+    IFD chain that loops, or a tiled IFD with a zero tile width or length
+    or with fewer TileOffsets or TileByteCounts than its tile grid has
+    tiles, raises ValueError naming the offset.
     """
     if data[:2] == b"II":
         bo = "<"
@@ -400,6 +401,14 @@ def parse_tiff(data: bytes) -> TiffFile:
             raise ValueError(f"bad TIFF: tiled IFD at offset {off} has a "
                              f"zero tile size {ifd.tile_width}x"
                              f"{ifd.tile_height}")
+        if ifd.tile_offsets:
+            need = ifd.n_tiles_x() * ifd.n_tiles_y() * ifd.n_planes()
+            if need > min(len(ifd.tile_offsets), len(ifd.tile_byte_counts)):
+                raise ValueError(
+                    f"bad TIFF: tiled IFD at offset {off} has a "
+                    f"{ifd.n_tiles_x()}x{ifd.n_tiles_y()}x{ifd.n_planes()} "
+                    f"tile grid but {len(ifd.tile_offsets)} TileOffsets and "
+                    f"{len(ifd.tile_byte_counts)} TileByteCounts")
         off = struct.unpack_from(bo + ("Q" if big else "I"), data, after)[0]
 
         # bind the lazy tile reader (loader.go:45-51)

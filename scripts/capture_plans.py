@@ -41,8 +41,8 @@ def main() -> None:
          "planar production: narrow per-band tile kernel → interleave-group "
          "order key window (one sort per image partition)"),
         ("tile_pixel_sums_strips",
-         "strip-routed pixel stats: bounded level-0 strip relation → narrow "
-         "per-strip stats kernel, no whole-image task memory"),
+         "block-streamed pixel stats: one narrow mapInPandas over one-tile-row "
+         "level-0 blocks, no whole-image task memory"),
         ("zonal_stats", "broadcast zones → cover-cell join → hash agg"),
         ("zonal_pixel_stats",
          "pixel-level zonal stats: zone pairing on closed-form extents, "

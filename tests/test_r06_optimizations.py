@@ -86,26 +86,6 @@ def test_cosine_pre_bit_identical(spark):
         assert r.inline == r.pre  # exact double equality, no tolerance
 
 
-def test_route_probe_footer_matches_aggregate(spark, fixture_dir):
-    """The footer-statistics probe must agree with the aggregate probe on
-    bare parquet relations (exactly here — fixture dims carry no
-    cross-column spread), and derived frames must fall back."""
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    from cogger_spark.operators.tiling import (_probe_from_footers,
-                                               route_probe)
-    ensure_test_fixtures()
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-    for thr in (1, 512 * 512, 64 * 1024 * 1024):
-        foot = _probe_from_footers(images, thr)
-        assert foot is not None
-        assert foot == route_probe(images, thr)
-    # derived frame -> footer probe refuses, route_probe still answers
-    derived = images.filter(F.col("fmt") == "raw")
-    assert _probe_from_footers(derived, 1) is None
-    hs, hb, dims = route_probe(derived, 1)
-    assert dims[0] is not None
-
-
 def test_knn_adaptive_single_rung(spark, fixture_dir):
     """rings=(r,) takes the phase-A-only path and must equal the bounded
     knn_join at the same ring (modulo the extra `ring` column)."""
@@ -120,33 +100,6 @@ def test_knn_adaptive_single_rung(spark, fixture_dir):
     a = {tuple(r) for r in single.drop("ring").collect()}
     b = {tuple(r) for r in plain.collect()}
     assert a == b
-
-
-def test_strips_level0_threaded_byte_identical(spark):
-    """The threaded per-strip compress (l0_threads>1) must produce the SAME
-    rows and byte-identical payloads as the serial path, and the auto
-    sizing must stay serial when no footer row bound exists (derived
-    frame)."""
-    from cogger_spark.operators.strips import _scan_rows_upper, strips_level0
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    ensure_test_fixtures()
-    images = (spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-              .limit(3))
-
-    def rows(threads):
-        return sorted(
-            ((r.image_id, r.strip_id, r.top_row, r.strip_h, r.planes,
-              r.has_mask, bytes(r.payload))
-             for r in strips_level0(images, tile=256, target_px=64 * 1024,
-                                    l0_threads=threads).collect()))
-
-    assert rows(8) == rows(1)
-
-    # footer upper bound: real for a Filter-over-scan, None for derived
-    base = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-    n = _scan_rows_upper(base.filter(F.col("w") > 0))
-    assert n is not None and n >= base.count()
-    assert _scan_rows_upper(base.groupBy("fmt").count()) is None
 
 
 def test_rewrite_path_route_equivalent_and_guarded(spark, smoke_images,

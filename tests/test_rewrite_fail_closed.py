@@ -1,6 +1,7 @@
-"""Malformed TIFFs (truncated, looped, or tiled with a zero tile size)
-fail the rewrite closed: `parse_tiff` raises ValueError naming the offset,
-the rewrite kernels re-raise it naming the image on both input routes, and
+"""Malformed TIFFs (truncated, looped, tiled with a zero tile size, or
+with a tile grid larger than its tile tables) fail the rewrite closed:
+`parse_tiff` raises ValueError naming the offset, the rewrite kernels
+re-raise it naming the image on both input routes, and
 `rewrite_tiffs_to_dir` leaves no file behind."""
 
 import os
@@ -24,12 +25,14 @@ def cog(tmp_path_factory) -> bytes:
     return (d / "img_00000001.tif").read_bytes()
 
 
-def _zero_tag(cog: bytes, ifd0: int, ntags: int, tag: int) -> bytes:
-    """`cog` with the inline value of IFD0's `tag` entry set to 0."""
+def _set_tag(cog: bytes, ifd0: int, ntags: int, tag: int,
+             value: int) -> bytes:
+    """`cog` with the inline value of IFD0's `tag` entry set to `value`
+    (little-endian, so a SHORT or a LONG entry alike)."""
     out = bytearray(cog)
     for e in range(ifd0 + 2, ifd0 + 2 + ntags * 12, 12):
         if struct.unpack_from("<H", out, e)[0] == tag:
-            out[e + 8:e + 12] = bytes(4)
+            struct.pack_into("<I", out, e + 8, value)
             return bytes(out)
     raise AssertionError(f"no tag {tag}")
 
@@ -40,9 +43,16 @@ def _bad_inputs(cog: bytes) -> dict:
     looped = bytearray(cog)
     struct.pack_into("<I", looped, ifd0 + 2 + ntags * 12, ifd0)
     zero_tile = f"IFD at offset {ifd0} has a zero tile size"
+    # the 40x30 image at 16 px tiles has a 3x2 grid: 6 table entries
+    short_tables = (f"IFD at offset {ifd0} has a .* tile grid but 6 "
+                    "TileOffsets and 6 TileByteCounts")
     return {
-        "zero_tile_width": (_zero_tag(cog, ifd0, ntags, 322), zero_tile),
-        "zero_tile_length": (_zero_tag(cog, ifd0, ntags, 323), zero_tile),
+        "zero_tile_width": (_set_tag(cog, ifd0, ntags, 322, 0), zero_tile),
+        "zero_tile_length": (_set_tag(cog, ifd0, ntags, 323, 0), zero_tile),
+        "wide_image_width": (_set_tag(cog, ifd0, ntags, 256, 10 * W),
+                             short_tables),
+        "tall_image_length": (_set_tag(cog, ifd0, ntags, 257, 10 * H),
+                              short_tables),
         "truncated_header": (cog[:6], "at offset 4"),
         "truncated_ifd": (cog[:ifd0 + 2 + 5 * 12], f"IFD at offset {ifd0}"),
         "garbage_after_magic": (b"II*\x00" + bytes(range(7, 67)),
@@ -54,7 +64,7 @@ def _bad_inputs(cog: bytes) -> dict:
 
 CASES = ["truncated_header", "truncated_ifd", "garbage_after_magic",
          "ifd_loop", "truncated_tile_data", "zero_tile_width",
-         "zero_tile_length"]
+         "zero_tile_length", "wide_image_width", "tall_image_length"]
 
 
 @pytest.mark.parametrize("case", CASES)

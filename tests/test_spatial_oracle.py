@@ -60,27 +60,83 @@ def test_tile_offsets_raw_matches_oracle(spark):
             oracles.TILE_OFFSETS_RAW)
 
 
-def test_tile_pixel_stats_match_numpy(spark, fixture_dir):
-    """Per-tile pixel stats from the Spark kernel equal direct NumPy over the
-    regenerated fixture pixels."""
-    import numpy as np
+# raw and deflate, with and without a mask plane, 1 to 4 bands, 1-px-wide
+# (15) and 1-px-tall (20) images, and heights up to 513 rows: five
+# one-tile-row level-0 blocks at tile 128
+STATS_IDS = (0, 1, 2, 3, 5, 15, 20, 50)
+
+
+def _numpy_tile_stats(i: int, tile: int) -> dict:
+    """Per-tile (count, sum, min, max) of fixture image i by direct NumPy
+    over fixtures.make_pixels, mask plane excluded."""
     from cogger_spark import fixtures
+    w, h = fixtures.image_dims(i)
+    nb = fixtures.n_bands(i)
+    px = fixtures.make_pixels(i, w, h, nb, fixtures.has_mask(i))[:, :, :nb]
+    out = {}
+    for ty in range(-(-h // tile)):
+        for tx in range(-(-w // tile)):
+            b = px[ty * tile:(ty + 1) * tile, tx * tile:(tx + 1) * tile]
+            out[(f"img_{i:08d}", ty, tx)] = (
+                b.size, int(b.sum(dtype=np.int64)), int(b.min()),
+                int(b.max()))
+    return out
+
+
+@pytest.mark.parametrize("tile", [512, 128, 129])
+def test_tile_pixel_stats_match_numpy(spark, fixture_dir, tile):
+    """Per-tile pixel stats from the Spark kernel equal direct NumPy over the
+    regenerated fixture pixels, at a tile that holds each image whole (512),
+    at one that cuts it into up to five level-0 blocks (128), and at an odd
+    one (129)."""
     from cogger_spark.fixtures import FIXTURE_DIR
     from cogger_spark.operators.spatial import tile_pixel_stats
+    ids = ", ".join(f"'img_{i:08d}'" for i in STATS_IDS)
     images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet")) \
-        .filter("image_id in ('img_00000000','img_00000003','img_00000005')")
+        .filter(f"image_id in ({ids})")
     got = {(r.image_id, r.ty, r.tx): (r.px_count, r.px_sum, r.px_min, r.px_max)
-           for r in tile_pixel_stats(images, tile=512).collect()}
-    for i in (0, 3, 5):
-        w, h = fixtures.image_dims(i)
-        px = fixtures.make_pixels(i, w, h, fixtures.n_bands(i),
-                                  fixtures.has_mask(i))[:, :, :fixtures.n_bands(i)]
-        for ty in range(-(-h // 512)):
-            for tx in range(-(-w // 512)):
-                b = px[ty * 512:(ty + 1) * 512, tx * 512:(tx + 1) * 512]
-                k = (f"img_{i:08d}", ty, tx)
-                assert got[k] == (b.size, int(b.sum(dtype=np.int64)),
-                                  int(b.min()), int(b.max())), k
+           for r in tile_pixel_stats(images, tile=tile).collect()}
+    want = {}
+    for i in STATS_IDS:
+        want.update(_numpy_tile_stats(i, tile))
+    assert got == want
+
+
+def test_tile_pixel_stats_memory_bounded_deflate():
+    """The stats kernel streams a deflate image one tile row at a time: its
+    tracemalloc peak on a 4096x4104 gray image (16.8 MB decoded) stays
+    below half the decoded image."""
+    import tracemalloc
+    import zlib
+
+    from cogger_spark import fixtures
+    from cogger_spark.operators.spatial import _image_stats_rows
+    w, h = 4096, 4104
+    px = fixtures.make_pixels(0, w, h, 1, False)
+    data = zlib.compress(px.tobytes(), 1)
+    out = {k: [] for k in ("image_id", "ty", "tx", "px_count", "px_sum",
+                           "px_min", "px_max")}
+    tracemalloc.start()
+    try:
+        _image_stats_rows(out, "img_00000000", data, w, h, "deflate", 512)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < px.nbytes / 2, (peak, px.nbytes)
+    assert len(out["ty"]) == 9 * 8
+    assert sum(out["px_count"]) == px.size
+    assert sum(out["px_sum"]) == int(px.sum(dtype=np.int64))
+
+
+def test_tile_pixel_sums_strips_plans_one_stage(spark):
+    """tile_pixel_sums_strips runs the one block-streamed stage: exactly one
+    MapInPandas and no Union."""
+    import re
+    df = queries.SPATIAL_QUERIES["tile_pixel_sums_strips"](
+        spark, "/root/testdata/sf0.01")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"\bMapInPandas\b", plan)) == 1, plan
+    assert "Union" not in plan, plan
 
 
 def test_zonal_pixel_stats_consistent(spark, fixture_dir):

@@ -173,23 +173,27 @@ BAD_INPUTS = {
     "corrupt_deflate_midstream": (
         _LONG[:len(_LONG) // 2] + bytes(64) + _LONG[len(_LONG) // 2 + 64:],
         "deflate"),
+    # valid pixels, but an id outside the synthetic geo frame (IMAGE_IDS)
+    "bad_image_id": (bytes(W * H * 3), "raw"),
 }
+IMAGE_IDS = {"bad_image_id": "scene_42"}
 
 
 @pytest.mark.parametrize("case", sorted(BAD_INPUTS))
 def test_streaming_write_fails_closed(tmp_path, case):
     data, fmt = BAD_INPUTS[case]
-    with pytest.raises(ValueError, match="img_00000042"):
-        _write_cog_file("img_00000042", data, W, H, fmt, str(tmp_path), 16,
+    iid = IMAGE_IDS.get(case, "img_00000042")
+    with pytest.raises(ValueError, match=iid):
+        _write_cog_file(iid, data, W, H, fmt, str(tmp_path), 16,
                         "deflate", True)
     assert os.listdir(tmp_path) == []
 
 
 IN_MEMORY_SINKS = {
-    "blob": lambda data, fmt: _cog_blob_row("img_00000042", data, W, H, fmt,
-                                            16, "deflate", True),
-    "parts": lambda data, fmt: list(_cog_part_rows(
-        "img_00000042", data, W, H, fmt, 16, "deflate", True, 7)),
+    "blob": lambda data, fmt, iid="img_00000042": _cog_blob_row(
+        iid, data, W, H, fmt, 16, "deflate", True),
+    "parts": lambda data, fmt, iid="img_00000042": list(_cog_part_rows(
+        iid, data, W, H, fmt, 16, "deflate", True, 7)),
 }
 
 
@@ -202,8 +206,9 @@ def test_blob_and_parts_sinks_fail_closed(tmp_path, monkeypatch, sink, case):
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     fds = len(os.listdir("/proc/self/fd"))
     data, fmt = BAD_INPUTS[case]
-    with pytest.raises(ValueError, match="img_00000042"):
-        IN_MEMORY_SINKS[sink](data, fmt)
+    iid = IMAGE_IDS.get(case, "img_00000042")
+    with pytest.raises(ValueError, match=iid):
+        IN_MEMORY_SINKS[sink](data, fmt, iid)
     assert os.listdir(tmp_path) == []
     assert len(os.listdir("/proc/self/fd")) == fds
 

@@ -1,10 +1,8 @@
 """The COG sinks equal the grouped assembly of the tile relation: the
 streaming blob and parts pipelines give the same rows as
 assemble_cogs / assemble_cog_parts over tile_images, on a mixed-size table
-and on an oversized RGB+mask image; the parts writer is crash-atomic; and
-tile_pixel_stats' level-0 strip route equals its whole-image kernel."""
+and on an oversized RGB+mask image; and the parts writer is crash-atomic."""
 
-import pyspark.sql.functions as F
 import pytest
 
 from cogger_spark.operators.tiling import (
@@ -131,32 +129,6 @@ def test_oversized_e2e_bounded_parts(spark):
     for r in parts:
         if r.part_idx > 0:
             assert len(bytes(r.part)) <= data_bound
-
-
-def test_tile_pixel_stats_routed_equals_direct(spark, big_images):
-    """Size-routed tile_pixel_stats: a threshold that sends the 1024²/700²
-    images through the level-0 strip relation must produce rows identical to
-    the all-direct whole-image kernel — the strip decomposition is invisible
-    in the stats (tile-aligned strip tops mean every tile lives in exactly
-    one strip), and no task ever decodes an oversized image whole."""
-    from cogger_spark.operators.spatial import tile_pixel_stats
-    direct = {(r.image_id, r.ty, r.tx): (r.px_count, r.px_sum, r.px_min, r.px_max)
-              for r in tile_pixel_stats(big_images, tile=TILE,
-                                        split_threshold_px=10**12).collect()}
-    routed = {(r.image_id, r.ty, r.tx): (r.px_count, r.px_sum, r.px_min, r.px_max)
-              for r in tile_pixel_stats(big_images, tile=TILE,
-                                        split_threshold_px=600 * 600,
-                                        target_px=TARGET).collect()}
-    assert routed == direct
-    # all-oversized table: pure strip path, no union branch
-    big_only = big_images.filter((F.col("w").cast("long") * F.col("h")) > 600 * 600)
-    strip_only = {(r.image_id, r.ty, r.tx): (r.px_count, r.px_sum, r.px_min, r.px_max)
-                  for r in tile_pixel_stats(big_only, tile=TILE,
-                                            split_threshold_px=600 * 600,
-                                            target_px=TARGET).collect()}
-    big_ids = {r.image_id for r in big_only.select("image_id").collect()}
-    assert big_ids  # the oversized subset is non-empty
-    assert strip_only == {k: v for k, v in direct.items() if k[0] in big_ids}
 
 
 def test_write_parts_crash_leaves_no_truncated_final_file(tmp_path):
