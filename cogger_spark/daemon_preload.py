@@ -1,8 +1,9 @@
-"""Custom PySpark worker daemon: preloads the scientific stack and stops
-every task from re-reading unchanged zip archives.
+"""Custom PySpark worker daemon: preloads the scientific stack, stops
+every task from re-reading unchanged zip archives, and freezes the
+preloaded heap out of the workers' garbage collections.
 
 The daemon forks the Python workers; Spark reuses each worker across tasks.
-Two costs are paid once here, before any fork, instead of in every worker
+Three costs are paid once here, before any fork, instead of in every worker
 or every task:
 
 - Imports. Without preloading, each forked worker pays the
@@ -18,11 +19,20 @@ or every task:
   per-task worker init on a 4-vCPU box. `guard_zip_rereads` makes the
   re-read conditional on the archive's stat stamp, so an unchanged archive
   is read once and a rewritten one is still re-read.
+- Garbage collection of the preload. pyspark's daemon runs `gc.collect()`
+  in a reused worker after every task. The preload leaves ~72,600
+  GC-tracked objects in the daemon (numpy, pandas, pyarrow, pyspark), and
+  one full collection over them took 28-45 ms on a 4-vCPU box, in series
+  with the next task. `gc.freeze()` just before the fork moves them to the
+  permanent generation: a worker's collection then scans only the objects
+  it made itself (0.05-0.4 ms), and no longer writes to the inherited
+  pages, which stay shared with the daemon.
 
 Enabled via spark.python.daemon.module=cogger_spark.daemon_preload
 (session.py); requires this package on the worker PYTHONPATH.
 """
 
+import gc
 import os
 import sys
 import zipimport
@@ -75,4 +85,5 @@ def guard_zip_rereads() -> None:
 
 if __name__ == "__main__":
     guard_zip_rereads()
+    gc.freeze()
     manager()

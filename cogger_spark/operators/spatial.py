@@ -22,6 +22,8 @@ both sides (t.min < z.max AND t.max > z.min).
 
 from __future__ import annotations
 
+import zlib
+
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -47,7 +49,8 @@ from .tiling import _level0_blocks, ensure_fanout
 
 
 def _anchor_cols(df: DataFrame) -> DataFrame:
-    img_idx = F.substring("image_id", 5, 8).cast("long")
+    # every digit after 'img_', as geo.img_index reads it
+    img_idx = F.expr("substring(image_id, 5)").cast("long")
     return (df
             .withColumn("img_idx", img_idx)
             .withColumn("lon0", F.lit(LON_BASE) + (img_idx * LON_MULT % LON_MOD) / 10.0)
@@ -504,19 +507,23 @@ def _image_stats_rows(out: dict, image_id: str, data: bytes, w: int, h: int,
     """Append the per-tile stats of one image. Level 0 streams as one-tile-row
     blocks (_level0_blocks), so every tile lies inside one block and the
     kernel holds one block, never the decoded image (png/jpeg excepted:
-    their decoders are whole-image)."""
-    nplanes, _mask, blocks = _level0_blocks(data, w, h, fmt, tile)
-    for y0, rows in blocks:
-        px = rows[:, :, :nplanes]
-        for tx in range(-(-w // tile)):
-            block = px[:, tx * tile:(tx + 1) * tile]
-            out["image_id"].append(image_id)
-            out["ty"].append(y0 // tile)
-            out["tx"].append(tx)
-            out["px_count"].append(int(block.size))
-            out["px_sum"].append(int(block.sum(dtype=np.int64)))
-            out["px_min"].append(int(block.min()))
-            out["px_max"].append(int(block.max()))
+    their decoders are whole-image). Undecodable input raises ValueError
+    naming the image, as in tiling._streamed_cog."""
+    try:
+        nplanes, _mask, blocks = _level0_blocks(data, w, h, fmt, tile)
+        for y0, rows in blocks:
+            px = rows[:, :, :nplanes]
+            for tx in range(-(-w // tile)):
+                block = px[:, tx * tile:(tx + 1) * tile]
+                out["image_id"].append(image_id)
+                out["ty"].append(y0 // tile)
+                out["tx"].append(tx)
+                out["px_count"].append(int(block.size))
+                out["px_sum"].append(int(block.sum(dtype=np.int64)))
+                out["px_min"].append(int(block.min()))
+                out["px_max"].append(int(block.max()))
+    except (ValueError, zlib.error) as exc:
+        raise ValueError(f"image {image_id!r}: {exc}") from exc
 
 
 def tile_pixel_stats(images: DataFrame, tile: int = 512) -> DataFrame:

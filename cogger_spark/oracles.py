@@ -24,7 +24,7 @@ ZONES = f"read_parquet('{FIXTURE_DIR}/zones_test.parquet')"
 
 _MANIFEST_CTE = f"""
 img AS (
-  SELECT image_id, w, h, CAST(substr(image_id, 5, 8) AS BIGINT) AS img_idx
+  SELECT image_id, w, h, CAST(substr(image_id, 5) AS BIGINT) AS img_idx
   FROM {IMAGES}
 ),
 anchored AS (
@@ -717,7 +717,7 @@ pieces AS (
 
 TILE_PIXEL_SUMS = f"""
 WITH img AS (
-  SELECT image_id, w, h, CAST(substr(image_id, 5, 8) AS BIGINT) AS img_idx
+  SELECT image_id, w, h, CAST(substr(image_id, 5) AS BIGINT) AS img_idx
   FROM {IMAGES}
 ),
 {_PIXEL_PIECES_TAIL},

@@ -187,3 +187,31 @@ def test_distance_join_lat_cell_coverage(spark):
            distance_join(pts, radius_deg=0.05).collect()}
     assert (1, 2) in got
     assert not any(3 in pair for pair in got)
+
+
+def test_every_id_digit_places_the_image(spark, tmp_path):
+    """A 9-digit image id: tile_manifest, its DuckDB oracle and the written
+    COG's ModelTiepoint all anchor at geo.anchor(geo.img_index(id)); the
+    first 8 digits alone give another anchor."""
+    from cogger_spark.functions.geo import anchor, img_index
+    from cogger_spark.operators.spatial import tile_manifest
+    from cogger_spark.operators.tiling import convert_images
+    from cogger_spark.tiff.codec import parse_tiff
+    iid, w, h = "img_123456789", 40, 30
+    lon0, lat0 = anchor(img_index(iid))
+    assert (lon0, lat0) != anchor(12345678)
+    pd.DataFrame({"image_id": [iid], "bytes": [bytes(w * h * 3)], "w": [w],
+                  "h": [h], "fmt": ["raw"]}).to_parquet(tmp_path / "img.parquet")
+    images = spark.read.parquet(str(tmp_path / "img.parquet"))
+
+    manifest = tile_manifest(images, tile=512, level=None)
+    (t,) = manifest.collect()
+    assert (t.lon_min, t.lat_min) == (lon0, lat0)
+    compare(queries._longs(manifest, "level", "ty", "tx", "lw", "lh", "ntx",
+                           "nty", "px_w", "px_h"),
+            oracles.TILE_MANIFEST.replace(
+                oracles.IMAGES, f"read_parquet('{tmp_path / 'img.parquet'}')"))
+
+    convert_images(images, str(tmp_path / "cogs"), tile=16)
+    cog = parse_tiff((tmp_path / "cogs" / f"{iid}.tif").read_bytes())
+    assert cog.ifds[0].model_tie_point[3:5] == (lon0, lat0)

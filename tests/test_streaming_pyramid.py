@@ -238,6 +238,19 @@ def test_block_pass_zlib_error_names_the_image(tmp_path, monkeypatch, sink):
     assert os.listdir(tmp_path) == []
 
 
+@pytest.mark.parametrize("case", sorted(set(BAD_INPUTS) - set(IMAGE_IDS)))
+def test_tile_pixel_stats_kernel_fails_closed(case):
+    """tile_pixel_stats' per-image kernel reads level 0 through the same
+    block stream and fails like the COG sinks: a ValueError naming the
+    image, not a bare zlib.error or buffer-size message."""
+    from cogger_spark.operators.spatial import _image_stats_rows
+    data, fmt = BAD_INPUTS[case]
+    out = {k: [] for k in ("image_id", "ty", "tx", "px_count", "px_sum",
+                           "px_min", "px_max")}
+    with pytest.raises(ValueError, match="image 'img_00000042': "):
+        _image_stats_rows(out, "img_00000042", data, W, H, fmt, 16)
+
+
 def test_deflate_trailing_bytes_accepted():
     """zlib.decompress ignores bytes after the end of the stream, and so
     does the streamed inflate: such a blob gives the clean stream's COG."""
@@ -274,6 +287,19 @@ def test_pipelines_fail_closed_in_spark(spark, pipeline):
         "image_id string, bytes binary, w int, h int, fmt string")
     with pytest.raises(Exception, match="ValueError: image 'img_00000042'"):
         getattr(tiling, pipeline)(df, tile=16).collect()
+
+
+@pytest.mark.parametrize("case", ["truncated_deflate", "length_mismatch",
+                                  "null_blob"])
+def test_tile_pixel_stats_fails_closed_in_spark(spark, case):
+    """Through Spark, tile_pixel_stats fails the job naming the image."""
+    from cogger_spark.operators.spatial import tile_pixel_stats
+    data, fmt = BAD_INPUTS[case]
+    df = spark.createDataFrame(
+        [("img_00000042", data, W, H, fmt)],
+        "image_id string, bytes binary, w int, h int, fmt string")
+    with pytest.raises(Exception, match="ValueError: image 'img_00000042'"):
+        tile_pixel_stats(df, tile=16).collect()
 
 
 def _convert(images, tmp_path):
