@@ -1,20 +1,19 @@
 """cogger_spark — a PySpark-native spatial-join + tiling engine.
 
-Reproduces the semantics of the reference COG rewriter (airbusgeo/cogger,
-snapshot at /root/reference) as a Spark-first engine over an Iceberg-style
-table of image+caption pairs, extended with H3/S2-style spatial joins,
-dedup / similarity / text-analysis operators for large-scale training-data
-pipelines, and checkpoint/resume + metrics plumbing.
+Reproduces the semantics of the reference COG rewriter (airbusgeo/cogger)
+as a Spark-first engine over a parquet table of image+caption pairs,
+extended with H3/S2-style spatial joins, dedup / similarity /
+text-analysis operators for large-scale training-data pipelines, and
+checkpoint/resume + metrics plumbing.
 
 Layout:
     tiff/       pure-Python TIFF/COG codec (byte-exact vs reference goldens)
     planner/    strip / overview-pyramid / DAG planning (stripper.go semantics)
-    functions/  vectorized NumPy kernels: cell index, image codecs, text, hashes
+    functions/  vectorized NumPy kernels: cell index, image codecs, geo frame
     operators/  DataFrame-level operators: tiling, assembly, spatial joins,
-                dedup, similarity, multimodal plumbing
-    sources/    image-table source + Iceberg-semantics shim over Parquet
+                dedup, similarity, text, COG reading
+    sources/    .tif directory source and executor-side file sink
     plans/      checkpoint / resume / lineage / metrics tables
-    streaming/  incremental ingest (Trigger.AvailableNow)
 """
 
 __version__ = "0.1.0"

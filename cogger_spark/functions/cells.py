@@ -17,8 +17,6 @@ from __future__ import annotations
 
 import numpy as np
 
-MAX_RES = 28
-
 _B = [
     0x5555555555555555,
     0x3333333333333333,

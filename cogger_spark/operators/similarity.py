@@ -53,27 +53,45 @@ def cosine_pre(a, b, na, nb):
     return _dot(a.cast("array<double>"), b.cast("array<double>")) / (na * nb)
 
 
-def brute_force_topk(embeddings: DataFrame, k: int = 10,
-                     query_mod: int = 50) -> DataFrame:
-    """Exact cosine top-k per query (queries = vec_id % query_mod == 0),
-    excluding self; deterministic tiebreak on vec_id. The query side is
-    broadcast — the big side is scanned once, no shuffle of the corpus."""
-    q = (embeddings.filter(F.col("vec_id") % query_mod == 0)
-         .select(F.col("vec_id").alias("query_id"),
-                 F.col("embedding").alias("q_emb"),
-                 norm_expr(F.col("embedding")).alias("_qn")))
-    c = embeddings.select("vec_id", "embedding",
-                          norm_expr(F.col("embedding")).alias("_cn"))
-    cand = (c.crossJoin(F.broadcast(q))
-            .filter(F.col("vec_id") != F.col("query_id")))
+def _queries(embeddings: DataFrame, query_mod: int) -> DataFrame:
+    """The query side of every top-k: (query_id, q_emb, _qn)."""
+    return (embeddings.filter(F.col("vec_id") % query_mod == 0)
+            .select(F.col("vec_id").alias("query_id"),
+                    F.col("embedding").alias("q_emb"),
+                    norm_expr(F.col("embedding")).alias("_qn")))
+
+
+def _corpus(embeddings: DataFrame) -> DataFrame:
+    """The candidate side of an exact rerank: (vec_id, embedding, _cn)."""
+    return embeddings.select("vec_id", "embedding",
+                             norm_expr(F.col("embedding")).alias("_cn"))
+
+
+def _topk_by_cosine(cand: DataFrame, k: int, norm_col: str = "_cn"
+                    ) -> DataFrame:
+    """The exact tail every top-k shares: the true cosine of each
+    (query_id, q_emb, _qn) x (vec_id, embedding, norm_col) candidate,
+    rounded to 9 places, then the k best per query by (cosine desc,
+    vec_id)."""
     cos = F.round(cosine_pre(F.col("q_emb"), F.col("embedding"),
-                             F.col("_qn"), F.col("_cn")), 9)
+                             F.col("_qn"), F.col(norm_col)), 9)
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
     return (cand.withColumn("cosine", cos)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "vec_id", "cosine",
                     F.col("rank").cast("long").alias("rank")))
+
+
+def brute_force_topk(embeddings: DataFrame, k: int = 10,
+                     query_mod: int = 50) -> DataFrame:
+    """Exact cosine top-k per query (queries = vec_id % query_mod == 0),
+    excluding self; deterministic tiebreak on vec_id. The query side is
+    broadcast — the big side is scanned once, no shuffle of the corpus."""
+    cand = (_corpus(embeddings)
+            .crossJoin(F.broadcast(_queries(embeddings, query_mod)))
+            .filter(F.col("vec_id") != F.col("query_id")))
+    return _topk_by_cosine(cand, k)
 
 
 def cosine_neardup_pairs(embeddings: DataFrame, threshold: float = 0.4) -> DataFrame:
@@ -133,6 +151,28 @@ def _kmeans(sample: np.ndarray, k: int, iters: int = 10) -> np.ndarray:
     return cent
 
 
+def _train_sample(embeddings: DataFrame, n: int) -> np.ndarray:
+    """The bounded driver-side sample every quantizer trains on: the
+    first `n` embeddings as float64 rows."""
+    return np.asarray(
+        [np.asarray(r.embedding, dtype=np.float64)
+         for r in embeddings.select("embedding").limit(n).collect()])
+
+
+def _normalized(mat: np.ndarray) -> np.ndarray:
+    n = np.linalg.norm(mat, axis=1, keepdims=True)
+    n[n == 0] = 1.0
+    return mat / n
+
+
+def _codebooks(nsample: np.ndarray, m: int, k: int) -> np.ndarray:
+    """Per-subspace k-means codebooks over a normalized sample:
+    (m, k, dim/m)."""
+    dsub = nsample.shape[1] // m
+    return np.stack([_kmeans(nsample[:, i * dsub:(i + 1) * dsub], k)
+                     for i in range(m)])
+
+
 def ivf_assign_udf(centroids: np.ndarray, nprobe: int = 1):
     """vector → its `nprobe` nearest centroid ids (list ids). nprobe=1 for
     indexing the corpus; nprobe>1 for the query side."""
@@ -154,10 +194,7 @@ def ivf_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
     candidates. Candidates/query ≈ nprobe/n_lists of the corpus — the classic
     inverted-file scale path. The quantizer trains driver-side on a bounded
     sample (at 10^12 scale: a fixed random sample, broadcast centroids)."""
-    sample = np.asarray(
-        [np.asarray(r.embedding, dtype=np.float64)
-         for r in embeddings.select("embedding").limit(train_sample).collect()])
-    cent = _kmeans(sample, n_lists)
+    cent = _kmeans(_train_sample(embeddings, train_sample), n_lists)
 
     corpus = (embeddings
               .withColumn("lists", ivf_assign_udf(cent, 1)("embedding"))
@@ -172,14 +209,7 @@ def ivf_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
                  norm_expr(F.col("embedding")).alias("_qn")))
     cand = (corpus.join(q, "list_id")
             .filter(F.col("vec_id") != F.col("query_id")))
-    cos = F.round(cosine_pre(F.col("q_emb"), F.col("embedding"),
-                             F.col("_qn"), F.col("_cn")), 9)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (cand.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine",
-                    F.col("rank").cast("long").alias("rank")))
+    return _topk_by_cosine(cand, k)
 
 
 # ---------------------------------------------------------------------------
@@ -249,14 +279,7 @@ def ann_lsh_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
             .filter(F.col("vec_id") != F.col("query_id"))
             .select("query_id", "q_emb", "_qn", "vec_id", "embedding", "_n")
             .distinct())
-    cos = F.round(cosine_pre(F.col("q_emb"), F.col("embedding"),
-                             F.col("_qn"), F.col("_n")), 9)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (cand.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine",
-                    F.col("rank").cast("long").alias("rank")))
+    return _topk_by_cosine(cand, k, norm_col="_n")
 
 
 # ---------------------------------------------------------------------------
@@ -273,21 +296,8 @@ def pq_train(embeddings: DataFrame, m: int = PQ_M, k: int = PQ_K,
     L2-normalized vectors (the same bounded-sample pattern as the IVF
     quantizer — at 10^12 scale a fixed sample, broadcast codebooks).
     Returns (m, k, dim/m)."""
-    sample = np.asarray(
-        [np.asarray(r.embedding, dtype=np.float64)
-         for r in embeddings.select("embedding").limit(train_sample).collect()])
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    sample = sample / norms
-    dsub = sample.shape[1] // m
-    return np.stack([_kmeans(sample[:, i * dsub:(i + 1) * dsub], k)
-                     for i in range(m)])
-
-
-def _normalized(mat: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(mat, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return mat / n
+    return _codebooks(_normalized(_train_sample(embeddings, train_sample)),
+                      m, k)
 
 
 def pq_encode_udf(books: np.ndarray):
@@ -326,6 +336,15 @@ def pq_lut_udf(books: np.ndarray):
     return _lut
 
 
+def _rerank_shortlist(embeddings: DataFrame, shortlist: DataFrame, k: int,
+                      query_mod: int) -> DataFrame:
+    """Exact rerank of a (query_id, vec_id) shortlist: join both sides'
+    vectors back in, then the shared exact top-k tail."""
+    exact = (shortlist.join(_corpus(embeddings), "vec_id")
+             .join(F.broadcast(_queries(embeddings, query_mod)), "query_id"))
+    return _topk_by_cosine(exact, k)
+
+
 def ann_pq_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
                 m: int = PQ_M, kcent: int = PQ_K, train_sample: int = 2048,
                 rerank: int = 64) -> DataFrame:
@@ -356,24 +375,7 @@ def ann_pq_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
                  .withColumn("arank", F.row_number().over(w))
                  .filter(F.col("arank") <= rerank)
                  .select("query_id", "vec_id"))
-    qe = (embeddings.filter(F.col("vec_id") % query_mod == 0)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("q_emb"),
-                  norm_expr(F.col("embedding")).alias("_qn")))
-    exact = (shortlist
-             .join(embeddings.select(
-                 "vec_id", "embedding",
-                 norm_expr(F.col("embedding")).alias("_cn")), "vec_id")
-             .join(F.broadcast(qe), "query_id"))
-    cos = F.round(cosine_pre(F.col("q_emb"), F.col("embedding"),
-                             F.col("_qn"), F.col("_cn")), 9)
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                                F.col("vec_id"))
-    return (exact.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine",
-                    F.col("rank").cast("long").alias("rank")))
+    return _rerank_shortlist(embeddings, shortlist, k, query_mod)
 
 
 def ivf_pq_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
@@ -387,16 +389,9 @@ def ivf_pq_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
     lookup tables (JVM-side, no float vectors read); the top `rerank`
     shortlist re-ranks with exact cosine, so returned scores are true
     cosines. Both quantizers train driver-side on one bounded sample."""
-    sample = np.asarray(
-        [np.asarray(r.embedding, dtype=np.float64)
-         for r in embeddings.select("embedding").limit(train_sample).collect()])
+    sample = _train_sample(embeddings, train_sample)
     coarse = _kmeans(sample, n_lists)
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    nsample = sample / norms
-    dsub = nsample.shape[1] // m
-    books = np.stack([_kmeans(nsample[:, i * dsub:(i + 1) * dsub], kcent)
-                      for i in range(m)])
+    books = _codebooks(_normalized(sample), m, kcent)
 
     corpus = (embeddings
               .withColumn("lists", ivf_assign_udf(coarse, 1)("embedding"))
@@ -419,21 +414,4 @@ def ivf_pq_topk(embeddings: DataFrame, k: int = 10, query_mod: int = 50,
                  .withColumn("arank", F.row_number().over(w))
                  .filter(F.col("arank") <= rerank)
                  .select("query_id", "vec_id"))
-    qe = (embeddings.filter(F.col("vec_id") % query_mod == 0)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.col("embedding").alias("q_emb"),
-                  norm_expr(F.col("embedding")).alias("_qn")))
-    exact = (shortlist
-             .join(embeddings.select(
-                 "vec_id", "embedding",
-                 norm_expr(F.col("embedding")).alias("_cn")), "vec_id")
-             .join(F.broadcast(qe), "query_id"))
-    cos = F.round(cosine_pre(F.col("q_emb"), F.col("embedding"),
-                             F.col("_qn"), F.col("_cn")), 9)
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(),
-                                                F.col("vec_id"))
-    return (exact.withColumn("cosine", cos)
-            .withColumn("rank", F.row_number().over(w2))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "vec_id", "cosine",
-                    F.col("rank").cast("long").alias("rank")))
+    return _rerank_shortlist(embeddings, shortlist, k, query_mod)

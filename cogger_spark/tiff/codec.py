@@ -263,8 +263,6 @@ _TAG_MAP = {
     50844: ("rpcs", "floats"),
 }
 
-_SCALAR_FLOAT_TAGS = set()
-
 
 @dataclass
 class TiffFile:

@@ -1,97 +1,14 @@
 """Focused regression tests for the round-6 ADVICE correctness fixes:
 
-1. iceberg_shim._collect_file_stats must not record non-JSON-native footer
-   bounds (DATE columns) — commits on such tables used to raise TypeError.
-2. merge_into when_matched='delete' keeps matched rows whose
-   matched_condition evaluates to NULL (SQL MERGE fires only on TRUE).
-3. stream_upsert_table resolves equal-version duplicate keys spanning two
-   files in one micro-batch by source FILE, not by split packing.
-4. distance_join validates radius_deg in (0, 90] with a clear error.
-5. asof_join rejects reserved left columns _side/_pay loudly.
-6. rewrite_tiffs_to_dir keeps a file literally named 'a%20b.tif' apart
+1. distance_join validates radius_deg in (0, 90] with a clear error.
+2. asof_join rejects reserved left columns _side/_pay loudly.
+3. rewrite_tiffs_to_dir keeps a file literally named 'a%20b.tif' apart
    from 'a b.tif' (the path-read route is refused when a URI holds '%').
 """
-import datetime
-import os
 import shutil
 
 import pytest
 from pyspark.sql import functions as F
-
-from cogger_spark.sources import iceberg_shim as shim
-
-
-def test_shim_date_column_stats_commit_succeeds(spark, tmp_path):
-    """A table with a DATE column must commit: pyarrow footer min/max for
-    date32 come back as datetime.date, which json.dumps rejects — the
-    stats collector must skip (not record) such bounds."""
-    tbl = str(tmp_path / "date_tbl")
-    df = spark.createDataFrame(
-        [("a", datetime.date(2024, 1, 1), 1),
-         ("b", datetime.date(2024, 3, 5), 2)],
-        "image_id string, d date, w int")
-    shim.write_table(df, tbl, n_buckets=2,
-                     partition_cols=())   # used to TypeError
-    shim.append(df.withColumn("image_id", F.concat(F.col("image_id"),
-                                                   F.lit("_2"))), tbl)
-    got = shim.read_table(spark, tbl)
-    assert got.count() == 4
-    rows = {(r.image_id, r.d, r.w) for r in got.collect()}
-    assert ("a", datetime.date(2024, 1, 1), 1) in rows
-
-
-def test_shim_merge_delete_null_condition_keeps_row(spark, tmp_path):
-    """WHEN MATCHED AND s.w > t.w THEN DELETE with t.w NULL: the condition
-    is NULL, the clause must NOT fire, the row must survive."""
-    tbl = str(tmp_path / "merge_nullcond")
-    tgt = spark.createDataFrame(
-        [("k1", None), ("k2", 5), ("k3", 7)], "image_id string, w int")
-    shim.write_table(tgt, tbl, n_buckets=2, partition_cols=())
-    src = spark.createDataFrame(
-        [("k1", 3), ("k2", 10), ("k3", 1)], "image_id string, w int")
-    shim.merge_into(spark, src, tbl, on="image_id",
-                    matched_condition="s.w > t.w",
-                    when_matched="delete", when_not_matched="ignore")
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    # k2 fired (10 > 5, deleted); k1 condition NULL -> kept with its NULL
-    # w; k3 condition FALSE -> kept
-    assert got == {"k1": None, "k3": 7}
-
-
-def test_stream_upsert_cross_file_tiebreak_is_by_source_file(
-        spark, tmp_path):
-    """Two files in ONE micro-batch, same key, no version_col: the row from
-    the later source file (path order — the file source's listing tiebreak
-    for equal mtimes) must win, regardless of which parquet split Spark
-    happens to schedule first. Files are written in REVERSE path order so
-    a mtime- or split-ordering-based winner would differ."""
-    from cogger_spark.streaming.ingest import stream_upsert_table
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-
-    def one_file(name, val, mtime):
-        d = str(tmp_path / f"stage_{name}")
-        spark.createDataFrame([("dup", val)],
-                              "image_id string, v string"
-                              ).coalesce(1).write.parquet(d)
-        src = next(p for p in (tmp_path / f"stage_{name}").rglob("*.parquet"))
-        dst = in_dir / name
-        src.rename(dst)
-        os.utime(dst, (mtime, mtime))
-        shutil.rmtree(d)
-
-    # b written "earlier" (smaller mtime) than a, but b > a by path: the
-    # path-order rule must pick b deterministically.
-    one_file("b.parquet", "from_b", 1_700_000_000)
-    one_file("a.parquet", "from_a", 1_700_000_000)
-    tbl = str(tmp_path / "tbl")
-    shim.write_table(
-        spark.createDataFrame([("dup", "base")], "image_id string, v string"),
-        tbl, n_buckets=2, partition_cols=())
-    stream_upsert_table(spark, str(in_dir), tbl, str(tmp_path / "ck"),
-                        key="image_id", max_files_per_trigger=2)
-    got = {r.image_id: r.v for r in shim.read_table(spark, tbl).collect()}
-    assert got == {"dup": "from_b"}
 
 
 def test_distance_join_rejects_bad_radius(spark):

@@ -99,18 +99,31 @@ def test_jpeg_reconstruction_matches_source(jio):
     assert ours >= 35.0, ours
 
 
-def test_multimodal_jpeg_path(spark, jio):
-    """fmt='jpeg' flows through the multimodal feature kernel for real."""
-    from cogger_spark.operators.multimodal import image_features
-    encode_rgb, _ = jio
-    src = _smooth(32, 48)
+def test_jpeg_images_through_cog_pipeline(spark, jio):
+    """An ImageIO-encoded jpeg row tiles into a COG whose level-0 tiles sit
+    within 40 dB of ImageIO's own decode of the same bytes (the lossy
+    invariant) — jpeg ingest through the shared decode_any."""
+    from cogger_spark.operators.tiling import cog_pipeline
+    from cogger_spark.tiff import assemble_ifd_tree, parse_tiff
+    from cogger_spark.tiff.lzw import decode_tile
+    encode_rgb, decode_rgb = jio
+    h, w, t = 100, 150, 64
+    data = encode_rgb(_smooth(h, w))
     df = spark.createDataFrame(
-        [("img_jpeg", encode_rgb(src), 48, 32, "jpeg")],
+        [("img_00000007", data, w, h, "jpeg")],
         "image_id string, bytes binary, w int, h int, fmt string")
-    row = image_features(df).collect()[0]
-    assert row.n_bands == 3
-    want = np.concatenate([src.mean(axis=(0, 1)), src.std(axis=(0, 1))])
-    assert np.allclose(np.array(row.features), want, atol=3.0)
+    blob = bytes(cog_pipeline(df, tile=t).collect()[0].cog)
+    main = assemble_ifd_tree(parse_tiff(blob).ifds)
+    assert (main.image_width, main.image_height) == (w, h)
+    got = np.zeros((main.n_tiles_y() * t, main.n_tiles_x() * t, 3), np.uint8)
+    for ty in range(main.n_tiles_y()):
+        for tx in range(main.n_tiles_x()):
+            raw = decode_tile(main.load_tile(main.tile_idx(tx, ty, 0)),
+                              main.compression, main.predictor, t, t, 3)
+            got[ty * t:(ty + 1) * t, tx * t:(tx + 1) * t] = \
+                np.frombuffer(raw, np.uint8).reshape(t, t, 3)
+    p = _psnr(got[:h, :w], decode_rgb(data))
+    assert p >= 40.0, p
 
 
 def test_jpeg_grayscale(spark, jio):

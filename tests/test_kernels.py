@@ -219,17 +219,3 @@ def test_committed_fixtures_match_generator():
         pq.read_table(FIXTURE_DIR / "points_test.parquet"))
     assert make_zones_table(40, 240).equals(
         pq.read_table(FIXTURE_DIR / "zones_test.parquet"))
-
-
-def test_average_hash_identical_and_distinct():
-    from cogger_spark.functions.phash import average_hash
-    a = fixtures.make_pixels(0, 256, 256, 3, False)
-    b = fixtures.make_pixels(0, 256, 256, 3, False)
-    assert average_hash(a) == average_hash(b)
-    # structurally different content → different hash (the fixture patterns
-    # share structure across band counts, so use an unrelated gradient)
-    rng = np.random.RandomState(3)
-    c = rng.randint(0, 256, size=(256, 256, 3), dtype=np.uint8)
-    assert average_hash(a) != average_hash(c)
-    # tiny image works
-    assert isinstance(average_hash(np.zeros((1, 1, 1), np.uint8)), int)

@@ -35,12 +35,20 @@ def test_manifest_is_jvm_only(spark, fixture_dir):
     assert "*(1)" in plan  # whole-stage-codegen span marker
 
 
-def test_filter_pushdown_reaches_scan(spark, fixture_dir):
+def test_filter_pushdown_reaches_scan(spark, fixture_dir, tmp_path):
     from cogger_spark.fixtures import FIXTURE_DIR
     images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
     df = images.filter(F.col("fmt") == "raw").select("image_id", "w")
     plan = _plan(df)
     assert "PushedFilters" in plan and "fmt" in plan.split("PushedFilters", 1)[1], plan
+    # partitioned on fmt, the same filter prunes whole directories: the
+    # image table's partition pruning is a parquet scan's PartitionFilters
+    images.write.partitionBy("fmt").parquet(str(tmp_path / "by_fmt"))
+    parted = (spark.read.parquet(str(tmp_path / "by_fmt"))
+              .filter(F.col("fmt") == "raw").select("image_id", "w"))
+    plan = _plan(parted)
+    assert "fmt" in plan.split("PartitionFilters: [", 1)[1].split("]", 1)[0], plan
+    assert parted.count() == df.count() > 0
 
 
 def test_zonal_join_broadcasts_zones(spark, fixture_dir):
@@ -85,33 +93,6 @@ def test_pricing_summary_partial_aggregation(spark):
     plan = _plan(queries.q_pricing_summary(spark, SF))
     # Catalyst plans partial (map-side) + final hash aggregation
     assert plan.count("HashAggregate") >= 2, plan
-
-
-def test_bucketed_join_has_no_exchange(spark, fixture_dir, tmp_path):
-    """Both sides bucketed on the join key → SortMergeJoin without Exchange
-    (the pay-the-shuffle-once pattern for repeated image_id joins)."""
-    import pyspark.sql.functions as F
-    from cogger_spark.fixtures import FIXTURE_DIR
-    from cogger_spark.sources.bucketed import bucketed_join, write_bucketed
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-    meta = images.select("image_id", "w", "h", "fmt")
-    caps = images.select("image_id", "caption", "phash")
-    write_bucketed(meta, "t_meta", "image_id", buckets=8)
-    write_bucketed(caps, "t_caps", "image_id", buckets=8)
-    # at fixture sizes the planner would broadcast (also shuffle-free, but it
-    # bypasses bucketing); disable broadcast to expose the at-scale SMJ shape
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_meta", "t_caps", "image_id")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == images.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        spark.sql("DROP TABLE t_meta")
-        spark.sql("DROP TABLE t_caps")
 
 
 def test_exact_dedup_exchange_key_is_digest_not_text(spark):

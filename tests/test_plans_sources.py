@@ -1,12 +1,8 @@
-"""Checkpoint/resume, Iceberg-shim, streaming ingest, multimodal plumbing."""
-
-import numpy as np
-import pyspark.sql.functions as F
-import pytest
+"""Checkpoint/resume over the tile manifest, and COG files read back
+through the consumer-side reader."""
 
 from cogger_spark.operators.spatial import tile_manifest
 from cogger_spark.plans import checkpoint as ck
-from cogger_spark.sources import iceberg_shim as shim
 
 
 def _job(images):
@@ -39,392 +35,6 @@ def test_checkpoint_resume_equals_uninterrupted(spark, smoke_images, tmp_path):
     assert met.rows_out == a.count()
 
 
-def test_iceberg_shim_partition_pruning_and_time_travel(spark, smoke_images, tmp_path):
-    images = spark.read.parquet(smoke_images)
-    tbl = str(tmp_path / "img_table")
-    snap0 = shim.write_table(images.filter(F.col("fmt") == "raw"), tbl, n_buckets=4)
-    snap1 = shim.append(images.filter(F.col("fmt") == "deflate"), tbl, n_buckets=4)
-
-    latest = shim.read_table(spark, tbl)
-    assert latest.count() == images.count()
-
-    # time travel: snapshot 0 has only the raw rows
-    at0 = shim.read_table(spark, tbl, snapshot_id=snap0)
-    assert at0.count() == images.filter(F.col("fmt") == "raw").count()
-
-    # partition pruning: a fmt filter must prune to fmt=... directories
-    plan = latest.filter(F.col("fmt") == "raw")._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "fmt=raw" in plan or "PartitionFilters: [isnotnull(fmt" in plan, plan
-
-    snaps = shim.snapshots(spark, tbl).collect()
-    assert [s.operation for s in sorted(snaps, key=lambda s: s.sequence)] == \
-        ["overwrite", "append"]
-    assert {s.snapshot_id for s in snaps} == {snap0, snap1}
-
-    # bucket pruning: one image's bucket filter reads a subset of partitions
-    one = latest.filter(shim.bucket_for(F.col("image_id"), 4) == 0)
-    assert 0 < one.count() < images.count()
-
-
-def test_iceberg_shim_delete_where_cow(spark, smoke_images, tmp_path):
-    """Predicate DELETE: result equals a plain filter of the pre-delete
-    table; file-level stats pruning carries bounds-excluded files untouched
-    (the delete snapshot's rewritten set excludes them); earlier snapshots
-    keep the deleted rows; a provably-no-match delete is a metadata no-op."""
-    images = spark.read.parquet(smoke_images)
-    tbl = str(tmp_path / "del_table")
-    snap0 = shim.write_table(images, tbl, n_buckets=4)
-
-    snap1 = shim.delete_where(spark, tbl, [("fmt", "==", "raw")])
-    left = shim.read_table(spark, tbl)
-    want = images.filter(F.col("fmt") != "raw")
-    assert left.count() == want.count() > 0
-    assert left.filter(F.col("fmt") == "raw").count() == 0
-    # COW prune: only fmt=raw files were rewritten — the delete commit's
-    # removed list stays inside the fmt=raw directories
-    _, chain = shim._snapshot_files(tbl, None)
-    rec = next(r for r in chain if r["snapshot_id"] == snap1)
-    assert rec["operation"] == "delete" and rec["removed"]
-    assert all("fmt=raw" in f for f in rec["removed"])
-    # snapshot isolation: pre-delete snapshot still serves the raw rows
-    assert shim.read_table(spark, tbl, snapshot_id=snap0).count() == \
-        images.count()
-    # no-op: bounds prove no file can match -> current snapshot unchanged
-    n_snaps = len(chain)
-    assert shim.delete_where(spark, tbl,
-                             [("fmt", "==", "no_such_fmt")]) == snap1
-    assert len(shim._snapshot_files(tbl, None)[1]) == n_snaps
-    with pytest.raises(ValueError, match="conjunction"):
-        shim.delete_where(spark, tbl, [])
-
-
-def test_iceberg_shim_rollback_to_snapshot(spark, smoke_images, tmp_path):
-    """rollback_to restores an earlier state as a NEW commit: reads equal
-    the target snapshot, the rolled-back-over history stays
-    time-travelable, and subsequent writes continue from the restored
-    state."""
-    images = spark.read.parquet(smoke_images).orderBy("image_id")
-    tbl = str(tmp_path / "rb_table")
-    snap0 = shim.write_table(images.limit(10), tbl, n_buckets=4)
-    snap1 = shim.append(images.limit(20).subtract(images.limit(10)), tbl,
-                        n_buckets=4)
-    shim.delete_where(spark, tbl, [("fmt", "==", "raw")])
-
-    rb = shim.rollback_to(tbl, snap0)
-    ids_now = {r.image_id for r in
-               shim.read_table(spark, tbl).select("image_id").collect()}
-    ids_at0 = {r.image_id for r in
-               shim.read_table(spark, tbl, snapshot_id=snap0)
-               .select("image_id").collect()}
-    assert ids_now == ids_at0 and len(ids_now) == 10
-    # history preserved: the rolled-back-over append still time-travels
-    assert shim.read_table(spark, tbl, snapshot_id=snap1).count() == 20
-    _, chain = shim._snapshot_files(tbl, None)
-    assert chain[-1]["snapshot_id"] == rb
-    assert chain[-1]["operation"] == "rollback"
-    # the table continues from the restored state
-    shim.append(images.limit(25).subtract(images.limit(20)), tbl,
-                n_buckets=4)
-    assert shim.read_table(spark, tbl).count() == 15
-    with pytest.raises(KeyError):
-        shim.rollback_to(tbl, "definitely_missing")
-
-
-def test_iceberg_shim_time_travel_as_of_timestamp(spark, smoke_images,
-                                                  tmp_path):
-    """FOR SYSTEM_TIME AS OF: read_table(as_of=ts) resolves to the LAST
-    snapshot committed at or before ts; same-second commits resolve by
-    sequence; a ts before all retained history raises (like real Iceberg
-    after expiry). Commit times are pinned by rewriting the second-
-    resolution timestamps in the snapshot manifests to known values."""
-    import json
-
-    # orderBy before limit: a bare limit re-evaluates nondeterministically
-    # across the three jobs and the slices would overlap
-    images = spark.read.parquet(smoke_images).orderBy("image_id")
-    tbl = str(tmp_path / "asof_table")
-    shim.write_table(images.limit(10), tbl, n_buckets=4)
-    snap1 = shim.append(images.limit(20).subtract(images.limit(10)), tbl,
-                        n_buckets=4)
-    snap2 = shim.append(images.limit(25).subtract(images.limit(20)), tbl,
-                        n_buckets=4)
-
-    md = sorted((tmp_path / "asof_table" / "_shim_metadata")
-                .glob("snap_*.json"))
-    # snap0 at 01:00; snap1 and snap2 BOTH at 02:00 (same-second commits)
-    for p, ts in zip(md, ("2024-01-01T01:00:00Z", "2024-01-01T02:00:00Z",
-                          "2024-01-01T02:00:00Z")):
-        rec = json.loads(p.read_text())
-        rec["timestamp"] = ts
-        p.write_text(json.dumps(rec))
-
-    assert shim.read_table(spark, tbl,
-                           as_of="2024-01-01T01:30:00Z").count() == 10
-    # same-second tie: highest sequence (snap2) wins
-    assert shim.snapshot_as_of(tbl, "2024-01-01T02:00:00Z") == snap2
-    assert shim.read_table(spark, tbl,
-                           as_of="2024-01-01T02:00:00Z").count() == 25
-    assert shim.read_table(spark, tbl,
-                           as_of="2030-01-01T00:00:00Z").count() == 25
-    with pytest.raises(KeyError, match="no snapshot at or before"):
-        shim.snapshot_as_of(tbl, "2024-01-01T00:59:59Z")
-    with pytest.raises(ValueError, match="not both"):
-        shim.read_table(spark, tbl, snapshot_id=snap1,
-                        as_of="2024-01-01T02:00:00Z")
-
-
-def test_streaming_available_now_matches_batch(spark, smoke_images, tmp_path):
-    from cogger_spark.streaming.ingest import stream_tile_manifest
-    in_dir = str(tmp_path / "in")
-    spark.read.parquet(smoke_images).repartition(4).write.parquet(in_dir)
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    stream_tile_manifest(spark, in_dir, out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    want = tile_manifest(spark.read.parquet(in_dir), level=None)
-    assert got.count() == want.count()
-    assert got.exceptAll(want).count() == 0
-
-
-def test_multimodal_image_features_and_resize(spark, smoke_images):
-    from cogger_spark.operators.multimodal import image_features, resize_images
-    images = spark.read.parquet(smoke_images).limit(6)
-    feats = image_features(images).collect()
-    assert len(feats) == 6
-    for r in feats:
-        assert len(r.features) == 2 * r.n_bands
-        assert all(0.0 <= v <= 255.0 for v in r.features)
-    rs = resize_images(images, 32, 16).collect()
-    for r in rs:
-        assert r.w == 32 and r.h == 16 and r.fmt == "raw"
-        assert len(r.bytes) % (32 * 16) == 0
-
-
-def test_augment_images_deterministic_and_numpy_exact(spark, smoke_images):
-    """Training-time augmentation: the crop/flip equals a direct NumPy
-    replay of the emitted (crop_x, crop_y, flipped) metadata; two runs are
-    bit-identical (counter-based per-image draws, no RNG state — the
-    resumability property); undersized images are rejected loudly."""
-    from cogger_spark import fixtures
-    from cogger_spark.operators.multimodal import augment_images
-
-    images = (spark.read.parquet(smoke_images)
-              .filter("w >= 64 and h >= 64").limit(6))
-    a = {r.image_id: r for r in augment_images(images, 64, 48).collect()}
-    b = {r.image_id: r for r in augment_images(images, 64, 48).collect()}
-    assert len(a) == 6
-    flips = set()
-    for iid, r in a.items():
-        r2 = b[iid]
-        assert (bytes(r.bytes) == bytes(r2.bytes)
-                and (r.crop_x, r.crop_y, r.flipped)
-                == (r2.crop_x, r2.crop_y, r2.flipped))
-        i = fixtures.img_index(iid) if hasattr(fixtures, "img_index") else \
-            int(iid.split("_")[1])
-        w, h = fixtures.image_dims(i, fixtures.SMOKE_DIMS)
-        bands = fixtures.n_bands(i)
-        px = fixtures.make_pixels(i, w, h, bands, fixtures.has_mask(i))
-        want = px[r.crop_y:r.crop_y + 48, r.crop_x:r.crop_x + 64]
-        if r.flipped:
-            want = want[:, ::-1]
-        got = np.frombuffer(bytes(r.bytes), dtype=np.uint8).reshape(
-            48, 64, px.shape[2])
-        assert np.array_equal(got, want), iid
-        assert 0 <= r.crop_x <= w - 64 and 0 <= r.crop_y <= h - 48
-        flips.add(r.flipped)
-    assert flips == {True, False}  # both outcomes occur across the batch
-
-    tiny = spark.createDataFrame(
-        [("t0", np.zeros((8, 8, 1), np.uint8).tobytes(), 8, 8, "raw")],
-        "image_id string, bytes binary, w int, h int, fmt string")
-    with pytest.raises(Exception, match="smaller than crop"):
-        augment_images(tiny, 64, 48).collect()
-
-
-def test_multimodal_stub_raises(spark):
-    from cogger_spark.operators.multimodal import image_features
-    # png/jpeg are REAL now (functions/png.py, functions/jpeg.py); the
-    # declared stubs are the container/audio/video codecs
-    df = spark.createDataFrame(
-        [("x", b"\x00", 1, 1, "webp")],
-        "image_id string, bytes binary, w int, h int, fmt string")
-    with pytest.raises(Exception, match="codec library"):
-        image_features(df).collect()
-
-
-def test_multimodal_video_and_audio(spark):
-    from cogger_spark.operators.multimodal import audio_features, sample_frames
-    frame = np.arange(6 * 4 * 1, dtype=np.uint8).tobytes()
-    video = spark.createDataFrame(
-        [("v0", frame * 5, 4, 6, 1, "rawvideo")],
-        "video_id string, bytes binary, w int, h int, bands int, fmt string")
-    frames = sample_frames(video, every_k=2).collect()
-    assert [f.frame_idx for f in sorted(frames, key=lambda f: f.frame_idx)] == [0, 2, 4]
-    assert all(len(f.bytes) == 24 for f in frames)
-
-    pcm = (np.sin(np.linspace(0, 100, 4096)) * 1000).astype("<i2").tobytes()
-    audio = spark.createDataFrame(
-        [("a0", pcm, "pcm16")], "audio_id string, bytes binary, fmt string")
-    rms = audio_features(audio, window=1024).collect()[0]
-    assert rms.n_windows == 4
-    assert all(v > 0 for v in rms.rms)
-
-
-def test_streaming_watermark_window_counts(spark, tmp_path):
-    """Windowed+watermarked streaming agg over events equals the batch
-    rollup for all windows the watermark has closed."""
-    import pyspark.sql.functions as F
-    from cogger_spark.streaming.ingest import stream_event_counts
-    src = "/root/testdata/sf0.001/events.parquet"
-    in_dir = str(tmp_path / "ev_in")
-    spark.read.parquet(src).repartition(4).write.parquet(in_dir)
-    out = str(tmp_path / "ev_out")
-    ck = str(tmp_path / "ev_ck")
-    stream_event_counts(spark, in_dir, out, ck)
-    got = spark.read.parquet(out)
-    batch = (spark.read.parquet(in_dir)
-             .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-             .agg(F.count(F.lit(1)).alias("n_events"))
-             .select(F.col("win.start").alias("win_start"), "event_type",
-                     "n_events"))
-    # append mode emits only watermark-closed windows: every emitted row must
-    # match the batch rollup exactly, and most windows must have been emitted
-    j = (got.select("win_start", "event_type", "n_events").alias("g")
-         .join(batch.alias("b"), ["win_start", "event_type"]))
-    assert j.filter("g.n_events <> b.n_events").count() == 0
-    assert got.count() >= batch.count() - 8  # open tail windows withheld
-
-
-def test_stateful_streaming_dedup(spark, tmp_path):
-    """applyInPandasWithState dedup across micro-batches: exactly one output
-    row per distinct text, the smallest doc_id wins within a batch."""
-    from cogger_spark.streaming.stateful import stream_dedup
-    src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    # create duplicates across files so dedup must span micro-batches
-    dup = src.withColumn("doc_id", F.col("doc_id") + 100000)
-    in_dir = str(tmp_path / "sd_in")
-    src.repartition(3).write.parquet(in_dir)
-    dup.repartition(3).write.mode("append").parquet(in_dir)
-    out = str(tmp_path / "sd_out")
-    ck = str(tmp_path / "sd_ck")
-    stream_dedup(spark, in_dir, out, ck)
-    got = spark.read.parquet(out)
-    n_distinct = src.select("text").distinct().count()
-    assert got.count() == n_distinct
-    assert got.select("fp").distinct().count() == n_distinct
-
-
-def test_stream_cog_matches_batch(spark, smoke_images, tmp_path):
-    """Full COG pipeline per micro-batch: streamed blobs equal the batch run
-    (incremental ingest with the batch operators reused verbatim)."""
-    import hashlib
-    from cogger_spark.operators.tiling import cog_pipeline
-    from cogger_spark.streaming.ingest import stream_cog
-    in_dir = str(tmp_path / "sc_in")
-    spark.read.parquet(smoke_images).limit(12).repartition(3).write.parquet(in_dir)
-    out = str(tmp_path / "sc_out")
-    ck = str(tmp_path / "sc_ck")
-    stream_cog(spark, in_dir, out, ck)
-    got = {r.image_id: hashlib.md5(bytes(r.cog)).hexdigest()
-           for r in spark.read.parquet(out).collect()}
-    want = {r.image_id: hashlib.md5(bytes(r.cog)).hexdigest()
-            for r in cog_pipeline(spark.read.parquet(in_dir)).collect()}
-    assert got == want
-
-
-def test_compute_phash_duplicates_share_hash(spark, smoke_images):
-    """Fixture pattern repeats with period lcm(dims=8, bands=3, mask=5)... —
-    images 0 and 120 have identical pixels in the 240-row TEST fixture, but
-    the 50-row smoke set has no full-period duplicates; instead assert
-    determinism (two runs equal) and that same-content rows collide."""
-    import pyspark.sql.functions as F
-    from cogger_spark.operators.multimodal import compute_phash
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    ensure_test_fixtures()
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-    got = {r.image_id: r.computed_phash for r in compute_phash(images).collect()}
-    assert len(got) == 240
-    # period-120 duplicates share pixel content → equal hashes
-    assert got["img_00000000"] == got["img_00000120"]
-    assert got["img_00000007"] == got["img_00000127"]
-    # determinism
-    again = {r.image_id: r.computed_phash for r in compute_phash(images).collect()}
-    assert got == again
-
-
-def test_band_index_stats_vs_numpy(spark):
-    import numpy as np
-    from cogger_spark import fixtures
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
-    from cogger_spark.operators.multimodal import band_index_stats
-    ensure_test_fixtures()
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet")) \
-        .filter("image_id in ('img_00000001','img_00000002','img_00000000')")
-    got = {r.image_id: r for r in band_index_stats(images).collect()}
-    # img_00000000 is 1-band (bands cycle) → skipped
-    assert "img_00000000" not in got
-    for i in (1, 2):
-        iid = f"img_{i:08d}"
-        w, h = fixtures.image_dims(i)
-        bands = fixtures.n_bands(i)
-        if bands < 2:
-            assert iid not in got
-            continue
-        px = fixtures.make_pixels(i, w, h, bands, fixtures.has_mask(i))
-        a = px[:, :, 0].astype(np.float64)
-        b = px[:, :, 1].astype(np.float64)
-        denom = a + b
-        valid = denom > 0
-        vals = (a[valid] - b[valid]) / denom[valid]
-        r = got[iid]
-        assert r.n_valid == int(valid.sum())
-        assert abs(r.nd_mean - vals.mean()) < 1e-12
-        assert r.nd_min == vals.min() and r.nd_max == vals.max()
-
-
-def test_materialized_tiles_assemble_without_exchange(spark, fixture_dir):
-    """Persisted bucketed tiles: assembly (groupBy image_id) and image_id
-    joins read pre-clustered buckets — no Exchange in either plan, and the
-    assembled blobs equal the direct pipeline's."""
-    from cogger_spark.fixtures import FIXTURE_DIR
-    from cogger_spark.operators.tiling import assemble_cogs, tile_images
-    from cogger_spark.sources.bucketed import materialize_tiles
-
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet")).limit(8)
-    materialize_tiles(images, table="t_tiles_b", buckets=4, tile=512)
-    try:
-        tiles = spark.table("t_tiles_b")
-        assembled = assemble_cogs(tiles, tile=512)
-        plan = assembled._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        direct = {r.image_id: bytes(r.cog)
-                  for r in assemble_cogs(tile_images(images, tile=512),
-                                         tile=512).collect()}
-        persisted = {r.image_id: bytes(r.cog) for r in assembled.collect()}
-        assert persisted == direct
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_tiles_b")
-
-
-def test_stream_cog_files_matches_batch_convert(spark, smoke_images, tmp_path):
-    """Streaming file conversion: micro-batched convert_images writes the
-    same .tif files the one-shot batch sink produces."""
-    import pathlib
-    from cogger_spark.operators.tiling import assemble_cogs, tile_images
-    from cogger_spark.streaming.ingest import stream_cog_files
-    in_dir = str(tmp_path / "scf_in")
-    src = spark.read.parquet(smoke_images).limit(10)
-    src.repartition(3).write.parquet(in_dir)
-    out = tmp_path / "scf_out"
-    stream_cog_files(spark, in_dir, str(out), str(tmp_path / "scf_ck"))
-    want = {r.image_id: bytes(r.cog)
-            for r in assemble_cogs(tile_images(src, tile=512),
-                                   tile=512).collect()}
-    files = {f.stem: f.read_bytes() for f in pathlib.Path(out).glob("*.tif")}
-    assert files == want
-
-
 def test_cog_files_roundtrip_through_cogread(spark, smoke_images, tmp_path):
     """Composition: convert to files → read the directory back (tiffdir
     source) → header audit + thumbnails run directly on the files, with
@@ -443,783 +53,3 @@ def test_cog_files_roundtrip_through_cogread(spark, smoke_images, tmp_path):
     thumbs = extract_thumbnails(cogs)
     assert thumbs.filter(F.col("thumb").isNull()).count() == 0
     assert thumbs.count() == 6
-
-
-def test_iceberg_shim_upsert_copy_on_write(spark, smoke_images, tmp_path):
-    """Row-level MERGE at Iceberg's file granularity: matched keys replaced,
-    unmatched inserted, untouched bucket files carried into the new snapshot
-    verbatim (never rewritten), earlier snapshots still isolated."""
-    images = spark.read.parquet(smoke_images).select(
-        "image_id", "fmt", "w", "h", "caption")
-    tbl = str(tmp_path / "cow_table")
-    snap0 = shim.write_table(images, tbl, n_buckets=4)
-    files0 = set(f for f, in
-                 ((r.file,) for r in shim.files_table(spark, tbl).collect()))
-
-    ids = [r.image_id for r in images.select("image_id").limit(3).collect()]
-    upd = (images.filter(F.col("image_id").isin(ids))
-           .withColumn("caption", F.lit("CORRECTED")))
-    new = spark.createDataFrame(
-        [("img_zz999", "raw", 8, 8, "brand new")],
-        "image_id string, fmt string, w int, h int, caption string")
-    snap1 = shim.upsert(spark, upd.unionByName(new), tbl, n_buckets=4)
-
-    latest = shim.read_table(spark, tbl)
-    assert latest.count() == images.count() + 1
-    got = {r.image_id: r.caption for r in latest.collect()}
-    assert all(got[i] == "CORRECTED" for i in ids)
-    assert got["img_zz999"] == "brand new"
-
-    # untouched buckets' files are reused, affected buckets' replaced
-    files1 = set(r.file for r in shim.files_table(spark, tbl).collect())
-    touched = {r[0] for r in upd.unionByName(new)
-               .select(shim.bucket_for(F.col("image_id"), 4)).distinct().collect()}
-    carried = files0 & files1
-    assert carried, "untouched files must carry over"
-    assert all(not any(f"/p_bucket={b}/" in f"/{f}" for b in touched)
-               for f in carried)
-    # snapshot isolation: the pre-upsert snapshot still shows original rows
-    at0 = {r.image_id: r.caption
-           for r in shim.read_table(spark, tbl, snapshot_id=snap0).collect()}
-    assert all(at0[i] != "CORRECTED" for i in ids)
-    assert "img_zz999" not in at0
-    assert snap1 != snap0
-
-
-def test_iceberg_shim_incremental_read(spark, smoke_images, tmp_path):
-    """Incremental scan: rows added strictly after a snapshot, and only
-    those (the downstream-incremental-job feed)."""
-    import pytest as _pytest
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w", "h")
-    tbl = str(tmp_path / "inc_table")
-    first = images.limit(10)
-    snap0 = shim.write_table(first, tbl, n_buckets=4)
-    rest = images.join(first.select("image_id"), "image_id", "left_anti")
-    shim.append(rest, tbl, n_buckets=4)
-    inc = shim.incremental_read(spark, tbl, from_snapshot=snap0)
-    assert inc.count() == rest.count()
-    got = {r.image_id for r in inc.select("image_id").collect()}
-    assert got == {r.image_id for r in rest.select("image_id").collect()}
-    with _pytest.raises(KeyError):
-        shim.incremental_read(spark, tbl, from_snapshot="nope")
-
-
-def test_iceberg_shim_incremental_empty_range_and_bad_to(spark, smoke_images,
-                                                         tmp_path):
-    """'Nothing added since from_snapshot' is a normal polling state → an
-    EMPTY frame with the table schema, not an error; an unknown to_snapshot
-    raises the same KeyError as an unknown from_snapshot (ADVICE r3)."""
-    import pytest as _pytest
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "poll_table")
-    snap0 = shim.write_table(images, tbl, n_buckets=4)
-    empty = shim.incremental_read(spark, tbl, from_snapshot=snap0)
-    assert empty.count() == 0
-    assert {"image_id", "fmt", "w"} <= set(empty.columns)
-    with _pytest.raises(KeyError):
-        shim.incremental_read(spark, tbl, from_snapshot=snap0,
-                              to_snapshot="nope")
-
-
-def test_iceberg_shim_schema_evolution_add_column(spark, smoke_images,
-                                                  tmp_path):
-    """Iceberg add-column semantics (VERDICT r3 #8): an append may carry a
-    new column; snapshots pinned before the append read without it, the
-    latest read exposes it with nulls backfilled for pre-evolution rows,
-    and the snapshot JSON records each writer's schema."""
-    import pyspark.sql.functions as F
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "evo_table")
-    first = images.limit(10)
-    snap0 = shim.write_table(first, tbl, n_buckets=4)
-    rest = (images.join(first.select("image_id"), "image_id", "left_anti")
-            .withColumn("license", F.lit("CC-BY-4.0")))
-    shim.append(rest, tbl, n_buckets=4)
-
-    old = shim.read_table(spark, tbl, snapshot_id=snap0)
-    assert "license" not in old.columns
-
-    latest = shim.read_table(spark, tbl)
-    assert "license" in latest.columns
-    assert latest.count() == images.count()
-    assert latest.filter(F.col("license").isNull()).count() == first.count()
-    assert (latest.filter(F.col("license") == "CC-BY-4.0").count()
-            == rest.count())
-
-    cols0 = {c for c, _ in shim._snapshot_files(tbl, None)[1][0]["schema"]}
-    cols1 = {c for c, _ in shim._snapshot_files(tbl, None)[1][1]["schema"]}
-    assert "license" not in cols0 and "license" in cols1
-
-
-def test_iceberg_shim_compact_and_expire(spark, smoke_images, tmp_path):
-    """Table maintenance (real-Iceberg rewrite_data_files + expireSnapshots
-    semantics): many small appends → compaction rewrites the current rows
-    into a fresh layout as a new snapshot (latest rows identical, earlier
-    snapshots still readable), then expiry drops old snapshot metadata and
-    deletes every file no surviving snapshot references — time travel to
-    expired snapshots stops working, the survivor keeps its exact rows."""
-    import pytest as _pytest
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "maint_table")
-    rows = images.collect()
-    snap0 = shim.write_table(spark.createDataFrame(rows[:5], images.schema),
-                             tbl, n_buckets=4)
-    for i in range(5, len(rows), 5):
-        shim.append(spark.createDataFrame(rows[i:i + 5], images.schema),
-                    tbl, n_buckets=4)
-    before = {r.image_id for r in shim.read_table(spark, tbl).collect()}
-    n_files_before = shim.files_table(spark, tbl).count()
-
-    shim.compact_data_files(spark, tbl, n_buckets=4)
-    after = {r.image_id for r in shim.read_table(spark, tbl).collect()}
-    assert after == before
-    n_files_after = shim.files_table(spark, tbl).count()
-    assert n_files_after < n_files_before
-    # pre-compaction snapshot still time-travels (files not yet reclaimed)
-    assert shim.read_table(spark, tbl, snapshot_id=snap0).count() == 5
-
-    # keep_last=2 keeps a PRE-compaction snapshot alive, whose fold-down
-    # still references every old file — nothing may be deleted yet
-    res2 = shim.expire_snapshots(tbl, keep_last=2)
-    assert res2["expired"] == 9 and res2["deleted_files"] == 0
-    assert shim.read_table(spark, tbl).count() == len(rows)
-    # keep_last=1 leaves only the compaction snapshot → every pre-compaction
-    # file is unreferenced and reclaimed
-    res = shim.expire_snapshots(tbl, keep_last=1)
-    assert res["expired"] == 1 and res["deleted_files"] > 0
-    # latest unchanged; expired snapshot gone; survivor folded correctly
-    assert {r.image_id
-            for r in shim.read_table(spark, tbl).collect()} == before
-    with _pytest.raises(KeyError):
-        shim.read_table(spark, tbl, snapshot_id=snap0)
-    # every file the survivors reference still exists on disk
-    import pathlib as _pl
-    for r in shim.files_table(spark, tbl).collect():
-        assert (_pl.Path(tbl) / r.file).exists()
-
-
-def test_iceberg_shim_column_stats_data_skipping(spark, smoke_images,
-                                                 tmp_path):
-    """File-level min/max data skipping (VERDICT r4 #2 — real Iceberg's
-    manifest lower/upper_bounds pruning): a selective filter must plan
-    strictly fewer files than the snapshot references, purely from footer
-    stats recorded at commit, and the pruned read must return rows
-    IDENTICAL to an unpruned read + filter."""
-    images = spark.read.parquet(smoke_images).select(
-        "image_id", "fmt", "w", "h", "caption")
-    tbl = str(tmp_path / "stats_table")
-    shim.write_table(images, tbl, n_buckets=4)
-
-    all_files, _ = shim.plan_files(tbl)
-    ws = sorted(r.w for r in images.select("w").distinct().collect())
-    hi = ws[-1]
-    kept, skipped = shim.plan_files(tbl, filters=[("w", ">=", hi)])
-    assert skipped, "selective filter must skip at least one file"
-    assert set(kept) | set(skipped) == set(all_files)
-    assert len(kept) < len(all_files)
-
-    pruned = shim.read_table(spark, tbl, filters=[("w", ">=", hi)])
-    want = shim.read_table(spark, tbl).filter(F.col("w") >= hi)
-    assert pruned.count() == want.count() > 0
-    assert pruned.exceptAll(want).count() == 0
-    assert want.exceptAll(pruned).count() == 0
-
-    # string bounds prune too (one image_id → its bucket's files only)
-    one = images.select("image_id").orderBy("image_id").limit(1).collect()[0][0]
-    kept1, skipped1 = shim.plan_files(tbl, filters=[("image_id", "==", one)])
-    assert skipped1 and len(kept1) < len(all_files)
-    got = shim.read_table(spark, tbl,
-                          filters=[("image_id", "==", one)]).collect()
-    assert len(got) == 1 and got[0].image_id == one
-
-    # an always-false predicate prunes EVERYTHING yet keeps the schema
-    none = shim.read_table(spark, tbl, filters=[("w", ">", hi)])
-    assert none.count() == 0
-    assert set(none.columns) >= {"image_id", "fmt", "w", "h", "caption"}
-
-
-def test_iceberg_shim_upsert_across_schema_evolution(spark, smoke_images,
-                                                     tmp_path):
-    """ADVICE r4 (medium): an upsert whose affected buckets span pre- and
-    post-add-column snapshots must null-backfill like read_table instead of
-    raising AnalysisException."""
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "evo_upsert")
-    first = images.limit(10)
-    shim.write_table(first, tbl, n_buckets=2)
-    rest = (images.join(first.select("image_id"), "image_id", "left_anti")
-            .withColumn("license", F.lit("CC-BY-4.0")))
-    shim.append(rest, tbl, n_buckets=2)
-
-    ids = [r.image_id for r in images.select("image_id").limit(4).collect()]
-    upd = (images.filter(F.col("image_id").isin(ids))
-           .withColumn("license", F.lit("UPDATED")))
-    shim.upsert(spark, upd, tbl, n_buckets=2)  # r4: AnalysisException here
-
-    latest = shim.read_table(spark, tbl)
-    assert latest.count() == images.count()
-    got = {r.image_id: r.license for r in latest.collect()}
-    assert all(got[i] == "UPDATED" for i in ids)
-
-
-def _duckdb_merge_mirror(tgt_rows, src_rows, cols, matched_sql,
-                         when_matched):
-    """DuckDB mirror of MERGE INTO ... ON t.image_id = s.image_id
-    WHEN MATCHED [AND cond] THEN UPDATE SET * / DELETE
-    WHEN NOT MATCHED THEN INSERT * (duckdb 1.0 has no MERGE statement, so
-    the equivalent LEFT JOIN + ANTI JOIN formulation is the oracle)."""
-    import duckdb
-    con = duckdb.connect()
-    con.execute(f"CREATE TABLE t ({', '.join(c + ' ' + ty for c, ty in cols)})")
-    con.execute(f"CREATE TABLE s ({', '.join(c + ' ' + ty for c, ty in cols)})")
-    con.executemany(
-        f"INSERT INTO t VALUES ({', '.join('?' for _ in cols)})", tgt_rows)
-    con.executemany(
-        f"INSERT INTO s VALUES ({', '.join('?' for _ in cols)})", src_rows)
-    fired = f"(s.image_id IS NOT NULL AND ({matched_sql or 'TRUE'}))"
-    names = [c for c, _ in cols]
-    if when_matched == "delete":
-        upd = (f"SELECT {', '.join('t.' + c for c in names)} "
-               f"FROM t LEFT JOIN s ON t.image_id = s.image_id "
-               f"WHERE NOT {fired}")
-    else:
-        sel = ", ".join(
-            f"CASE WHEN {fired} THEN s.{c} ELSE t.{c} END AS {c}"
-            for c in names)
-        upd = (f"SELECT {sel} FROM t LEFT JOIN s "
-               f"ON t.image_id = s.image_id")
-    q = (f"{upd} UNION ALL SELECT {', '.join('s.' + c for c in names)} "
-         f"FROM s ANTI JOIN t ON s.image_id = t.image_id")
-    out = con.execute(f"SELECT * FROM ({q}) ORDER BY image_id").fetchall()
-    con.close()
-    return out
-
-
-def test_iceberg_shim_merge_into_matches_duckdb(spark, smoke_images,
-                                                tmp_path):
-    """Predicate-based row-level MERGE (VERDICT r4 #5): update-matched with
-    an extra ON-matched condition + insert-unmatched must equal the
-    equivalent DuckDB formulation over the mirrored rows; COW file
-    granularity (untouched buckets carried) and snapshot isolation hold."""
-    images = (spark.read.parquet(smoke_images)
-              .select("image_id", "fmt", "w", "h", "caption")
-              .orderBy("image_id").limit(20))
-    tbl = str(tmp_path / "merge_table")
-    snap0 = shim.write_table(images, tbl, n_buckets=4)
-    files0 = {r.file for r in shim.files_table(spark, tbl).collect()}
-
-    ids = [r.image_id for r in images.select("image_id")
-           .orderBy("image_id").limit(6).collect()]
-    src = (images.filter(F.col("image_id").isin(ids))
-           .withColumn("caption", F.lit("MERGED"))
-           .withColumn("w", F.col("w") + 1))
-    new = spark.createDataFrame(
-        [("img_merge_new", "raw", 8, 8, "inserted")], images.schema)
-    src = src.unionByName(new)
-
-    # only rows with even h update (the predicate upsert can't express)
-    shim.merge_into(spark, src, tbl, on="image_id",
-                    matched_condition="t.h % 2 = 0")
-
-    cols = [("image_id", "VARCHAR"), ("fmt", "VARCHAR"), ("w", "INTEGER"),
-            ("h", "INTEGER"), ("caption", "VARCHAR")]
-    want = _duckdb_merge_mirror(
-        [tuple(r) for r in images.collect()],
-        [tuple(r) for r in src.collect()],
-        cols, "t.h % 2 = 0", "update")
-    got = [tuple(r) for r in
-           shim.read_table(spark, tbl)
-           .select("image_id", "fmt", "w", "h", "caption")
-           .orderBy("image_id").collect()]
-    assert got == want
-
-    # file granularity: untouched buckets carried verbatim
-    files1 = {r.file for r in shim.files_table(spark, tbl).collect()}
-    touched = {r[0] for r in
-               src.select(shim.bucket_for(F.col("image_id"), 4))
-               .distinct().collect()}
-    carried = files0 & files1
-    for f in carried:
-        assert not any(f"/p_bucket={b}/" in f"/{f}" for b in touched)
-    # snapshot isolation: pre-merge snapshot unchanged
-    at0 = shim.read_table(spark, tbl, snapshot_id=snap0)
-    assert at0.filter(F.col("caption") == "MERGED").count() == 0
-
-
-def test_iceberg_shim_merge_delete_and_ignore(spark, smoke_images, tmp_path):
-    """WHEN MATCHED DELETE + WHEN NOT MATCHED ignore — vs the DuckDB
-    anti-join mirror."""
-    images = (spark.read.parquet(smoke_images)
-              .select("image_id", "fmt", "w", "h", "caption")
-              .orderBy("image_id").limit(15))
-    tbl = str(tmp_path / "merge_del")
-    shim.write_table(images, tbl, n_buckets=4)
-    ids = [r.image_id for r in images.select("image_id")
-           .orderBy("image_id").limit(5).collect()]
-    src = images.filter(F.col("image_id").isin(ids))
-    new = spark.createDataFrame(
-        [("img_ignore_me", "raw", 8, 8, "never lands")], images.schema)
-    shim.merge_into(spark, src.unionByName(new), tbl, on="image_id",
-                    when_matched="delete", when_not_matched="ignore")
-    cols = [("image_id", "VARCHAR"), ("fmt", "VARCHAR"), ("w", "INTEGER"),
-            ("h", "INTEGER"), ("caption", "VARCHAR")]
-    want = _duckdb_merge_mirror(
-        [tuple(r) for r in images.collect()],
-        [tuple(r) for r in src.unionByName(new).collect()],
-        cols, None, "delete")
-    want = [r for r in want if r[0] != "img_ignore_me"]  # ignore inserts
-    got = [tuple(r) for r in
-           shim.read_table(spark, tbl)
-           .select("image_id", "fmt", "w", "h", "caption")
-           .orderBy("image_id").collect()]
-    assert got == want
-
-
-def test_streaming_sessionize_matches_batch(spark, tmp_path):
-    """Streaming sessionization (VERDICT r4 #7) must equal the batch
-    q_events_sessionize rollups session-for-session. Input files are
-    mtime-ordered micro-batches; two far-future sentinel 'flush' events
-    advance the watermark so every REAL session closes and emits before the
-    AvailableNow drain stops (the standard finite-stream flush idiom —
-    a live stream needs no sentinels, sessions close as time advances)."""
-    import os
-
-    import pandas as pd
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from cogger_spark import queries
-    from cogger_spark.streaming.ingest import stream_sessionize
-
-    src = "/root/testdata/sf0.001/events.parquet"
-    tbl = pq.read_table(src)
-    pdf = tbl.to_pandas().sort_values("ts").reset_index(drop=True)
-    in_dir = tmp_path / "ss_in"
-    in_dir.mkdir()
-    chunks = [pdf.iloc[i::3].sort_values("ts") for i in range(3)]
-    max_ts = pdf["ts"].max()
-    for k in (1, 2):  # sentinel flush batches
-        chunks.append(pd.DataFrame({
-            "event_id": [-k], "ts": [max_ts + pd.Timedelta(days=365 * k)],
-            "user_id": [-1], "event_type": ["flush"], "value": [0.0],
-            "props": [""]}))
-    for i, c in enumerate(chunks):
-        p = in_dir / f"batch_{i:02d}.parquet"
-        pq.write_table(pa.Table.from_pandas(c, schema=tbl.schema,
-                                            preserve_index=False), p)
-        os.utime(p, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-
-    out = str(tmp_path / "ss_out")
-    ck = str(tmp_path / "ss_ck")
-    # watermark wider than the data span: file arrival order can then never
-    # drop a 'late' event; closure is driven by the sentinels
-    stream_sessionize(spark, str(in_dir), out, ck, watermark="40 days")
-
-    got = {(r.user_id, r.first_epoch): (r.n_events, r.sum_value)
-           for r in spark.read.parquet(out)
-           .filter(F.col("user_id") >= 0).collect()}
-    want = {(r.user_id, r.first_epoch): (r.n_events, r.sum_value)
-            for r in queries.q_events_sessionize(
-                spark, "/root/testdata/sf0.001").collect()}
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k][0] == want[k][0], k
-        assert abs(got[k][1] - want[k][1]) < 1e-6, k
-
-
-def test_iceberg_shim_partition_spec_evolution(spark, smoke_images, tmp_path):
-    """Iceberg partition-spec evolution (updateSpec — metadata-only): after
-    evolving bucket(image_id)%4 → %8, old files keep their layout, appends
-    pick up the new spec automatically, and upsert judges each file under the
-    spec of the snapshot that WROTE it — keys in old-layout files are found
-    via %4, keys in new-layout files via %8."""
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "spec_evo")
-    first = images.orderBy("image_id").limit(20)
-    shim.write_table(first, tbl, n_buckets=4)
-    assert shim._table_spec(tbl)[0] == 4
-
-    shim.evolve_partition_spec(tbl, n_buckets=8)
-    assert shim._table_spec(tbl)[0] == 8
-
-    rest = images.join(first.select("image_id"), "image_id", "left_anti")
-    shim.append(rest, tbl)  # derives the evolved spec
-    files = [r.file for r in shim.files_table(spark, tbl).collect()]
-    old_roots = {f.split("/", 1)[0] for f in files if "/p_bucket=" in f}
-    assert len(old_roots) == 2  # one data dir per layout
-    latest = shim.read_table(spark, tbl)
-    assert latest.count() == images.count()
-
-    # upsert keys that live in BOTH layouts
-    ids = ([r.image_id for r in first.select("image_id").limit(2).collect()]
-           + [r.image_id for r in rest.select("image_id")
-              .orderBy("image_id").limit(2).collect()])
-    upd = (images.filter(F.col("image_id").isin(ids))
-           .withColumn("w", F.lit(-1)))
-    shim.upsert(spark, upd, tbl)
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    assert len(got) == images.count()
-    assert all(got[i] == -1 for i in ids)
-
-    # merge with a predicate across both layouts
-    src = (images.filter(F.col("image_id").isin(ids))
-           .withColumn("w", F.lit(-2)))
-    shim.merge_into(spark, src, tbl, on="image_id",
-                    matched_condition="t.w = -1")
-    got2 = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    assert all(got2[i] == -2 for i in ids)
-    assert len(got2) == images.count()
-
-
-def test_iceberg_shim_randomized_model_equivalence(spark, tmp_path):
-    """Model-based randomized check: a seeded random interleaving of
-    append / upsert / merge_into(update|delete) / delete_where /
-    rollback_to / evolve_partition_spec / compact_data_files /
-    expire_snapshots must leave the table's latest read equal to a plain
-    Python dict model applying the same operations — across bucket-spec
-    changes, schema evolution, and history rewinds. Three seeds, ~10 ops
-    each."""
-    import random
-
-    def run_seed(seed, tbl):
-        rng = random.Random(seed)
-        model = {}  # image_id -> (fmt, w)
-        history = []  # (snapshot_id, model copy) at each commit
-
-        def mk_df(rows):
-            return spark.createDataFrame(
-                [(i, f, w) for i, (f, w) in rows.items()],
-                "image_id string, fmt string, w int")
-
-        init = {f"img_{seed}_{i:03d}": (rng.choice(["raw", "deflate"]),
-                                        rng.randrange(1, 100))
-                for i in range(20)}
-        model.update(init)
-        snap = shim.write_table(mk_df(init), tbl,
-                                n_buckets=rng.choice([2, 4]))
-        history.append((snap, dict(model)))
-
-        for _step in range(10):
-            op = rng.choice(["append", "upsert", "merge_upd", "merge_del",
-                             "delete_where", "rollback",
-                             "evolve", "compact", "expire"])
-            if op == "append":
-                new = {f"img_{seed}_a{_step}_{i}": ("raw", rng.randrange(100))
-                       for i in range(rng.randrange(1, 5))}
-                model.update(new)
-                shim.append(mk_df(new), tbl)
-            elif op == "upsert":
-                ids = rng.sample(sorted(model), min(4, len(model)))
-                rows = {i: (model[i][0], -_step) for i in ids}
-                rows[f"img_{seed}_u{_step}"] = ("raw", 999)
-                model.update(rows)
-                shim.upsert(spark, mk_df(rows), tbl)
-            elif op in ("merge_upd", "merge_del"):
-                ids = rng.sample(sorted(model), min(3, len(model)))
-                rows = {i: (model[i][0], -100 - _step) for i in ids}
-                rows[f"img_{seed}_m{_step}"] = ("deflate", 777)
-                cond = "t.w >= 0"
-                if op == "merge_upd":
-                    for i in ids:
-                        if model[i][1] >= 0:
-                            model[i] = rows[i]
-                    model[f"img_{seed}_m{_step}"] = rows[f"img_{seed}_m{_step}"]
-                    shim.merge_into(spark, mk_df(rows), tbl, on="image_id",
-                                    matched_condition=cond)
-                else:
-                    for i in ids:
-                        if model[i][1] >= 0:
-                            del model[i]
-                    shim.merge_into(spark, mk_df(rows), tbl, on="image_id",
-                                    matched_condition=cond,
-                                    when_matched="delete",
-                                    when_not_matched="ignore")
-            elif op == "delete_where":
-                # w < t deletes exactly the model rows with w < t (no nulls
-                # in this schema); may be a metadata no-op when stats prove
-                # no file matches
-                t = rng.randrange(-150, 150)
-                for i in [i for i, (_, w) in model.items() if w < t]:
-                    del model[i]
-                shim.delete_where(spark, tbl, [("w", "<", t)])
-            elif op == "rollback":
-                # to a random still-retained snapshot; expired targets are
-                # skipped (KeyError is the documented contract)
-                tgt, saved = rng.choice(history)
-                try:
-                    shim.rollback_to(tbl, tgt)
-                except KeyError:
-                    pass
-                else:
-                    model = dict(saved)
-            elif op == "evolve":
-                shim.evolve_partition_spec(tbl,
-                                           n_buckets=rng.choice([2, 4, 8]))
-            elif op == "compact":
-                shim.compact_data_files(
-                    spark, tbl, n_buckets=shim._table_spec(tbl)[0])
-            elif op == "expire":
-                shim.expire_snapshots(tbl, keep_last=rng.choice([1, 2]))
-            latest = shim._snapshot_files(tbl, None)[1][-1]["snapshot_id"]
-            history.append((latest, dict(model)))
-            got = {r.image_id: (r.fmt, r.w)
-                   for r in shim.read_table(spark, tbl).collect()}
-            assert got == model, f"seed={seed} step={_step} op={op}"
-
-    for seed in (7, 23, 99):
-        run_seed(seed, str(tmp_path / f"model_{seed}"))
-
-
-def test_iceberg_shim_merge_rejects_duplicate_source_keys(spark,
-                                                          smoke_images,
-                                                          tmp_path):
-    """Iceberg MERGE raises on multi-matching source rows; the shim enforces
-    the same contract for merge_into AND upsert."""
-    import pytest as _pytest
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "dup_src")
-    shim.write_table(images.orderBy("image_id").limit(10), tbl, n_buckets=2)
-    one = images.orderBy("image_id").limit(1)
-    dup_src = one.unionByName(one.withColumn("w", F.col("w") + 1))
-    with _pytest.raises(ValueError, match="multiple source rows"):
-        shim.merge_into(spark, dup_src, tbl, on="image_id")
-    with _pytest.raises(ValueError, match="multiple source rows"):
-        shim.upsert(spark, dup_src, tbl)
-
-
-def test_iceberg_shim_cow_key_range_pruning(spark, tmp_path):
-    """COW key-range pruning: a file whose manifest [min,max] bounds for the
-    key exclude the whole source key range is carried untouched even when
-    its bucket matches — fewer files rewritten, rows identical."""
-    rows = [(f"img_{i:04d}", "raw", i) for i in range(40)]
-    df = spark.createDataFrame(rows, "image_id string, fmt string, w int")
-    tbl = str(tmp_path / "range_prune")
-    # n_buckets=1: every file shares the single bucket, so any rewrite
-    # avoidance must come from the key bounds, not bucket pruning
-    shim.write_table(spark.createDataFrame(rows[:20], df.schema), tbl,
-                     n_buckets=1)
-    shim.append(spark.createDataFrame(rows[20:], df.schema), tbl)
-    files_before = {r.file for r in shim.files_table(spark, tbl).collect()}
-
-    upd = (spark.createDataFrame(rows[:3], df.schema)
-           .withColumn("w", F.lit(-1)))
-    shim.upsert(spark, upd, tbl)
-    files_after = {r.file for r in shim.files_table(spark, tbl).collect()}
-    # the second snapshot's file holds img_0020..img_0039 — disjoint from
-    # the source range img_0000..img_0002 — and must be carried verbatim
-    carried = files_before & files_after
-    assert any("data_" in f for f in carried), "range-pruned file not carried"
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    assert len(got) == 40
-    assert all(got[f"img_{i:04d}"] == -1 for i in range(3))
-    assert all(got[f"img_{i:04d}"] == i for i in range(3, 40))
-
-
-def test_streaming_upsert_into_shim_matches_batch(spark, smoke_images,
-                                                  tmp_path):
-    """CDC-style streaming ingestion: micro-batches MERGEd into the shim
-    table must converge to the same rows a single batch upsert produces —
-    later arrivals for a key win, new keys insert, every micro-batch is a
-    time-travelable snapshot."""
-    from cogger_spark.streaming.ingest import stream_upsert_table
-    images = (spark.read.parquet(smoke_images)
-              .select("image_id", "fmt", "w").orderBy("image_id"))
-    tbl = str(tmp_path / "cdc_table")
-    base = images.limit(20)
-    shim.write_table(base, tbl, n_buckets=4)
-
-    # CDC feed: corrections for 5 existing keys + 6 brand-new keys, split
-    # across files so the merge spans micro-batches; a later file carries a
-    # second correction for one key (the last write must win)
-    ids = [r.image_id for r in base.select("image_id").limit(5).collect()]
-    upd1 = (images.filter(F.col("image_id").isin(ids))
-            .withColumn("w", F.lit(-1)))
-    new = spark.createDataFrame(
-        [(f"img_cdc_{i}", "raw", 100 + i) for i in range(6)], base.schema)
-    upd2 = (images.filter(F.col("image_id") == ids[0])
-            .withColumn("w", F.lit(-2)))
-    in_dir = tmp_path / "cdc_in"
-    in_dir.mkdir()
-    import os
-    for i, df in enumerate([upd1, new, upd2]):
-        d = str(in_dir / f"f{i}")
-        df.coalesce(1).write.parquet(d)
-        for j, p in enumerate(sorted(
-                q for q in (in_dir / f"f{i}").rglob("*.parquet"))):
-            dst = in_dir / f"cdc_{i:02d}_{j}.parquet"
-            p.rename(dst)
-            os.utime(dst, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
-        import shutil
-        shutil.rmtree(d)
-
-    stream_upsert_table(spark, str(in_dir), tbl,
-                        str(tmp_path / "cdc_ck"), max_files_per_trigger=1)
-
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    assert len(got) == 26
-    assert got[ids[0]] == -2          # second correction won
-    assert all(got[i] == -1 for i in ids[1:])
-    assert all(got[f"img_cdc_{i}"] == 100 + i for i in range(6))
-    # each micro-batch committed a snapshot (1 create + 3 merges)
-    assert shim.snapshots(spark, tbl).count() == 4
-
-
-def test_shim_filter_pruning_soundness_randomized(spark, tmp_path):
-    """Property: for random tables and random filter conjunctions,
-    read_table(filters=...) returns exactly the rows of an unpruned read +
-    filter — file skipping may only remove files PROVEN irrelevant."""
-    import random
-    rng = random.Random(4242)
-    rows = [(f"img_{i:03d}", rng.choice(["raw", "deflate"]),
-             rng.randrange(0, 1000)) for i in range(60)]
-    df = spark.createDataFrame(rows, "image_id string, fmt string, w int")
-    tbl = str(tmp_path / "prune_prop")
-    shim.write_table(df, tbl, n_buckets=4)
-    shim.append(spark.createDataFrame(
-        [(f"img_x{i:03d}", "raw", rng.randrange(0, 1000)) for i in range(20)],
-        df.schema), tbl)
-    full = shim.read_table(spark, tbl)
-    for _trial in range(6):
-        col = rng.choice(["w", "image_id", "fmt"])
-        if col == "w":
-            f = ("w", rng.choice(["<", "<=", ">", ">=", "=="]),
-                 rng.randrange(0, 1000))
-        elif col == "fmt":
-            f = ("fmt", "in", rng.sample(["raw", "deflate"], 1))
-        else:
-            f = ("image_id", rng.choice([">=", "<"]),
-                 f"img_{rng.randrange(100):03d}")
-        pruned = shim.read_table(spark, tbl, filters=[f])
-        want = shim._residual_filter(full, [f])
-        assert pruned.count() == want.count(), f
-        assert pruned.exceptAll(want).count() == 0, f
-        assert want.exceptAll(pruned).count() == 0, f
-
-
-def test_iceberg_shim_write_after_expire_keeps_sequence_order(spark,
-                                                              tmp_path):
-    """Regression (r5 self-review, verified repro): sequence numbers must
-    stay monotone PAST expiry. With count-derived sequences, the first write
-    after expire_snapshots reused a number BELOW the survivor's, sorted
-    before it in the chain, and the survivor's fold re-added every replaced
-    file — resurrecting old rows and duplicating keys."""
-    rows = [(f"img_{i:02d}", "raw", i) for i in range(10)]
-    df = spark.createDataFrame(rows, "image_id string, fmt string, w int")
-    tbl = str(tmp_path / "seq_after_expire")
-    shim.write_table(spark.createDataFrame(rows[:4], df.schema), tbl,
-                     n_buckets=2)
-    shim.append(spark.createDataFrame(rows[4:7], df.schema), tbl)
-    shim.append(spark.createDataFrame(rows[7:], df.schema), tbl)
-    shim.expire_snapshots(tbl, keep_last=1)
-
-    upd = spark.createDataFrame([("img_00", "raw", -1)], df.schema)
-    shim.upsert(spark, upd, tbl)
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    assert len(got) == 10, f"resurrected/duplicated rows: {sorted(got)}"
-    assert got["img_00"] == -1
-    assert all(got[f"img_{i:02d}"] == i for i in range(1, 10))
-    # and the chain keeps strictly increasing sequences
-    _, chain = shim._snapshot_files(tbl, None)
-    seqs = [rec["sequence"] for rec in chain]
-    assert seqs == sorted(seqs) and len(set(seqs)) == len(seqs)
-
-
-def test_iceberg_shim_merge_not_matched_by_source(spark, smoke_images,
-                                                  tmp_path):
-    """WHEN NOT MATCHED BY SOURCE THEN DELETE (the full-sync MERGE): target
-    rows absent from the source are removed, matched rows update, new
-    source rows insert — the table converges to exactly the source."""
-    images = (spark.read.parquet(smoke_images)
-              .select("image_id", "fmt", "w").orderBy("image_id"))
-    tbl = str(tmp_path / "full_sync")
-    shim.write_table(images.limit(15), tbl, n_buckets=4)
-    # source: 5 of the existing keys (updated) + 2 new keys
-    keep = [r.image_id for r in images.limit(5).collect()]
-    src = (images.filter(F.col("image_id").isin(keep))
-           .withColumn("w", F.lit(-1)))
-    new = spark.createDataFrame(
-        [("img_sync_a", "raw", 1), ("img_sync_b", "raw", 2)], src.schema)
-    src = src.unionByName(new)
-    shim.merge_into(spark, src, tbl, on="image_id",
-                    when_not_matched_by_source="delete")
-    got = {r.image_id: r.w for r in shim.read_table(spark, tbl).collect()}
-    want = {r.image_id: r.w for r in src.collect()}
-    assert got == want  # table == source exactly
-
-
-def test_iceberg_shim_null_key_source_row_accepted(spark, smoke_images,
-                                                   tmp_path):
-    """Regression (r5 self-review): a single NULL-key source row is NOT a
-    duplicate (null never equi-matches; Iceberg MERGE inserts it) — the
-    count-vs-countDistinct uniqueness check must not raise."""
-    images = spark.read.parquet(smoke_images).select("image_id", "fmt", "w")
-    tbl = str(tmp_path / "null_key")
-    shim.write_table(images.orderBy("image_id").limit(8), tbl, n_buckets=2)
-    src = spark.createDataFrame(
-        [("img_new_x", "raw", 1), (None, "raw", 2)], images.schema)
-    shim.merge_into(spark, src, tbl, on="image_id")  # must not raise
-    got = shim.read_table(spark, tbl)
-    assert got.filter(F.col("image_id").isNull()).count() == 1
-    assert got.count() == 10
-
-
-def test_streaming_asof_enrich_matches_batch(spark, tmp_path):
-    """Two-stage streaming as-of: the right side lives in a shim table, the
-    left stream enriches per micro-batch against the table snapshot —
-    equals the batch asof_join when the right side is ingested first
-    (AvailableNow sequencing). Covers the forward direction + tolerance
-    surface end-to-end through the streaming path."""
-    import datetime as dt
-
-    from cogger_spark.operators.temporal import asof_join
-    from cogger_spark.streaming.ingest import stream_asof_enrich
-
-    t = lambda m: dt.datetime(2024, 1, 1, 9, m)
-    right = spark.createDataFrame(
-        [(f"e_{i}", 1000 + i, i % 3, t(5 * i), float(i))
-         for i in range(12)],
-        "image_id string, event_id long, user_id long, ts timestamp, "
-        "value double")
-    tbl = str(tmp_path / "right_tbl")
-    shim.write_table(right, tbl, n_buckets=4, partition_cols=())
-
-    left = spark.createDataFrame(
-        [(i, i % 4, t(7 * i % 60)) for i in range(30)],
-        "event_id long, user_id long, ts timestamp")
-    import os
-    in_dir = tmp_path / "left_in"
-    in_dir.mkdir()
-    stage = tmp_path / "stage"
-    for i, part in enumerate((left.filter(F.col("event_id") < 15),
-                              left.filter(F.col("event_id") >= 15))):
-        part.coalesce(1).write.parquet(str(stage / f"f{i}"))
-        src = next((stage / f"f{i}").rglob("*.parquet"))
-        os.replace(src, in_dir / f"left_{i}.parquet")
-
-    out = str(tmp_path / "enriched")
-    stream_asof_enrich(spark, str(in_dir), tbl, out,
-                       str(tmp_path / "ck"), direction="forward",
-                       tolerance="INTERVAL 20 MINUTES",
-                       max_files_per_trigger=1)
-
-    got = {r.event_id: (r.event_id_prior, r.value_prior)
-           for r in spark.read.parquet(out).collect()}
-    want = {r.event_id: (r.event_id_prior, r.value_prior)
-            for r in asof_join(left, shim.read_table(spark, tbl),
-                               direction="forward",
-                               tolerance="INTERVAL 20 MINUTES").collect()}
-    assert got == want and len(got) == 30
-    assert any(v[0] is not None for v in got.values())
-    assert any(v[0] is None for v in got.values())
-
-
-def test_streaming_upsert_bootstraps_missing_table(spark, smoke_images,
-                                                   tmp_path):
-    """The first micro-batch CREATES the table when the path is fresh."""
-    from cogger_spark.streaming.ingest import stream_upsert_table
-    images = (spark.read.parquet(smoke_images)
-              .select("image_id", "fmt", "w").orderBy("image_id").limit(6))
-    in_dir = str(tmp_path / "boot_in")
-    images.coalesce(1).write.parquet(in_dir)
-    tbl = str(tmp_path / "boot_table")  # does not exist
-    stream_upsert_table(spark, in_dir, tbl, str(tmp_path / "boot_ck"))
-    assert shim.read_table(spark, tbl).count() == 6

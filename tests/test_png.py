@@ -112,20 +112,6 @@ def test_imageio_encode_our_decode(jimage):
     assert np.array_equal(got, px)
 
 
-def test_multimodal_png_path(spark):
-    """The png format flows through the multimodal feature kernel for real
-    now (it used to raise NotImplementedError)."""
-    from cogger_spark.operators.multimodal import image_features
-    px = _pattern(16, 20, 3)
-    df = spark.createDataFrame(
-        [("img_png", png_encode(px), 20, 16, "png")],
-        "image_id string, bytes binary, w int, h int, fmt string")
-    row = image_features(df).collect()[0]
-    assert row.n_bands == 3
-    want = np.concatenate([px.mean(axis=(0, 1)), px.std(axis=(0, 1))])
-    assert np.allclose(np.array(row.features), want)
-
-
 def test_png_images_through_cog_pipeline(spark):
     """png-format rows tile into COGs whose decoded tiles equal the source
     pixels exactly — any-format ingest through the shared decode_any."""
