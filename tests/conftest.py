@@ -30,3 +30,26 @@ def smoke_images(tmp_path_factory):
     path = tmp_path_factory.mktemp("smoke") / "images_smoke.parquet"
     pq.write_table(make_images_table(50, dims=SMOKE_DIMS), path)
     return str(path)
+
+
+@pytest.fixture
+def save_bucketed(spark):
+    """save(df, table, key, buckets): write `df` as a managed table bucketed
+    and sorted on `key`, so later joins and groupBys on `key` read
+    pre-clustered buckets. Every table saved is dropped at teardown."""
+    import shutil
+    tables = []
+
+    def save(df, table, key, buckets):
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+        # the in-memory catalog forgets tables on restart, the filesystem
+        # does not: clear a managed location an earlier session left behind
+        wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+        shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
+        (df.write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
+         .saveAsTable(table))
+        tables.append(table)
+
+    yield save
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
