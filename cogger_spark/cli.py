@@ -2,12 +2,13 @@
 
 Usage:
     python -m zipfile -c /tmp/cogger_spark.zip cogger_spark      # package
-    spark-submit --master local[32] --py-files /tmp/cogger_spark.zip \
+    spark-submit --py-files /tmp/cogger_spark.zip \
         cogger_spark/cli.py convert --images <parquet> --out <dir> \
-        [--tile 512] [--buckets 64] [--ckpt <dir>] [--resume]
+        [--tile 512] [--buckets 64] [--ckpt <dir>]
 
 Subcommands:
-    convert   images parquet → per-image COG blobs (checkpointed, resumable)
+    convert   images parquet → per-image COG parts (checkpointed: rerunning
+              with the same --ckpt resumes, skipping the finished buckets)
     manifest  images parquet → tile manifest parquet (metadata only)
     validate  images parquet → rejects report
 """

@@ -8,8 +8,8 @@ semantics here are ours to define, pinned by tests:
 * formats: ``raw``  = band-interleaved-by-pixel uint8, no compression;
            ``deflate`` = zlib over the same buffer (stdlib-only, per
            FIXTURES.md — no PIL/imagecodecs in the environment). ``png`` /
-           ``jpeg`` are reserved: the plumbing accepts them but decode raises
-           NotImplementedError until a codec library is present.
+           ``jpeg`` decode through the pure-Python codecs in png.py and
+           jpeg.py (no external library); encode writes raw/deflate/quant6.
 * overview downsampling: 2x average with ceil-halved dims
   (stripper.go:272-285); edge pixels average over the available 1-2 source
   pixels; integer round-half-up.

@@ -1,33 +1,37 @@
-"""images DataFrame → tiles DataFrame → per-image COG blobs.
+"""Per-image COGs from pixels or from tiled TIFFs, through one layer of
+producers × sinks — the reference's single write path, where every IFD
+tree goes out through one io.Writer (cog.go:722-750) whether its tiles
+came from pixels or from a parsed TIFF (loader.go:59-106).
 
-The Spark re-expression of the reference dataflow (SURVEY.md §3.3):
-
-    read image table → mapInPandas decode+pyramid+cut (Arrow-batched)
-      → tile DataFrame (the engine's central relation)
-      → window prefix-sum offsets (A1, cog.go:522-597 — exposed as a
-        declarative query; the assembly kernel recomputes exact offsets via
-        the codec)
-      → applyInPandas per-image COG assembly (S4/S5, cog.go:460-750)
-
-Scale notes (100 TB design point):
-* decode/cut is embarrassingly parallel — no shuffle; Arrow batch size is
-  bounded (session.py) so worker memory is O(batch × image).
-* every COG sink — files (convert_images → tile_assemble_write), blobs
-  (cog_pipeline) and ordered parts (cog_pipeline_parts) — is one narrow
-  mapInPandas stage over one per-image core (_streamed_cog) for EVERY image
-  size: it decodes level 0 as tile-row blocks (_level0_blocks), cuts,
-  encodes and downsamples every level block by block, spills the payloads
-  to an unnamed temp file and plans the COG from byte counts. A task holds
-  one block per pyramid level — never the decoded image, except for
-  png/jpeg, whose decoders are whole-image — plus whatever the sink keeps
-  (nothing for files, one part for parts, the blob for blobs): no route
-  probe, no shuffle, no checkpoint.
-* the tile relation (tile_images) is the product only when the tiles
-  themselves are queried (spatial joins, offsets); assemble_cogs /
-  assemble_cog_parts group it per image, keyed by image_id — uniformly
-  distributed, no hot keys.
-* tile metadata queries never touch `payload`/`bytes` (column pruning pushes
-  a 2-column read into the parquet scan).
+* A PRODUCER is a context manager that yields one image's codec _Writer
+  (header planned from byte counts, cog.go:522-597; pieces() streaming
+  the data section) and re-raises malformed input as a ValueError naming
+  the image:
+    - _streamed_cog (pixels): decode level 0 as tile-row blocks
+      (_level0_blocks), cut, encode and downsample every level block by
+      block (_pyramid_tiles), spill the payloads to an unnamed temp file.
+      A task holds one block per level, never the decoded image (png/jpeg
+      excepted: their decoders are whole-image);
+    - _rewritten_cog (tiled TIFFs): parse and assemble the IFD tree, no
+      pixel work; the payloads are views of the input.
+* A SINK takes a writer: _file_sink (<out_dir>/<image_id>.tif through
+  write_tif + write_pieces; the COG is never materialized), _blob_sink
+  (the pieces joined once, optionally split into header and data) and
+  _parts_sink (the header, then data chunks of a fixed tile count).
+* _cog_stage is the one mapInPandas kernel: ensure_fanout, then a
+  producer into a sink per input row, output flushed by 4 MB. It runs
+  cog_pipeline (pixels → blob), cog_pipeline_parts (→ parts),
+  tile_assemble_write/convert_images (→ file), rewrite_tiffs (TIFF →
+  blob) and rewrite_tiffs_to_dir (→ file), one narrow stage each: no
+  route probe, no checkpoint, no shuffle unless ensure_fanout must fan
+  out a scan with fewer splits than slots. tile_images streams
+  _pyramid_tiles through it as the tile relation.
+* The grouped kernels — assemble_cogs over the tile relation and
+  rewrite_tiff_sets over multi-file TIFFs — group per image_id (uniformly
+  distributed, no hot keys) and call the same blob sink;
+  assemble_cog_parts builds headers from tile metadata and chunks from
+  the W1-ranked payloads. Tile metadata queries never touch `payload`
+  (column pruning pushes a narrow read into the scan).
 
 Tile-plane convention: by default imagery tiles are pixel-interleaved (one
 tile holds all bands, PlanarConfiguration=1) with plane=0; the optional mask
@@ -48,7 +52,6 @@ the W1 key above.
 from __future__ import annotations
 
 import contextlib
-import functools
 import itertools
 import os
 import tempfile
@@ -68,15 +71,14 @@ from ..functions.imagecodecs import (
     encode_image,
 )
 from ..planner.pyramid import overview_count, overview_dims
-from ..sources.tiffdir import write_tif, write_tiff_dir
+from ..sources.tiffdir import write_tif
 from ..tiff.codec import (
     IFD,
     Config,
     _all_ifds,
+    _assemble_sources,
     _Writer,
-    rewrite,
-    rewrite_pieces,
-    rewrite_split,
+    tile_order,
     write_pieces,
 )
 
@@ -89,37 +91,32 @@ TILE_SCHEMA = (
 GHOST_OVERHEAD = 8  # BLOCK_LEADER (4) + BLOCK_TRAILER (4), cog.go:733-743
 
 
-def ensure_fanout(df, parallelism: int | None = None, factor: int = 2,
-                  coalesce_factor: int = 3):
-    """Bound a Python-kernel stage's input partitioning on BOTH sides.
+def ensure_fanout(df):
+    """Bound a Python-kernel stage's input partitioning on BOTH sides, in
+    units of defaultParallelism (the slots):
 
-    * Too few splits (fat parquet files with huge row groups): repartition —
-      one shuffle buying full fan-out of the dominant pixel stage.
-      Well-chunked tables skip the (expensive — it moves the pixel bytes)
-      shuffle entirely: Spark's own split sizing already fans a
-      multi-row-group file out to ~defaultParallelism.
-    * Far too MANY splits (small-file scans / tiny split sizing, where every
-      partition holds ~1 row): coalesce — a zero-shuffle merge of adjacent
-      splits. One-row tasks defeat Arrow batch amortization entirely: each
-      task pays worker handshake + a 1-row Arrow batch each way, which r6
-      measured at ~2x the whole job cost for the rewrite path (480 one-file
-      tasks vs 96 merged: 5.2s -> 2.5s). coalesce_factor*target tasks keep
-      ~3 waves per slot for stragglers while restoring multi-row batches;
-      scale-adaptive (derived from defaultParallelism), never a constant.
+    * Fewer splits than slots (fat parquet files with huge row groups):
+      repartition to 2x the slots — one shuffle buying full fan-out of the
+      dominant pixel stage. Well-chunked tables skip the (expensive — it
+      moves the pixel bytes) shuffle entirely: Spark's own split sizing
+      already fans a multi-row-group file out to ~defaultParallelism.
+    * More than 3x the slots (small-file scans / tiny split sizing, where
+      every partition holds ~1 row): coalesce to 3x — a zero-shuffle merge
+      of adjacent splits. One-row tasks defeat Arrow batch amortization
+      entirely: each task pays worker handshake + a 1-row Arrow batch each
+      way, which r6 measured at ~2x the whole job cost for the rewrite path
+      (480 one-file tasks vs 96 merged: 5.2s -> 2.5s). 3x keeps ~3 waves
+      per slot for stragglers while restoring multi-row batches.
 
     The split-count probe converts the plan to an RDD once (no job is run);
     this helper is the single place that touches .rdd in the package."""
     slots = df.sparkSession.sparkContext.defaultParallelism
-    target = parallelism or slots
     n = df.rdd.getNumPartitions()
-    if n < target:
-        return df.repartition((parallelism or slots) * factor
-                              if parallelism is None else parallelism)
-    cap = coalesce_factor * target
-    if n > cap:
-        return df.coalesce(cap)
+    if n < slots:
+        return df.repartition(2 * slots)
+    if n > 3 * slots:
+        return df.coalesce(3 * slots)
     return df
-
 
 
 def infer_planes(nbytes: int, w: int, h: int) -> tuple[int, bool]:
@@ -300,25 +297,6 @@ def _pyramid_tiles(blocks, nplanes: int, mask: bool, tile: int,
             yield from emit(lvl, bufs[lvl][:fill[lvl]], top[lvl])
 
 
-def _decode_and_cut(data: bytes, w: int, h: int, fmt: str, tile: int,
-                    compression: str, min_overview_size: int = 2,
-                    planar: bool = False):
-    """Decode one image and collect every encoded tile of its pyramid.
-    Returns (nplanes, has_mask, n_levels, level_dims, payloads) with
-    payloads keyed (level, plane, ty, tx) and inserted in (level, ty, tx,
-    plane) order — a collector over _pyramid_tiles, the single source of
-    pixel semantics shared by the tile-relation kernel (tile_images) and
-    the streaming COG core (_streamed_cog), so both are byte-identical by
-    construction."""
-    nplanes, mask, blocks = _level0_blocks(data, w, h, fmt, _block_rows(tile))
-    dims = _pyramid_dims(w, h, tile, min_overview_size)
-    tiles = sorted(_pyramid_tiles(blocks, nplanes, mask, tile, compression,
-                                  dims, planar=planar),
-                   key=lambda t: (t[0], t[2], t[3], t[1]))
-    payloads = {(lvl, plane, ty, tx): p for lvl, plane, ty, tx, p in tiles}
-    return nplanes, mask, len(dims), dict(enumerate(dims)), payloads
-
-
 def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
                level_dims, counts: dict, load, tile: int, comp_tag: int,
                ghost: bool, planar: bool = False,
@@ -387,94 +365,23 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
                                 planar_interleaving=planar_interleaving))
 
 
-def _cog_blob(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
-              level_dims, payloads: dict, tile: int, comp_tag: int,
-              ghost: bool, planar: bool = False,
-              planar_interleaving: list | None = None
-              ) -> tuple[bytes, bytes, int]:
-    """One image's COG from in-memory payloads (the grouped assembly):
-    (header, data, header_bytes), as _join_cog."""
-    return _join_cog(_build_cog(image_id, nplanes, has_mask, n_levels,
-                                level_dims,
-                                {k: len(v) for k, v in payloads.items()},
-                                payloads.__getitem__, tile, comp_tag, ghost,
-                                planar=planar,
-                                planar_interleaving=planar_interleaving))
-
-
-def _join_cog(writer: _Writer) -> tuple[bytes, bytes, int]:
-    """(header, data, header_bytes) of a _build_cog writer: its pieces
-    joined once, and the header's extent — the offset of the first
-    occupied tile byte, less that tile's 4-byte ghost leader."""
-    pieces = writer.pieces()
-    header = next(pieces)
-    data = b"".join(pieces)
-    # default covers the fully-sparse image (every byte_count 0): no tile
-    # occupies bytes, so the data section is empty and the header is all
-    header_end = min((o for f in _all_ifds(writer.ifd)
-                      for o in f.new_tile_offsets if o > 0),
-                     default=len(header))
-    header_bytes = int(header_end) - (4 if writer.ghost else 0)
-    return header, data, header_bytes
-
-
 def tile_images(images: DataFrame, tile: int = 512, compression: str = "deflate",
-                min_overview_size: int = 2, parallelism: int | None = None,
                 planar: bool = False) -> DataFrame:
     """Decode each image, build its 2x-average overview pyramid, cut every
     level into `tile`-sized tiles (zero-padded at edges), compress, and emit
-    one row per tile.
+    one row per tile: _pyramid_tiles streamed through _cog_stage, so a task
+    holds one block per level plus at most 4 MB of output rows."""
+    def rows(r):
+        w, h = int(r.w), int(r.h)
+        dims = _pyramid_dims(w, h, tile)
+        nplanes, mask, blocks = _level0_blocks(r.bytes, w, h, r.fmt,
+                                               _block_rows(tile))
+        for lvl, plane, ty, tx, payload in _pyramid_tiles(
+                blocks, nplanes, mask, tile, compression, dims, planar=planar):
+            yield (r.image_id, lvl, plane, ty, tx, *dims[lvl], len(dims),
+                   nplanes, mask, len(payload), payload)
 
-    If the scan yields fewer input splits than the cluster has slots (fat
-    parquet files with huge row groups), the input is repartitioned first —
-    one shuffle buying full fan-out of the dominant pixel stage. Well-chunked
-    tables skip the shuffle entirely: Spark's own minPartitionNum split
-    sizing already fans a multi-row-group file out to ~defaultParallelism, so
-    the (expensive — it moves the pixel bytes) repartition only fires when
-    the scan genuinely cannot use the available slots."""
-    images = ensure_fanout(images, parallelism)
-
-    FLUSH_BYTES = 32 * 1024 * 1024  # output-accumulation bound per yield
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("image_id", "level", "plane", "ty", "tx", "level_w",
-                "level_h", "n_levels", "planes", "has_mask", "byte_count",
-                "payload")
-        out = {k: [] for k in cols}
-        acc = 0
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                nplanes, mask, n_levels, level_dims, payloads = _decode_and_cut(
-                    row.bytes, int(row.w), int(row.h), row.fmt, tile,
-                    compression, min_overview_size, planar=planar)
-                for (lvl, plane, ty, tx), payload in payloads.items():
-                    lw, lh = level_dims[lvl]
-                    out["image_id"].append(row.image_id)
-                    out["level"].append(lvl)
-                    out["plane"].append(plane)
-                    out["ty"].append(ty)
-                    out["tx"].append(tx)
-                    out["level_w"].append(lw)
-                    out["level_h"].append(lh)
-                    out["n_levels"].append(n_levels)
-                    out["planes"].append(nplanes)
-                    out["has_mask"].append(mask)
-                    out["byte_count"].append(len(payload))
-                    out["payload"].append(payload)
-                    acc += len(payload)
-                # flush between images: worker memory is bounded by
-                # FLUSH_BYTES + one image's tiles, independent of the Arrow
-                # input batch size (large batches amortize socket overhead
-                # without accumulating their whole output)
-                if acc >= FLUSH_BYTES:
-                    yield pd.DataFrame(out)
-                    out = {k: [] for k in cols}
-                    acc = 0
-        if out["image_id"]:
-            yield pd.DataFrame(out)
-
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    return images.select(*cols).mapInPandas(kernel, schema=TILE_SCHEMA)
+    return _cog_stage(images, _IMAGE_COLS, rows, TILE_SCHEMA)
 
 
 def _interleave_keys(interleaving: list | None):
@@ -554,33 +461,26 @@ def assemble_cogs(tiles: DataFrame, tile: int = 512,
     different destinations."""
     # quant6 is pre-quantization + deflate → the TIFF payload codec is still 8
     comp_tag = 1 if compression == "raw" else 8
+    schema = SPLIT_ASSEMBLY_SCHEMA if split else ASSEMBLY_SCHEMA
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         image_id = pdf["image_id"].iloc[0]
-        nplanes = int(pdf["planes"].iloc[0])
-        has_mask = bool(pdf["has_mask"].iloc[0])
         n_levels = int(pdf["n_levels"].iloc[0])
         payloads = {}
         level_dims = {}
         for r in pdf.itertuples(index=False):
             payloads[(r.level, r.plane, r.ty, r.tx)] = r.payload
             level_dims[r.level] = (int(r.level_w), int(r.level_h))
-        header, data, header_bytes = _cog_blob(
-            image_id, nplanes, has_mask, n_levels, level_dims, payloads,
+        *blobs, header_bytes = _blob_sink(_build_cog(
+            image_id, int(pdf["planes"].iloc[0]),
+            bool(pdf["has_mask"].iloc[0]), n_levels, level_dims,
+            {k: len(v) for k, v in payloads.items()}, payloads.__getitem__,
             tile, comp_tag, ghost, planar=planar,
-            planar_interleaving=planar_interleaving)
-        base = {
-            "image_id": [image_id],
-            "n_tiles": [len(pdf)],
-            "n_levels": [n_levels],
-            "header_bytes": [header_bytes],
-            "total_bytes": [len(header) + len(data)],
-        }
-        if split:
-            return pd.DataFrame({**base, "header": [header], "data": [data]})
-        return pd.DataFrame({**base, "cog": [header + data]})
+            planar_interleaving=planar_interleaving), split)
+        return pd.DataFrame([(image_id, *blobs, len(pdf), n_levels,
+                              header_bytes, sum(map(len, blobs)))],
+                            columns=_columns(schema))
 
-    schema = SPLIT_ASSEMBLY_SCHEMA if split else ASSEMBLY_SCHEMA
     return tiles.groupBy("image_id").applyInPandas(kernel, schema=schema)
 
 
@@ -606,30 +506,31 @@ def route_probe(images: DataFrame,
     return has_small, has_big, (stats["w"], stats["h"])
 
 
+_IMAGE_COLS = ("image_id", "bytes", "w", "h", "fmt")
+
+
+# --- producers: one image's codec _Writer ------------------------------------
+
 @contextlib.contextmanager
 def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
-                  tile: int, compression: str, ghost: bool,
-                  min_overview_size: int = 2):
-    """The per-image COG core behind every sink (file, blob, parts), the
-    reference's one write path (cog.go:522-597, 722-750): decode level 0
-    block by block (_level0_blocks), stream the pyramid's tiles
-    (_pyramid_tiles) into a spill, plan the COG from byte counts.
+                  tile: int, compression: str, ghost: bool):
+    """Pixel producer (cog.go:522-597, 722-750): decode level 0 block by
+    block (_level0_blocks), stream the pyramid's tiles (_pyramid_tiles)
+    into a spill, plan the COG from byte counts.
 
-    Yields (writer, counts, n_levels) while the spill is open: `counts` is
-    the byte count per (level, plane, ty, tx), and `writer` the codec
-    _Writer whose pieces() emits the header and then each payload in COG
-    order, loaded from the spill with os.pread — no mmap, so the spill's
-    pages never count toward worker RSS. Only the byte counts stay in
-    memory: while cutting, a task holds one block per pyramid level (raw
-    input is read in place; png/jpeg are decoded whole), and what its sink
-    keeps after.
+    Yields the codec _Writer while the spill is open: its pieces() emits
+    the header and then each payload in COG order, loaded from the spill
+    with os.pread — no mmap, so the spill's pages never count toward
+    worker RSS. Only the byte counts stay in memory: while cutting, a task
+    holds one block per pyramid level (raw input is read in place;
+    png/jpeg are decoded whole), and what its sink keeps after.
 
     The spill is an unnamed tempfile.TemporaryFile, so no sink names or
     removes one: the file goes with its descriptor when the block exits,
     whatever happens. Undecodable input (corrupt or truncated deflate, a
     null or empty blob, a buffer that is not w×h×planes) raises ValueError
     naming the image."""
-    dims = _pyramid_dims(w, h, tile, min_overview_size)
+    dims = _pyramid_dims(w, h, tile)
     counts, offsets, pos = {}, {}, 0
     with tempfile.TemporaryFile() as spill:
         try:
@@ -645,80 +546,113 @@ def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
             raise ValueError(f"image {image_id!r}: {exc}") from exc
         spill.flush()
         fd = spill.fileno()
-        yield (_build_cog(image_id, nplanes, mask, len(dims), dims, counts,
-                          lambda k: os.pread(fd, counts[k], offsets[k]),
-                          tile, 1 if compression == "raw" else 8, ghost),
-               counts, len(dims))
+        yield _build_cog(image_id, nplanes, mask, len(dims), dims, counts,
+                         lambda k: os.pread(fd, counts[k], offsets[k]),
+                         tile, 1 if compression == "raw" else 8, ghost)
 
 
-def _write_cog_file(image_id: str, data: bytes, w: int, h: int, fmt: str,
-                    out_dir: str, tile: int, compression: str, ghost: bool,
-                    min_overview_size: int = 2) -> tuple[int, int, int]:
-    """File sink: stream one image's COG to <out_dir>/<image_id>.tif and
-    return (n_tiles, n_levels, total_bytes). write_pieces writes the
-    pieces with batched os.writev, flushing by 4 MB of loaded payload, so
-    at most ~4 MB of tiles is held at once. Atomic via write_tif
-    (tmp+rename); a failure leaves no file behind."""
-    with _streamed_cog(image_id, data, w, h, fmt, tile, compression, ghost,
-                       min_overview_size) as (writer, counts, n_levels):
-        total = write_tif(out_dir, image_id,
-                          lambda fd: write_pieces(fd, writer.pieces()))
-    return len(counts), n_levels, total
+@contextlib.contextmanager
+def _rewritten_cog(image_id: str, *blobs: bytes, ghost: bool = True):
+    """Rewrite producer (loader.go:59-106): parse the TIFF `blobs` — a main
+    file, then any external overview files — and assemble their IFD tree,
+    with no pixel work. Yields the codec _Writer, whose pieces() emits the
+    header and then views of the blobs' tiles. A null blob or a malformed
+    TIFF, found at parse time or while a sink emits, raises ValueError
+    naming the image."""
+    try:
+        if any(b is None for b in blobs):
+            raise ValueError("null TIFF blob")
+        yield _Writer(_assemble_sources(*blobs),
+                      Config(with_gdal_ghost=ghost))
+    except ValueError as exc:
+        raise ValueError(f"image {image_id!r}: {exc}") from exc
 
 
-def _cog_blob_row(image_id: str, data: bytes, w: int, h: int, fmt: str,
-                  tile: int, compression: str, ghost: bool) -> tuple:
-    """Blob sink: one ASSEMBLY_SCHEMA row (image_id, cog, n_tiles,
-    n_levels, header_bytes, total_bytes)."""
-    with _streamed_cog(image_id, data, w, h, fmt, tile, compression,
-                       ghost) as (writer, counts, n_levels):
-        header, body, header_bytes = _join_cog(writer)
-    return (image_id, header + body, len(counts), n_levels, header_bytes,
-            len(header) + len(body))
+def _tiles_levels(writer: _Writer) -> tuple[int, int]:
+    """(n_tiles, n_levels) of a writer's IFD tree: the tiles of every IFD,
+    masks included, and the main level plus its overviews."""
+    return (sum(len(f.tile_byte_counts) for f in _all_ifds(writer.ifd)),
+            1 + len(writer.ifd.overviews))
 
 
-def _cog_part_rows(image_id: str, data: bytes, w: int, h: int, fmt: str,
-                   tile: int, compression: str, ghost: bool,
-                   tiles_per_part: int) -> Iterator[tuple]:
-    """Parts sink: PARTS_SCHEMA rows (image_id, part_idx, part). Part 0 is
-    the header; part k holds the data bytes of the tiles ranked
-    [(k-1)·tiles_per_part, k·tiles_per_part) in the W1 order (level DESC,
-    ty, tx, plane), ghost framing included — the boundaries
-    assemble_cog_parts groups on, so the parts are the same bytes. One part
-    is held at a time."""
-    with _streamed_cog(image_id, data, w, h, fmt, tile, compression,
-                       ghost) as (writer, counts, _):
-        pieces = writer.pieces()
-        yield image_id, 0, next(pieces)
-        overhead = GHOST_OVERHEAD if ghost else 0
-        ranked = sorted(counts, key=lambda k: (-k[0], k[2], k[3], k[1]))
-        for c0 in range(0, len(ranked), tiles_per_part):
-            # chunk boundaries fall between tiles, so no piece straddles one
-            size = sum(counts[k] + overhead
-                       for k in ranked[c0:c0 + tiles_per_part] if counts[k])
-            part = []
-            while size > 0:
-                part.append(next(pieces))
-                size -= len(part[-1])
-            yield image_id, c0 // tiles_per_part + 1, b"".join(part)
+# --- sinks: what a producer's writer becomes ----------------------------------
+
+def _file_sink(out_dir: str, image_id: str, writer: _Writer) -> int:
+    """File sink: stream the COG to <out_dir>/<image_id>.tif and return its
+    byte count. write_pieces writes the pieces with batched os.writev,
+    flushing by 4 MB of loaded payload (views of an input are never
+    copied), so the COG is never materialized. Atomic via write_tif
+    (tmp+rename): a failure leaves no file behind."""
+    os.makedirs(out_dir, exist_ok=True)
+    return write_tif(out_dir, image_id,
+                     lambda fd: write_pieces(fd, writer.pieces()))
 
 
-def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
-    """One ensure_fanout + mapInPandas stage over a COG sink: `rows(image_id,
-    data, w, h, fmt)` yields the sink's output tuples, in `schema` order,
-    for one input image. Output is flushed at the end of every input batch
-    and whenever its binary columns reach 4 MB, so a task holds at most one
-    blob or part beyond that bound."""
-    images = ensure_fanout(images)
-    names = [c.split()[0] for c in schema.split(",")]
+def _blob_sink(writer: _Writer, split: bool = False) -> tuple:
+    """Blob sink: (cog, header_bytes), or (header, data, header_bytes) when
+    split — the pieces joined once either way. header_bytes is the
+    header's extent: the offset of the first occupied tile byte, less that
+    tile's 4-byte ghost leader."""
+    pieces = writer.pieces()
+    header = next(pieces)
+    if split:
+        blobs = (header, b"".join(pieces))
+    else:
+        blobs = (b"".join(itertools.chain((header,), pieces)),)
+    # default covers the fully-sparse image (every byte_count 0): no tile
+    # occupies bytes, so the data section is empty and the header is all
+    header_end = min((o for f in _all_ifds(writer.ifd)
+                      for o in f.new_tile_offsets if o > 0),
+                     default=len(header))
+    return (*blobs, int(header_end) - (4 if writer.ghost else 0))
+
+
+def _parts_sink(writer: _Writer, tiles_per_part: int) -> Iterator[tuple]:
+    """Parts sink: (part_idx, part) pairs. Part 0 is the header; part k
+    holds the data bytes of the tiles ranked [(k-1)·tiles_per_part,
+    k·tiles_per_part) in the COG's tile order (for pixel tiles the W1
+    order: level DESC, ty, tx, plane), ghost framing included — the
+    boundaries assemble_cog_parts groups on, so the parts are the same
+    bytes. One part is held at a time."""
+    pieces = writer.pieces()
+    yield 0, next(pieces)  # header() settles the ghost and the tile order
+    overhead = GHOST_OVERHEAD if writer.ghost else 0
+    counts = [f.tile_byte_counts[f.tile_idx(x, y, p)]
+              for f, x, y, p in tile_order(writer.ifd)]
+    for c0 in range(0, len(counts), tiles_per_part):
+        # chunk boundaries fall between tiles, so no piece straddles one
+        size = sum(c + overhead for c in counts[c0:c0 + tiles_per_part]
+                   if c > 0)
+        part = []
+        while size > 0:
+            part.append(next(pieces))
+            size -= len(part[-1])
+        yield c0 // tiles_per_part + 1, b"".join(part)
+
+
+def _columns(schema: str) -> list:
+    """The column names of a DDL schema string."""
+    return [c.split()[0] for c in schema.split(",")]
+
+
+def _cog_stage(df: DataFrame, cols, rows, schema: str) -> DataFrame:
+    """The module's one mapInPandas kernel: ensure_fanout, then for each
+    input row r (a namedtuple of `cols`) `rows(r)` yields output tuples in
+    `schema` order — in every caller a producer into a sink. Output is
+    flushed at the end of every input batch and whenever its binary
+    columns reach 4 MB, so a task holds at most one blob or part beyond
+    that bound. Small flushes pipeline: the JVM consumes a yielded Arrow
+    batch while the worker produces the next (r6 A/B of the blob rewrite
+    on the 2.3 GB bench corpus: 64m 3.21s, 16m 2.58s, 4m 2.36s; below 4m
+    the per-batch overhead starts to show on many-small-image tables)."""
+    names = _columns(schema)
     FLUSH_BYTES = 4 * 1024 * 1024
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out, acc = [], 0
             for r in pdf.itertuples(index=False):
-                for rec in rows(r.image_id, r.bytes, int(r.w), int(r.h),
-                                r.fmt):
+                for rec in rows(r):
                     out.append(rec)
                     acc += sum(len(v) for v in rec if isinstance(v, bytes))
                     if acc >= FLUSH_BYTES:
@@ -727,40 +661,45 @@ def _cog_stage(images: DataFrame, rows, schema: str) -> DataFrame:
             if out:
                 yield pd.DataFrame(out, columns=names)
 
-    cols = ["image_id", "bytes", "w", "h", "fmt"]
-    return images.select(*cols).mapInPandas(kernel, schema=schema)
+    return ensure_fanout(df).select(*cols).mapInPandas(kernel, schema=schema)
 
 
 def cog_pipeline(images: DataFrame, tile: int = 512,
                  compression: str = "deflate", ghost: bool = True
                  ) -> DataFrame:
     """images → one COG blob row per image (ASSEMBLY_SCHEMA), end to end
-    (the flagship dataflow): one narrow stage of the streaming core
-    (_streamed_cog) for every image size, byte-identical to
+    (the flagship dataflow): the pixel producer into the blob sink, one
+    narrow _cog_stage for every image size, byte-identical to
     assemble_cogs(tile_images(...)) (tested). The OUTPUT is still one blob
     per image — unbounded for gigapixel inputs; sinks should prefer
     cog_pipeline_parts/convert_images, which bound the output too."""
-    def rows(image_id, data, w, h, fmt):
-        yield _cog_blob_row(image_id, data, w, h, fmt, tile, compression,
-                            ghost)
+    def rows(r):
+        with _streamed_cog(r.image_id, r.bytes, int(r.w), int(r.h), r.fmt,
+                           tile, compression, ghost) as writer:
+            cog, header_bytes = _blob_sink(writer)
+        yield (r.image_id, cog, *_tiles_levels(writer), header_bytes,
+               len(cog))
 
-    return _cog_stage(images, rows, ASSEMBLY_SCHEMA)
+    return _cog_stage(images, _IMAGE_COLS, rows, ASSEMBLY_SCHEMA)
 
 
 def cog_pipeline_parts(images: DataFrame, tile: int = 512,
                        compression: str = "deflate", ghost: bool = True,
                        tiles_per_part: int = 256) -> DataFrame:
     """images → ordered COG parts (PARTS_SCHEMA) with bounded memory end to
-    end: one narrow stage of the streaming core (_streamed_cog) for every
-    image size. Part 0 is the header, parts 1..k the ghost-framed data of
-    <= tiles_per_part tiles each; concatenating an image's parts in
+    end: the pixel producer into the parts sink, one narrow _cog_stage for
+    every image size. Part 0 is the header, parts 1..k the ghost-framed
+    data of <= tiles_per_part tiles each; concatenating an image's parts in
     part_idx order is byte-identical to the assemble_cogs blob, and the
     parts equal assemble_cog_parts(tile_images(...)) (tested) — the
     sink-safe default for any table that may contain oversized images."""
-    rows = functools.partial(_cog_part_rows, tile=tile,
-                             compression=compression, ghost=ghost,
-                             tiles_per_part=tiles_per_part)
-    return _cog_stage(images, rows, PARTS_SCHEMA)
+    def rows(r):
+        with _streamed_cog(r.image_id, r.bytes, int(r.w), int(r.h), r.fmt,
+                           tile, compression, ghost) as writer:
+            for k, part in _parts_sink(writer, tiles_per_part):
+                yield r.image_id, k, part
+
+    return _cog_stage(images, _IMAGE_COLS, rows, PARTS_SCHEMA)
 
 
 CONVERT_STATS_SCHEMA = ("image_id string, n_tiles long, n_levels int, "
@@ -768,30 +707,27 @@ CONVERT_STATS_SCHEMA = ("image_id string, n_tiles long, n_levels int, "
 
 
 def tile_assemble_write(images: DataFrame, out_dir: str, tile: int = 512,
-                        compression: str = "deflate", ghost: bool = True,
-                        min_overview_size: int = 2) -> DataFrame:
+                        compression: str = "deflate", ghost: bool = True
+                        ) -> DataFrame:
     """FUSED decode→pyramid→cut→assemble→WRITE for images of ANY size: the
     COG file is written by the same Python worker that decoded the pixels,
-    so no tile or blob ever crosses the JVM↔Python socket. One narrow
-    stage of the streaming core (_write_cog_file) — no size route, no
+    so no tile or blob ever crosses the JVM↔Python socket. The pixel
+    producer into the file sink, one narrow _cog_stage — no size route, no
     checkpoint, and no shuffle unless ensure_fanout must fan out a scan
     with fewer splits than slots. Byte-identical to
     assemble_cogs(tile_images(...)). Returns stats rows only."""
-    def rows(image_id, data, w, h, fmt):
-        os.makedirs(out_dir, exist_ok=True)
-        yield (image_id, *_write_cog_file(image_id, data, w, h, fmt, out_dir,
-                                          tile, compression, ghost,
-                                          min_overview_size))
+    def rows(r):
+        with _streamed_cog(r.image_id, r.bytes, int(r.w), int(r.h), r.fmt,
+                           tile, compression, ghost) as writer:
+            n = _file_sink(out_dir, r.image_id, writer)
+        yield (r.image_id, *_tiles_levels(writer), n)
 
-    return _cog_stage(images, rows, CONVERT_STATS_SCHEMA)
+    return _cog_stage(images, _IMAGE_COLS, rows, CONVERT_STATS_SCHEMA)
 
 
 def convert_images(images: DataFrame, out_dir: str, tile: int = 512,
                    compression: str = "deflate", ghost: bool = True,
-                   split_threshold_px: int = SPLIT_THRESHOLD_PX,
-                   target_px: int = 1024 * 1024,
-                   tiles_per_part: int = 256,
-                   probe: tuple | None = None) -> None:
+                   split_threshold_px: int = SPLIT_THRESHOLD_PX) -> None:
     """The user-facing convert sink: images → <out_dir>/<image_id>.tif, one
     COG per image, bounded memory per task and per output file. Every row,
     small or oversized, takes the streaming tile_assemble_write kernel: one
@@ -800,21 +736,11 @@ def convert_images(images: DataFrame, out_dir: str, tile: int = 512,
     A scan with fewer splits is first fanned out by ensure_fanout, whose
     shuffle runs as one extra job under AQE.
 
-    `split_threshold_px`, `target_px`, `tiles_per_part` and `probe` stay in
-    the signature so existing callers still run; they no longer change the
-    route or the bytes."""
+    `split_threshold_px` is ignored; it stays in the signature only for
+    perfbench's untraced tile_convert job, which passes it."""
     (tile_assemble_write(images, out_dir, tile=tile, compression=compression,
                          ghost=ghost)
      .write.format("noop").mode("overwrite").save())
-
-
-def write_cogs(cogs: DataFrame, out_dir: str) -> None:
-    """Stream the per-image COG blobs to one .tif file each — the engine's
-    `io.Writer` sink (SURVEY.md §1.4): foreachPartition keeps the write on
-    the executors (no driver collect); each task writes its partition's
-    images independently, so the sink scales with the cluster. Same
-    writer as sources.tiffdir.write_tiff_dir (atomic per file)."""
-    write_tiff_dir(cogs, out_dir)
 
 
 REWRITE_SCHEMA = "image_id string, cog binary, in_bytes long, out_bytes long"
@@ -893,98 +819,42 @@ def _read_local_file(path: str) -> bytes:
         return f.read()
 
 
-def _rewrite_named(image_id: str, fn, *blobs):
-    """`fn(*blobs)` with a null blob rejected and a malformed-input
-    ValueError re-raised naming the image."""
-    if any(b is None for b in blobs):
-        raise ValueError(f"image {image_id!r}: null TIFF blob")
-    try:
-        return fn(*blobs)
-    except ValueError as exc:
-        raise ValueError(f"image {image_id!r}: {exc}") from exc
-
-
-def _rewrite_file(image_id: str, data: bytes, out_dir: str, cfg) -> int:
-    """Rewrite one TIFF to <out_dir>/<image_id>.tif without materializing
-    the COG: the codec's pieces (header, then views of `data`) go straight
-    to the tmp file through write_pieces. Returns the bytes written."""
-    def emit(d: bytes) -> int:
-        return write_tif(
-            out_dir, image_id,
-            lambda fd: write_pieces(fd, rewrite_pieces(d, cfg=cfg)))
-
-    return _rewrite_named(image_id, emit, data)
+def _tiff_input(tiffs: DataFrame) -> tuple:
+    """(cols, read) of a rewrite stage: `read(r)` gives the TIFF bytes of
+    an input row of `cols`. When `tiffs.bytes` provably is the local file
+    at `tiffs.path` (_binaryfile_path_route), only PATHS cross the
+    JVM↔Python boundary and the kernel reads the file: the multi-GB Arrow
+    input crossing (the measured bound of the rewrite) disappears and the
+    binaryFile scan prunes `content` to a listing-only scan."""
+    if _binaryfile_path_route(tiffs):
+        return ("image_id", "path"), lambda r: _read_local_file(r.path)
+    return ("image_id", "bytes"), lambda r: r.bytes
 
 
 def rewrite_tiffs(tiffs: DataFrame, ghost: bool = True,
                   split: bool = False) -> DataFrame:
     """The reference's own job as a Spark operator: reshuffle already-tiled
     TIFF bytes into COG layout — parse, assemble the IFD tree, re-emit — with
-    NO pixel decoding (README.md:5-14, loader.go:59-106). One narrow
-    mapInPandas stage; per-row cost is pure byte movement, matching the
-    reference's 'as fast as the underlying i/o' model.
+    NO pixel decoding (README.md:5-14, loader.go:59-106). The rewrite
+    producer into the blob sink, one narrow _cog_stage; per-row cost is
+    pure byte movement, matching the reference's 'as fast as the
+    underlying i/o' model.
 
     split=True emits header and tile data as separate binary columns — the
     RewriteSplitted surface (loader.go:67, cog.go:765-780) for sinks that
     route metadata and payload bytes to different destinations;
     header || data equals the split=False blob byte-for-byte (tested).
     A malformed TIFF fails the job with a ValueError naming the image."""
-    # Output blobs flushed by size. Each blob is one join of the codec's
-    # pieces (one copy of the data section); a batch holds ~FLUSH_BYTES of
-    # them plus the one input being rewritten. Small batches pipeline
-    # better: the JVM consumes a yielded Arrow batch while the worker
-    # rewrites the next image, overlapping the (memcpy-bound) return
-    # transfer with kernel compute — r6 A/B on the 2.3 GB bench corpus:
-    # 64m 3.21s, 16m 2.58s, 4m 2.36s; below 4m the per-batch overhead
-    # starts to show on many-small-image tables.
-    FLUSH_BYTES = 4 * 1024 * 1024
+    cols, read = _tiff_input(tiffs)
 
-    def _new_out():
-        out = {"image_id": [], "in_bytes": [], "out_bytes": []}
-        if split:
-            out["header"], out["data"] = [], []
-        else:
-            out["cog"] = []
-        return out
+    def rows(r):
+        data = read(r)
+        with _rewritten_cog(r.image_id, data, ghost=ghost) as writer:
+            *blobs, _ = _blob_sink(writer, split)
+        yield (r.image_id, *blobs, len(data), sum(map(len, blobs)))
 
-    # when bytes provably == local file content, ship only PATHS across
-    # the JVM↔Python boundary and read in-kernel: the multi-GB Arrow
-    # input crossing (the measured bound of this operator) disappears and
-    # the binaryFile scan prunes `content` to a listing-only scan
-    use_paths = _binaryfile_path_route(tiffs)
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg = Config(with_gdal_ghost=ghost)
-        emit = functools.partial(rewrite_split if split else rewrite, cfg=cfg)
-        out = _new_out()
-        acc = 0
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                data = _read_local_file(r.path) if use_paths else r.bytes
-                res = _rewrite_named(r.image_id, emit, data)
-                if split:
-                    header, dat = res
-                    out["header"].append(header)
-                    out["data"].append(dat)
-                    out["out_bytes"].append(len(header) + len(dat))
-                else:
-                    out["cog"].append(res)
-                    out["out_bytes"].append(len(res))
-                out["image_id"].append(r.image_id)
-                out["in_bytes"].append(len(data))
-                acc += out["out_bytes"][-1]
-                if acc >= FLUSH_BYTES:
-                    yield pd.DataFrame(out)
-                    out = _new_out()
-                    acc = 0
-        if out["image_id"]:
-            yield pd.DataFrame(out)
-
-    tiffs = ensure_fanout(tiffs)
-    schema = SPLIT_REWRITE_SCHEMA if split else REWRITE_SCHEMA
-    cols = ("image_id", "path") if use_paths else ("image_id", "bytes")
-    return tiffs.select(*cols).mapInPandas(kernel, schema)
-
+    return _cog_stage(tiffs, cols, rows,
+                      SPLIT_REWRITE_SCHEMA if split else REWRITE_SCHEMA)
 
 
 REWRITE_FILES_SCHEMA = ("image_id string, in_bytes long, out_bytes long, "
@@ -998,53 +868,41 @@ def rewrite_tiffs_to_dir(tiffs: DataFrame, out_dir: str,
     blob never crosses the JVM↔Python socket after the input read — vs
     rewrite_tiffs + write_tiff_dir, which returns every blob to the JVM and
     ships it to a second Python stage (two extra multi-GB transfers). Only
-    (image_id, sizes, path) rows return. Each input is held once (the file
+    (image_id, sizes, path) rows return. The rewrite producer into the
+    file sink, one narrow _cog_stage: each input is held once (the file
     read on the path route, the Arrow blob on the bytes route) and the COG
-    is never materialized: _rewrite_file writes the header and views of
-    the input's tiles into the tmp with batched os.writev. Atomic per-file
-    via write_tif (tmp+rename); this is the reference CLI's own job shape
-    (read .tif, write .tif). A malformed TIFF fails the job with a
-    ValueError naming the image, and a failed write leaves no `.tmp`
-    behind."""
-    use_paths = _binaryfile_path_route(tiffs)  # see rewrite_tiffs
+    is never materialized — the header and views of the input's tiles go
+    into the tmp with batched os.writev. Atomic per-file via write_tif
+    (tmp+rename); this is the reference CLI's own job shape (read .tif,
+    write .tif). A malformed TIFF fails the job with a ValueError naming
+    the image, and a failed write leaves no `.tmp` behind."""
+    cols, read = _tiff_input(tiffs)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cfg = Config(with_gdal_ghost=ghost)
-        os.makedirs(out_dir, exist_ok=True)
-        for pdf in batches:
-            out = {"image_id": [], "in_bytes": [], "out_bytes": [],
-                   "out_path": []}
-            for r in pdf.itertuples(index=False):
-                data = _read_local_file(r.path) if use_paths else r.bytes
-                n = _rewrite_file(r.image_id, data, out_dir, cfg)
-                out["image_id"].append(r.image_id)
-                out["in_bytes"].append(len(data))
-                out["out_bytes"].append(n)
-                out["out_path"].append(os.path.join(out_dir,
-                                                    f"{r.image_id}.tif"))
-            yield pd.DataFrame(out)
+    def rows(r):
+        data = read(r)
+        with _rewritten_cog(r.image_id, data, ghost=ghost) as writer:
+            n = _file_sink(out_dir, r.image_id, writer)
+        yield (r.image_id, len(data), n,
+               os.path.join(out_dir, f"{r.image_id}.tif"))
 
-    tiffs = ensure_fanout(tiffs)
-    cols = ("image_id", "path") if use_paths else ("image_id", "bytes")
-    return tiffs.select(*cols).mapInPandas(
-        kernel, REWRITE_FILES_SCHEMA)
+    return _cog_stage(tiffs, cols, rows, REWRITE_FILES_SCHEMA)
 
 
 def rewrite_tiff_sets(parts: DataFrame, ghost: bool = True) -> DataFrame:
     """Multi-file rewrite (loader.go:63-106 / cogger_test.go TestMultiFiles):
     an image's TIFF arrives as several files (main + external .ovr overview
     files); rows (image_id, part_id, bytes) group per image, parts ordered by
-    part_id, and the codec folds all IFDs into one COG. A null part or a
-    malformed TIFF in any part fails the job with a ValueError naming the
-    image."""
-    emit = functools.partial(rewrite, cfg=Config(with_gdal_ghost=ghost))
-
+    part_id, and the rewrite producer folds all IFDs into one COG through
+    the blob sink. A null part or a malformed TIFF in any part fails the
+    job with a ValueError naming the image."""
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("part_id")
+        image_id = pdf["image_id"].iloc[0]
         blobs = list(pdf["bytes"])
-        cog = _rewrite_named(pdf["image_id"].iloc[0], emit, *blobs)
+        with _rewritten_cog(image_id, *blobs, ghost=ghost) as writer:
+            cog, _ = _blob_sink(writer)
         return pd.DataFrame({
-            "image_id": [pdf["image_id"].iloc[0]],
+            "image_id": [image_id],
             "cog": [cog],
             "in_bytes": [sum(len(b) for b in blobs)],
             "out_bytes": [len(cog)],

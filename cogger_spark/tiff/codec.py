@@ -303,7 +303,8 @@ def parse_tiff(data: bytes) -> TiffFile:
     Malformed input fails closed: a truncated header, IFD or tag value, an
     IFD chain that loops, or a tiled IFD with a zero tile width or length
     or with fewer TileOffsets or TileByteCounts than its tile grid has
-    tiles, raises ValueError naming the offset.
+    tiles, or a tile whose bytes run past the end of `data`, raises
+    ValueError naming the offset.
     """
     if data[:2] == b"II":
         bo = "<"
@@ -407,6 +408,14 @@ def parse_tiff(data: bytes) -> TiffFile:
                     f"{ifd.n_tiles_x()}x{ifd.n_tiles_y()}x{ifd.n_planes()} "
                     f"tile grid but {len(ifd.tile_offsets)} TileOffsets and "
                     f"{len(ifd.tile_byte_counts)} TileByteCounts")
+            past = next((i for i, o, c in zip(range(need), ifd.tile_offsets,
+                                              ifd.tile_byte_counts)
+                         if c > 0 and o + c > n), None)
+            if past is not None:
+                raise ValueError(
+                    f"truncated TIFF: tile {past} of the IFD at offset {off} "
+                    f"({ifd.tile_byte_counts[past]} bytes at offset "
+                    f"{ifd.tile_offsets[past]}) runs past the end ({n} bytes)")
         off = struct.unpack_from(bo + ("Q" if big else "I"), data, after)[0]
 
         # bind the lazy tile reader (loader.go:45-51)

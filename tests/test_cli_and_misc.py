@@ -98,15 +98,16 @@ def test_spark_submit_py_files(tmp_path, smoke_images):
     assert n > 50
 
 
-def test_write_cogs_file_sink(spark, smoke_images, tmp_path):
+def test_cog_pipeline_blobs_to_write_tiff_dir(spark, smoke_images, tmp_path):
     import hashlib
     import pathlib
-    from cogger_spark.operators.tiling import cog_pipeline, write_cogs
+    from cogger_spark.operators.tiling import cog_pipeline
+    from cogger_spark.sources.tiffdir import write_tiff_dir
     from cogger_spark.tiff import parse_tiff
     images = spark.read.parquet(smoke_images).limit(5)
     cogs = cog_pipeline(images, tile=512)
     out = tmp_path / "cogs"
-    write_cogs(cogs, str(out))
+    write_tiff_dir(cogs, str(out))
     blobs = {r.image_id: bytes(r.cog) for r in cogs.collect()}
     files = sorted(pathlib.Path(out).glob("*.tif"))
     assert len(files) == 5
@@ -183,7 +184,7 @@ def test_cli_convert_checkpointed(spark, smoke_images, tmp_path):
     assert remaining_buckets(4, ck) == []
 
 
-def test_cli_rewrite_files_golden(spark, tmp_path):
+def test_cli_rewrite_dir_golden(spark, tmp_path):
     """CLI rewrite over a directory of .tif files reproduces the committed
     golden COGs byte-for-byte — the reference CLI's own job, distributed."""
     import hashlib

@@ -1,7 +1,9 @@
 """Codec Config surface (cog.go:429-450): byte order, forced + adaptive
 BigTIFF, custom planar interleaving — self-parse round trips."""
 
+import mmap
 import struct
+import tempfile
 
 import pytest
 
@@ -13,7 +15,6 @@ def _ifd(w=64, h=64, tile=32, planes=1, planar=False, byte_counts=None):
     ntx, nty = -(-w // tile), -(-h // tile)
     n = ntx * nty * (planes if planar else 1)
     tbc = list(byte_counts) if byte_counts else [16] * n
-    blobs = [bytes([i % 251]) * c for i, c in enumerate(tbc)]
     ifd = IFD(
         image_width=w, image_height=h,
         bits_per_sample=(8,) * planes,
@@ -24,7 +25,8 @@ def _ifd(w=64, h=64, tile=32, planes=1, planar=False, byte_counts=None):
         tile_byte_counts=tuple(tbc),
         tile_offsets=tuple([0] * n),
     )
-    ifd.load_tile = lambda idx, _b=blobs: _b[idx]
+    # built on demand: the BigTIFF case declares two 3 GiB tiles
+    ifd.load_tile = lambda idx: bytes([idx % 251]) * tbc[idx]
     return ifd
 
 
@@ -54,7 +56,12 @@ def test_adaptive_bigtiff_restart():
     header = w.header()
     assert w.bigtiff
     assert struct.unpack("<H", header[2:4])[0] == 43
-    tf = parse_tiff(header)
+    # parse_tiff rejects tiles past the end of its input, so the header
+    # opens a sparse file of the COG's full length (the data a hole)
+    with tempfile.TemporaryFile() as f:
+        f.write(header)
+        f.truncate(len(header) + sum(big.tile_byte_counts))
+        tf = parse_tiff(mmap.mmap(f.fileno(), 0, access=mmap.ACCESS_READ))
     offs = tf.ifds[0].tile_offsets
     assert offs[1] - offs[0] == 3 << 30
     assert offs[2] > 0xFFFFFFFF  # the offset that forced the upgrade

@@ -2,9 +2,10 @@
 
 `_Writer.pieces()` emits a COG as the header plus, per tile, a leader, the
 payload as a view of its source and a trailer; `rewrite`/`rewrite_split`
-join those pieces once and `write_pieces` writes them with batched
-os.writev. Every output here is checked byte for byte against a test-local
-copy of the concatenating loop the emitter replaced."""
+join those pieces once, and the file sink (`_file_sink`) hands them to
+`write_pieces`, which writes them with batched os.writev. Every output
+here is checked byte for byte against a test-local copy of the
+concatenating loop the emitter replaced."""
 
 import os
 import struct
@@ -13,8 +14,8 @@ import tracemalloc
 import pytest
 
 from cogger_spark.operators.tiling import (
-    _read_local_file, _rewrite_file, rewrite_tiff_sets, rewrite_tiffs_to_dir,
-    write_cogs)
+    _file_sink, _read_local_file, _rewritten_cog, rewrite_tiff_sets,
+    rewrite_tiffs_to_dir, write_cog_parts)
 from cogger_spark.sources.tiffdir import (
     read_tiff_dir, write_tif, write_tiff_dir)
 from cogger_spark.tiff import codec
@@ -112,6 +113,18 @@ def _source(case: str) -> bytes:
     return _concat_emit(make(), src_cfg)
 
 
+def _sink_file(image_id: str, data: bytes, out_dir: str, cfg: Config) -> int:
+    """`data` rewritten into the file sink: through the rewrite producer
+    when `cfg` varies only the ghost; a Config that sets more (big-endian,
+    BigTIFF) builds the _Writer from that Config."""
+    if cfg == Config(with_gdal_ghost=cfg.with_gdal_ghost):
+        with _rewritten_cog(image_id, data,
+                            ghost=cfg.with_gdal_ghost) as writer:
+            return _file_sink(out_dir, image_id, writer)
+    writer = _Writer(assemble_ifd_tree(parse_tiff(data).ifds), cfg)
+    return _file_sink(out_dir, image_id, writer)
+
+
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_rewrite_and_split_equal_the_concatenating_loop(case):
     _, _, cfg = CASES[case]
@@ -148,7 +161,7 @@ def test_file_sink_equals_the_concatenating_loop(tmp_path, case, route):
         data = src
     out = tmp_path / "out"
     out.mkdir()
-    n = _rewrite_file("img", data, str(out), cfg)
+    n = _sink_file("img", data, str(out), cfg)
     want = _concat_rewrite(src, cfg)
     assert (out / "img.tif").read_bytes() == want
     assert n == len(want)
@@ -166,7 +179,7 @@ def test_short_writes_still_give_identical_files(tmp_path, monkeypatch):
     for case in sorted(CASES):
         _, _, cfg = CASES[case]
         src = _source(case)
-        _rewrite_file(case, src, str(tmp_path), cfg)
+        _sink_file(case, src, str(tmp_path), cfg)
         assert (tmp_path / f"{case}.tif").read_bytes() == \
             _concat_rewrite(src, cfg), case
 
@@ -213,7 +226,7 @@ def test_file_rewrite_holds_one_copy_of_the_input(tmp_path):
     tracemalloc.start()
     try:
         data = _read_local_file(src.as_uri())
-        _rewrite_file("big", data, str(out), Config())
+        _sink_file("big", data, str(out), Config())
         peak = tracemalloc.get_traced_memory()[1]
     finally:
         tracemalloc.stop()
@@ -240,7 +253,7 @@ def test_file_sink_fails_closed(tmp_path, kind, match, route):
     out = tmp_path / "out"
     out.mkdir()
     with pytest.raises(ValueError, match=f"img_00000042.*{match}"):
-        _rewrite_file("img_00000042", data, str(out), Config())
+        _sink_file("img_00000042", data, str(out), Config())
     assert os.listdir(out) == []
 
 
@@ -329,16 +342,20 @@ def test_write_tif_removes_tmp_when_the_write_fails(tmp_path):
     assert os.listdir(tmp_path) == []
 
 
-@pytest.mark.parametrize("sink", ["write_cogs", "write_tiff_dir"])
+@pytest.mark.parametrize("sink", ["write_cog_parts", "write_tiff_dir"])
 def test_blob_sinks_remove_tmp_when_the_rename_fails(spark, tmp_path, sink):
     """The final name is taken by a directory, so the rename fails: the job
     fails and the `.tmp` is gone."""
     out = tmp_path / "out"
     (out / "img_00000042.tif" / "blocker").mkdir(parents=True)
-    cogs = spark.createDataFrame([("img_00000042", _source("ghost"))],
-                                 "image_id string, cog binary")
     with pytest.raises(Exception):
-        (write_cogs if sink == "write_cogs" else write_tiff_dir)(
-            cogs, str(out))
+        if sink == "write_cog_parts":
+            write_cog_parts(spark.createDataFrame(
+                [("img_00000042", 0, _source("ghost"))],
+                "image_id string, part_idx int, part binary"), str(out))
+        else:
+            write_tiff_dir(spark.createDataFrame(
+                [("img_00000042", _source("ghost"))],
+                "image_id string, cog binary"), str(out))
     assert sorted(os.listdir(out)) == ["img_00000042.tif"]
     assert os.listdir(out / "img_00000042.tif") == ["blocker"]

@@ -1,6 +1,7 @@
-"""Malformed TIFFs (truncated, looped, tiled with a zero tile size, or
-with a tile grid larger than its tile tables) fail the rewrite closed:
-`parse_tiff` raises ValueError naming the offset, the rewrite kernels
+"""Malformed TIFFs (truncated, looped, tiled with a zero tile size, with
+a tile grid larger than its tile tables, or with tile data past the end)
+fail the rewrite closed: `parse_tiff` raises ValueError naming the
+offset, before any sink opens a file; the rewrite kernels
 re-raise it naming the image on both input routes, and
 `rewrite_tiffs_to_dir` leaves no file behind."""
 
@@ -10,19 +11,18 @@ import struct
 
 import pytest
 
-from cogger_spark.operators.tiling import _write_cog_file
+from cogger_spark.operators.tiling import _blob_sink, _streamed_cog
 from cogger_spark.tiff.codec import parse_tiff, rewrite
 
 W, H = 40, 30
 
 
 @pytest.fixture(scope="module")
-def cog(tmp_path_factory) -> bytes:
-    d = tmp_path_factory.mktemp("cog")
+def cog() -> bytes:
     px = bytes(i % 251 for i in range(W * H * 3))
-    _write_cog_file("img_00000001", px, W, H, "raw", str(d), 16, "deflate",
-                    True)
-    return (d / "img_00000001.tif").read_bytes()
+    with _streamed_cog("img_00000001", px, W, H, "raw", 16, "deflate",
+                       True) as writer:
+        return _blob_sink(writer)[0]
 
 
 def _set_tag(cog: bytes, ifd0: int, ntags: int, tag: int,
@@ -72,9 +72,8 @@ def test_codec_bad_input_raises_value_error(cog, case):
     data, match = _bad_inputs(cog)[case]
     with pytest.raises(ValueError, match=match):
         rewrite(data)
-    if case != "truncated_tile_data":  # parses; the tile read fails
-        with pytest.raises(ValueError, match=match):
-            parse_tiff(data)
+    with pytest.raises(ValueError, match=match):
+        parse_tiff(data)
 
 
 def test_codec_every_prefix_and_byte_flip_fails_closed(cog):

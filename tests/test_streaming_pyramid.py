@@ -1,9 +1,12 @@
-"""The streaming COG core behind the file, blob and parts sinks
-(convert_images / tile_assemble_write, cog_pipeline, cog_pipeline_parts):
-level 0 streamed as row blocks from raw or deflate input, tiles
-byte-identical to the whole-image pyramid, working set bounded by a
-tile-row block per level, fail-closed on bad input in every sink, one
-Spark job per sink over a scan with a split per slot."""
+"""The producers × sinks layer of operators.tiling: the pixel producer
+(_streamed_cog) and the rewrite producer (_rewritten_cog) into the file,
+blob and parts sinks (convert_images / tile_assemble_write, cog_pipeline,
+cog_pipeline_parts, rewrite_tiffs, rewrite_tiffs_to_dir): level 0
+streamed as row blocks from raw or deflate input, tiles byte-identical to
+the whole-image pyramid, working set bounded by a tile-row block per
+level, every sink's bytes equal to its producer's pieces, fail-closed on
+bad input in every sink, one Spark job per sink over a scan with a split
+per slot."""
 
 import os
 import zlib
@@ -16,9 +19,9 @@ from cogger_spark.functions.imagecodecs import (
     build_pyramid, cut_tiles, encode_image)
 from cogger_spark.operators import tiling
 from cogger_spark.operators.tiling import (
-    _block_rows, _cog_blob, _cog_blob_row, _cog_part_rows, _decode_and_cut,
-    _level0_blocks, _pyramid_dims, _pyramid_tiles, _write_cog_file,
-    infer_planes)
+    _blob_sink, _block_rows, _build_cog, _file_sink, _level0_blocks,
+    _parts_sink, _pyramid_dims, _pyramid_tiles, _rewritten_cog,
+    _streamed_cog, infer_planes)
 
 
 def _views(px, tile):
@@ -47,6 +50,24 @@ def _reference_tiles(px, nplanes, mask, tile, compression, min_overview_size,
                     out[(lvl, 1, ty, tx)] = encode_image(block[:, :, nplanes:],
                                                          compression)
     return out
+
+
+def _reference_cog(px, image_id, tile):
+    """The whole-image reference COG of px (no mask): _reference_tiles
+    assembled by _build_cog from in-memory payloads, deflate, ghost on."""
+    h, w, nplanes = px.shape
+    tiles = _reference_tiles(px, nplanes, False, tile, "deflate", 2, False)
+    dims = _pyramid_dims(w, h, tile)
+    return b"".join(_build_cog(image_id, nplanes, False, len(dims), dims,
+                               {k: len(v) for k, v in tiles.items()},
+                               tiles.__getitem__, tile, 8, True).pieces())
+
+
+def _pixel_file(image_id, data, w, h, fmt, out_dir, tile):
+    """The pixel producer into the file sink (tile_assemble_write's row)."""
+    with _streamed_cog(image_id, data, w, h, fmt, tile, "deflate",
+                       True) as writer:
+        return _file_sink(out_dir, image_id, writer)
 
 
 TILE = 16
@@ -117,20 +138,17 @@ def test_streaming_write_memory_bounded(tmp_path):
     import tracemalloc
     from cogger_spark.fixtures import make_pixels
     w, h = 4096, 4104
-    data = make_pixels(0, w, h, 1, False).tobytes()
+    px = make_pixels(0, w, h, 1, False)
+    data = px.tobytes()
     tracemalloc.start()
     try:
-        _write_cog_file("img_00000000", data, w, h, "raw", str(tmp_path),
-                        512, "deflate", True)
+        _pixel_file("img_00000000", data, w, h, "raw", str(tmp_path), 512)
         _, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
     assert peak < len(data) / 2, (peak, len(data))
-    nplanes, mask, n_levels, dims, payloads = _decode_and_cut(
-        data, w, h, "raw", 512, "deflate")
-    header, body, _ = _cog_blob("img_00000000", nplanes, mask, n_levels, dims,
-                                payloads, 512, 8, True)
-    assert (tmp_path / "img_00000000.tif").read_bytes() == header + body
+    assert (tmp_path / "img_00000000.tif").read_bytes() == _reference_cog(
+        px, "img_00000000", 512)
     assert sorted(os.listdir(tmp_path)) == ["img_00000000.tif"]
 
 
@@ -141,21 +159,19 @@ def test_streaming_write_memory_bounded_deflate(tmp_path):
     import tracemalloc
     from cogger_spark.fixtures import make_pixels
     w, h = 4096, 4104
-    raw = make_pixels(0, w, h, 1, False).tobytes()
+    px = make_pixels(0, w, h, 1, False)
+    raw = px.tobytes()
     data = zlib.compress(raw, 1)
     tracemalloc.start()
     try:
-        _write_cog_file("img_00000000", data, w, h, "deflate", str(tmp_path),
-                        512, "deflate", True)
+        _pixel_file("img_00000000", data, w, h, "deflate", str(tmp_path),
+                    512)
         _, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
     assert peak < len(raw) / 2, (peak, len(raw))
-    nplanes, mask, n_levels, dims, payloads = _decode_and_cut(
-        raw, w, h, "raw", 512, "deflate")
-    header, body, _ = _cog_blob("img_00000000", nplanes, mask, n_levels, dims,
-                                payloads, 512, 8, True)
-    assert (tmp_path / "img_00000000.tif").read_bytes() == header + body
+    assert (tmp_path / "img_00000000.tif").read_bytes() == _reference_cog(
+        px, "img_00000000", 512)
 
 
 W, H = 40, 30
@@ -184,23 +200,46 @@ def test_streaming_write_fails_closed(tmp_path, case):
     data, fmt = BAD_INPUTS[case]
     iid = IMAGE_IDS.get(case, "img_00000042")
     with pytest.raises(ValueError, match=iid):
-        _write_cog_file(iid, data, W, H, fmt, str(tmp_path), 16,
-                        "deflate", True)
+        _pixel_file(iid, data, W, H, fmt, str(tmp_path), 16)
     assert os.listdir(tmp_path) == []
 
 
+def _pixels(iid, data, fmt="raw", ghost=True):
+    return _streamed_cog(iid, data, W, H, fmt, 16, "deflate", ghost)
+
+
+def _rewrite(iid, data, fmt=None):
+    return _rewritten_cog(iid, data)
+
+
+def _into_blob(producer):
+    def run(data, fmt, iid="img_00000042"):
+        with producer(iid, data, fmt) as writer:
+            return _blob_sink(writer)
+    return run
+
+
+def _into_parts(producer):
+    def run(data, fmt, iid="img_00000042"):
+        with producer(iid, data, fmt) as writer:
+            return list(_parts_sink(writer, 7))
+    return run
+
+
+# the in-memory sinks under the pixel producer, and under the rewrite
+# producer, which takes the same bad blobs as (non-)TIFF input
 IN_MEMORY_SINKS = {
-    "blob": lambda data, fmt, iid="img_00000042": _cog_blob_row(
-        iid, data, W, H, fmt, 16, "deflate", True),
-    "parts": lambda data, fmt, iid="img_00000042": list(_cog_part_rows(
-        iid, data, W, H, fmt, 16, "deflate", True, 7)),
+    "blob": _into_blob(_pixels),
+    "parts": _into_parts(_pixels),
+    "rewrite_blob": _into_blob(_rewrite),
+    "rewrite_parts": _into_parts(_rewrite),
 }
 
 
 @pytest.mark.parametrize("case", sorted(BAD_INPUTS))
 @pytest.mark.parametrize("sink", sorted(IN_MEMORY_SINKS))
 def test_blob_and_parts_sinks_fail_closed(tmp_path, monkeypatch, sink, case):
-    """The blob and parts sinks go through the same core: ValueError naming
+    """The blob and parts sinks under either producer: ValueError naming
     the image, no file left in the temp dir and no descriptor left open."""
     import tempfile
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
@@ -230,8 +269,8 @@ def test_block_pass_zlib_error_names_the_image(tmp_path, monkeypatch, sink):
     data = zlib.compress(bytes(W * H * 3), 1)
     with pytest.raises(ValueError, match="image 'img_00000042'.*Error -3"):
         if sink == "file":
-            _write_cog_file("img_00000042", data, W, H, "deflate",
-                            str(tmp_path), 16, "deflate", True)
+            _pixel_file("img_00000042", data, W, H, "deflate", str(tmp_path),
+                        16)
         else:
             IN_MEMORY_SINKS[sink](data, "deflate")
     assert len(calls) == 2
@@ -258,8 +297,61 @@ def test_deflate_trailing_bytes_accepted():
     clean = zlib.compress(px.tobytes(), 1)
     trailing = clean + b"trailing garbage"
     assert zlib.decompress(trailing) == px.tobytes()
-    for sink in IN_MEMORY_SINKS.values():
-        assert sink(trailing, "deflate") == sink(clean, "deflate")
+    for sink in ("blob", "parts"):
+        assert IN_MEMORY_SINKS[sink](trailing, "deflate") == \
+            IN_MEMORY_SINKS[sink](clean, "deflate")
+
+
+# a 2-plane (gray + mask) image of 16 tiles over 2 levels, 3 parts of 7
+PX = np.random.default_rng(5).integers(0, 256, (H, W, 2),
+                                       dtype=np.uint8).tobytes()
+
+
+def _tiff():
+    """A no-ghost COG of PX: rewrite input the rewrite re-frames."""
+    with _pixels("img_00000042", PX, ghost=False) as writer:
+        return b"".join(writer.pieces())
+
+
+PRODUCERS = {"pixels": lambda: _pixels("img_00000042", PX),
+             "rewrite": lambda: _rewrite("img_00000042", _tiff())}
+
+
+def _sink_bytes(sink, writer, out_dir):
+    if sink == "file":
+        n = _file_sink(str(out_dir), "img_00000042", writer)
+        data = (out_dir / "img_00000042.tif").read_bytes()
+        assert n == len(data)
+        return data
+    if sink == "blob":
+        cog, _ = _blob_sink(writer)
+        return cog
+    if sink == "split":
+        header, data, _ = _blob_sink(writer, split=True)
+        return header + data
+    parts = list(_parts_sink(writer, 7))
+    assert [k for k, _ in parts] == list(range(len(parts))) and len(parts) > 2
+    return b"".join(p for _, p in parts)
+
+
+@pytest.mark.parametrize("producer,sink", [
+    ("pixels", "file"),     # tile_assemble_write / convert_images
+    ("pixels", "blob"),     # cog_pipeline
+    ("pixels", "parts"),    # cog_pipeline_parts
+    ("rewrite", "file"),    # rewrite_tiffs_to_dir
+    ("rewrite", "blob"),    # rewrite_tiffs, rewrite_tiff_sets
+    ("rewrite", "split"),   # rewrite_tiffs(split=True)
+])
+def test_every_sink_equals_its_producers_pieces(tmp_path, producer, sink):
+    """Each (producer, sink) pair in use: the sink's bytes — the file, the
+    blob, header || data, the parts concatenated — are exactly the
+    producer writer's pieces, and only the file sink leaves a file."""
+    with PRODUCERS[producer]() as writer:
+        want = b"".join(writer.pieces())
+    with PRODUCERS[producer]() as writer:
+        assert _sink_bytes(sink, writer, tmp_path) == want
+    assert os.listdir(tmp_path) == (["img_00000042.tif"] if sink == "file"
+                                    else [])
 
 
 def test_convert_images_fails_closed_in_spark(spark, tmp_path):
@@ -305,8 +397,7 @@ def test_tile_pixel_stats_fails_closed_in_spark(spark, case):
 def _convert(images, tmp_path):
     from cogger_spark.operators.tiling import convert_images
     out = tmp_path / "out"
-    convert_images(images, str(out), tile=256, split_threshold_px=600 * 600,
-                   target_px=256 * 512, tiles_per_part=7)
+    convert_images(images, str(out), tile=256, split_threshold_px=600 * 600)
     # every file in the directory: no tmp or spill may be left beside them
     return {name: (out / name).read_bytes() for name in os.listdir(out)}
 

@@ -14,15 +14,14 @@ from cogger_spark.operators.tiling import (
 def big_images(spark, tmp_path_factory):
     import pyarrow.parquet as pq
     from cogger_spark.fixtures import make_images_table
-    # dims incl. 1024 so a small target_px forces multiple strips + levels,
+    # dims incl. 1024 so a small tile gives several tile rows and levels,
     # and a 1x1 image
     path = tmp_path_factory.mktemp("strips") / "images.parquet"
     pq.write_table(make_images_table(12, dims=[1024, 700, 513, 1]), path)
     return spark.read.parquet(str(path))
 
 
-TILE = 256  # small tile → strips at 256-multiples, several per 1024px image
-TARGET = 256 * 512  # forces ~2-4 full-res strips on the 1024px images
+TILE = 256  # small tile → four tile rows per 1024px image
 
 
 def _blob_rows(cogs):
@@ -97,8 +96,7 @@ def test_convert_images_autoroutes_mixed_table(spark, big_images, tmp_path):
     from cogger_spark.operators.tiling import convert_images
     out = tmp_path / "auto_out"
     convert_images(big_images, str(out), tile=TILE,
-                   split_threshold_px=600 * 600, target_px=TARGET,
-                   tiles_per_part=7)
+                   split_threshold_px=600 * 600)
     whole = {r.image_id: bytes(r.cog)
              for r in assemble_cogs(tile_images(big_images, tile=TILE),
                                     tile=TILE).collect()}
