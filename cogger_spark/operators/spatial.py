@@ -22,8 +22,6 @@ both sides (t.min < z.max AND t.max > z.min).
 
 from __future__ import annotations
 
-import zlib
-
 import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
@@ -41,7 +39,7 @@ from ..functions.geo import (
     LON_MULT,
     PIXEL_DEG,
 )
-from .tiling import _level0_blocks, ensure_fanout
+from .tiling import _IMAGE_COLS, _cog_stage, _fail_closed, _level0_blocks
 
 # ---------------------------------------------------------------------------
 # tile extents — JVM-only column math
@@ -502,28 +500,22 @@ _PIXEL_STATS_SCHEMA = ("image_id string, ty int, tx int, px_count long, "
                        "px_sum long, px_min int, px_max int")
 
 
-def _image_stats_rows(out: dict, image_id: str, data: bytes, w: int, h: int,
-                      fmt: str, tile: int) -> None:
-    """Append the per-tile stats of one image. Level 0 streams as one-tile-row
-    blocks (_level0_blocks), so every tile lies inside one block and the
-    kernel holds one block, never the decoded image (png/jpeg excepted:
-    their decoders are whole-image). Undecodable input raises ValueError
-    naming the image, as in tiling._streamed_cog."""
-    try:
+def _image_stats_rows(image_id: str, data: bytes, w: int, h: int, fmt: str,
+                      tile: int):
+    """Yield the per-tile stats rows of one image, in _PIXEL_STATS_SCHEMA
+    order. Level 0 streams as one-tile-row blocks (_level0_blocks), so
+    every tile lies inside one block and the kernel holds one block, never
+    the decoded image (png/jpeg excepted: their decoders are whole-image).
+    Undecodable input raises ValueError naming the image (_fail_closed)."""
+    with _fail_closed(image_id):
         nplanes, _mask, blocks = _level0_blocks(data, w, h, fmt, tile)
         for y0, rows in blocks:
             px = rows[:, :, :nplanes]
             for tx in range(-(-w // tile)):
                 block = px[:, tx * tile:(tx + 1) * tile]
-                out["image_id"].append(image_id)
-                out["ty"].append(y0 // tile)
-                out["tx"].append(tx)
-                out["px_count"].append(int(block.size))
-                out["px_sum"].append(int(block.sum(dtype=np.int64)))
-                out["px_min"].append(int(block.min()))
-                out["px_max"].append(int(block.max()))
-    except (ValueError, zlib.error) as exc:
-        raise ValueError(f"image {image_id!r}: {exc}") from exc
+                yield (image_id, y0 // tile, tx, int(block.size),
+                       int(block.sum(dtype=np.int64)), int(block.min()),
+                       int(block.max()))
 
 
 def tile_pixel_stats(images: DataFrame, tile: int = 512) -> DataFrame:
@@ -532,21 +524,15 @@ def tile_pixel_stats(images: DataFrame, tile: int = 512) -> DataFrame:
     plane excluded). Emits no payloads (stats only), so the shuffle to any
     downstream join moves a few longs per tile.
 
-    One ensure_fanout + mapInPandas stage for every image size: each image
-    streams through _image_stats_rows one tile row at a time, so a task's
-    pixel memory is one block (tile × width × planes), not the image."""
-
-    def kernel(batches):
-        for pdf in batches:
-            out = {k: [] for k in ("image_id", "ty", "tx", "px_count",
-                                   "px_sum", "px_min", "px_max")}
-            for r in pdf.itertuples(index=False):
-                _image_stats_rows(out, r.image_id, r.bytes, int(r.w),
-                                  int(r.h), r.fmt, tile)
-            yield pd.DataFrame(out)
-
-    return ensure_fanout(images).select("image_id", "bytes", "w", "h", "fmt") \
-        .mapInPandas(kernel, schema=_PIXEL_STATS_SCHEMA)
+    One _cog_stage (ensure_fanout + mapInPandas) for every image size: each
+    image streams through _image_stats_rows one tile row at a time, so a
+    task's pixel memory is one block (tile × width × planes), not the
+    image."""
+    return _cog_stage(
+        images, _IMAGE_COLS,
+        lambda r: _image_stats_rows(r.image_id, r.bytes, int(r.w), int(r.h),
+                                    r.fmt, tile),
+        _PIXEL_STATS_SCHEMA)
 
 
 def zonal_pixel_stats(zones: DataFrame, images: DataFrame,

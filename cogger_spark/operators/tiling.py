@@ -13,7 +13,9 @@ came from pixels or from a parsed TIFF (loader.go:59-106).
       A task holds one block per level, never the decoded image (png/jpeg
       excepted: their decoders are whole-image);
     - _rewritten_cog (tiled TIFFs): parse and assemble the IFD tree, no
-      pixel work; the payloads are views of the input.
+      pixel work; the payloads are views of the input;
+    - _tiled_cog (one image's rows of the tile relation): plan the IFD
+      tree from the rows' byte counts; the payloads are the rows'.
 * A SINK takes a writer: _file_sink (<out_dir>/<image_id>.tif through
   write_tif + write_pieces; the COG is never materialized), _blob_sink
   (the pieces joined once, optionally split into header and data) and
@@ -26,12 +28,14 @@ came from pixels or from a parsed TIFF (loader.go:59-106).
   route probe, no checkpoint, no shuffle unless ensure_fanout must fan
   out a scan with fewer splits than slots. tile_images streams
   _pyramid_tiles through it as the tile relation.
-* The grouped kernels — assemble_cogs over the tile relation and
-  rewrite_tiff_sets over multi-file TIFFs — group per image_id (uniformly
-  distributed, no hot keys) and call the same blob sink;
-  assemble_cog_parts builds headers from tile metadata and chunks from
-  the W1-ranked payloads. Tile metadata queries never touch `payload`
-  (column pruning pushes a narrow read into the scan).
+* _group_stage is the one applyInPandas kernel, its per-image twin:
+  groupBy image_id (uniformly distributed, no hot keys), then a producer
+  into a sink per group. It runs assemble_cogs (tile relation → blob),
+  assemble_cog_parts (→ parts) and rewrite_tiff_sets (multi-file TIFFs →
+  blob). A group holds one image's input and output, so the bounded sinks
+  for oversized images are cog_pipeline_parts and convert_images. Tile
+  metadata queries never touch `payload` (column pruning pushes a narrow
+  read into the scan).
 
 Tile-plane convention: by default imagery tiles are pixel-interleaved (one
 tile holds all bands, PlanarConfiguration=1) with plane=0; the optional mask
@@ -303,11 +307,10 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
                planar_interleaving: list | None = None):
     """The IFD tree (main + overviews + masks) of one image's COG from tile
     BYTE COUNTS alone, keyed (level, plane, ty, tx); `load(key)` returns a
-    tile's payload when the writer streams the data section (None for a
-    header-only writer). Returns the byte-exact codec's _Writer: header()
-    is computed from counts only (the two-pass plan of cog.go:522-597),
-    pieces() then emits the header and the payloads as they load
-    (cog.go:722-750).
+    tile's payload when the writer streams the data section. Returns the
+    byte-exact codec's _Writer: header() is computed from counts only (the
+    two-pass plan of cog.go:522-597), pieces() then emits the header and
+    the payloads as they load (cog.go:722-750).
 
     planar=True emits PlanarConfiguration=2: one imagery IFD per level with
     plane-major tile indexing (TIFF6 / codec tile_idx), the mask still its
@@ -348,8 +351,7 @@ def _build_cog(image_id: str, nplanes: int, has_mask: bool, n_levels: int,
             # these stripped by add_overview/add_mask (cog.go:186-193)
             ifd.model_pixel_scale = (PIXEL_DEG, PIXEL_DEG, 0.0)
             ifd.model_tie_point = (0.0, 0.0, 0.0, lon0, lat0, 0.0)
-        if load is not None:
-            ifd.load_tile = lambda idx, _k=keys: load(_k[idx])
+        ifd.load_tile = lambda idx, _k=keys: load(_k[idx])
         return ifd
 
     main = make_ifd(0, 0)
@@ -370,16 +372,19 @@ def tile_images(images: DataFrame, tile: int = 512, compression: str = "deflate"
     """Decode each image, build its 2x-average overview pyramid, cut every
     level into `tile`-sized tiles (zero-padded at edges), compress, and emit
     one row per tile: _pyramid_tiles streamed through _cog_stage, so a task
-    holds one block per level plus at most 4 MB of output rows."""
+    holds one block per level plus at most 4 MB of output rows. Undecodable
+    input raises ValueError naming the image (_fail_closed)."""
     def rows(r):
         w, h = int(r.w), int(r.h)
         dims = _pyramid_dims(w, h, tile)
-        nplanes, mask, blocks = _level0_blocks(r.bytes, w, h, r.fmt,
-                                               _block_rows(tile))
-        for lvl, plane, ty, tx, payload in _pyramid_tiles(
-                blocks, nplanes, mask, tile, compression, dims, planar=planar):
-            yield (r.image_id, lvl, plane, ty, tx, *dims[lvl], len(dims),
-                   nplanes, mask, len(payload), payload)
+        with _fail_closed(r.image_id):
+            nplanes, mask, blocks = _level0_blocks(r.bytes, w, h, r.fmt,
+                                                   _block_rows(tile))
+            for lvl, plane, ty, tx, payload in _pyramid_tiles(
+                    blocks, nplanes, mask, tile, compression, dims,
+                    planar=planar):
+                yield (r.image_id, lvl, plane, ty, tx, *dims[lvl], len(dims),
+                       nplanes, mask, len(payload), payload)
 
     return _cog_stage(images, _IMAGE_COLS, rows, TILE_SCHEMA)
 
@@ -449,39 +454,27 @@ def assemble_cogs(tiles: DataFrame, tile: int = 512,
                   compression: str = "deflate", ghost: bool = True,
                   split: bool = False, planar: bool = False,
                   planar_interleaving: list | None = None) -> DataFrame:
-    """Group tiles per image and emit one complete COG blob per image.
+    """Group tiles per image and emit one complete COG blob per image: the
+    tile-relation producer into the blob sink, one _group_stage.
 
-    The kernel rebuilds the IFD tree (main + overviews + masks) and delegates
-    layout to the byte-exact codec: metadata-first header, GDAL ghost areas,
-    prefix-sum offsets, deterministic tile order (cog.go:460-750).
+    The producer rebuilds the IFD tree (main + overviews + masks) and
+    delegates layout to the byte-exact codec: metadata-first header, GDAL
+    ghost areas, prefix-sum offsets, deterministic tile order
+    (cog.go:460-750).
 
     split=True emits header and tile data as separate binary columns — the
     RewriteSplitted/RewriteIFDTreeSplitted surface (S6, loader.go:67,
     cog.go:765-780), letting the sink route metadata and payload bytes to
     different destinations."""
-    # quant6 is pre-quantization + deflate → the TIFF payload codec is still 8
-    comp_tag = 1 if compression == "raw" else 8
-    schema = SPLIT_ASSEMBLY_SCHEMA if split else ASSEMBLY_SCHEMA
+    def rows(pdf):
+        with _tiled_cog(pdf, tile, compression, ghost, planar,
+                        planar_interleaving) as writer:
+            *blobs, header_bytes = _blob_sink(writer, split)
+        yield (pdf["image_id"].iloc[0], *blobs, *_tiles_levels(writer),
+               header_bytes, sum(map(len, blobs)))
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        image_id = pdf["image_id"].iloc[0]
-        n_levels = int(pdf["n_levels"].iloc[0])
-        payloads = {}
-        level_dims = {}
-        for r in pdf.itertuples(index=False):
-            payloads[(r.level, r.plane, r.ty, r.tx)] = r.payload
-            level_dims[r.level] = (int(r.level_w), int(r.level_h))
-        *blobs, header_bytes = _blob_sink(_build_cog(
-            image_id, int(pdf["planes"].iloc[0]),
-            bool(pdf["has_mask"].iloc[0]), n_levels, level_dims,
-            {k: len(v) for k, v in payloads.items()}, payloads.__getitem__,
-            tile, comp_tag, ghost, planar=planar,
-            planar_interleaving=planar_interleaving), split)
-        return pd.DataFrame([(image_id, *blobs, len(pdf), n_levels,
-                              header_bytes, sum(map(len, blobs)))],
-                            columns=_columns(schema))
-
-    return tiles.groupBy("image_id").applyInPandas(kernel, schema=schema)
+    return _group_stage(tiles, rows,
+                        SPLIT_ASSEMBLY_SCHEMA if split else ASSEMBLY_SCHEMA)
 
 
 # The size split of perfbench's traced tile_convert job (route_probe) and
@@ -512,6 +505,17 @@ _IMAGE_COLS = ("image_id", "bytes", "w", "h", "fmt")
 # --- producers: one image's codec _Writer ------------------------------------
 
 @contextlib.contextmanager
+def _fail_closed(image_id: str):
+    """Re-raise malformed input met inside the block — a ValueError, or the
+    zlib.error of a stream that does not inflate — as a ValueError naming
+    the image."""
+    try:
+        yield
+    except (ValueError, zlib.error) as exc:
+        raise ValueError(f"image {image_id!r}: {exc}") from exc
+
+
+@contextlib.contextmanager
 def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
                   tile: int, compression: str, ghost: bool):
     """Pixel producer (cog.go:522-597, 722-750): decode level 0 block by
@@ -533,7 +537,7 @@ def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
     dims = _pyramid_dims(w, h, tile)
     counts, offsets, pos = {}, {}, 0
     with tempfile.TemporaryFile() as spill:
-        try:
+        with _fail_closed(image_id):
             nplanes, mask, blocks = _level0_blocks(data, w, h, fmt,
                                                    _block_rows(tile))
             for lvl, plane, ty, tx, payload in _pyramid_tiles(
@@ -542,8 +546,6 @@ def _streamed_cog(image_id: str, data: bytes, w: int, h: int, fmt: str,
                 counts[(lvl, plane, ty, tx)] = len(payload)
                 offsets[(lvl, plane, ty, tx)] = pos
                 pos += len(payload)
-        except (ValueError, zlib.error) as exc:
-            raise ValueError(f"image {image_id!r}: {exc}") from exc
         spill.flush()
         fd = spill.fileno()
         yield _build_cog(image_id, nplanes, mask, len(dims), dims, counts,
@@ -559,13 +561,32 @@ def _rewritten_cog(image_id: str, *blobs: bytes, ghost: bool = True):
     header and then views of the blobs' tiles. A null blob or a malformed
     TIFF, found at parse time or while a sink emits, raises ValueError
     naming the image."""
-    try:
+    with _fail_closed(image_id):
         if any(b is None for b in blobs):
             raise ValueError("null TIFF blob")
         yield _Writer(_assemble_sources(*blobs),
                       Config(with_gdal_ghost=ghost))
-    except ValueError as exc:
-        raise ValueError(f"image {image_id!r}: {exc}") from exc
+
+
+@contextlib.contextmanager
+def _tiled_cog(pdf: pd.DataFrame, tile: int, compression: str, ghost: bool,
+               planar: bool = False, planar_interleaving: list | None = None):
+    """Tile-relation producer: one image's TILE_SCHEMA rows (a _group_stage
+    group) planned into a COG by _build_cog from their byte counts. Yields
+    the codec _Writer, whose pieces() emits the header and then the
+    group's payloads in COG order; the group's payloads are held in memory
+    while a sink runs."""
+    payloads, level_dims = {}, {}
+    for r in pdf.itertuples(index=False):
+        payloads[(r.level, r.plane, r.ty, r.tx)] = r.payload
+        level_dims[r.level] = (int(r.level_w), int(r.level_h))
+    first = next(pdf.itertuples(index=False))
+    yield _build_cog(first.image_id, int(first.planes), bool(first.has_mask),
+                     int(first.n_levels), level_dims,
+                     {k: len(v) for k, v in payloads.items()},
+                     payloads.__getitem__, tile,
+                     1 if compression == "raw" else 8, ghost, planar=planar,
+                     planar_interleaving=planar_interleaving)
 
 
 def _tiles_levels(writer: _Writer) -> tuple[int, int]:
@@ -611,9 +632,9 @@ def _parts_sink(writer: _Writer, tiles_per_part: int) -> Iterator[tuple]:
     """Parts sink: (part_idx, part) pairs. Part 0 is the header; part k
     holds the data bytes of the tiles ranked [(k-1)·tiles_per_part,
     k·tiles_per_part) in the COG's tile order (for pixel tiles the W1
-    order: level DESC, ty, tx, plane), ghost framing included — the
-    boundaries assemble_cog_parts groups on, so the parts are the same
-    bytes. One part is held at a time."""
+    order: level DESC, ty, tx, plane), ghost framing included. The
+    framing is the writer's own: a part is the pieces() it spans, joined.
+    One part is held at a time, beyond what the producer holds."""
     pieces = writer.pieces()
     yield 0, next(pieces)  # header() settles the ghost and the tile order
     overhead = GHOST_OVERHEAD if writer.ghost else 0
@@ -662,6 +683,18 @@ def _cog_stage(df: DataFrame, cols, rows, schema: str) -> DataFrame:
                 yield pd.DataFrame(out, columns=names)
 
     return ensure_fanout(df).select(*cols).mapInPandas(kernel, schema=schema)
+
+
+def _group_stage(df: DataFrame, rows, schema: str) -> DataFrame:
+    """The module's one applyInPandas kernel, the per-image twin of
+    _cog_stage: `df` grouped by image_id, and for each group (a pandas
+    frame of its rows) `rows(pdf)` yields output tuples in `schema` order
+    — in every caller a producer into a sink. A task holds one group and
+    its output rows."""
+    names = _columns(schema)
+    return df.groupBy("image_id").applyInPandas(
+        lambda pdf: pd.DataFrame(list(rows(pdf)), columns=names),
+        schema=schema)
 
 
 def cog_pipeline(images: DataFrame, tile: int = 512,
@@ -895,20 +928,14 @@ def rewrite_tiff_sets(parts: DataFrame, ghost: bool = True) -> DataFrame:
     part_id, and the rewrite producer folds all IFDs into one COG through
     the blob sink. A null part or a malformed TIFF in any part fails the
     job with a ValueError naming the image."""
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("part_id")
+    def rows(pdf):
         image_id = pdf["image_id"].iloc[0]
-        blobs = list(pdf["bytes"])
+        blobs = list(pdf.sort_values("part_id")["bytes"])
         with _rewritten_cog(image_id, *blobs, ghost=ghost) as writer:
             cog, _ = _blob_sink(writer)
-        return pd.DataFrame({
-            "image_id": [image_id],
-            "cog": [cog],
-            "in_bytes": [sum(len(b) for b in blobs)],
-            "out_bytes": [len(cog)],
-        })
+        yield image_id, cog, sum(map(len, blobs)), len(cog)
 
-    return parts.groupBy("image_id").applyInPandas(kernel, REWRITE_SCHEMA)
+    return _group_stage(parts, rows, REWRITE_SCHEMA)
 
 
 PARTS_SCHEMA = "image_id string, part_idx int, part binary"
@@ -917,77 +944,24 @@ PARTS_SCHEMA = "image_id string, part_idx int, part binary"
 def assemble_cog_parts(tiles: DataFrame, tile: int = 512,
                        compression: str = "deflate", ghost: bool = True,
                        tiles_per_part: int = 256) -> DataFrame:
-    """Parts assembly of a tile relation: instead of one blob per image,
-    emit ordered parts — part 0 is the full header (built from tile
-    METADATA only, no payloads), parts 1..k are ghost-framed tile-data chunks
-    of <= tiles_per_part tiles each. cog_pipeline_parts emits the same parts
-    straight from images, without the tile relation or its shuffles.
+    """Parts assembly of a tile relation: the tile-relation producer into
+    the parts sink, one _group_stage. Instead of one blob per image it emits
+    ordered parts — part 0 is the header, parts 1..k the ghost-framed data
+    of <= tiles_per_part tiles each. A sink appends parts in part_idx order
+    (write_cog_parts); the concatenation equals the assemble_cogs blob
+    exactly (tested).
 
-    Memory per task is bounded by the chunk, not the image: a 10-gigapixel
-    image assembles as ~160 independent 256-tile parts. A sink appends parts
-    in part_idx order (write_cog_parts) — the engine's equivalent of the
-    reference's streaming io.Writer (cog.go:722-750). Byte concatenation of
-    all parts equals the assemble_cogs blob exactly (tested)."""
-    comp_tag = 1 if compression == "raw" else 8
-
-    # Materialize the encoded tiles ONCE: the header branch (groupBy
-    # image_id over metadata) and the ranked-chunks branch (window
-    # partitionBy image_id over payloads) would otherwise each recompute the
-    # whole upstream decode→pyramid→encode lineage — the dominant kernel —
-    # and their differing column pruning defeats exchange reuse. An eager
-    # localCheckpoint stores one copy of the (compressed-payload) tiles and
-    # cuts the lineage for both consumers; blocks are ContextCleaner-
-    # released when the frame is garbage collected. Storage is bounded by
-    # the ENCODED tile bytes (≈ input size for real imagery), the standard
-    # price of a two-consumer assembly.
-    tiles = tiles.localCheckpoint(eager=True)
-
-    meta_cols = ["image_id", "level", "plane", "ty", "tx", "level_w",
-                 "level_h", "n_levels", "planes", "has_mask", "byte_count"]
-
-    def header_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rebuild the IFD tree with byte counts only; the codec computes the
-        # full header incl. offsets without touching payloads (two-pass plan
-        # of cog.go:568-596 — the dry run needs lengths, not bytes)
+    Memory is per image, not per part: a group holds one image's tiles and
+    all its parts. For tables that may hold oversized images the
+    bounded-memory sinks are cog_pipeline_parts and convert_images, which
+    read the images directly, without the tile relation or its shuffle."""
+    def rows(pdf):
         image_id = pdf["image_id"].iloc[0]
-        counts = {}
-        level_dims = {}
-        for r in pdf.itertuples(index=False):
-            counts[(r.level, r.plane, r.ty, r.tx)] = int(r.byte_count)
-            level_dims[r.level] = (int(r.level_w), int(r.level_h))
-        header = _build_cog(
-            image_id, int(pdf["planes"].iloc[0]),
-            bool(pdf["has_mask"].iloc[0]), int(pdf["n_levels"].iloc[0]),
-            level_dims, counts, None, tile, comp_tag, ghost).header()
-        return pd.DataFrame({"image_id": [image_id], "part_idx": [0],
-                             "part": [header]})
+        with _tiled_cog(pdf, tile, compression, ghost) as writer:
+            for k, part in _parts_sink(writer, tiles_per_part):
+                yield image_id, k, part
 
-    headers = (tiles.select(*meta_cols)
-               .groupBy("image_id").applyInPandas(header_kernel, PARTS_SCHEMA))
-
-    ranked = with_tile_order(tiles).withColumn(
-        "chunk", (F.col("tile_rank") / F.lit(tiles_per_part)).cast("int"))
-
-    def chunk_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        import struct as _struct
-        pdf = pdf.sort_values("tile_rank")
-        out = bytearray()
-        for r in pdf.itertuples(index=False):
-            payload = bytes(r.payload)
-            if not payload:
-                continue  # sparse elision
-            if ghost:
-                lead = _struct.pack("<I", len(payload))
-                out += lead + payload + (lead + payload)[-4:]
-            else:
-                out += payload
-        return pd.DataFrame({"image_id": [pdf["image_id"].iloc[0]],
-                             "part_idx": [int(pdf["chunk"].iloc[0]) + 1],
-                             "part": [bytes(out)]})
-
-    data_parts = (ranked.groupBy("image_id", "chunk")
-                  .applyInPandas(chunk_kernel, PARTS_SCHEMA))
-    return headers.unionByName(data_parts)
+    return _group_stage(tiles, rows, PARTS_SCHEMA)
 
 
 def _write_parts_rows(rows, out_dir: str) -> None:

@@ -9,6 +9,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
                                StructType, TimestampType)
 
@@ -154,24 +155,29 @@ def test_cog_files_roundtrip_through_cogread(spark, smoke_images, tmp_path):
     assert thumbs.count() == 6
 
 
+@pytest.mark.parametrize("assemble", ["assemble_cogs", "assemble_cog_parts"])
 def test_materialized_tiles_assemble_without_exchange(spark, fixture_dir,
-                                                      save_bucketed):
+                                                      save_bucketed, assemble):
     """Persisted bucketed tiles: assembly (groupBy image_id) reads
     pre-clustered buckets — no Exchange in the plan, and the assembled
-    blobs equal the direct pipeline's."""
+    rows (blobs, or parts) equal the direct pipeline's."""
     from cogger_spark.fixtures import FIXTURE_DIR
-    from cogger_spark.operators.tiling import assemble_cogs, tile_images
+    from cogger_spark.operators import tiling
 
     images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet")).limit(8)
-    save_bucketed(tile_images(images, tile=512), "t_tiles_b", "image_id", 4)
-    assembled = assemble_cogs(spark.table("t_tiles_b"), tile=512)
+    save_bucketed(tiling.tile_images(images, tile=512), "t_tiles_b",
+                  "image_id", 4)
+    op = getattr(tiling, assemble)
+    assembled = op(spark.table("t_tiles_b"), tile=512)
     plan = assembled._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
-    direct = {r.image_id: bytes(r.cog)
-              for r in assemble_cogs(tile_images(images, tile=512),
-                                     tile=512).collect()}
-    persisted = {r.image_id: bytes(r.cog) for r in assembled.collect()}
-    assert persisted == direct
+
+    def rows(df):
+        return sorted(tuple(bytes(v) if isinstance(v, bytearray) else v
+                            for v in r) for r in df.collect())
+
+    direct = rows(op(tiling.tile_images(images, tile=512), tile=512))
+    assert rows(assembled) == direct
 
 
 def test_streaming_available_now_matches_batch(spark, smoke_images, tmp_path):

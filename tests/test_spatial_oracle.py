@@ -114,18 +114,18 @@ def test_tile_pixel_stats_memory_bounded_deflate():
     w, h = 4096, 4104
     px = fixtures.make_pixels(0, w, h, 1, False)
     data = zlib.compress(px.tobytes(), 1)
-    out = {k: [] for k in ("image_id", "ty", "tx", "px_count", "px_sum",
-                           "px_min", "px_max")}
     tracemalloc.start()
     try:
-        _image_stats_rows(out, "img_00000000", data, w, h, "deflate", 512)
+        out = list(_image_stats_rows("img_00000000", data, w, h, "deflate",
+                                     512))
         _, peak = tracemalloc.get_traced_memory()
     finally:
         tracemalloc.stop()
     assert peak < px.nbytes / 2, (peak, px.nbytes)
-    assert len(out["ty"]) == 9 * 8
-    assert sum(out["px_count"]) == px.size
-    assert sum(out["px_sum"]) == int(px.sum(dtype=np.int64))
+    _, ty, _, px_count, px_sum, _, _ = zip(*out)
+    assert len(ty) == 9 * 8
+    assert sum(px_count) == px.size
+    assert sum(px_sum) == int(px.sum(dtype=np.int64))
 
 
 def test_tile_pixel_sums_strips_plans_one_stage(spark):

@@ -284,10 +284,8 @@ def test_tile_pixel_stats_kernel_fails_closed(case):
     image, not a bare zlib.error or buffer-size message."""
     from cogger_spark.operators.spatial import _image_stats_rows
     data, fmt = BAD_INPUTS[case]
-    out = {k: [] for k in ("image_id", "ty", "tx", "px_count", "px_sum",
-                           "px_min", "px_max")}
     with pytest.raises(ValueError, match="image 'img_00000042': "):
-        _image_stats_rows(out, "img_00000042", data, W, H, fmt, 16)
+        list(_image_stats_rows("img_00000042", data, W, H, fmt, 16))
 
 
 def test_deflate_trailing_bytes_accepted():
@@ -384,14 +382,17 @@ def test_pipelines_fail_closed_in_spark(spark, pipeline):
 @pytest.mark.parametrize("case", ["truncated_deflate", "length_mismatch",
                                   "null_blob"])
 def test_tile_pixel_stats_fails_closed_in_spark(spark, case):
-    """Through Spark, tile_pixel_stats fails the job naming the image."""
+    """Through Spark, tile_pixel_stats and tile_images fail the job naming
+    the image (not with a bare zlib.error)."""
     from cogger_spark.operators.spatial import tile_pixel_stats
     data, fmt = BAD_INPUTS[case]
     df = spark.createDataFrame(
         [("img_00000042", data, W, H, fmt)],
         "image_id string, bytes binary, w int, h int, fmt string")
-    with pytest.raises(Exception, match="ValueError: image 'img_00000042'"):
-        tile_pixel_stats(df, tile=16).collect()
+    for operator in (tile_pixel_stats, tiling.tile_images):
+        with pytest.raises(Exception,
+                           match="ValueError: image 'img_00000042'"):
+            operator(df, tile=16).collect()
 
 
 def _convert(images, tmp_path):

@@ -1,7 +1,9 @@
 """The COG sinks equal the grouped assembly of the tile relation: the
 streaming blob and parts pipelines give the same rows as
 assemble_cogs / assemble_cog_parts over tile_images, on a mixed-size table
-and on an oversized RGB+mask image; and the parts writer is crash-atomic."""
+and on an oversized RGB+mask image; each path's COGs pass a closed-form
+check that shares no code with the writer; and the parts writer is
+crash-atomic."""
 
 import pytest
 
@@ -35,9 +37,8 @@ def _part_rows(parts):
 
 
 def test_assemble_parts_equals_whole_blob(spark, big_images):
-    """Streaming parts assembly ≡ single-blob assembly: concatenating parts
-    in order reproduces assemble_cogs byte-for-byte, with chunk memory
-    bounded by tiles_per_part."""
+    """Parts assembly ≡ single-blob assembly: concatenating parts in order
+    reproduces assemble_cogs byte-for-byte."""
     tiles = tile_images(big_images, tile=TILE)
     whole = {r.image_id: bytes(r.cog)
              for r in assemble_cogs(tile_images(big_images, tile=TILE),
@@ -87,6 +88,92 @@ def test_fused_parts_equal_grouped_parts(spark, big_images):
     assert (_part_rows(cog_pipeline_parts(big_images, tile=TILE,
                                           tiles_per_part=7))
             == _part_rows(grouped))
+
+
+def _check_closed_form(blob, image_id, w, h, tile):
+    """A COG checked in closed form, sharing no code with its writer: the
+    IFD count and dims per level, every tile's offset as the prefix sum in
+    W1 order (smallest level first; per tile row and column the imagery
+    tile, then the mask tile) of the byte counts plus 8 bytes of ghost
+    framing per non-empty tile, level 0 inflated back to the fixture's
+    pixels, and the codec's rewrite as a fixed point."""
+    import zlib
+
+    import numpy as np
+    from cogger_spark import fixtures
+    from cogger_spark.planner.pyramid import overview_count
+    from cogger_spark.tiff import parse_tiff
+    from cogger_spark.tiff.codec import rewrite
+
+    i = int(image_id.removeprefix("img_"))
+    bands, mask = fixtures.n_bands(i), fixtures.has_mask(i)
+    ifds = parse_tiff(blob).ifds
+    levels = [f for f in ifds if f.photometric != 4]
+    masks = [f for f in ifds if f.photometric == 4]
+    n = overview_count(w, h, tile, tile) + 1
+    assert (len(levels), len(masks)) == (n, n if mask else 0), image_id
+    lw, lh = w, h
+    for k, f in enumerate(levels):
+        assert (f.image_width, f.image_height, f.samples_per_pixel) \
+            == (lw, lh, bands), (image_id, k)
+        if mask:
+            assert (masks[k].image_width, masks[k].image_height) == (lw, lh)
+        lw, lh = -(-lw // 2), -(-lh // 2)
+
+    pos = None
+    for k in reversed(range(n)):
+        ntx = -(-levels[k].image_width // tile)
+        nty = -(-levels[k].image_height // tile)
+        for idx in range(ntx * nty):
+            for f in [levels[k]] + ([masks[k]] if mask else []):
+                off, count = f.tile_offsets[idx], f.tile_byte_counts[idx]
+                if count == 0:
+                    assert off == 0, (image_id, k, idx)
+                    continue
+                if pos is not None:
+                    assert off == pos, (image_id, k, idx)
+                assert int.from_bytes(blob[off - 4:off], "little") == count
+                pos = off + count + 8
+    assert pos - 4 == len(blob), image_id
+
+    px = fixtures.make_pixels(i, w, h, bands, mask)
+    ntx = -(-w // tile)
+    for f, sl in [(levels[0], slice(0, bands))] + (
+            [(masks[0], slice(bands, bands + 1))] if mask else []):
+        for idx, (off, count) in enumerate(zip(f.tile_offsets,
+                                               f.tile_byte_counts)):
+            ty, tx = divmod(idx, ntx)
+            got = np.frombuffer(zlib.decompress(blob[off:off + count]),
+                                np.uint8).reshape(tile, tile, -1)
+            want = px[ty * tile:(ty + 1) * tile, tx * tile:(tx + 1) * tile, sl]
+            assert np.array_equal(got[:want.shape[0], :want.shape[1]], want), \
+                (image_id, idx)
+    assert rewrite(blob) == blob, image_id
+
+
+@pytest.mark.parametrize("path", ["assemble_cogs", "assemble_cog_parts",
+                                  "cog_pipeline"])
+def test_cogs_match_closed_form(spark, big_images, path):
+    """Each path's COGs over the mixed table pass the closed-form check;
+    assemble_cog_parts' parts are joined in part_idx order first."""
+    if path == "cog_pipeline":
+        blobs = {r.image_id: bytes(r.cog)
+                 for r in cog_pipeline(big_images, tile=TILE).collect()}
+    elif path == "assemble_cogs":
+        blobs = {r.image_id: bytes(r.cog)
+                 for r in assemble_cogs(tile_images(big_images, tile=TILE),
+                                        tile=TILE).collect()}
+    else:
+        rows = _part_rows(assemble_cog_parts(
+            tile_images(big_images, tile=TILE), tile=TILE, tiles_per_part=7))
+        blobs = {}
+        for (iid, _), part in sorted(rows.items()):
+            blobs[iid] = blobs.get(iid, b"") + part
+    dims = {r.image_id: (r.w, r.h)
+            for r in big_images.select("image_id", "w", "h").collect()}
+    assert set(blobs) == set(dims)
+    for iid, blob in blobs.items():
+        _check_closed_form(blob, iid, *dims[iid], TILE)
 
 
 def test_convert_images_autoroutes_mixed_table(spark, big_images, tmp_path):
