@@ -3,8 +3,8 @@
 Reproduces the semantics of the reference COG rewriter (airbusgeo/cogger)
 as a Spark-first engine over a parquet table of image+caption pairs,
 extended with H3/S2-style spatial joins, dedup / similarity /
-text-analysis operators for large-scale training-data pipelines, and
-checkpoint/resume + metrics plumbing.
+text-analysis operators for large-scale training-data pipelines, and a
+CLI whose convert resumes from the files it committed.
 
 Layout:
     tiff/       pure-Python TIFF/COG codec (byte-exact vs reference goldens)
@@ -13,7 +13,6 @@ Layout:
     operators/  DataFrame-level operators: tiling, assembly, spatial joins,
                 dedup, similarity, text, COG reading
     sources/    .tif directory source and executor-side file sink
-    plans/      checkpoint / resume / lineage / metrics tables
 """
 
 __version__ = "0.1.0"

@@ -190,16 +190,24 @@ def _block_rows(tile: int) -> int:
     return tile if tile % 2 == 0 else 2 * tile
 
 
+def deflate_planes(data: bytes, w: int, h: int) -> tuple[int, bool]:
+    """(nplanes, has_mask) of a deflate blob, by infer_planes on its
+    inflated size: a length pass that discards its output. A stream that
+    does not inflate raises zlib.error, a size infer_planes refuses
+    ValueError."""
+    return infer_planes(sum(map(len, _inflate(data))), w, h)
+
+
 def _level0_blocks(data: bytes, w: int, h: int, fmt: str, bh: int):
     """Decode one image as level-0 row blocks: returns (nplanes, has_mask,
     blocks), where blocks yields (y0, rows) top to bottom and rows is a
     (min(bh, h - y0), w, bands) uint8 array. Planes follow decode_any.
 
     * raw: zero-copy views of `data`.
-    * deflate: inflated into one block at a time, after a length pass
-      that discards its output, because infer_planes needs the decoded
-      size and a zlib stream tells it only at its end (0.06 s against
-      0.16 s for the whole inflate of a 67 Mpx gray image).
+    * deflate: inflated into one block at a time, after deflate_planes'
+      length pass that discards its output, because infer_planes needs
+      the decoded size and a zlib stream tells it only at its end (0.06 s
+      against 0.16 s for the whole inflate of a 67 Mpx gray image).
     * png/jpeg: decoded whole (their decoders are whole-image), then views.
 
     Bad input raises here (ValueError, or zlib.error for a stream that
@@ -208,7 +216,7 @@ def _level0_blocks(data: bytes, w: int, h: int, fmt: str, bh: int):
         px, nplanes, mask = decode_any(data, w, h, fmt)
         return nplanes, mask, ((y0, px[y0:y0 + bh])
                                for y0 in range(0, h, bh))
-    nplanes, mask = infer_planes(sum(map(len, _inflate(data))), w, h)
+    nplanes, mask = deflate_planes(data, w, h)
     bands = nplanes + mask
 
     def blocks():

@@ -89,7 +89,15 @@ def write_tif(out_dir: str, image_id: str, write: Callable[[int], int]) -> int:
     dotfile <out_dir>/.<image_id>.tmp and returns its byte count, then the
     tmp is renamed to the final name. The one tmp+rename writer behind
     every .tif sink: a failed write or rename removes the tmp, so a
-    reader sees either the whole file or none."""
+    reader sees either the whole file or none.
+
+    `image_id` must be a plain file name: an empty id, one holding '/'
+    or NUL (a path out of `out_dir`, or one the OS refuses) or one that
+    starts with '.' (a hidden file that read_tiff_dir does not list)
+    raises ValueError naming it before any file is opened."""
+    if (not image_id or image_id.startswith(".") or "/" in image_id
+            or "\0" in image_id):
+        raise ValueError(f"image id {image_id!r} is not a plain file name")
     tmp = os.path.join(out_dir, f".{image_id}.tmp")
     try:
         fd = os.open(tmp, os.O_WRONLY | os.O_CREAT | os.O_TRUNC, 0o666)

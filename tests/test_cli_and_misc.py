@@ -53,12 +53,52 @@ def test_validate_images_split(spark, smoke_images):
                    "bad_empty_bytes": "missing payload"}
 
 
-def test_resume_delta_anti_join(spark):
-    from cogger_spark.plans.checkpoint import resume_delta
-    planned = spark.range(10).withColumnRenamed("id", "bucket")
-    completed = spark.range(4).withColumnRenamed("id", "bucket")
-    left = sorted(r.bucket for r in resume_delta(planned, completed).collect())
-    assert left == [4, 5, 6, 7, 8, 9]
+def _seq(scala_seq) -> list:
+    return [scala_seq.apply(i) for i in range(scala_seq.size())]
+
+
+def _nodes(plan):
+    """A physical plan's nodes, depth first; an AQE plan not yet run
+    stands for its initial plan."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        yield from _nodes(plan.executedPlan())
+        return
+    yield plan
+    for child in _seq(plan.children()):
+        yield from _nodes(child)
+
+
+def test_resume_delta_anti_join(spark, smoke_images, tmp_path):
+    """The CLI's resume delta: its convert job joins the committed ids as
+    a broadcast left-anti join, the image bytes cross no shuffle but
+    ensure_fanout's round-robin one, and it writes exactly the images
+    planned less those committed."""
+    from cogger_spark import cli
+    from cogger_spark.operators.tiling import convert_images
+    images = spark.read.parquet(smoke_images)
+    ids = sorted(r.image_id for r in images.select("image_id").collect())
+    out = tmp_path / "out"
+    convert_images(images.filter(F.col("image_id").isin(ids[:20])), str(out))
+
+    job, metrics = cli._convert(spark, images, str(out), 512, "deflate")
+    nodes = list(_nodes(job._jdf.queryExecution().executedPlan()))
+
+    def named(name):
+        return [n for n in nodes if n.nodeName() == name]
+    # the broadcast side is the listing's ids, built right of a left-anti
+    [bx] = named("BroadcastExchange")
+    assert [a.name() for a in _seq(bx.output())] == ["image_id"]
+    [join] = named("BroadcastHashJoin")
+    assert "LeftAnti, BuildRight" in join.toString(), join.toString()
+    carrying_bytes = [n.toString() for n in named("Exchange")
+                      if "bytes" in [a.name() for a in _seq(n.output())]]
+    # the smoke table is one split, so ensure_fanout fans it out
+    assert len(carrying_bytes) == 1, carrying_bytes
+    assert "RoundRobinPartitioning" in carrying_bytes[0]
+
+    job.write.format("noop").mode("overwrite").save()
+    assert metrics.get["images"] == 30
+    assert sorted(p.stem for p in out.glob("*.tif")) == ids
 
 
 def test_dataset_stats_matches_oracle(spark, fixture_dir):
@@ -67,35 +107,54 @@ def test_dataset_stats_matches_oracle(spark, fixture_dir):
 
 
 @pytest.mark.slow
-def test_spark_submit_py_files(tmp_path, smoke_images):
+def test_spark_submit_py_files(spark, tmp_path, smoke_images):
     """The north rule's deployment shape: package the engine, run the CLI
-    under spark-submit --py-files, verify the manifest output."""
+    under spark-submit --py-files. The manifest has its rows, and convert
+    writes one .tif per image with the bytes convert_images writes."""
+    import hashlib
+    import os
+    from cogger_spark.operators.tiling import convert_images
     repo = pathlib.Path(__file__).resolve().parent.parent
     zpath = tmp_path / "cogger_spark.zip"
     with zipfile.ZipFile(zpath, "w") as z:
         for f in (repo / "cogger_spark").rglob("*.py"):
             z.write(f, f.relative_to(repo))
-    out = tmp_path / "manifest_out"
     spark_submit = pathlib.Path(sys.executable).parent / "spark-submit"
     if not spark_submit.exists():
         import pyspark
         spark_submit = pathlib.Path(pyspark.__file__).parent / "bin" / "spark-submit"
-    proc = subprocess.run(
-        [str(spark_submit), "--master", "local[4]",
-         "--conf", "spark.ui.enabled=false",
-         "--py-files", str(zpath),
-         str(repo / "cogger_spark" / "cli.py"),
-         "manifest", "--images", smoke_images, "--out", str(out)],
-        capture_output=True, text=True, timeout=600,
-        env={"PYSPARK_PYTHON": sys.executable,
-             "PYSPARK_DRIVER_PYTHON": sys.executable,
-             "PATH": "/usr/bin:/bin", "HOME": "/root",
-             "JAVA_HOME": __import__("os").environ.get("JAVA_HOME", "")})
-    assert proc.returncode == 0, proc.stderr[-3000:]
+
+    def submit(*args):
+        proc = subprocess.run(
+            [str(spark_submit), "--master", "local[4]",
+             "--conf", "spark.ui.enabled=false",
+             "--py-files", str(zpath),
+             str(repo / "cogger_spark" / "cli.py"), *args],
+            capture_output=True, text=True, timeout=600,
+            env={"PYSPARK_PYTHON": sys.executable,
+                 "PYSPARK_DRIVER_PYTHON": sys.executable,
+                 "PATH": "/usr/bin:/bin", "HOME": "/root",
+                 "JAVA_HOME": os.environ.get("JAVA_HOME", "")})
+        assert proc.returncode == 0, proc.stderr[-3000:]
+        return proc
+
+    out = tmp_path / "manifest_out"
+    proc = submit("manifest", "--images", smoke_images, "--out", str(out))
     files = list(out.glob("*.parquet"))
     assert files, proc.stdout
     n = duckdb.sql(f"SELECT count(*) FROM read_parquet('{out}/*.parquet')").fetchall()[0][0]
     assert n > 50
+
+    cogs, want = tmp_path / "cogs", tmp_path / "want"
+    submit("convert", "--images", smoke_images, "--out", str(cogs))
+    convert_images(spark.read.parquet(smoke_images), str(want))
+
+    def digests(d):
+        return {f.name: hashlib.sha256(f.read_bytes()).hexdigest()
+                for f in d.iterdir()}
+    got = digests(cogs)
+    assert len(got) == 50 and all(f.endswith(".tif") for f in got)
+    assert got == digests(want)
 
 
 def test_cog_pipeline_blobs_to_write_tiff_dir(spark, smoke_images, tmp_path):
@@ -163,25 +222,6 @@ def test_rewrite_tiff_sets_matches_reference_goldens(spark):
     for name, _ in singles:
         expected = hashlib.md5((td / f"cog_{name}").read_bytes()).hexdigest()
         assert got1[name] == expected, name
-
-
-def test_cli_convert_checkpointed(spark, smoke_images, tmp_path):
-    """CLI convert: per-bucket checkpointed COG job; rerun is a no-op (all
-    buckets already complete)."""
-    from cogger_spark import cli
-    out = str(tmp_path / "cog_out")
-    ck = str(tmp_path / "cog_ck")
-    rc = cli.main(["convert", "--images", smoke_images, "--out", out,
-                   "--buckets", "4", "--ckpt", ck])
-    assert rc == 0
-    got = spark.read.parquet(out + "/bucket=*")
-    # parts output: every image has a header part 0 plus >=1 data chunk
-    assert got.select("image_id").distinct().count() == 50
-    assert got.filter("part_idx = 0").count() == 50
-    assert got.count() >= 100
-    # second run: nothing left to do
-    from cogger_spark.plans.checkpoint import remaining_buckets
-    assert remaining_buckets(4, ck) == []
 
 
 def test_cli_rewrite_dir_golden(spark, tmp_path):

@@ -1,8 +1,10 @@
-"""Checkpoint/resume over the tile manifest, COG files read back through
-the consumer-side reader, bucketed tile tables, and the batch operators
-run per micro-batch of a Structured Streaming file source."""
+"""Resume of the CLI convert from the files it committed, COG files read
+back through the consumer-side reader, bucketed tile tables, and the batch
+operators run per micro-batch of a Structured Streaming file source."""
 
+import hashlib
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -15,7 +17,6 @@ from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
 
 from cogger_spark import queries
 from cogger_spark.operators.spatial import tile_manifest
-from cogger_spark.plans import checkpoint as ck
 
 EVENTS_SCHEMA = StructType([
     StructField("event_id", LongType()),
@@ -109,30 +110,52 @@ def _events_arriving(pdf, in_dir, n_chunks=3):
         os.utime(p, (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
 
 
-def test_checkpoint_resume_equals_uninterrupted(spark, smoke_images, tmp_path):
+def test_checkpoint_resume_equals_uninterrupted(spark, smoke_images, tmp_path,
+                                                capsys):
+    """A CLI convert killed after committing some images, then rerun into
+    the same directory: every file equals an uninterrupted run's (sha256),
+    the committed files are not rewritten, a stale tmp left by the kill
+    is replaced, the rerun reports exactly the missing images as written
+    and a second rerun writes none. The directory listing, the lineage,
+    names every image with its file size."""
+    from cogger_spark import cli
+    from cogger_spark.operators.tiling import convert_images
+    from cogger_spark.sources.tiffdir import read_tiff_dir
+
+    def run(out):
+        assert cli.main(["convert", "--images", smoke_images,
+                         "--out", str(out)]) == 0
+        report = capsys.readouterr().out.strip().splitlines()[-1]
+        return int(re.search(r"images=(\d+) ", report).group(1))
+
+    def digests(out):
+        return {f.name: hashlib.sha256(f.read_bytes()).hexdigest()
+                for f in out.iterdir()}
+
+    def stamps(out):
+        return {f.name: (f.stat().st_ino, f.stat().st_mtime_ns)
+                for f in out.iterdir()}
+
+    full, part = tmp_path / "full", tmp_path / "part"
+    assert run(full) == 50
     images = spark.read.parquet(smoke_images)
-    full_dir, full_ck = str(tmp_path / "full"), str(tmp_path / "full_ck")
-    part_dir, part_ck = str(tmp_path / "part"), str(tmp_path / "part_ck")
+    ids = sorted(r.image_id for r in images.select("image_id").collect())
+    done, missing = ids[::3], sorted(set(ids) - set(ids[::3]))
+    # the killed run: some images committed, one tmp left half written
+    convert_images(images.filter(F.col("image_id").isin(done)), str(part))
+    committed = stamps(part)
+    assert sorted(committed) == [f"{i}.tif" for i in done]
+    (part / f".{missing[0]}.tmp").write_bytes(b"II*\x00 half a COG")
 
-    ck.run_checkpointed(spark, images, full_dir, full_ck, n_buckets=8, job=_job)
-    # crash after 3 buckets, then resume
-    ck.run_checkpointed(spark, images, part_dir, part_ck, n_buckets=8,
-                        job=_job, stop_after=3)
-    assert len(ck.completed_buckets(part_ck)) == 3
-    assert len(ck.remaining_buckets(8, part_ck)) == 5
-    ck.run_checkpointed(spark, images, part_dir, part_ck, n_buckets=8, job=_job)
-    assert ck.remaining_buckets(8, part_ck) == []
+    assert run(part) == len(missing)
+    assert digests(part) == digests(full)  # no tmp left either
+    assert {n: st for n, st in stamps(part).items()
+            if n in committed} == committed
+    assert run(part) == 0
 
-    a = spark.read.parquet(full_dir).orderBy("image_id", "level", "ty", "tx")
-    b = spark.read.parquet(part_dir).orderBy("image_id", "level", "ty", "tx")
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-    lin = ck.lineage_table(spark, part_ck)
-    assert lin.count() == 8
-    met = ck.metrics_table(spark, part_ck).collect()[0]
-    assert met.buckets_done == 8
-    assert met.rows_out == a.count()
+    lineage = read_tiff_dir(spark, str(part)).select("image_id", "n_bytes")
+    assert {r.image_id: r.n_bytes for r in lineage.collect()} == {
+        i: (part / f"{i}.tif").stat().st_size for i in ids}
 
 
 def test_cog_files_roundtrip_through_cogread(spark, smoke_images, tmp_path):

@@ -9,6 +9,7 @@ bad input in every sink, one Spark job per sink over a scan with a split
 per slot."""
 
 import os
+import re
 import zlib
 
 import numpy as np
@@ -364,6 +365,64 @@ def test_convert_images_fails_closed_in_spark(spark, tmp_path):
     with pytest.raises(Exception, match="img_00000042"):
         convert_images(df, str(out), tile=16)
     assert not out.exists() or os.listdir(out) == []
+
+
+# image ids that are not plain file names: before the check, the first
+# wrote <out>/../x.tif (its tmp two levels up), the second a hidden
+# <out>/.tif, and the third failed with a bare FileNotFoundError
+BAD_IDS = ["./../x", "", "sub/y"]
+
+
+def _files_under(root):
+    return [p for p in root.rglob("*") if not p.is_dir()]
+
+
+@pytest.mark.parametrize("iid", BAD_IDS + [".hidden", "nul\0x"])
+def test_write_tif_rejects_ids_that_are_not_file_names(tmp_path, iid):
+    """write_tif raises a ValueError naming the id before it opens a tmp:
+    nothing is written in out_dir or above it."""
+    from cogger_spark.sources.tiffdir import write_tif
+    out = tmp_path / "a" / "out"
+    out.mkdir(parents=True)
+    calls = []
+    with pytest.raises(ValueError, match=re.escape(f"image id {iid!r}")):
+        write_tif(str(out), iid, lambda fd: calls.append(fd) or 0)
+    assert calls == [] and _files_under(tmp_path) == []
+
+
+@pytest.mark.parametrize("iid", BAD_IDS)
+def test_convert_images_rejects_ids_that_are_not_file_names(spark, tmp_path,
+                                                            iid):
+    """Through Spark, a valid image under such an id fails the job naming
+    the id, and nothing is written in out_dir or above it."""
+    from cogger_spark.operators.tiling import convert_images
+    df = spark.createDataFrame(
+        [(iid, bytes(W * H * 3), W, H, "raw")],
+        "image_id string, bytes binary, w int, h int, fmt string")
+    out = tmp_path / "a" / "out"
+    with pytest.raises(Exception, match=re.escape(f"image id {iid!r}")):
+        convert_images(df, str(out), tile=16)
+    assert _files_under(tmp_path) == []
+
+
+def test_validate_rejects_every_bad_deflate_input(spark):
+    """validate_images quarantines every deflate case of BAD_INPUTS, so a
+    convert of its valid rows does not fail on one, and keeps a good
+    deflate row valid."""
+    from cogger_spark.operators.validate import validate_images
+    cases = {c: data for c, (data, fmt) in BAD_INPUTS.items()
+             if fmt == "deflate"}
+    rows = [(c, data, W, H, "deflate", "a caption")
+            for c, data in cases.items()]
+    rows.append(("good", zlib.compress(bytes(W * H * 3), 1), W, H, "deflate",
+                 "a caption"))
+    valid, rejects = validate_images(spark.createDataFrame(
+        rows, "image_id string, bytes binary, w int, h int, fmt string, "
+              "caption string"))
+    assert [r.image_id for r in valid.collect()] == ["good"]
+    assert {r.image_id: r.reject_reason for r in rejects.collect()} == {
+        c: "bad deflate payload" if data else "missing payload"
+        for c, data in cases.items()}
 
 
 @pytest.mark.parametrize("pipeline", ["cog_pipeline", "cog_pipeline_parts"])
