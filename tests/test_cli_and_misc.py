@@ -157,6 +157,36 @@ def test_spark_submit_py_files(spark, tmp_path, smoke_images):
     assert got == digests(want)
 
 
+def test_cli_convert_checkpointed(spark, smoke_images, tmp_path, capsys):
+    """CLI convert: one committed .tif per image, each a well-formed TIFF of
+    the image's size; a rerun into the same directory is a no-op (every
+    image already committed, no file rewritten)."""
+    import re
+    from cogger_spark import cli
+    from cogger_spark.tiff import parse_tiff
+    out = tmp_path / "cog_out"
+
+    def run():
+        assert cli.main(["convert", "--images", smoke_images,
+                         "--out", str(out)]) == 0
+        report = capsys.readouterr().out.strip().splitlines()[-1]
+        return int(re.search(r"images=(\d+) ", report).group(1))
+
+    assert run() == 50
+    dims = {r.image_id: (r.w, r.h) for r in
+            spark.read.parquet(smoke_images).select("image_id", "w", "h")
+            .collect()}
+    files = sorted(out.iterdir())
+    assert [f.name for f in files] == sorted(f"{i}.tif" for i in dims)
+    for f in files:
+        main = parse_tiff(f.read_bytes()).ifds[0]
+        assert (main.image_width, main.image_height) == dims[f.stem], f.name
+    stamps = {f.name: f.stat().st_mtime_ns for f in files}
+    # second run: nothing left to do
+    assert run() == 0
+    assert {f.name: f.stat().st_mtime_ns for f in out.iterdir()} == stamps
+
+
 def test_cog_pipeline_blobs_to_write_tiff_dir(spark, smoke_images, tmp_path):
     import hashlib
     import pathlib
