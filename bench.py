@@ -251,6 +251,8 @@ def main() -> None:
               lambda: spatial.knn_join(points, manifest, k=5).count())
         timed("knn_adaptive",
               lambda: spatial.knn_join_adaptive(points, manifest, k=2).count())
+        timed("points_within_radius",
+              lambda: spatial.distance_join(points, radius_deg=0.05).count())
         timed("zonal_stats",
               lambda: spatial.zonal_stats(zones, manifest).count())
         timed("zonal_pixel_stats",

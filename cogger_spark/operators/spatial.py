@@ -12,8 +12,8 @@ Design (filter-and-refine, classic spatial-join shape):
   predicate — Catalyst gets a shuffle-hash/broadcast equi-join instead of a
   theta join, which is what makes this hold at 10^12 rows.
 * skew: hot cells (point clusters) are handled by AQE skew-join splitting
-  (enabled in session.py); the dedup/count paths offer salted two-stage
-  aggregation (`salted_count_by`).
+  (enabled in session.py); `point_grid_counts` counts with salted
+  two-stage aggregation.
 
 Containment/overlap conventions (mirrored exactly by the DuckDB oracles):
 point-in-tile is half-open (min <= p < max); box-box overlap is strict on
@@ -26,7 +26,8 @@ import numpy as np
 import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (ArrayType, IntegerType, LongType,
+                               StructField, StructType)
 
 from ..functions import cells as C
 from ..functions.geo import (
@@ -120,36 +121,17 @@ def point_cell_udf(res: int = DEFAULT_RES):
     return _enc
 
 
-def cover_cells_udf(res: int = DEFAULT_RES):
-    @F.pandas_udf(ArrayType(LongType()))
-    def _cover(lon_min: pd.Series, lat_min: pd.Series,
-               lon_max: pd.Series, lat_max: pd.Series) -> pd.Series:
-        covers = C.cover_bbox(lon_min.values, lat_min.values,
-                              lon_max.values, lat_max.values, res)
-        return pd.Series([c.tolist() for c in covers])
-    return _cover
-
-
 def ring_cells_udf(res: int = DEFAULT_RES, k: int = 2):
-    @F.pandas_udf(ArrayType(LongType()))
-    def _ring(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        cell = C.cell_encode(lon.values, lat.values, res)
-        rings = C.k_ring(cell, k)
-        return pd.Series([np.unique(r).tolist() for r in rings])
-    return _ring
-
-
-def ring_cells_dist_udf(res: int = DEFAULT_RES, k: int = 2):
-    """Like ring_cells_udf but each cell carries its IN-GRID Chebyshev
-    distance from the point's own cell, as a struct of PARALLEL ARRAYS
-    (cells, ds) — zip+explode JVM-side with F.arrays_zip. The MIN distance
-    is kept for border-clamped duplicates, so `d <= r` reproduces exactly
-    the membership of the r-ring for every r <= k (the single-explode
-    ladder collapse of knn_join_adaptive). Fully vectorized: one lexsort +
-    first-occurrence mask over the whole batch — no per-cell Python objects
-    (the array<struct> formulation built 289 dicts per point and measured
-    2.7x slower than this)."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
+    """Each point's k-ring as a struct of PARALLEL ARRAYS (cells, ds):
+    `cells` is the ascending list of the ring's distinct cells, `ds` each
+    cell's IN-GRID Chebyshev distance from the point's own cell. The MIN
+    distance is kept for border-clamped duplicates, so `d <= r` reproduces
+    exactly the membership of the r-ring for every r <= k (the
+    single-explode ladder collapse of knn_join_adaptive); explode `.cells`
+    for the plain ring, or zip+explode both JVM-side with F.arrays_zip.
+    Fully vectorized: one lexsort + first-occurrence mask over the whole
+    batch — no per-cell Python objects (the array<struct> formulation built
+    289 dicts per point and measured 2.7x slower than this)."""
     out_t = StructType([StructField("cells", ArrayType(LongType())),
                         StructField("ds", ArrayType(IntegerType()))])
 
@@ -180,12 +162,18 @@ def ring_cells_dist_udf(res: int = DEFAULT_RES, k: int = 2):
     return _ring
 
 
-def with_tile_cells(tiles: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
-    """Explode each tile's bbox cover into (tile, cell_id) rows."""
-    cover = cover_cells_udf(res)
-    return tiles.withColumn(
+def with_tile_cells(boxes: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
+    """Explode each row's bbox cover (a tile or a zone) into (row, cell_id)
+    rows."""
+    @F.pandas_udf(ArrayType(LongType()))
+    def _cover(lon_min: pd.Series, lat_min: pd.Series,
+               lon_max: pd.Series, lat_max: pd.Series) -> pd.Series:
+        covers = C.cover_bbox(lon_min.values, lat_min.values,
+                              lon_max.values, lat_max.values, res)
+        return pd.Series([c.tolist() for c in covers])
+    return boxes.withColumn(
         "cell_id",
-        F.explode(cover("lon_min", "lat_min", "lon_max", "lat_max")))
+        F.explode(_cover("lon_min", "lat_min", "lon_max", "lat_max")))
 
 
 # ---------------------------------------------------------------------------
@@ -217,34 +205,14 @@ def pip_join(points: DataFrame, tiles: DataFrame, res: int = DEFAULT_RES) -> Dat
 def knn_join(points: DataFrame, tiles: DataFrame, k: int = 5,
              ring: int = 2, res: int = DEFAULT_RES) -> DataFrame:
     """k nearest tiles (by squared center distance, deterministic tiebreak)
-    among candidates whose cell cover intersects the point's `ring`-ring.
+    among candidates whose cell cover intersects the point's `ring`-ring:
+    knn_join_adaptive with the one rung `ring`, less its `ring` column.
 
     Semantics are *bounded-radius* kNN — the candidate set is the ring
     neighborhood, exactly reproducible in SQL from grid coordinates, so the
     oracle can verify rows exactly. W5: row_number over (point) ordered by
     distance."""
-    pc = points.withColumn(
-        "ring_cell", F.explode(ring_cells_udf(res, ring)("lon", "lat")))
-    tc = with_tile_cells(tiles, res).withColumnRenamed("cell_id", "ring_cell")
-    cand = (pc.join(tc, "ring_cell")
-            # one point_id-keyed exchange serves the dedup AND the top-k
-            # window below (HashPartitioning(point_id) satisfies both
-            # clusterings — guide 2.4)
-            .repartition("point_id")
-            .select("point_id", "lon", "lat", "image_id", "level", "ty", "tx",
-                    "lon_min", "lat_min", "lon_max", "lat_max")
-            .distinct())  # a tile may meet a point through several cells
-    cx = (F.col("lon_min") + F.col("lon_max")) / 2.0
-    cy = (F.col("lat_min") + F.col("lat_max")) / 2.0
-    d2 = (F.col("lon") - cx) * (F.col("lon") - cx) \
-        + (F.col("lat") - cy) * (F.col("lat") - cy)
-    w = Window.partitionBy("point_id").orderBy(
-        F.col("dist2").asc(), F.col("image_id").asc(), F.col("level").asc(),
-        F.col("ty").asc(), F.col("tx").asc())
-    return (cand.withColumn("dist2", d2)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("point_id", "image_id", "level", "ty", "tx", "dist2", "rank"))
+    return knn_join_adaptive(points, tiles, k, (ring,), res).drop("ring")
 
 
 def knn_join_adaptive(points: DataFrame, tiles: DataFrame, k: int = 5,
@@ -257,12 +225,16 @@ def knn_join_adaptive(points: DataFrame, tiles: DataFrame, k: int = 5,
     never pays the wide explode (ring r is (2r+1)² cells per point).
 
     Execution shape (r6): the semantics are a ladder, but the PLAN is two
-    phases and ONE Spark job. Phase A explodes only the first rung's
-    (2·rings[0]+1)² cells for every point — the common case's whole cost.
+    phases and ONE Spark job. Both phases build their candidates one way:
+    explode a rung's cells, each annotated with its in-grid Chebyshev
+    distance from the point's own cell, join on cell, and keep each
+    (point, tile) pair once with its least distance `mind`. Phase A builds
+    only the first rung's (2·rings[0]+1)² cells for every point — the
+    common case's whole cost. A one-rung ladder (knn_join) is phase A
+    ranked as is, with no count, checkpoint or self-join.
     Points the first rung cannot satisfy (< k candidate tiles) take phase B:
-    one explode of the LAST rung's cells annotated with each cell's in-grid
-    Chebyshev distance, so every remaining rung's candidate set is the
-    `min cell distance <= r` subset of ONE relation and the chosen rung is a
+    the LAST rung's candidates, so every remaining rung's candidate set is
+    the `mind <= r` subset of ONE relation and the chosen rung is a
     conditional-count expression — no per-rung jobs, no eager
     materialization (the r5 ladder ran len(rings)+1 jobs with a
     localCheckpoint per rung; at bench scale the job launches dominated).
@@ -289,51 +261,47 @@ def knn_join_adaptive(points: DataFrame, tiles: DataFrame, k: int = 5,
                 .select("point_id", "image_id", "level", "ty", "tx",
                         "dist2", "rank", ring_col.alias("ring")))
 
-    # phase A: first rung only — the cost the common case pays
-    r0, last0 = rings[0], len(rings) == 1
-    pc = points.withColumn(
-        "ring_cell", F.explode(ring_cells_udf(res, r0)("lon", "lat")))
-    # ONE exchange keyed on point_id serves the whole downstream chain:
-    # HashPartitioning(point_id) satisfies the ClusteredDistribution of the
-    # distinct (grouping is a superset of point_id), the per-point counts,
-    # the top-k window, and the resolved join — without it each of those
-    # planned its own exchange (guide 2.4; A/B at bench scale: 2.3 -> 1.8s).
-    cand_a = (pc.join(tc, "ring_cell")
-              .repartition("point_id")
-              .select("point_id", "lon", "lat", "image_id", "level", "ty",
-                      "tx", "lon_min", "lat_min", "lon_max", "lat_max")
-              .distinct()
-              # the ONE materialization the collapsed ladder keeps: cand_a
-              # feeds three consumers (counts, phase-A top-k, phase-B
-              # anti-join); without it the explode+join lineage runs 3x
-              # (A/B: 2.5s -> 1.75s). Narrow metadata rows, no payloads.
-              # Lazy: the consumers share the cached blocks within the one
-              # query job, so no separate materialization job is paid.
-              .localCheckpoint(eager=False))
-    counts_a = cand_a.groupBy("point_id").agg(F.count(F.lit(1)).alias("_n"))
-    resolved_a = (counts_a if last0 else counts_a.filter(F.col("_n") >= k)) \
-        .select("point_id")
-    out = ranked(cand_a.join(resolved_a, "point_id"), F.lit(r0))
-    if last0:
-        return out
+    def candidates(pts, r):
+        """(point, tile) pairs that meet in the point's r-ring, each once,
+        with `mind`: the least in-grid cell distance they meet at."""
+        return (pts.withColumn("rc", ring_cells_udf(res, r)("lon", "lat"))
+                .withColumn("z", F.explode(F.arrays_zip(F.col("rc.cells"),
+                                                        F.col("rc.ds"))))
+                .select("point_id", "lon", "lat",
+                        F.col("z.cells").alias("ring_cell"),
+                        F.col("z.ds").alias("d"))
+                .join(tc, "ring_cell")
+                # ONE exchange keyed on point_id serves the whole downstream
+                # chain: HashPartitioning(point_id) satisfies the
+                # ClusteredDistribution of the grouping (a superset of
+                # point_id), the per-point counts, the top-k window, and the
+                # resolved join — without it each of those planned its own
+                # exchange (guide 2.4; A/B at bench scale: 2.3 -> 1.8s).
+                .repartition("point_id")
+                .groupBy("point_id", "lon", "lat", "image_id", "level", "ty",
+                         "tx", "lon_min", "lat_min", "lon_max", "lat_max")
+                .agg(F.min("d").alias("mind")))
 
-    # phase B: every later rung from ONE wide explode with cell distances
+    # phase A: first rung only — the cost the common case pays
+    r0 = rings[0]
+    cand_a = candidates(points, r0)
+    if len(rings) == 1:
+        return ranked(cand_a, F.lit(r0))
+    # the ONE materialization the collapsed ladder keeps: cand_a feeds three
+    # consumers (counts, phase-A top-k, phase-B anti-join); without it the
+    # explode+join lineage runs 3x (A/B: 2.5s -> 1.75s). Narrow metadata
+    # rows, no payloads. Lazy: the consumers share the cached blocks within
+    # the one query job, so no separate materialization job is paid.
+    cand_a = cand_a.localCheckpoint(eager=False)
+    resolved_a = (cand_a.groupBy("point_id").agg(F.count(F.lit(1)).alias("_n"))
+                  .filter(F.col("_n") >= k).select("point_id"))
+    out = ranked(cand_a.join(resolved_a, "point_id"), F.lit(r0))
+
+    # phase B: every later rung from ONE wide explode with cell distances;
+    # two consumers (rung counts, final join) share the cached blocks
+    # instead of re-running the wide explode twice
     remaining = points.join(resolved_a, "point_id", "left_anti")
-    rmax = rings[-1]
-    pb = (remaining.withColumn("rc", ring_cells_dist_udf(res, rmax)("lon", "lat"))
-          .withColumn("z", F.explode(F.arrays_zip(F.col("rc.cells"),
-                                                  F.col("rc.ds"))))
-          .select("point_id", "lon", "lat",
-                  F.col("z.cells").alias("ring_cell"),
-                  F.col("z.ds").alias("d")))
-    cand_b = (pb.join(tc, "ring_cell")
-              .repartition("point_id")  # same shared-exchange trick as cand_a
-              .groupBy("point_id", "lon", "lat", "image_id", "level", "ty",
-                       "tx", "lon_min", "lat_min", "lon_max", "lat_max")
-              .agg(F.min("d").alias("mind"))
-              # two consumers (rung counts, final join) — share the cached
-              # blocks instead of re-running the wide explode twice
-              .localCheckpoint(eager=False))
+    cand_b = candidates(remaining, rings[-1]).localCheckpoint(eager=False)
     cnt = cand_b.groupBy("point_id").agg(
         *[F.sum((F.col("mind") <= r).cast("int")).alias(f"_n{r}")
           for r in rings[1:]])
@@ -355,12 +323,10 @@ def knn_join_adaptive(points: DataFrame, tiles: DataFrame, k: int = 5,
 def zonal_join(zones: DataFrame, tiles: DataFrame, res: int = DEFAULT_RES) -> DataFrame:
     """zones × tiles overlap join: shared cover cells, distinct pairs, exact
     rectangle-overlap refinement. Zones are broadcast (small dim side)."""
-    cover = cover_cells_udf(res)
-    zc = zones.withColumn(
-        "cell_id", F.explode(cover("lon_min", "lat_min", "lon_max", "lat_max")))
-    zc = zc.select("zone_id", "cell_id",
-                   F.col("lon_min").alias("z_lon_min"), F.col("lat_min").alias("z_lat_min"),
-                   F.col("lon_max").alias("z_lon_max"), F.col("lat_max").alias("z_lat_max"))
+    zc = with_tile_cells(zones, res).select(
+        "zone_id", "cell_id",
+        F.col("lon_min").alias("z_lon_min"), F.col("lat_min").alias("z_lat_min"),
+        F.col("lon_max").alias("z_lon_max"), F.col("lat_max").alias("z_lat_max"))
     tc = with_tile_cells(tiles, res)
     pairs = (tc.join(F.broadcast(zc), "cell_id")
              .filter((F.col("lon_min") < F.col("z_lon_max"))
@@ -428,7 +394,7 @@ def distance_join(points: DataFrame, radius_deg: float,
     b = points.select(
         F.col("point_id").alias("pb"), F.col("lon").alias("lon_b"),
         F.col("lat").alias("lat_b")).withColumn(
-            "cell_id", F.explode(ring_cells_udf(res, 1)("lon_b", "lat_b")))
+            "cell_id", F.explode(ring_cells_udf(res, 1)("lon_b", "lat_b").cells))
     dx = F.col("lon_a") - F.col("lon_b")
     dy = F.col("lat_a") - F.col("lat_b")
     d2 = dx * dx + dy * dy
@@ -479,16 +445,6 @@ def dedup_images(images: DataFrame) -> DataFrame:
     w = Window.partitionBy("phash").orderBy("image_id")
     return (images.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1).drop("rn"))
-
-
-def salted_count_by(df: DataFrame, key: str, salt_buckets: int = 32) -> DataFrame:
-    """Two-stage salted count for skewed keys: pre-aggregate on (key, salt),
-    then merge — the hot key's rows split across `salt_buckets` reducers
-    before the final (tiny) merge. Identical result to count-by-key."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.hash(F.monotonically_increasing_id()), F.lit(salt_buckets)))
-    partial = salted.groupBy(key, "_salt").agg(F.count(F.lit(1)).alias("_c"))
-    return partial.groupBy(key).agg(F.sum("_c").alias("cnt"))
 
 
 # ---------------------------------------------------------------------------

@@ -112,8 +112,13 @@ def ensure_fanout(df):
       (480 one-file tasks vs 96 merged: 5.2s -> 2.5s). 3x keeps ~3 waves
       per slot for stragglers while restoring multi-row batches.
 
-    The split-count probe converts the plan to an RDD once (no job is run);
-    this helper is the single place that touches .rdd in the package."""
+    The split-count probe converts the plan to an RDD once. That runs no
+    job of its own, except that planning a broadcast join builds the
+    broadcast: on such a plan (the CLI convert's rerun into a directory
+    with committed files) the probe runs the build job and the action
+    builds it again. A broadcast of a local relation runs a job too, so
+    the probe stays as it is. This helper is the single place that
+    touches .rdd in the package."""
     slots = df.sparkSession.sparkContext.defaultParallelism
     n = df.rdd.getNumPartitions()
     if n < slots:

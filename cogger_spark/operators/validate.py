@@ -4,6 +4,7 @@ filter/anti-join, so bad rows are quarantined instead of failing tasks.
 
 Checks (metadata-only where possible; raw rows are sized by `bytes`
 length, and only deflate rows that pass every other check are read):
+* image id, dims and fmt present;
 * dims positive and within the supported range;
 * fmt is a known codec;
 * raw payload length is a whole number of (w*h) planes with a plane count
@@ -33,8 +34,13 @@ def with_validity(images: DataFrame) -> DataFrame:
     raw_planes_ok = (
         (nbytes % px == 0)
         & F.floor(nbytes / px).isin(1, 2, 3, 4, 5))
+    # NULL keys first: a NULL id, dim or fmt makes every later predicate
+    # three-valued-NULL, so the row would fall through into the valid branch
     reason = (
-        F.when((F.col("w") <= 0) | (F.col("h") <= 0), "nonpositive dims")
+        F.when(F.col("image_id").isNull(), "missing image id")
+        .when(F.col("w").isNull() | F.col("h").isNull(), "missing dims")
+        .when(F.col("fmt").isNull(), "unknown fmt")
+        .when((F.col("w") <= 0) | (F.col("h") <= 0), "nonpositive dims")
         .when((F.col("w") > MAX_DIM) | (F.col("h") > MAX_DIM), "dims out of range")
         .when(~F.col("fmt").isin(*KNOWN_FMTS), "unknown fmt")
         # explicit null check: a NULL payload would make the raw-size

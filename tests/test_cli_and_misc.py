@@ -40,7 +40,13 @@ def test_validate_images_split(spark, smoke_images):
          # NULL payload must be quarantined, not fall through the
          # three-valued raw-size predicate into the valid set
          ("bad_null_bytes", None, 2, 1, "raw", "c", 0),
-         ("bad_empty_bytes", b"", 2, 1, "deflate", "c", 0)],
+         ("bad_empty_bytes", b"", 2, 1, "deflate", "c", 0),
+         # NULL keys must be quarantined too, each under its own reason
+         ("bad_null_w_raw", b"\x00" * 12, None, 2, "raw", "c", 0),
+         ("bad_null_h_png", b"\x89PNG", 2, None, "png", "c", 0),
+         ("bad_null_w_deflate", b"x\x9c", None, 2, "deflate", "c", 0),
+         ("bad_null_fmt", b"\x00\x00", 2, 1, None, "c", 0),
+         (None, b"\x00\x00", 2, 1, "raw", "c", 0)],
         "image_id string, bytes binary, w int, h int, fmt string, "
         "caption string, phash long")
     valid, rejects = validate_images(good.unionByName(bad))
@@ -50,7 +56,12 @@ def test_validate_images_split(spark, smoke_images):
                    "bad_size": "bad raw payload size",
                    "bad_caption": "missing caption",
                    "bad_null_bytes": "missing payload",
-                   "bad_empty_bytes": "missing payload"}
+                   "bad_empty_bytes": "missing payload",
+                   "bad_null_w_raw": "missing dims",
+                   "bad_null_h_png": "missing dims",
+                   "bad_null_w_deflate": "missing dims",
+                   "bad_null_fmt": "unknown fmt",
+                   None: "missing image id"}
 
 
 def _seq(scala_seq) -> list:

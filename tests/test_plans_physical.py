@@ -84,6 +84,21 @@ def test_pip_join_is_equi_join_on_cells(spark, fixture_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_knn_join_one_exchange_no_checkpoint(spark, fixture_dir):
+    """knn_join is the one-rung ladder: its executed plan keeps one
+    point_id exchange (shared by the candidate grouping and the top-k
+    window) and scans no checkpointed RDD."""
+    from cogger_spark.fixtures import FIXTURE_DIR
+    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
+    points = spark.read.parquet(str(FIXTURE_DIR / "points_test.parquet"))
+    tiles = spatial.tile_manifest(images, level=0)
+    df = spatial.knn_join(points, tiles, k=5, ring=2)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]  # the final plan
+    assert plan.count("hashpartitioning(point_id") == 1, plan
+    assert "ExistingRDD" not in plan and "LogicalRDD" not in plan, plan
+
+
 def test_nation_revenue_broadcasts_dim(spark):
     plan = _plan(queries.q_nation_revenue(spark, SF))
     assert "BroadcastHashJoin" in plan

@@ -4,8 +4,8 @@ Pins the plan/behavior contracts of the r6 performance changes:
 
 * ensure_fanout's coalesce arm (one-row-per-task scans merged zero-shuffle);
 * knn_join_adaptive's collapsed ladder (identical rows to the per-rung
-  ladder semantics, already oracle-pinned — here: single wide explode only
-  for unresolved points);
+  ladder semantics, already oracle-pinned — here: the ring kernel's cells
+  and distances, and the one-rung ladder against the bounded kNN oracle);
 * cosine norm precomputation (bit-identical scores to the inline form).
 """
 
@@ -38,9 +38,10 @@ def test_ensure_fanout_leaves_wellformed_input_alone(spark):
 
 
 def test_ring_cells_dist_matches_plain_ring(spark):
-    """The distance-annotated ring explode must cover exactly the plain
-    r-ring membership at every distance threshold r <= k (border clamps
-    keep the MIN in-grid distance)."""
+    """The ring kernel's `cells` is the ascending list of the k-ring's
+    distinct cells, and its `ds` cover exactly the plain r-ring membership
+    at every distance threshold r <= k (border clamps keep the MIN in-grid
+    distance)."""
     from cogger_spark.functions import cells as C
     rng = np.random.RandomState(66)
     lon = rng.uniform(-179, 179, 50)
@@ -49,18 +50,18 @@ def test_ring_cells_dist_matches_plain_ring(spark):
     lon[:3] = [-180.0, 179.999, 0.0]
     lat[:3] = [-90.0, 89.999, -90.0]
     res, k = 6, 5
-    from cogger_spark.operators.spatial import ring_cells_dist_udf
+    from cogger_spark.operators.spatial import ring_cells_udf
     df = spark.createDataFrame(
         [(float(a), float(b)) for a, b in zip(lon, lat)], "lon double, lat double")
-    rows = (df.withColumn("rc", ring_cells_dist_udf(res, k)("lon", "lat"))
+    rows = (df.withColumn("rc", ring_cells_udf(res, k)("lon", "lat"))
             .select("lon", "lat", F.col("rc.cells").alias("cells"),
                     F.col("rc.ds").alias("ds")).collect())
     for r in rows:
         by_d = dict(zip(r.cells, r.ds))
+        cell = C.cell_encode(np.array([r.lon]), np.array([r.lat]), res)
+        assert r.cells == np.unique(C.k_ring(cell, k)).tolist()
         for rr in range(k + 1):
-            plain = set(np.unique(C.k_ring(
-                C.cell_encode(np.array([r.lon]), np.array([r.lat]), res),
-                rr)).tolist())
+            plain = set(np.unique(C.k_ring(cell, rr)).tolist())
             got = {c for c, d in by_d.items() if d <= rr}
             assert got == plain, (r.lon, r.lat, rr)
 
@@ -87,19 +88,18 @@ def test_cosine_pre_bit_identical(spark):
 
 
 def test_knn_adaptive_single_rung(spark, fixture_dir):
-    """rings=(r,) takes the phase-A-only path and must equal the bounded
-    knn_join at the same ring (modulo the extra `ring` column)."""
-    from cogger_spark.fixtures import FIXTURE_DIR, ensure_test_fixtures
+    """rings=(r,) takes the phase-A-only path: every row is at ring r, and
+    without `ring` the rows are the bounded kNN's DuckDB oracle
+    (KNN_JOIN: k=5, ring=2)."""
+    from cogger_spark import oracles, queries
     from cogger_spark.operators import spatial
-    ensure_test_fixtures()
-    images = spark.read.parquet(str(FIXTURE_DIR / "images_test.parquet"))
-    points = spark.read.parquet(str(FIXTURE_DIR / "points_test.parquet"))
-    tiles = spatial.tile_manifest(images, tile=512, level=0)
-    single = spatial.knn_join_adaptive(points, tiles, k=3, rings=(2,))
-    plain = spatial.knn_join(points, tiles, k=3, ring=2)
-    a = {tuple(r) for r in single.drop("ring").collect()}
-    b = {tuple(r) for r in plain.collect()}
-    assert a == b
+    from tests.test_spatial_oracle import compare
+    tiles = spatial.tile_manifest(queries._images(spark), tile=512, level=0)
+    single = spatial.knn_join_adaptive(queries._points(spark), tiles, k=5,
+                                       rings=(2,))
+    assert {r.ring for r in single.select("ring").distinct().collect()} == {2}
+    out = single.drop("ring").withColumn("dist2", F.round("dist2", 12))
+    compare(queries._longs(out, "level", "ty", "tx", "rank"), oracles.KNN_JOIN)
 
 
 def test_rewrite_path_route_equivalent_and_guarded(spark, smoke_images,

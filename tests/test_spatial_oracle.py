@@ -46,6 +46,8 @@ CASES = [
     ("caption_token_stats", oracles.CAPTION_TOKEN_STATS),
     ("point_grid_counts", oracles.POINT_GRID_COUNTS),
     ("dedup_images", oracles.DEDUP_IMAGES),
+    ("points_within_radius", oracles.DISTANCE_JOIN),
+    ("tile_offsets_planar", oracles.TILE_OFFSETS_PLANAR),
 ]
 
 
