@@ -24,9 +24,11 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-# PySpark binds each Unix socket at <dir>/.<uuid4>.sock, 43 characters past
-# the directory, and an AF_UNIX path holds at most 107 bytes
-_SOCKET_DIR_MAX = 64
+# Spark 4.1 requires a spark.python.unix.domain.socket.dir "lower than 61"
+# characters; past it (62 characters fail) every Python task of the session
+# fails with INVALID_CONF_VALUE. That is stricter than the AF_UNIX bound of
+# 107 bytes less the 43 characters of the <dir>/.<uuid4>.sock PySpark binds.
+_SOCKET_DIR_MAX = 60
 _socket_dirs: dict = {}  # pid -> this process's socket directory
 
 
@@ -85,8 +87,9 @@ def get_spark(app_name: str = "cogger-spark", cores: int | None = None,
     if shuffle_partitions is None:
         shuffle_partitions = cores
     # make the engine importable by python workers: the worker daemon
-    # (daemon_preload.py) preloads numpy/pandas/pyarrow and stops each task
-    # from re-reading pyspark.zip's directory, before it forks the workers
+    # (daemon_preload.py) imports the installed pyspark in place of a
+    # same-release pyspark.zip, preloads numpy/pandas/pyarrow and stops each
+    # task from re-reading zip directories, before it forks the workers
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if repo_root not in pp.split(":"):
